@@ -320,14 +320,11 @@ def _bloom_gate_stats(spark, sf_dir: str, k: int = 5) -> dict:
     tmp = tempfile.mkdtemp(prefix="timebox_bench_bloom_")
     out: dict = {"m_default": m_default, "k": k}
     try:
-        fps_hex = D.corpus_fingerprints(corpus)
-        _fps_prunable_layout(fps_hex).write.mode("overwrite").parquet(
-            f"{tmp}/fps"
-        )
+        _fps_prunable_layout(
+            D.corpus_fingerprints(corpus).select(F.unhex("__fp").alias("__fp"))
+        ).write.mode("overwrite").parquet(f"{tmp}/fps")
         fps = spark.read.parquet(f"{tmp}/fps")
-        from timebox_spark.streaming.ingest import _fps_as_hex
-
-        hexfps = _fps_as_hex(fps)
+        hexfps = fps.select(D._fp_hex("__fp").alias("__fp"))
         n_corpus = fps.distinct().count()
         out["n_corpus_fps"] = n_corpus
 
@@ -413,13 +410,17 @@ def _bloom_gate_stats(spark, sf_dir: str, k: int = 5) -> dict:
                 )
             )
         for name, src in (("fps1x", hexfps), ("fps10x", hex10)):
-            _fps_prunable_layout(src).write.mode("overwrite").option(
+            _fps_prunable_layout(
+                src.select(F.unhex("__fp").alias("__fp"))
+            ).write.mode("overwrite").option(
                 "parquet.block.size", 65536
             ).parquet(f"{tmp}/{name}")
         fps1x = spark.read.parquet(f"{tmp}/fps1x")
         fps10 = spark.read.parquet(f"{tmp}/fps10x")
         out["tree_rows_10x"] = fps10.count()
-        SK.bloom_build(_fps_as_hex(fps10), "__fp", m_default, k).write.mode(
+        SK.bloom_build(
+            fps10.select(D._fp_hex("__fp").alias("__fp")), "__fp", m_default, k
+        ).write.mode(
             "overwrite"
         ).parquet(f"{tmp}/bloom10x")
         sketch10 = spark.read.parquet(f"{tmp}/bloom10x")

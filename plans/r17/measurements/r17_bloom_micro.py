@@ -12,7 +12,7 @@ from timebox_spark.operators import dedup as D
 from timebox_spark.operators import sketches as SK
 from timebox_spark.plans.tables import load as tables_load
 from timebox_spark.session import get_spark
-from timebox_spark.streaming.ingest import _fps_as_hex, _fps_prunable_layout
+from timebox_spark.streaming.ingest import _fps_prunable_layout
 
 spark = get_spark(app_name="r17-bloom-micro")
 spark.range(1).count()
@@ -24,10 +24,12 @@ tmp = tempfile.mkdtemp(prefix="r17_bloom_micro_")
 try:
     fps_hex = D.corpus_fingerprints(corpus)
     t0 = time.perf_counter()
-    _fps_prunable_layout(fps_hex).write.mode("overwrite").parquet(f"{tmp}/fps")
+    _fps_prunable_layout(
+        fps_hex.select(F.unhex("__fp").alias("__fp"))
+    ).write.mode("overwrite").parquet(f"{tmp}/fps")
     print(f"fps_layout_write: {time.perf_counter()-t0:.3f}s", flush=True)
     fps = spark.read.parquet(f"{tmp}/fps")
-    hexfps = _fps_as_hex(fps)
+    hexfps = fps.select(D._fp_hex("__fp").alias("__fp"))
     print("n_fps:", fps.count(), "n_files:", flush=True)
 
     for rep in range(3):

@@ -90,7 +90,6 @@ SLOW_NODEIDS = {
     "test_graphs.py::test_pagerank_weighted_matches_duckdb_and_semantics",
     "test_streaming.py::test_estimate_verify_warns_on_high_variance_at_call_site",
     "test_streaming.py::test_near_dup_hits_stream_bucket_cap_and_null_text",
-    "test_sketches.py::test_gated_dedup_binary_tree_matches_string_tree",
     "test_text.py::test_cap_per_group_cms_enforces_corpus_horizon_budget",
     "test_streaming.py::test_compact_corpus_cluster_keep_one_vs_chain",
     "test_oracle_queries.py::test_query_matches_oracle[q30_multimodal_suite]",
@@ -114,8 +113,11 @@ def pytest_collection_modifyitems(config, items):
         reason="slow profile: set TIMEBOX_FULL_TESTS=1 to run"
     )
     for item in items:
-        nodeid = item.nodeid.split("/")[-1]
-        if "slow" in item.keywords or nodeid in SLOW_NODEIDS:
+        # SLOW_NODEIDS entries are "file::name": split the path off at
+        # the first "::" so a "/" inside a parametrized id is kept
+        path, _, name = item.nodeid.partition("::")
+        key = f"{os.path.basename(path)}::{name}"
+        if "slow" in item.keywords or key in SLOW_NODEIDS:
             item.add_marker(skip)
 
 

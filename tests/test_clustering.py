@@ -160,7 +160,7 @@ def test_connected_components_owned_rdds_tracking(spark):
     assert after - before == set(), after - before
 
 
-def test_concurrent_cluster_compactions_do_not_interfere(spark):
+def test_concurrent_cluster_compactions_do_not_interfere(spark, tmp_path):
     """Round-12 verdict task 5: two cluster-mode compactions running
     concurrently in one session must each produce correct results and
     leave no persistent RDDs — per-owner checkpoint tracking means
@@ -194,7 +194,8 @@ def test_concurrent_cluster_compactions_do_not_interfere(spark):
             kept = {
                 r["doc_id"]
                 for r in ingest.compact_corpus(
-                    b, near_dup=True, keep="cluster"
+                    b, near_dup=True, keep="cluster",
+                    scratch_path=str(tmp_path / f"scratch_{tag}"),
                 ).collect()
             }
             results.setdefault(tag, []).append(kept)

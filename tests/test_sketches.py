@@ -211,13 +211,14 @@ def test_bloom_no_false_negatives_and_merge(spark):
     # probing with the WRONG (m, k) has no no-false-negative guarantee
     # — a dup would bypass exact dedup as 'definitely new' — so the
     # sketch carries its parameters as sentinel rows and a mismatched
-    # probe/merge RAISES instead of silently corrupting results
-    import pytest
+    # probe (at its first action) or merge RAISES instead of silently
+    # corrupting results
+    from pyspark.errors import PySparkException
 
-    with pytest.raises(ValueError, match="m_bits"):
-        SK.bloom_probe(vals, "id", "v", bloom, m * 2, k)
-    with pytest.raises(ValueError, match="m_bits"):
-        SK.bloom_probe(vals, "id", "v", bloom, m, k + 1)
+    with pytest.raises(PySparkException, match="m_bits"):
+        SK.bloom_probe(vals, "id", "v", bloom, m * 2, k).collect()
+    with pytest.raises(PySparkException, match="m_bits"):
+        SK.bloom_probe(vals, "id", "v", bloom, m, k + 1).collect()
     other_geom = SK.bloom_build(ins.select("v"), "v", m * 2, k)
     with pytest.raises(ValueError, match="geometries"):
         SK.bloom_merge(bloom.unionByName(other_geom))
@@ -326,12 +327,14 @@ def test_bloom_gated_dedup_never_shuffles_fps_scan(spark, tmp_path):
     )
     fps_dir = str(tmp_path / "r14_fps_tree")
     bloom_dir = str(tmp_path / "r14_bloom_tree")
-    DD.corpus_fingerprints(corpus).write.mode("overwrite").parquet(fps_dir)
+    DD.corpus_fingerprints(corpus).select(
+        F.unhex("__fp").alias("__fp")
+    ).write.mode("overwrite").parquet(fps_dir)
     fps = spark.read.parquet(fps_dir)
     m, k = 1 << 14, 5
-    SK.bloom_build(fps, "__fp", m, k).write.mode("overwrite").parquet(
-        bloom_dir
-    )
+    SK.bloom_build(
+        fps.select(DD._fp_hex("__fp").alias("__fp")), "__fp", m, k
+    ).write.mode("overwrite").parquet(bloom_dir)
     bloom = spark.read.parquet(bloom_dir)
     batch = spark.createDataFrame(
         [(100, "corpus doc body 3"), (101, "fresh body")],
@@ -400,9 +403,9 @@ def test_bloom_probe_duplicate_word_rows_keep_no_false_negatives(spark):
 
 def test_bloom_probe_conflicting_sentinels_raise(spark):
     """A raw union of different-geometry sketches carries conflicting
-    sentinel rows — the probe must raise, not pick one (the old 2-row
-    collect kept whichever row came last)."""
-    import pytest
+    sentinel rows — the probe must raise at its first action, not
+    pick one (the old 2-row collect kept whichever row came last)."""
+    from pyspark.errors import PySparkException
 
     from timebox_spark.operators import sketches as SK
 
@@ -410,8 +413,8 @@ def test_bloom_probe_conflicting_sentinels_raise(spark):
     vals = spark.range(0, 50).selectExpr("id", "md5(CAST(id AS STRING)) AS v")
     b1 = SK.bloom_build(vals.select("v"), "v", m, k)
     b2 = SK.bloom_build(vals.select("v"), "v", m * 2, k)
-    with pytest.raises(ValueError, match="CONFLICTING"):
-        SK.bloom_probe(vals, "id", "v", b1.unionByName(b2), m, k)
+    with pytest.raises(PySparkException, match="raw union"):
+        SK.bloom_probe(vals, "id", "v", b1.unionByName(b2), m, k).collect()
 
 
 def test_bloom_broadcast_budget_raises_and_dedup_falls_back(
@@ -643,14 +646,13 @@ def _fps_scan_leaf(df, path_fragment):
     return None
 
 
-def _write_prunable_fps_tree(spark, corpus, path, binary):
-    """A production-layout fps tree: sorted by __fp, many small row
-    groups so row-group stats pruning is observable at test size."""
+def _write_prunable_fps_tree(spark, corpus, path):
+    """A production-layout fps tree: binary __fp sorted by value, many
+    small row groups so row-group stats pruning is observable at test
+    size."""
     from timebox_spark.operators import dedup as DD
 
-    fps = DD.corpus_fingerprints(corpus)
-    if binary:
-        fps = fps.select(F.unhex("__fp").alias("__fp"))
+    fps = DD.corpus_fingerprints(corpus).select(F.unhex("__fp").alias("__fp"))
     (
         fps.repartitionByRange(2, "__fp")
         .sortWithinPartitions("__fp")
@@ -660,8 +662,7 @@ def _write_prunable_fps_tree(spark, corpus, path, binary):
     )
 
 
-@pytest.mark.parametrize("binary", [False, True])
-def test_gated_dedup_prunes_fps_scan(spark, tmp_path, binary):
+def test_gated_dedup_prunes_fps_scan(spark, tmp_path):
     """Round-15 verdict task 1 (the round-14 `weak`): with the gate on
     and a batch-bounded maybe set, the fps scan must carry a pushed
     In/EqualTo predicate on __fp and surface only the row groups that
@@ -674,15 +675,15 @@ def test_gated_dedup_prunes_fps_scan(spark, tmp_path, binary):
         F.col("id").alias("doc_id"),
         F.concat(F.lit("corpus doc body "), F.col("id")).alias("text"),
     )
-    tag = "bin" if binary else "hex"
-    fps_dir = str(tmp_path / f"r15_fps_{tag}")
-    _write_prunable_fps_tree(spark, corpus, fps_dir, binary)
+    fps_dir = str(tmp_path / "r15_fps_bin")
+    _write_prunable_fps_tree(spark, corpus, fps_dir)
     fps = spark.read.parquet(fps_dir)
-    assert dict(fps.dtypes)["__fp"] == ("binary" if binary else "string")
+    assert dict(fps.dtypes)["__fp"] == "binary"
     m, k = 1 << 16, 5
-    # the sketch ALWAYS hashes hex (what the batch probes with)
-    hexfps = fps.select(F.lower(F.hex("__fp")).alias("__fp")) if binary else fps
-    bloom = SK.bloom_build(hexfps, "__fp", m, k)
+    # the sketch hashes hex (what the batch probes with)
+    bloom = SK.bloom_build(
+        fps.select(DD._fp_hex("__fp").alias("__fp")), "__fp", m, k
+    )
     batch = spark.createDataFrame(
         [(100_000, "corpus doc body 3"), (100_001, "fresh body")],
         "doc_id long, text string",
@@ -698,7 +699,7 @@ def test_gated_dedup_prunes_fps_scan(spark, tmp_path, binary):
         assert {r["doc_id"] for r in gated.collect()} == {100_001}
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    leaf = _fps_scan_leaf(gated, f"r15_fps_{tag}")
+    leaf = _fps_scan_leaf(gated, "r15_fps_bin")
     assert leaf is not None, "fps scan not found in gated plan"
     pushed = str(leaf.metadata().apply("PushedFilters"))
     assert "__fp" in pushed and ("In(" in pushed or "EqualTo(" in pushed), pushed
@@ -708,52 +709,34 @@ def test_gated_dedup_prunes_fps_scan(spark, tmp_path, binary):
     assert scanned < n // 4, f"fps scan surfaced {scanned} of {n} rows"
 
 
-def test_gated_dedup_binary_tree_matches_string_tree(spark, tmp_path):
-    """The 16-byte-binary fps tree is a pure storage change: gated and
-    gate-less results over binary and legacy hex trees are identical,
-    including against a hex-era bloom sketch."""
+def test_incremental_exact_dedup_refuses_string_fps_tree(spark):
+    """fps trees hold one type, the 16-byte binary md5: a hex-string
+    ``corpus_fps`` (a pre-binary store) is refused at call time with
+    a rebuild hint, on the gated and gate-less paths alike."""
     from timebox_spark.operators import dedup as DD
     from timebox_spark.operators import sketches as SK
 
     corpus = spark.createDataFrame(
-        [(i, f"corpus doc body {i}") for i in range(80)],
-        "doc_id long, text string",
+        [(1, "corpus doc body")], "doc_id long, text string"
     )
-    p_hex = str(tmp_path / "r15_eq_hex")
-    p_bin = str(tmp_path / "r15_eq_bin")
-    _write_prunable_fps_tree(spark, corpus, p_hex, binary=False)
-    _write_prunable_fps_tree(spark, corpus, p_bin, binary=True)
-    fps_hex = spark.read.parquet(p_hex)
-    fps_bin = spark.read.parquet(p_bin)
-    m, k = 1 << 14, 5
-    bloom = SK.bloom_build(fps_hex, "__fp", m, k)
     batch = spark.createDataFrame(
-        [(900, "corpus doc body 7"), (901, "novel a"), (902, "novel a"),
-         (903, "corpus doc body 41"), (904, "novel b")],
-        "doc_id long, text string",
+        [(10, "corpus doc body")], "doc_id long, text string"
     )
-    want = {901, 904}
-    for fps in (fps_hex, fps_bin):
-        got_gated = {
-            r["doc_id"]
-            for r in DD.incremental_exact_dedup(
-                batch, corpus, corpus_fps=fps, corpus_bloom=bloom,
-                bloom_m=m, bloom_k=k,
-            ).collect()
-        }
-        got_plain = {
-            r["doc_id"]
-            for r in DD.incremental_exact_dedup(
-                batch, corpus, corpus_fps=fps
-            ).collect()
-        }
-        assert got_gated == got_plain == want
+    hex_fps = DD.corpus_fingerprints(corpus)
+    m, k = 1 << 14, 5
+    bloom = SK.bloom_build(hex_fps, "__fp", m, k)
+    with pytest.raises(ValueError, match="rebuild the store"):
+        DD.incremental_exact_dedup(batch, corpus, corpus_fps=hex_fps)
+    with pytest.raises(ValueError, match="rebuild the store"):
+        DD.incremental_exact_dedup(
+            batch, corpus, corpus_fps=hex_fps, corpus_bloom=bloom,
+            bloom_m=m, bloom_k=k,
+        )
 
 
 def test_gated_dedup_maybe_overflow_falls_back_identical(spark, tmp_path, monkeypatch):
     """A maybe set past FPS_PRUNE_ISIN_MAX (saturated sketch) must fall
-    back to the round-14 broadcast semi-join — same results, on both
-    tree types."""
+    back to the round-14 broadcast semi-join — same results."""
     from timebox_spark.operators import dedup as DD
     from timebox_spark.operators import sketches as SK
 
@@ -762,28 +745,26 @@ def test_gated_dedup_maybe_overflow_falls_back_identical(spark, tmp_path, monkey
         [(i, f"corpus doc body {i}") for i in range(40)],
         "doc_id long, text string",
     )
-    for binary in (False, True):
-        p = str(tmp_path / f"r15_ovf_{binary}")
-        _write_prunable_fps_tree(spark, corpus, p, binary)
-        fps = spark.read.parquet(p)
-        m, k = 1 << 14, 5
-        hexfps = (
-            fps.select(F.lower(F.hex("__fp")).alias("__fp")) if binary else fps
-        )
-        bloom = SK.bloom_build(hexfps, "__fp", m, k)
-        batch = spark.createDataFrame(
-            [(500, "corpus doc body 1"), (501, "corpus doc body 2"),
-             (502, "corpus doc body 3"), (503, "brand new")],
-            "doc_id long, text string",
-        )
-        got = {
-            r["doc_id"]
-            for r in DD.incremental_exact_dedup(
-                batch, corpus, corpus_fps=fps, corpus_bloom=bloom,
-                bloom_m=m, bloom_k=k,
-            ).collect()
-        }
-        assert got == {503}, (binary, got)
+    p = str(tmp_path / "r15_ovf")
+    _write_prunable_fps_tree(spark, corpus, p)
+    fps = spark.read.parquet(p)
+    m, k = 1 << 14, 5
+    bloom = SK.bloom_build(
+        fps.select(DD._fp_hex("__fp").alias("__fp")), "__fp", m, k
+    )
+    batch = spark.createDataFrame(
+        [(500, "corpus doc body 1"), (501, "corpus doc body 2"),
+         (502, "corpus doc body 3"), (503, "brand new")],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]
+        for r in DD.incremental_exact_dedup(
+            batch, corpus, corpus_fps=fps, corpus_bloom=bloom,
+            bloom_m=m, bloom_k=k,
+        ).collect()
+    }
+    assert got == {503}, got
 
 
 def test_incremental_dedup_null_text_keep_one_pinned(spark, tmp_path):
@@ -799,7 +780,7 @@ def test_incremental_dedup_null_text_keep_one_pinned(spark, tmp_path):
         [(1, "corpus doc body"), (2, None)], "doc_id long, text string"
     )
     p = str(tmp_path / "r15_null_fps")
-    _write_prunable_fps_tree(spark, corpus, p, binary=True)
+    _write_prunable_fps_tree(spark, corpus, p)
     fps = spark.read.parquet(p)
     m, k = 1 << 14, 5
     bloom = SK.bloom_build(
@@ -827,14 +808,14 @@ def test_incremental_dedup_null_text_keep_one_pinned(spark, tmp_path):
 
 
 def test_bloom_probe_inline_validation_identical_and_raises(spark):
-    """Round 18: ``bloom_probe(validate='inline')`` removes the eager
-    full-tree ``_bloom_stats`` job — results stay bit-identical to the
-    eager path on a valid multi-partition sketch union, and the
-    no-false-negative guards still hold: a mismatched (m_bits, k) call
-    and a conflicting-geometry raw union both RAISE, now from the
-    probe's first action (per-row assert evaluated BEFORE the
-    defensive bit_or merge, so aggregation can never alias the
-    conflict past the check)."""
+    """Round 18: sentinel validation rides the probe plan as a per-row
+    assert — no eager full-tree scan. Probing a valid multi-partition
+    raw union equals probing its ``bloom_merge`` bit-for-bit, and the
+    no-false-negative guards still hold: a mismatched (m_bits, k)
+    call and a conflicting-geometry raw union both RAISE from the
+    probe's first action (the assert runs BEFORE the defensive bit_or
+    merge, so aggregation can never alias the conflict past the
+    check). Building the probe plan launches no check of its own."""
     from pyspark.errors import PySparkException
 
     from timebox_spark.operators import sketches as SK
@@ -850,39 +831,31 @@ def test_bloom_probe_inline_validation_identical_and_raises(spark):
     b1 = SK.bloom_build(ins.filter("id < 200").select("v"), "v", m, k)
     b2 = SK.bloom_build(ins.filter("id >= 200").select("v"), "v", m, k)
     tree = b1.unionByName(b2)
-    eager = {
+    merged = {
+        r["id"]: r["maybe_present"]
+        for r in SK.bloom_probe(
+            vals, "id", "v", SK.bloom_merge(tree), m, k
+        ).collect()
+    }
+    raw = {
         r["id"]: r["maybe_present"]
         for r in SK.bloom_probe(vals, "id", "v", tree, m, k).collect()
     }
-    inline = {
-        r["id"]: r["maybe_present"]
-        for r in SK.bloom_probe(
-            vals, "id", "v", tree, m, k, validate="inline"
-        ).collect()
-    }
-    assert inline == eager
-    assert all(inline[i] for i in range(0, 400, 2)), "false negative!"
+    assert raw == merged
+    assert all(raw[i] for i in range(0, 400, 2)), "false negative!"
 
-    # mismatched call parameters: the eager path raises at call time,
-    # the inline path at the first action — same guarantee, and the
-    # message still names the sentinel contract
+    # mismatched call parameters: the plan builds, the first action
+    # raises with the sentinel contract in its message
+    bad_m = SK.bloom_probe(vals, "id", "v", tree, m * 2, k)
     with pytest.raises(PySparkException, match="m_bits"):
-        SK.bloom_probe(
-            vals, "id", "v", tree, m * 2, k, validate="inline"
-        ).collect()
+        bad_m.collect()
     with pytest.raises(PySparkException, match="m_bits"):
-        SK.bloom_probe(
-            vals, "id", "v", tree, m, k + 1, validate="inline"
-        ).collect()
+        SK.bloom_probe(vals, "id", "v", tree, m, k + 1).collect()
     # conflicting-geometry union: bit_or of the two m sentinels could
     # alias past a POST-merge check; the per-row assert fires on
     # whichever row disagrees with the call
     other = SK.bloom_build(ins.select("v"), "v", m * 2, k)
     with pytest.raises(PySparkException, match="m_bits"):
         SK.bloom_probe(
-            vals, "id", "v", tree.unionByName(other), m, k,
-            validate="inline",
+            vals, "id", "v", tree.unionByName(other), m, k
         ).collect()
-    # unknown validate value still fails fast
-    with pytest.raises(ValueError, match="validate"):
-        SK.bloom_probe(vals, "id", "v", tree, m, k, validate="nope")

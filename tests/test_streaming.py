@@ -749,7 +749,7 @@ def test_compact_corpus_near_dup_drops_planted_neighbors(spark):
     assert kept_exact == {-5, 20, 21}, kept_exact
 
 
-def test_compact_corpus_cluster_keep_one_vs_chain(spark):
+def test_compact_corpus_cluster_keep_one_vs_chain(spark, tmp_path):
     """keep='cluster' vs the default chain-drop on a planted A~B~C
     chain (A in corpus, B bridges A and C, C matches B but not A):
     chain drops both B and C; cluster drops B (corpus match) and
@@ -777,12 +777,15 @@ def test_compact_corpus_cluster_keep_one_vs_chain(spark):
     chain = {r["doc_id"] for r in ingest.compact_corpus(
         batch, keep="chain", **kw).collect()}
     cluster = {r["doc_id"] for r in ingest.compact_corpus(
-        batch, keep="cluster", **kw).collect()}
+        batch, keep="cluster", scratch_path=str(tmp_path / "scratch"),
+        **kw).collect()}
     assert chain == set(), chain          # B corpus-dropped, C chained away
     assert cluster == {11}, cluster       # C matches nothing kept
 
 
-def test_compact_corpus_cluster_mode_escalates_to_star(spark, monkeypatch):
+def test_compact_corpus_cluster_mode_escalates_to_star(
+    spark, tmp_path, monkeypatch
+):
     """If label propagation hits its round cap inside a cluster-mode
     compaction (a pathologically deep within-batch near-dup chain),
     the compactor escalates to star contraction instead of crash-
@@ -801,9 +804,24 @@ def test_compact_corpus_cluster_mode_escalates_to_star(spark, monkeypatch):
     )
     kept = {
         r["doc_id"]
-        for r in ingest.compact_corpus(b, near_dup=True, keep="cluster").collect()
+        for r in ingest.compact_corpus(
+            b, near_dup=True, keep="cluster",
+            scratch_path=str(tmp_path / "scratch"),
+        ).collect()
     }
     assert kept == {1, 3}, kept
+
+
+def test_compact_corpus_cluster_requires_scratch_path(spark):
+    """keep='cluster' drops its within-batch non-representatives
+    through parquet under scratch_path; without one the call is
+    refused up front instead of collecting ids to the driver."""
+    b = spark.createDataFrame(
+        [(1, "first cycle document about rivers and meadows")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="scratch_path"):
+        ingest.compact_corpus(b, near_dup=True, keep="cluster")
 
 
 def test_corpus_index_save_load_survives_restart(spark, tmp_path):
@@ -1058,7 +1076,7 @@ def test_corpus_index_versioned_atomic_publish(spark, tmp_path):
     assert gotl == {1}
 
 
-def test_compact_corpus_leaves_no_cached_rdds(spark):
+def test_compact_corpus_leaves_no_cached_rdds(spark, tmp_path):
     """Round-9 verdict task 4: a two-cycle near-dup compaction run
     must not accumulate cache entries — the long-running streaming
     driver would leak one per cycle until LRU eviction."""
@@ -1091,7 +1109,10 @@ def test_compact_corpus_leaves_no_cached_rdds(spark):
          (7, "entirely unrelated fifth text regarding parquet files")],
         "doc_id long, text string",
     )
-    app3 = ingest.compact_corpus(b3, corpus=app1, near_dup=True, keep="cluster")
+    app3 = ingest.compact_corpus(
+        b3, corpus=app1, near_dup=True, keep="cluster",
+        scratch_path=str(tmp_path / "scratch"),
+    )
     app3.collect()
     after3 = set(jsc.getPersistentRDDs().keySet().toArray())
     assert after3 - before == set(), after3 - before
@@ -1694,10 +1715,9 @@ def test_near_dup_hits_stream_state_ttl_evicts_after_watermark(
 
 
 def test_compact_corpus_scratch_path_distributed_drop(spark, tmp_path):
-    """Round-12 verdict task 2: with scratch_path the cluster-mode
-    drop is fully distributed — dropped ids go through a parquet
-    scratch the returned plan reads (zero driver-side collect) and
-    the result equals collect-fallback mode bit-for-bit."""
+    """Round-12 verdict task 2: the cluster-mode drop is fully
+    distributed — dropped ids go through a parquet scratch the
+    returned plan reads (zero driver-side collect)."""
     import os
 
     base = (
@@ -1719,18 +1739,15 @@ def test_compact_corpus_scratch_path_distributed_drop(spark, tmp_path):
               "and watermark semantics in streams")],
         "doc_id long, text string",
     )
-    kw = dict(corpus=corpus, near_dup=True, keep="cluster")
-    collected = {
-        r["doc_id"] for r in ingest.compact_corpus(batch, **kw).collect()
-    }
     scratch = str(tmp_path / "scratch")
     distributed = {
         r["doc_id"]
         for r in ingest.compact_corpus(
-            batch, scratch_path=scratch, **kw
+            batch, corpus=corpus, near_dup=True, keep="cluster",
+            scratch_path=scratch,
         ).collect()
     }
-    assert distributed == collected == {20, 30}, (distributed, collected)
+    assert distributed == {20, 30}, distributed
     dropped = {
         r["doc_id"]
         for r in spark.read.parquet(f"{scratch}/dropped").collect()
@@ -2263,13 +2280,12 @@ def test_curate_and_ingest_stream_forwards_cms(spark, tmp_path):
     assert est[1] == 1 and est[2] == 1, est
 
 
-def test_fps_tree_binary_sorted_and_legacy_migration(spark, tmp_path):
-    """Round-15 verdict task 1, storage half: new stores write the fps
-    tree as SORTED 16-byte binary; a legacy hex-string store keeps its
-    type across cycles (a mixed-type tree cannot be read under one
-    schema) until consolidation migrates every partition to binary at
-    once — after which cycles write binary and the gate (bloom built
-    over hex ALWAYS) still drops known duplicates."""
+def test_fps_tree_binary_sorted_and_string_tree_refused(spark, tmp_path):
+    """Round-15 verdict task 1, storage half: stores write the fps
+    tree as SORTED 16-byte binary md5s of the kept texts. A hex-string
+    tree (what a pre-binary build wrote) is refused by the next cycle
+    with a rebuild hint BEFORE any backfill or write — the store's
+    file listing is unchanged."""
     from timebox_spark.operators import dedup as DD
 
     def batch(cid, texts):
@@ -2278,71 +2294,44 @@ def test_fps_tree_binary_sorted_and_legacy_migration(spark, tmp_path):
             "doc_id long, text string",
         )
 
-    # --- new store: binary from cycle 0
+    def listing(root):
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+        )
+
+    # --- binary from cycle 0, sorted per partition
     new_store = str(tmp_path / "r15_new_store")
     ingest.run_ingest_cycle(
-        batch(0, ["alpha body", "beta body"]), new_store, 0, near_dup=False
+        batch(0, ["beta body", "alpha body", "gamma body"]), new_store, 0,
+        near_dup=False,
     )
     fps = spark.read.parquet(f"{new_store}/fps")
     assert dict(fps.dtypes)["__fp"] == "binary"
-
-    # --- legacy store: plant a hex-string cycle 0 by hand (what a
-    # pre-round-15 build wrote), then run cycles with the new code
-    old_store = str(tmp_path / "r15_old_store")
-    b0 = batch(0, ["alpha body", "beta body"])
-    b0.write.mode("overwrite").parquet(f"{old_store}/corpus/cycle=0")
-    DD.corpus_fingerprints(b0).write.mode("overwrite").parquet(
-        f"{old_store}/fps/cycle=0"
-    )
-    m = 1 << 14
-    ingest.run_ingest_cycle(
-        batch(1, ["alpha body", "gamma body"]), old_store, 1,
-        near_dup=False, bloom_m=m,
-    )
-    fps = spark.read.parquet(f"{old_store}/fps")
-    assert dict(fps.dtypes)["__fp"] == "string"  # stays single-typed
-    kept1 = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{old_store}/corpus/cycle=1").collect()
-    }
-    assert kept1 == {101}, kept1  # alpha body deduped against cycle 0
-
-    # consolidation migrates the WHOLE tree to binary in one rewrite
-    ingest.consolidate_ingest_store(spark, old_store, 1)
-    fps = spark.read.parquet(f"{old_store}/fps")
-    assert dict(fps.dtypes)["__fp"] == "binary"
-    assert fps.count() == 3
-    # binary fps re-hexed equal the md5s of the kept texts
-    hexes = {
-        r["__fp"]
-        for r in fps.select(
-            F.lower(F.hex("__fp")).alias("__fp")
-        ).collect()
-    }
-    corpus = spark.read.parquet(f"{old_store}/corpus")
+    stored = [bytes(r["__fp"]) for r in fps.drop("cycle").collect()]
+    assert stored == sorted(stored)
+    corpus = spark.read.parquet(f"{new_store}/corpus")
     want = {
         r["h"]
         for r in corpus.select(
             F.md5(F.encode(DD.normalize_text("text"), "UTF-8")).alias("h")
         ).collect()
     }
-    assert hexes == want
+    assert {b.hex() for b in stored} == want
 
-    # post-migration cycle: binary tree + bloom backfill (the sketch
-    # tree only covers cycle>=1; cycle 0's partition is backfilled
-    # from the now-binary fps tree via the hex conversion) — known
-    # dups from BOTH eras still drop, fresh docs survive
-    ingest.run_ingest_cycle(
-        batch(2, ["alpha body", "gamma body", "delta body"]),
-        old_store, 2, near_dup=False, bloom_m=m,
+    # --- hex-string store: plant cycle 0 by hand, then run cycle 1
+    old_store = str(tmp_path / "r15_old_store")
+    b0 = batch(0, ["alpha body", "beta body"])
+    b0.write.mode("overwrite").parquet(f"{old_store}/corpus/cycle=0")
+    DD.corpus_fingerprints(b0).write.mode("overwrite").parquet(
+        f"{old_store}/fps/cycle=0"
     )
-    kept2 = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{old_store}/corpus/cycle=2").collect()
-    }
-    assert kept2 == {202}, kept2
-    fps = spark.read.parquet(f"{old_store}/fps")
-    assert dict(fps.dtypes)["__fp"] == "binary"
+    before = listing(old_store)
+    with pytest.raises(ValueError, match="rebuild the store"):
+        ingest.run_ingest_cycle(
+            batch(1, ["alpha body", "gamma body"]), old_store, 1,
+            near_dup=False, bloom_m=1 << 14, cms_col="text",
+        )
+    assert listing(old_store) == before
 
 
 def test_pagerank_validation_raise_leaks_no_blocks(spark):
@@ -2580,7 +2569,7 @@ def _band_gate_fixture(spark):
     return corpus, banded, sets, bb, m, k, batch
 
 
-def test_compact_corpus_band_gate_identical_results(spark):
+def test_compact_corpus_band_gate_identical_results(spark, tmp_path):
     """Round-15: the band-key Bloom gate is transparent — kept sets
     identical with and without it, for both keep modes, including
     within-batch near-dups and the empty-maybe case."""
@@ -2592,6 +2581,7 @@ def test_compact_corpus_band_gate_identical_results(spark):
             for r in ingest.compact_corpus(
                 batch, corpus_index=(banded, sets), near_dup=True,
                 threshold=0.5, keep=keep,
+                scratch_path=str(tmp_path / f"plain_{keep}"),
             ).collect()
         }
         owned: list = []
@@ -2600,6 +2590,7 @@ def test_compact_corpus_band_gate_identical_results(spark):
             for r in ingest.compact_corpus(
                 batch, corpus_index=(banded, sets), near_dup=True,
                 threshold=0.5, keep=keep,
+                scratch_path=str(tmp_path / f"gated_{keep}"),
                 corpus_band_bloom=bb, band_bloom_m=m, band_bloom_k=k,
                 exact_owned_rdds=owned,
             ).collect()
@@ -2751,13 +2742,14 @@ def test_ingest_bloom_gate_validates_without_eager_merge(
     tree mismatch) and (b) a tree already mixing geometries (the case
     bloom_merge's check used to catch), both before any corpus state
     is committed for the failing cycle. Round 18 moved the gates to
-    ``bloom_probe(validate='inline')`` — the SAME guards now fire as
+    ``bloom_probe``'s inline validation — the SAME guards now fire as
     per-row asserts inside the first gate action (a Spark execution
     error carrying the sentinel message) instead of an eager
     full-tree scan per probe per cycle."""
     from pyspark.errors import PySparkException
 
     monkeypatch.setattr(ingest, "GATE_MIN_TREE_BYTES", 0)
+    from timebox_spark.operators import dedup as DD
     from timebox_spark.operators import sketches as SK
 
     store = str(tmp_path / "raw_gate_store")
@@ -2793,7 +2785,7 @@ def test_ingest_bloom_gate_validates_without_eager_merge(
         "cycle"
     )
     SK.bloom_build(
-        ingest._fps_as_hex(fps2), "__fp", m * 4, 5
+        fps2.select(DD._fp_hex("__fp").alias("__fp")), "__fp", m * 4, 5
     ).write.parquet(f"{store}/bloom/cycle=5")
     with pytest.raises(PySparkException, match="m_bits"):
         ingest.run_ingest_cycle(
@@ -2852,13 +2844,63 @@ def test_curate_and_ingest_stream_sink_releases_checkpoints(
     assert after - before == set(), after - before
 
 
+def test_curate_and_ingest_stream_empty_batch_still_consolidates(
+    spark, tmp_path
+):
+    """A micro-batch that curation empties skips its ingest cycle, but
+    a consolidation boundary landing on it must still fold the store:
+    with consolidate_every=2, micro-batch 2 (every doc too short to
+    pass curation) folds cycles 0-1 into one partition per tree."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog and keeps "
+        "running through the long meadow toward the river bank",
+        "completely different subject matter about integer codecs "
+        "and columnar storage layouts with delta encoding schemes",
+        "a wholly new third document concerning state stores and "
+        "watermark semantics in structured streaming",
+        "yet another fresh document on join strategies and broadcast "
+        "thresholds for the query planner",
+    ]
+    batches = [
+        [(10, texts[0]), (11, texts[1])],
+        [(20, texts[2]), (21, texts[3])],
+        [(30, "too short"), (31, "also short")],
+    ]
+    src = str(tmp_path / "raw_docs_empty_fold")
+    for b in batches:
+        spark.createDataFrame(b, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    store = str(tmp_path / "store_empty_fold")
+    ingest.curate_and_ingest_stream(
+        stream, store, str(tmp_path / "ck_empty_fold"),
+        min_quality_q=0, min_tokens=6, near_dup=False,
+        consolidate_every=2,
+    ).start().awaitTermination()
+
+    def parts(tree):
+        return sorted(
+            n for n in os.listdir(f"{store}/{tree}") if n.startswith("cycle=")
+        )
+
+    assert parts("corpus") == parts("fps") == parts("bloom") == ["cycle=1"]
+    kept = {
+        r["doc_id"]
+        for r in spark.read.parquet(f"{store}/corpus").collect()
+    }
+    assert kept == {10, 11, 20, 21}, kept
+
+
 def test_tree_schema_cache_invalidated_on_recreated_store(
     spark, tmp_path
 ):
     """Round 18: read_prior's per-cycle schema inference is cached per
     tree path; a store RECREATED at the same path (cycle-0 seed) and a
-    consolidation (the hex→binary migration point) must both drop the
-    cached shapes — results stay identical to a cache-cold run."""
+    consolidation (every tree rewritten) must both drop the cached
+    shapes — results stay identical to a cache-cold run."""
     store = str(tmp_path / "store_schema_cache")
 
     def run(cycles):

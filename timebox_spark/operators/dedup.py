@@ -2050,9 +2050,11 @@ def corpus_fingerprints(
     df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """The one-column (__fp) normalized-text fingerprint table of a
-    corpus — what a growing store PERSISTS alongside its documents so
-    every later ``incremental_exact_dedup`` cycle is a narrow column
-    scan instead of a corpus-text rescan."""
+    corpus, in md5's lowercase-hex form — what Bloom sketches hash
+    and batches probe with. A growing store PERSISTS its ``unhex``
+    (16-byte binary, the fps tree's one stored type) alongside its
+    documents so every later ``incremental_exact_dedup`` cycle is a
+    narrow column scan instead of a corpus-text rescan."""
     return df.select(
         F.md5(F.encode(normalize_text(text_col), "UTF-8")).alias("__fp")
     )
@@ -2122,7 +2124,6 @@ def incremental_exact_dedup(
     bloom_m: int = 1 << 20,
     bloom_k: int = 5,
     owned_rdds: list | None = None,
-    sketch_validate: str = "eager",
 ) -> DataFrame:
     """Incremental ingest dedup: rows of ``new_batch`` whose
     normalized-text fingerprint appears nowhere in the existing
@@ -2132,10 +2133,12 @@ def incremental_exact_dedup(
 
     Plan: the corpus side reduces to DISTINCT fingerprints before the
     anti-join (one agg + one join, both on the md5 key — uniform by
-    construction). Pass ``corpus_fps`` (a persisted
-    ``corpus_fingerprints`` table) to make the corpus side that
-    narrow column scan for real — ``corpus`` text is then never
-    touched.
+    construction). Pass ``corpus_fps`` (a persisted fps tree: one
+    ``__fp`` column holding the 16-byte BINARY md5, i.e.
+    ``unhex`` of ``corpus_fingerprints`` — what ``run_ingest_cycle``
+    writes) to make the corpus side that narrow column scan for real
+    — ``corpus`` text is then never touched. A hex-string ``__fp``
+    (a pre-binary store) raises ``ValueError``: rebuild the tree.
 
     ``corpus_bloom`` (round 13) adds the BROADCAST pre-gate for the
     100 TB steady state: the corpus-sided anti-join cannot broadcast
@@ -2159,10 +2162,10 @@ def incremental_exact_dedup(
     row-group stats skip all but the ~|maybe| row groups that can
     contain a match — per-cycle fps IO is O(batch), not O(corpus).
     This makes the gated path EAGER (one bounded collect of what was
-    already being broadcast). A persisted tree may store ``__fp`` as
-    16-byte binary (half the bytes); both representations are
-    accepted, and all comparisons happen in md5's hex-string form
-    after the scan-level filter. Results
+    already being broadcast). The tree stores ``__fp`` as 16-byte
+    binary (half the hex string's bytes); the scan-level filter hits
+    the stored type and all comparisons happen in md5's hex-string
+    form (what the sketch hashes) after it. Results
     are bit-identical to the gate-less path (pytest-pinned); the
     sketch is exact-mergeable across cycles (``bloom_merge``) so it
     is maintained incrementally like fps, and an over-budget sketch
@@ -2181,12 +2184,8 @@ def incremental_exact_dedup(
     shuffles) evaluates per reference — correct, just duplicated
     map-side work.
 
-    ``sketch_validate`` (round 18) is forwarded to ``bloom_probe``:
-    pass ``'inline'`` when the caller owns the sketch tree's write
-    path (``run_ingest_cycle`` does) to fold sentinel validation into
-    the probe plan as a per-row assert instead of a separate eager
-    full-tree scan per cycle — mismatched/mixed trees still raise, at
-    the first action that consumes the gate.
+    A mismatched or mixed-geometry ``corpus_bloom`` raises from the
+    gate's first action (``bloom_probe``'s per-row sentinel assert).
 
     Session side effect (caveat): when the pruned-scan path plans,
     this call raises the CALLER's session conf
@@ -2199,19 +2198,24 @@ def incremental_exact_dedup(
     the scan task at ~1.5k terms (see ``FPS_PRUNE_ISIN_MAX``)."""
     fp = F.md5(F.encode(normalize_text(text_col), "UTF-8"))
     batch_fp = new_batch.withColumn("__fp", fp)
-    # round 15: a persisted fps tree may store the fingerprint as
-    # 16-byte BINARY (half the hex string's bytes — run_ingest_cycle
-    # writes binary for new stores, consolidation migrates legacy
-    # ones); everything downstream compares in the hex-string
-    # representation the probe/bloom side uses, so the binary tree is
-    # converted AFTER its scan filter — the pruning predicate must hit
-    # the stored column to reach parquet
+    # the corpus side is 16-byte BINARY fingerprints (the fps tree's
+    # one stored type); everything downstream compares in the
+    # hex-string representation the probe/bloom side uses, so the
+    # tree is converted AFTER its scan filter — the pruning predicate
+    # must hit the stored column to reach parquet
     if corpus_fps is not None:
         corpus_fp_raw = corpus_fps.select("__fp")
-        fp_binary = dict(corpus_fp_raw.dtypes)["__fp"] == "binary"
+        fp_type = dict(corpus_fp_raw.dtypes)["__fp"]
+        if fp_type != "binary":
+            raise ValueError(
+                f"incremental_exact_dedup: corpus_fps stores __fp as "
+                f"{fp_type}, but fps trees hold the 16-byte binary md5 "
+                f"— a hex-string tree predates the binary layout; "
+                f"rebuild the store (unhex the fingerprints) before "
+                f"ingesting against it"
+            )
     else:
-        corpus_fp_raw = corpus.select(fp.alias("__fp"))
-        fp_binary = False
+        corpus_fp_raw = corpus.select(F.unhex(fp).alias("__fp"))
     probe = None
     if corpus_bloom is not None:
         from timebox_spark.operators.sketches import (
@@ -2232,8 +2236,7 @@ def incremental_exact_dedup(
         )
         try:
             probe = bloom_probe(
-                fps_only, "__fp", "__fp", corpus_bloom, bloom_m, bloom_k,
-                validate=sketch_validate,
+                fps_only, "__fp", "__fp", corpus_bloom, bloom_m, bloom_k
             )
         except BloomBroadcastBudgetError as e:
             # over-budget sketch: KEEP the gate but probe via the
@@ -2253,7 +2256,7 @@ def incremental_exact_dedup(
             )
             probe = bloom_probe(
                 fps_only, "__fp", "__fp", corpus_bloom, bloom_m,
-                bloom_k, strategy="shuffle", validate=sketch_validate,
+                bloom_k, strategy="shuffle",
             )
     if probe is not None:
         if owned_rdds is not None:
@@ -2302,14 +2305,10 @@ def incremental_exact_dedup(
             ensure_in_filter_pushdown(new_batch.sparkSession)
             if not maybe_vals:
                 present = corpus_fp_raw.filter(F.lit(False)).select(
-                    (_fp_hex("__fp") if fp_binary else F.col("__fp")).alias("__fp")
+                    _fp_hex("__fp").alias("__fp")
                 )
             else:
-                vals = (
-                    [bytes.fromhex(v) for v in maybe_vals]
-                    if fp_binary
-                    else maybe_vals
-                )
+                vals = [bytes.fromhex(v) for v in maybe_vals]
                 # NO distinct here: it would put an Exchange between
                 # the fps scan and its join (the plan pytest pins that
                 # segment exchange-free). A tree with duplicate rows
@@ -2320,19 +2319,16 @@ def incremental_exact_dedup(
                 # broadcast grows by the duplicate multiplicity only.
                 present = corpus_fp_raw.filter(
                     F.col("__fp").isin(vals)
-                ).select(
-                    (_fp_hex("__fp") if fp_binary else F.col("__fp")).alias("__fp")
-                )
+                ).select(_fp_hex("__fp").alias("__fp"))
         else:
-            src, key = corpus_fp_raw, maybe_fps
-            if fp_binary:
-                # semi-join in the stored 16-byte type (narrower
-                # stream), hex only the survivors
-                key = maybe_fps.select(F.unhex("__fp").alias("__fp"))
-            present = src.join(F.broadcast(key), "__fp", "left_semi")
-            if fp_binary:
-                present = present.select(_fp_hex("__fp").alias("__fp"))
-            present = present.distinct()
+            # semi-join in the stored 16-byte type (narrower stream),
+            # hex only the survivors
+            key = maybe_fps.select(F.unhex("__fp").alias("__fp"))
+            present = (
+                corpus_fp_raw.join(F.broadcast(key), "__fp", "left_semi")
+                .select(_fp_hex("__fp").alias("__fp"))
+                .distinct()
+            )
         gated = batch_fp.join(probe, "__fp", "left")
         mp = F.coalesce(F.col("maybe_present"), F.lit(False))
         fresh = (
@@ -2345,11 +2341,11 @@ def incremental_exact_dedup(
             .drop("maybe_present", "__in_corpus")
         )
     else:
-        corpus_keys = corpus_fp_raw.distinct()
-        if fp_binary:
-            # distinct in the stored 16-byte type (narrower shuffle),
-            # hex the survivors for the anti-join key
-            corpus_keys = corpus_keys.select(_fp_hex("__fp").alias("__fp"))
+        # distinct in the stored 16-byte type (narrower shuffle), hex
+        # the survivors for the anti-join key
+        corpus_keys = corpus_fp_raw.distinct().select(
+            _fp_hex("__fp").alias("__fp")
+        )
         fresh = batch_fp.join(corpus_keys, "__fp", "left_anti")
     # NULL-text semantics (round-15, pinned): every NULL-text (or
     # NULL after normalization? no — md5 of the empty string is a

@@ -212,48 +212,7 @@ class BloomBroadcastBudgetError(ValueError):
     alternative is a silent driver/executor OOM at exactly the corpus
     size the gate was meant to serve).
     ``dedup.incremental_exact_dedup`` catches this and falls back to
-    the plain fingerprint anti-join (logged via ``warnings``)."""
-
-
-def _bloom_stats(bloom: DataFrame, m_bits: int, k: int, ctx: str) -> int:
-    """One-scan validation of a sketch before probing: (a) embedded
-    (m_bits, k) sentinels must match the caller's — absent sentinels
-    (a pre-round-13 or hand-built sketch) pass silently, CONFLICTING
-    sentinels (a raw union of different-geometry sketches) raise;
-    (b) returns the distinct-word count for the broadcast budget
-    check. Replaces the old 2-row sentinel collect, which hid
-    conflicts (dict comprehension kept the last row) and couldn't
-    size the broadcast."""
-    row = bloom.agg(
-        F.count_distinct("word").alias("n_words"),
-        F.count_distinct(
-            F.when(F.col("word") == -1, F.col("bits"))
-        ).alias("n_m"),
-        F.count_distinct(
-            F.when(F.col("word") == -2, F.col("bits"))
-        ).alias("n_k"),
-        F.max(F.when(F.col("word") == -1, F.col("bits"))).alias("m"),
-        F.max(F.when(F.col("word") == -2, F.col("bits"))).alias("k"),
-    ).collect()[0]
-    if row["n_m"] > 1 or row["n_k"] > 1:
-        raise ValueError(
-            f"{ctx}: sketch carries CONFLICTING (m_bits, k) sentinel "
-            f"rows — it is a raw union of sketches built with "
-            f"different geometries; merge same-geometry sketches with "
-            f"bloom_merge (which raises on this) and rebuild otherwise"
-        )
-    got_m, got_k = row["m"], row["k"]
-    if (got_m is not None and got_m != m_bits) or (
-        got_k is not None and got_k != k
-    ):
-        raise ValueError(
-            f"{ctx}: sketch was built with (m_bits={got_m}, k={got_k}) "
-            f"but the call uses (m_bits={m_bits}, k={k}) — a mismatch "
-            f"silently breaks the no-false-negative guarantee (a dup "
-            f"would bypass exact dedup as 'definitely new'); pass the "
-            f"build-time parameters"
-        )
-    return int(row["n_words"])
+    the shuffle-probe strategy (logged via ``warnings``)."""
 
 
 def bloom_merge(blooms: DataFrame) -> DataFrame:
@@ -288,7 +247,6 @@ def bloom_probe(
     k: int = 5,
     max_broadcast_bytes: int | None = None,
     strategy: str = "broadcast",
-    validate: str = "eager",
 ) -> DataFrame:
     """(id_col, maybe_present) membership probe against a
     ``bloom_build`` sketch with the SAME (m_bits, k): maybe_present is
@@ -296,11 +254,21 @@ def bloom_probe(
     value that was built in always probes true), false positives at
     the sketch's design rate. The sketch is broadcast and the probe
     rows fan out k-fold map-side; the only shuffle is the
-    probe-side-sized groupBy back to one row per id. The sketch's
-    embedded (m_bits, k) sentinels are validated against the call's —
-    a mismatch (or a raw union of conflicting-geometry sketches)
-    raises instead of silently losing the no-false-negative
-    guarantee.
+    probe-side-sized groupBy back to one row per id.
+
+    Sentinel validation rides the probe plan: every embedded
+    (m_bits, k) sentinel row is compared against the call's by a
+    per-row assert evaluated while the sketch side is scanned, BEFORE
+    the defensive ``bit_or`` merge below — so a mismatch, or a raw
+    union of conflicting-geometry sketches, raises on whichever row
+    disagrees (aggregation can never alias it past the check).
+    Absent sentinels (a hand-built sketch) pass silently. The raise
+    comes from the FIRST action that consumes the probe, as a Spark
+    execution error carrying the sentinel message — and only when
+    that action actually scans the sketch side: with an EMPTY probe
+    input, AQE's empty-relation propagation may skip the sketch scan,
+    so a mismatched tree passes that action unnoticed (nothing was
+    probed, so no answer was wrong). No call-time scan runs.
 
     The sketch is defensively re-aggregated per word (``bit_or``)
     before the broadcast join (advisor round 13): a sketch with
@@ -309,13 +277,14 @@ def bloom_probe(
     fan the left join out per duplicate row, and ``min(hit)`` would
     require the bit set in EVERY copy: a true member could probe
     ``maybe_present=false`` and bypass exact dedup as definitely new.
-    Sentinel rows are idempotent under ``bit_or`` once the conflict
-    check above has passed (same geometry ⇒ identical sentinel bits).
+    Sentinel rows are idempotent under ``bit_or`` once the per-row
+    check has passed (same geometry ⇒ identical sentinel bits).
 
     ``max_broadcast_bytes`` (default: module-level
-    ``BLOOM_BROADCAST_BUDGET_BYTES``, 1 GiB) bounds the estimated
-    broadcast size (distinct words × ~20 B, counted in the same
-    validation scan): above it the probe raises
+    ``BLOOM_BROADCAST_BUDGET_BYTES``, 1 GiB) bounds the broadcast
+    size, judged by the geometry's structural bound — a sketch holds
+    at most m_bits/32 data words plus 2 sentinel rows, ~20 B each —
+    so no scan is needed: above it the probe raises
     :class:`BloomBroadcastBudgetError` with sharding advice BEFORE
     the broadcast is attempted — a sketch sized for 10¹⁰ docs must
     fail loudly, not OOM the driver. Callers that can degrade
@@ -334,33 +303,7 @@ def bloom_probe(
       that is ~docs/3 narrow rows, strictly smaller than the full
       fingerprint tree the gate replaces). Results are identical to
       'broadcast' bit-for-bit;
-    - ``'auto'``: 'broadcast' within budget, else 'shuffle'.
-
-    ``validate`` (round 18 — the gates' two eager full-tree
-    validation jobs removed):
-
-    - ``'eager'`` (default): run the ``_bloom_stats`` scan BEFORE
-      building the probe — sentinel mismatches raise at call time and
-      the scan's distinct-word count sizes the broadcast-budget check
-      exactly. The right default for arbitrary / foreign sketches.
-    - ``'inline'``: no pre-scan. Sentinel validation is woven into
-      the probe plan as a PER-ROW assert evaluated while the sketch
-      side is read (before the defensive ``bit_or`` merge, so it is
-      at least as strong as the eager check: every sentinel row is
-      compared against the call's (m_bits, k) individually — the
-      ``bit_or``-aliasing that makes post-merge checks weak cannot
-      happen, and a conflicting-geometry union raises on whichever
-      row disagrees). Absent sentinels (pre-round-13 or hand-built
-      sketches) pass silently, exactly like the eager path. The
-      budget check uses the structural bound distinct words ≤
-      m_bits/32 + 2 sentinels; if that bound exceeds the budget the
-      eager count runs anyway, so over-budget behavior is unchanged.
-      A mismatch raises from the FIRST action that consumes the probe
-      (as a Spark execution error carrying the same message) instead
-      of at call time — callers that own the tree's write path and
-      probe it in the same breath (``run_ingest_cycle``'s gates, the
-      measured ~2 full-tree scans/cycle this removes) take this; keep
-      the default for sketches you didn't write."""
+    - ``'auto'``: 'broadcast' within budget, else 'shuffle'."""
     from timebox_spark.operators.dedup import _md5_u32
 
     if strategy not in ("broadcast", "shuffle", "auto"):
@@ -368,36 +311,19 @@ def bloom_probe(
             f"bloom_probe: unknown strategy {strategy!r} — expected "
             f"'broadcast', 'shuffle', or 'auto'"
         )
-    if validate not in ("eager", "inline"):
-        raise ValueError(
-            f"bloom_probe: unknown validate {validate!r} — expected "
-            f"'eager' or 'inline'"
-        )
     budget = (
         BLOOM_BROADCAST_BUDGET_BYTES
         if max_broadcast_bytes is None
         else max_broadcast_bytes
     )
-    if validate == "inline":
-        # structural bound: a sketch holds at most m_bits/32 distinct
-        # data words plus the 2 sentinel rows — no scan needed to
-        # budget-check sketches sized sanely. Past the budget, fall
-        # back to the exact eager count (which also validates), so an
-        # over-budget sketch raises/degrades exactly as before.
-        est_bytes = (m_bits // 32 + 2) * _BLOOM_ROW_BYTES
-        if est_bytes > budget and strategy != "shuffle":
-            n_words = _bloom_stats(bloom, m_bits, k, "bloom_probe")
-            est_bytes = n_words * _BLOOM_ROW_BYTES
-            validate = "eager"  # the stats scan already validated
-    else:
-        n_words = _bloom_stats(bloom, m_bits, k, "bloom_probe")
-        est_bytes = n_words * _BLOOM_ROW_BYTES
+    est_bytes = (m_bits // 32 + 2) * _BLOOM_ROW_BYTES
     if strategy == "auto":
         strategy = "shuffle" if est_bytes > budget else "broadcast"
     if strategy == "broadcast" and est_bytes > budget:
         raise BloomBroadcastBudgetError(
-            f"bloom_probe: sketch holds {n_words} words ≈ {est_bytes} "
-            f"bytes broadcast, over the {budget}-byte budget — pass "
+            f"bloom_probe: an m_bits={m_bits} sketch holds up to "
+            f"{m_bits // 32 + 2} words ≈ {est_bytes} bytes broadcast, "
+            f"over the {budget}-byte budget — pass "
             f"strategy='shuffle' (or 'auto') to probe without the "
             f"broadcast, shard the sketch (partition fingerprints by "
             f"a stable prefix, one independent sketch per shard, probe "
@@ -406,38 +332,35 @@ def bloom_probe(
             f"max_broadcast_bytes only with matching driver/executor "
             f"memory headroom"
         )
-    if validate == "inline":
-        # per-row sentinel assert, evaluated while the sketch side is
-        # scanned and BEFORE the bit_or merge below (pre-aggregation:
-        # a conflicting-geometry union raises on whichever row
-        # disagrees — bit_or can never alias it past this check).
-        # assert_true yields NULL when the condition holds, so the
-        # coalesce keeps every row and the filter's only effect is to
-        # force the evaluation.
-        sentinel_ok = (
-            F.when(F.col("word") == -1, F.col("bits") == F.lit(int(m_bits)))
-            .when(F.col("word") == -2, F.col("bits") == F.lit(int(k)))
-            .otherwise(F.lit(True))
-        )
-        bloom = bloom.filter(
-            F.coalesce(
-                F.assert_true(
-                    sentinel_ok,
-                    F.lit(
-                        f"bloom_probe: sketch sentinel mismatch — the "
-                        f"tree carries a (m_bits, k) sentinel different "
-                        f"from the call's (m_bits={m_bits}, k={k}), or "
-                        f"is a raw union of different geometries; a "
-                        f"mismatch silently breaks the "
-                        f"no-false-negative guarantee (a dup would "
-                        f"bypass exact dedup as 'definitely new') — "
-                        f"pass the build-time parameters or rebuild "
-                        f"with one geometry"
-                    ),
+    # per-row sentinel assert, evaluated while the sketch side is
+    # scanned and BEFORE the bit_or merge below (pre-aggregation: a
+    # conflicting-geometry union raises on whichever row disagrees —
+    # bit_or can never alias it past this check). assert_true yields
+    # NULL when the condition holds, so the coalesce keeps every row
+    # and the filter's only effect is to force the evaluation.
+    sentinel_ok = (
+        F.when(F.col("word") == -1, F.col("bits") == F.lit(int(m_bits)))
+        .when(F.col("word") == -2, F.col("bits") == F.lit(int(k)))
+        .otherwise(F.lit(True))
+    )
+    bloom = bloom.filter(
+        F.coalesce(
+            F.assert_true(
+                sentinel_ok,
+                F.lit(
+                    f"bloom_probe: sketch sentinel mismatch — the tree "
+                    f"carries a (m_bits, k) sentinel different from the "
+                    f"call's (m_bits={m_bits}, k={k}), or is a raw union "
+                    f"of different geometries; a mismatch silently "
+                    f"breaks the no-false-negative guarantee (a dup "
+                    f"would bypass exact dedup as 'definitely new') — "
+                    f"pass the build-time parameters or rebuild with "
+                    f"one geometry"
                 ),
-                F.lit(True),
-            )
+            ),
+            F.lit(True),
         )
+    )
     bloom = bloom.groupBy("word").agg(F.bit_or("bits").alias("bits"))
     pos = [
         (_md5_u32(F.col(col), str(i)) % F.lit(m_bits)) for i in range(k)
@@ -474,8 +397,8 @@ CMS_SALT = "cms"
 
 
 def _cms_stats(cms: DataFrame, width: int, depth: int, ctx: str) -> int:
-    """One-scan sentinel validation for a count-min sketch (the
-    bloom _bloom_stats pattern): conflicting embedded (width, depth)
+    """One-scan sentinel validation for a count-min sketch:
+    conflicting embedded (width, depth)
     sentinels raise (a raw union of different geometries), a mismatch
     with the caller's parameters raises (wrong-width positions silently
     under-count), absent sentinels pass. Returns the data-row count

@@ -460,7 +460,6 @@ def compact_corpus(
     band_bloom_k: int = 5,
     batch_index_out: dict | None = None,
     timings: dict | None = None,
-    sketch_validate: str = "eager",
 ) -> DataFrame:
     """The batch half of the ingest lambda split ``curate_stream``
     documents: given the rows a streaming window accumulated
@@ -563,16 +562,15 @@ def compact_corpus(
     (run_ingest_cycle does); without an owner the collect re-derives
     it (correct, duplicated map work).
 
-    ``scratch_path`` (cluster mode only) keeps the drop DISTRIBUTED
-    (round-12 verdict task 2): the non-representative ids are written
-    to ``{scratch_path}/dropped`` parquet and the final anti-join
-    scans that — zero ``.collect()``, so a crawler dup-flood
-    micro-batch can never blow a driver-side id list. The path must
-    be on the shared cluster filesystem (``run_ingest_cycle`` passes
-    one under its store); the CALLER deletes it after materializing
-    the returned plan (the plan reads it). Without it the ids are
-    collected to the driver — bounded by the within-batch near-dup
-    count, acceptable for tests and small batches only.
+    ``scratch_path`` (REQUIRED with ``keep='cluster'``; a ValueError
+    at call time without it) keeps the drop DISTRIBUTED (round-12
+    verdict task 2): the non-representative ids are written to
+    ``{scratch_path}/dropped`` parquet and the final anti-join scans
+    that — zero ``.collect()``, so a crawler dup-flood micro-batch
+    can never blow a driver-side id list. The path must be on the
+    shared cluster filesystem (``run_ingest_cycle`` passes one under
+    its store); the CALLER deletes it after materializing the
+    returned plan (the plan reads it).
 
     ``batch_index_out`` (round 17 — index-write reuse): pass a dict
     to receive the BATCH side's materialized ``{'banded': ...,
@@ -586,13 +584,9 @@ def compact_corpus(
     index_writes ~7 s → ~2 s per cycle). The tables stay valid only
     until the owner unpersists ``exact_owned_rdds``.
 
-    ``sketch_validate`` (round 18) is forwarded to the fps gate
-    (``incremental_exact_dedup``) and the band-key gate's
-    ``bloom_probe`` calls: ``'inline'`` folds sketch sentinel
-    validation into the probe plans as per-row asserts instead of one
-    eager full-tree scan per gate per cycle — for callers that own
-    the sketch trees' write path (``run_ingest_cycle``); mismatched or
-    mixed-geometry trees still raise, at the first gate action.
+    Both gates validate their sketch's (m, k) sentinels inside the
+    probe plan (``bloom_probe``): a mismatched or mixed-geometry tree
+    raises at the first gate action.
 
     ``timings`` (round 17 — the observability behind the bench
     ingest_loop's compact_write attribution): pass a dict to receive
@@ -620,6 +614,12 @@ def compact_corpus(
 
     if keep not in ("chain", "cluster"):
         raise ValueError(f"keep must be 'chain' or 'cluster', got {keep!r}")
+    if keep == "cluster" and scratch_path is None:
+        raise ValueError(
+            "compact_corpus: keep='cluster' needs scratch_path — the "
+            "dropped ids go through parquet on the shared filesystem "
+            "so no batch-sized id list is collected to the driver"
+        )
     if verify not in ("exact", "estimate"):
         raise ValueError(f"verify must be 'exact' or 'estimate', got {verify!r}")
     if verify == "estimate" and near_dup:
@@ -652,7 +652,6 @@ def compact_corpus(
         # after fully consuming it (run_ingest_cycle does, after its
         # corpus partition commits)
         owned_rdds=exact_owned_rdds,
-        sketch_validate=sketch_validate,
     )
     _ct = _cstamp("exact_gate", _ct)
     if not near_dup:
@@ -747,7 +746,6 @@ def compact_corpus(
             kprobe = bloom_probe(
                 bkeys, "key", "key", corpus_band_bloom,
                 band_bloom_m, band_bloom_k,
-                validate=sketch_validate,
             )
         except BloomBroadcastBudgetError as e:
             import warnings
@@ -762,7 +760,6 @@ def compact_corpus(
             kprobe = bloom_probe(
                 bkeys, "key", "key", corpus_band_bloom,
                 band_bloom_m, band_bloom_k, strategy="shuffle",
-                validate=sketch_validate,
             )
         maybe_keys = kprobe.filter(F.col("maybe_present")).select("key")
         krows = maybe_keys.limit(FPS_PRUNE_ISIN_MAX + 1).collect()
@@ -920,12 +917,10 @@ def compact_corpus(
     # each other's live checkpoints; the owned_rdds list records
     # exactly the handles this call created, so concurrent owners
     # never interfere — pinned by the concurrent-compaction pytest).
-    # The non-representative ids leave the loop either through a
-    # distributed parquet write (scratch_path — zero collect, the
-    # production path) or a driver collect bounded by the batch's
-    # within-batch near-dup count (tests/small batches); either way
-    # the returned plan carries no checkpoint lineage, matching chain
-    # mode's leave-nothing-behind contract (getPersistentRDDs pytest).
+    # The non-representative ids leave the loop through a distributed
+    # parquet write under scratch_path (zero collect), so the returned
+    # plan carries no checkpoint lineage, matching chain mode's
+    # leave-nothing-behind contract (getPersistentRDDs pytest).
     from timebox_spark.operators.dedup import (
         ConvergenceError,
         _tracked_local_checkpoint,
@@ -934,7 +929,6 @@ def compact_corpus(
 
     spark = new_batch.sparkSession
     owned: list = []
-    non_rep_ids: list = []
     dropped_scan: DataFrame | None = None
     try:
         pairs = _tracked_local_checkpoint(pairs, owned)
@@ -953,38 +947,24 @@ def compact_corpus(
             non_rep = comp.filter(F.col("node") != F.col("component")).select(
                 F.col("node").alias(id_col)
             )
-            if scratch_path is not None:
-                # distributed drop: materialize the (small) id set on
-                # the shared FS while the checkpoints are still alive,
-                # anti-join against the scan — no driver-side bound
-                non_rep.write.mode("overwrite").parquet(
-                    f"{scratch_path}/dropped"
-                )
-                dropped_scan = spark.read.parquet(f"{scratch_path}/dropped")
-            else:
-                non_rep_ids = [r[0] for r in non_rep.collect()]
+            # distributed drop: materialize the (small) id set on the
+            # shared FS while the checkpoints are still alive,
+            # anti-join against the scan — no driver-side bound
+            non_rep.write.mode("overwrite").parquet(f"{scratch_path}/dropped")
+            dropped_scan = spark.read.parquet(f"{scratch_path}/dropped")
     finally:
         # runs even when CC raises — the crash path must not be the
         # one that leaks block-manager state
         unpersist_owned(owned)
-    if dropped_scan is not None:
-        # NO broadcast hint (advisor round 13): forcing broadcast
-        # collects the dropped-id relation onto the driver anyway,
-        # moving a dup-flood blow-up from a Python list to a
-        # driver-resident JVM broadcast. Left to AQE, a small drop set
-        # still broadcasts at runtime; a flood-sized one shuffles both
-        # batch-bounded sides instead of pressuring the driver.
-        return remaining.join(dropped_scan, id_col, "left_anti")
-    if not non_rep_ids:
+    if dropped_scan is None:
         return remaining
-    # preserve the caller's id type (string/long/... all valid
-    # id_col types elsewhere in this function)
-    id_type = kept.schema[id_col].dataType
-    dropped_df = spark.createDataFrame(
-        [(v,) for v in non_rep_ids],
-        T.StructType([T.StructField(id_col, id_type)]),
-    )
-    return remaining.join(F.broadcast(dropped_df), id_col, "left_anti")
+    # NO broadcast hint (advisor round 13): forcing broadcast collects
+    # the dropped-id relation onto the driver anyway, moving a
+    # dup-flood blow-up from a Python list to a driver-resident JVM
+    # broadcast. Left to AQE, a small drop set still broadcasts at
+    # runtime; a flood-sized one shuffles both batch-bounded sides
+    # instead of pressuring the driver.
+    return remaining.join(dropped_scan, id_col, "left_anti")
 
 
 class SequentialStreamingDrain:
@@ -1172,38 +1152,12 @@ def curate_and_ingest_stream(
     (None = the session's ``spark.sql.shuffle.partitions``, 0 =
     keep the source partitioning). Detector-only by measurement: see
     the inline note at the ``curate_stream`` call."""
-    if cap_max is not None and (
-        cms_col is None or cms_col not in stream.columns
-    ):
-        # fail at CALL time, not asynchronously inside foreachBatch on
-        # the first micro-batch (run_ingest_cycle re-checks per cycle)
-        raise ValueError(
-            "curate_and_ingest_stream: cap_max needs cms_col naming a "
-            "stream column — the budget is enforced against the "
-            "store's count-min tree of that column"
-        )
-    if cms_weight_col is not None and (
-        cms_col is None
-        or cms_col not in stream.columns
-        or cms_weight_col not in stream.columns
-    ):
-        raise ValueError(
-            "curate_and_ingest_stream: cms_weight_col needs cms_col "
-            "AND the weight column present in the stream — the "
-            "weighted tree sketches SUM(weight) per cms_col value"
-        )
-    if token_budget_max is not None and cms_weight_col is None:
-        raise ValueError(
-            "curate_and_ingest_stream: token_budget_max needs "
-            "cms_weight_col — the token budget is enforced against "
-            "the store's WEIGHTED count-min tree"
-        )
-    if cap_max is not None and cms_weight_col is not None:
-        raise ValueError(
-            "curate_and_ingest_stream: cap_max and cms_weight_col "
-            "are mutually exclusive — one cms tree holds ONE "
-            "denomination (row counts or weight sums)"
-        )
+    # fail at CALL time, not asynchronously inside foreachBatch on the
+    # first micro-batch (run_ingest_cycle re-checks per cycle)
+    _check_stats_knobs(
+        "curate_and_ingest_stream", stream.columns, cms_col, cap_max,
+        cms_weight_col, token_budget_max,
+    )
     carry: tuple[str, ...] = (ts_col,) if stream_near_dup else ()
     if cms_col is not None and cms_col not in (id_col, text_col) and (
         cms_col not in carry
@@ -1287,6 +1241,13 @@ def curate_and_ingest_stream(
         try:
             batch = _tracked_local_checkpoint(batch, owned)
             if batch.isEmpty():
+                # no cycle runs, but a consolidation boundary landing
+                # on this batch still folds — otherwise the fold waits
+                # a whole window while partitions keep accumulating
+                if _consolidation_due(int(batch_id), consolidate_every):
+                    consolidate_ingest_store(
+                        batch_df.sparkSession, store_path, int(batch_id) - 1
+                    )
                 return
             run_ingest_cycle(
                 batch,
@@ -1554,17 +1515,6 @@ def _backfill_tree(
 GATE_MIN_TREE_BYTES = 32 << 20
 
 
-def _fps_as_hex(df: DataFrame) -> DataFrame:
-    """A fps frame in md5's lowercase-hex representation regardless of
-    how the tree stores it (legacy 32-char hex string or the round-15
-    16-byte binary) — the form the Bloom sketch hashes, so sketch bits
-    stay identical across the storage migration and the hex-probing
-    batch side never false-negatives against a binary-era sketch."""
-    if dict(df.dtypes).get("__fp") == "binary":
-        return df.select(F.lower(F.hex("__fp")).alias("__fp"))
-    return df
-
-
 def _banded_prunable_layout(df: DataFrame) -> DataFrame:
     """Banded-index layout (round 15): range-partitioned + sorted by
     the band ``key`` so the gated compaction's pushed key-In predicate
@@ -1582,18 +1532,14 @@ def _sets_prunable_layout(df: DataFrame) -> DataFrame:
 
 
 def _fps_prunable_layout(df: DataFrame) -> DataFrame:
-    """The fps tree's physical layout (round 15): ``__fp`` stored as
-    16-byte binary (half the hex string's bytes at 10¹⁰-doc scale),
+    """The fps tree's physical layout (round 15): the 16-byte binary
+    ``__fp`` (half the hex string's bytes at 10¹⁰-doc scale)
     range-partitioned and sorted so parquet row-group min/max stats
     are selective — the gated exact-dedup pushes the batch's
     maybe-present fingerprints into this scan as an In predicate and
     skips every row group that cannot match (see
-    ``dedup.incremental_exact_dedup``). Converts legacy hex-string
-    trees; already-binary frames pass through to the sort."""
-    out = df
-    if dict(df.dtypes).get("__fp") == "string":
-        out = out.select(F.unhex("__fp").alias("__fp"))
-    return out.repartitionByRange("__fp").sortWithinPartitions("__fp")
+    ``dedup.incremental_exact_dedup``)."""
+    return df.repartitionByRange("__fp").sortWithinPartitions("__fp")
 
 
 def _store_tree_paths(store_path: str) -> dict[str, str]:
@@ -1624,13 +1570,12 @@ def _store_tree_paths(store_path: str) -> dict[str, str]:
 # an eager file listing + parquet footer schema inference EVERY cycle
 # (~0.65-0.8 s/cycle at sf0.1), yet a tree's schema is constant
 # between consolidations — per-cycle writes append same-shaped
-# partitions (the fps tree deliberately stays single-typed until
-# consolidation migrates hex→binary). Cache the inferred StructType
-# per tree path and re-read with spark.read.schema(...), which skips
-# the footer pass. Invalidated by the two writers that can CHANGE a
-# tree's schema or identity: consolidate_ingest_store (the hex→binary
-# migration point) and a cycle-0 seed (a store recreated at the same
-# path — tests and the bench do this). Assumes the store's
+# partitions. Cache the inferred StructType per tree path and re-read
+# with spark.read.schema(...), which skips the footer pass.
+# Invalidated by the two writers that can CHANGE a tree's files
+# wholesale: consolidate_ingest_store (every tree rewritten) and a
+# cycle-0 seed (a store recreated at the same path — tests and the
+# bench do this). Assumes the store's
 # single-writer contract (the checkpointed stream / one driver): a
 # FOREIGN process consolidating the same live store mid-stream was
 # never supported — replay idempotency already requires one writer.
@@ -1694,8 +1639,8 @@ def _fold_partitions(
             folded = folded.filter(row_filter)
         if transform is not None:
             # per-tree physical layout (round 15: the fps tree sorts
-            # by fingerprint and migrates hex→binary here) — applied
-            # in the rebuild for the same resume-stability reason
+            # by fingerprint) — applied in the rebuild for the same
+            # resume-stability reason
             folded = transform(folded)
         folded.write.mode("overwrite").parquet(tmp)
     prefix = f"{part_col}="
@@ -1759,13 +1704,11 @@ def consolidate_ingest_store(
             "cycle",
             upto_cycle,
             f"{store_path}/_tmp_consolidate/{tree}/cycle={upto_cycle}",
-            # prunable layouts (round 15): fps sorted by fingerprint
-            # (+ hex→binary migration — the one moment the whole tree
-            # is rewritten under one schema, so a mixed-type tree
-            # never exists), banded sorted by band key, verify tree
-            # sorted by id — every file owns a disjoint slice, so the
-            # gated compaction's pushed In predicates prune files AND
-            # row groups
+            # prunable layouts (round 15): fps sorted by fingerprint,
+            # banded sorted by band key, verify tree sorted by id —
+            # every file owns a disjoint slice, so the gated
+            # compaction's pushed In predicates prune files AND row
+            # groups
             transform={
                 "fps": _fps_prunable_layout,
                 "banded": _banded_prunable_layout,
@@ -1773,8 +1716,8 @@ def consolidate_ingest_store(
             }.get(tree),
         )
     fs.delete(fs_path(f"{store_path}/_tmp_consolidate"), True)
-    # the fold may have rewritten a tree's schema (hex→binary fps
-    # migration) — drop the cached shapes so the next cycle re-infers
+    # every tree's files were rewritten — drop the cached shapes so
+    # the next cycle re-infers
     _invalidate_tree_schema_cache(store_path)
 
 
@@ -1798,6 +1741,53 @@ def read_store_cms(
     if upto_cycle is not None and "cycle" in df.columns:
         df = df.filter(F.col("cycle") <= upto_cycle)
     return cms_merge(df.drop("cycle"))
+
+
+def _check_stats_knobs(
+    ctx: str,
+    columns: list,
+    cms_col: str | None,
+    cap_max: int | None,
+    cms_weight_col: str | None,
+    token_budget_max: int | None,
+) -> None:
+    """The cms/cap/token-budget pairings both ingest entry points
+    accept: ``columns`` are the input's (stream or batch) columns."""
+    if cap_max is not None and (cms_col is None or cms_col not in columns):
+        raise ValueError(
+            f"{ctx}: cap_max needs cms_col naming an input column — "
+            f"the budget is enforced against the store's count-min "
+            f"tree of that column"
+        )
+    if cms_weight_col is not None and (
+        cms_col is None
+        or cms_col not in columns
+        or cms_weight_col not in columns
+    ):
+        raise ValueError(
+            f"{ctx}: cms_weight_col needs cms_col AND the weight "
+            f"column present in the input — the weighted tree sketches "
+            f"SUM(weight) per cms_col value"
+        )
+    if token_budget_max is not None and cms_weight_col is None:
+        raise ValueError(
+            f"{ctx}: token_budget_max needs cms_weight_col — the token "
+            f"budget is enforced against the store's WEIGHTED "
+            f"count-min tree"
+        )
+    if cap_max is not None and cms_weight_col is not None:
+        raise ValueError(
+            f"{ctx}: cap_max and cms_weight_col are mutually exclusive "
+            f"— one cms tree holds ONE denomination (row counts or "
+            f"weight sums); run separate stores to budget both"
+        )
+
+
+def _consolidation_due(cycle_id: int, consolidate_every: int | None) -> bool:
+    """Whether cycle ``cycle_id`` opens by folding cycles below it."""
+    return bool(
+        consolidate_every and cycle_id > 0 and cycle_id % consolidate_every == 0
+    )
 
 
 def run_ingest_cycle(
@@ -1834,8 +1824,11 @@ def run_ingest_cycle(
     ``cycle={id}``:
 
     - ``corpus/``  — the kept documents,
-    - ``fps/``     — their normalized-text fingerprints
-      (``dedup.corpus_fingerprints``),
+    - ``fps/``     — their normalized-text fingerprints as 16-byte
+      binary md5s (``unhex`` of ``dedup.corpus_fingerprints``; a
+      hex-string tree from an older build is refused with a
+      ``ValueError`` at the fps state read, before any backfill or
+      write of the cycle — rebuild the store),
     - ``index/banded`` and ``index/sets`` — the near-dup index
       (``dedup.build_corpus_index``: band table + hashed shingle
       sets).
@@ -1957,49 +1950,23 @@ def run_ingest_cycle(
         return now
 
     from timebox_spark.operators.dedup import (
+        _fp_hex,
         build_corpus_index,
         corpus_fingerprints,
     )
 
     spark = new_batch.sparkSession
     paths = _store_tree_paths(store_path)
-    if cap_max is not None and (
-        cms_col is None or cms_col not in new_batch.columns
-    ):
-        raise ValueError(
-            "run_ingest_cycle: cap_max needs cms_col naming a batch "
-            "column — the budget is enforced against the store's "
-            "count-min tree of that column"
-        )
-    if cms_weight_col is not None and (
-        cms_col is None
-        or cms_col not in new_batch.columns
-        or cms_weight_col not in new_batch.columns
-    ):
-        raise ValueError(
-            "run_ingest_cycle: cms_weight_col needs cms_col AND the "
-            "weight column present in the batch — the weighted tree "
-            "sketches SUM(weight) per cms_col value"
-        )
-    if token_budget_max is not None and cms_weight_col is None:
-        raise ValueError(
-            "run_ingest_cycle: token_budget_max needs cms_weight_col "
-            "— the token budget is enforced against the store's "
-            "WEIGHTED count-min tree"
-        )
-    if cap_max is not None and cms_weight_col is not None:
-        raise ValueError(
-            "run_ingest_cycle: cap_max and cms_weight_col are "
-            "mutually exclusive — one cms tree holds ONE "
-            "denomination (row counts or weight sums); run separate "
-            "stores to budget both"
-        )
+    _check_stats_knobs(
+        "run_ingest_cycle", new_batch.columns, cms_col, cap_max,
+        cms_weight_col, token_budget_max,
+    )
     _t = _time.perf_counter()
     if cycle_id == 0:
         # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
         # store — any cached tree schemas describe a previous store
         _invalidate_tree_schema_cache(store_path)
-    if consolidate_every and cycle_id > 0 and cycle_id % consolidate_every == 0:
+    if _consolidation_due(cycle_id, consolidate_every):
         consolidate_ingest_store(spark, store_path, cycle_id - 1)
         _t = _stamp("consolidate", _t)
 
@@ -2022,6 +1989,13 @@ def run_ingest_cycle(
             # since-deleted store: drop any stale cached shape
             _TREE_SCHEMA_CACHE.pop(path, None)
             return None
+        if key == "fps" and dict(df.dtypes).get("__fp") != "binary":
+            raise ValueError(
+                f"run_ingest_cycle: the fps tree at {path} stores __fp "
+                f"as {dict(df.dtypes).get('__fp')}, but fps trees hold "
+                f"the 16-byte binary md5 — a hex-string tree predates "
+                f"the binary layout; rebuild the store"
+            )
         if cached is None:
             _TREE_SCHEMA_CACHE[path] = df.schema
         if "cycle" not in df.columns:
@@ -2040,22 +2014,23 @@ def run_ingest_cycle(
         # and bloom writes of an un-replayed cycle) would probe
         # negative for a fingerprint that lives only in an uncovered
         # cycle and silently re-admit the exact duplicate.
-        # the sketch ALWAYS hashes the hex representation (via
-        # _fps_as_hex) — a binary-era fps partition backfilled into
-        # the sketch must set the same bits the hex-probing batch
-        # side computes, or true members would probe definitely-new
+        # the sketch hashes the HEX form of the binary fps — the bits
+        # the hex-probing batch side computes, or true members would
+        # probe definitely-new
         _backfill_tree(
             spark, store_path, paths["fps"], paths["bloom"], cycle_id,
-            lambda df: bloom_build(_fps_as_hex(df), "__fp", bloom_m, bloom_k),
+            lambda df: bloom_build(
+                df.select(_fp_hex("__fp").alias("__fp")), "__fp",
+                bloom_m, bloom_k,
+            ),
         )
         # the RAW tree goes straight to the probe (round 17):
-        # bloom_probe's _bloom_stats validates the sentinels
-        # PRE-aggregation (conflicting (m_bits, k) raise — strictly
-        # stronger than checking the merged frame, where bit_or can
-        # alias k=5|7 into a valid-looking 7) and defensively
-        # re-aggregates per word, so bloom_merge's separate eager
-        # conflict job (a full-tree scan per cycle) bought nothing
-        # the probe doesn't already guarantee
+        # bloom_probe validates the sentinels PRE-aggregation per row
+        # (conflicting (m_bits, k) raise — strictly stronger than
+        # checking the merged frame, where bit_or can alias k=5|7 into
+        # a valid-looking 7) and defensively re-aggregates per word,
+        # so bloom_merge's separate eager conflict job (a full-tree
+        # scan per cycle) buys nothing the probe doesn't guarantee
         prior_bloom = read_prior("bloom")
         if prior_bloom is not None:
             bloom = prior_bloom
@@ -2259,12 +2234,6 @@ def run_ingest_cycle(
             timings=(
                 None if timings is None else _compact_sub
             ),
-            # the gates probe trees THIS function's own cycles and
-            # backfills wrote with exactly these (m, k) — validation
-            # rides the probe plans per-row (round 18) instead of two
-            # eager full-tree scans per cycle; a foreign/mixed tree
-            # still raises, at the first gate action
-            sketch_validate="inline",
         )
         if cap_max is not None:
             # corpus-horizon frequency budget on the KEPT rows: the
@@ -2320,30 +2289,23 @@ def run_ingest_cycle(
         # re-read what was PHYSICALLY kept so fps/index derive from
         # the committed rows (and the lineage below is a trivial scan)
         kept_disk = spark.read.parquet(f"{paths['corpus']}/{cyc}")
-        cycle_fps = corpus_fingerprints(kept_disk, text_col)
-        if fps is not None and dict(fps.dtypes).get("__fp") == "string":
-            # legacy hex-string store: keep the tree single-typed (a
-            # mixed string/binary tree cannot be read under one
-            # schema); the next consolidation migrates every partition
-            # to binary at once. Still sorted — row-group stats prune
-            # either type.
-            cycle_fps = cycle_fps.sortWithinPartitions("__fp")
-        else:
-            cycle_fps = cycle_fps.select(
-                F.unhex("__fp").alias("__fp")
-            ).sortWithinPartitions("__fp")
-        cycle_fps.write.mode("overwrite").parquet(f"{paths['fps']}/{cyc}")
+        corpus_fingerprints(kept_disk, text_col).select(
+            F.unhex("__fp").alias("__fp")
+        ).sortWithinPartitions("__fp").write.mode("overwrite").parquet(
+            f"{paths['fps']}/{cyc}"
+        )
         if bloom_m is not None:
             from timebox_spark.operators.sketches import bloom_build
 
             # build the sketch off the COMMITTED fps partition (round
             # 17): the tree just written holds exactly these
-            # fingerprints, so reading it back (narrow binary/hex
-            # column) replaces a second normalize+md5 pass over the
-            # batch text; _fps_as_hex restores the hex form the
-            # sketch always hashes (bit-identical bits)
+            # fingerprints, so reading it back (narrow binary column)
+            # replaces a second normalize+md5 pass over the batch
+            # text; _fp_hex restores the hex form the sketch hashes
             bloom_build(
-                _fps_as_hex(spark.read.parquet(f"{paths['fps']}/{cyc}")),
+                spark.read.parquet(f"{paths['fps']}/{cyc}").select(
+                    _fp_hex("__fp").alias("__fp")
+                ),
                 "__fp",
                 bloom_m,
                 bloom_k,
