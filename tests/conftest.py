@@ -81,7 +81,9 @@ SLOW_NODEIDS = {
     "test_plans.py::test_no_unreduced_single_partition_exchange[q31_dedup_clusters]",
     "test_text.py::test_curate_near_dup_method_portable_matches_fast_path",
     "test_plans.py::test_no_unreduced_single_partition_exchange[q57_stats_suite]",
-    "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical",
+    "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[fps]",
+    "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[band_keys]",
+    "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[cand_ids]",
     "test_oracle_queries.py::test_query_matches_oracle[q57_stats_suite]",
     "test_streaming.py::test_near_dup_hits_stream_flood_capped_state",
     "test_streaming.py::test_near_dup_hits_stream_flags_planted_copy",

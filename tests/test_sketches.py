@@ -417,92 +417,84 @@ def test_bloom_probe_conflicting_sentinels_raise(spark):
         SK.bloom_probe(vals, "id", "v", b1.unionByName(b2), m, k).collect()
 
 
+def _has_broadcast_hint(df) -> bool:
+    return "strategy=broadcast" in (
+        df._jdf.queryExecution().analyzed().toString()
+    )
+
+
+def _budget_warnings(rec) -> int:
+    """The UserWarnings among recorded warnings (a collect can also
+    leave py4j ResourceWarnings), each asserted to be the budget one."""
+    msgs = [str(w.message) for w in rec if issubclass(w.category, UserWarning)]
+    assert all("broadcast budget" in m for m in msgs), msgs
+    return len(msgs)
+
+
+def test_bloom_probe_shuffle_strategy_identical(spark, monkeypatch):
+    """Over BLOOM_BROADCAST_BUDGET_BYTES the probe picks the plain
+    (shuffle) join itself: the flags equal the broadcast probe's, the
+    analyzed plan carries no broadcast hint and exactly one warning is
+    emitted."""
+    import warnings
+
+    from timebox_spark.operators import sketches as SK
+
+    m, k = 1 << 14, 5
+    built = spark.range(0, 200).selectExpr("md5(CAST(id AS STRING)) AS v")
+    bloom = SK.bloom_build(built, "v", m, k)
+    probe = spark.range(0, 400).selectExpr(
+        "id", "md5(CAST(id AS STRING)) AS v"
+    )
+    within = SK.bloom_probe(probe, "id", "v", bloom, m, k)
+    assert _has_broadcast_hint(within)
+    b = {r["id"]: r["maybe_present"] for r in within.collect()}
+    assert all(b[i] for i in range(200))  # no false negatives
+
+    # the module budget is read at call time
+    monkeypatch.setattr(SK, "BLOOM_BROADCAST_BUDGET_BYTES", 8)
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        over = SK.bloom_probe(probe, "id", "v", bloom, m, k)
+    assert _budget_warnings(rec) == 1
+    assert not _has_broadcast_hint(over)
+    assert {r["id"]: r["maybe_present"] for r in over.collect()} == b
+
+
 def test_bloom_broadcast_budget_raises_and_dedup_falls_back(
     spark, monkeypatch
 ):
-    """Round-14 verdict task 5: an over-budget sketch raises
-    BloomBroadcastBudgetError with sharding advice BEFORE the
-    broadcast; incremental_exact_dedup KEEPS the gate but degrades to
-    the shuffle-probe strategy (identical results) with a warning
-    instead of dying mid-stream."""
+    """Over the broadcast budget the probe no longer raises: the gated
+    incremental_exact_dedup falls back to the plain join with exactly
+    one warning and still matches the ungated result."""
     import warnings
-
-    import pytest
 
     from timebox_spark.operators import dedup as DD
     from timebox_spark.operators import sketches as SK
 
     m, k = 1 << 14, 5
+    monkeypatch.setattr(SK, "BLOOM_BROADCAST_BUDGET_BYTES", 8)
     corpus = spark.createDataFrame(
         [(1, "alpha body"), (2, "beta body")], "doc_id long, text string"
     )
     batch = spark.createDataFrame(
         [(10, "alpha body"), (11, "fresh body")], "doc_id long, text string"
     )
-    bloom = SK.bloom_build(DD.corpus_fingerprints(corpus), "__fp", m, k)
-    vals = corpus.selectExpr("doc_id AS id", "md5(text) AS v")
-    with pytest.raises(SK.BloomBroadcastBudgetError, match="shard"):
-        SK.bloom_probe(vals, "id", "v", bloom, m, k, max_broadcast_bytes=8)
-    # the module default budget is read at call time, so shrinking it
-    # makes the gated dedup hit the budget through its own bloom_probe
-    monkeypatch.setattr(SK, "BLOOM_BROADCAST_BUDGET_BYTES", 8)
+    cbloom = SK.bloom_build(DD.corpus_fingerprints(corpus), "__fp", m, k)
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
         gated = {
             r["doc_id"]
             for r in DD.incremental_exact_dedup(
-                batch, corpus, corpus_bloom=bloom, bloom_m=m, bloom_k=k
+                batch, corpus, corpus_bloom=cbloom, bloom_m=m, bloom_k=k
             ).collect()
         }
-    assert any("shuffle-probe" in str(w.message) for w in rec)
-    monkeypatch.setattr(SK, "BLOOM_BROADCAST_BUDGET_BYTES", 1 << 30)
+    assert _budget_warnings(rec) == 1
     plain = {
         r["doc_id"]
         for r in DD.incremental_exact_dedup(batch, corpus).collect()
     }
     assert gated == plain == {11}
-
-
-def test_bloom_probe_shuffle_strategy_identical(spark):
-    """Round 14: the past-broadcast-scale probe path — 'shuffle' (no
-    hint, no budget) must return bit-identical maybe_present flags to
-    'broadcast', and 'auto' must pick it over the budget instead of
-    raising."""
-    from timebox_spark.operators import sketches as SK
-
-    m, k = 1 << 14, 5
-    built = spark.range(0, 200).selectExpr(
-        "md5(CAST(id AS STRING)) AS v"
-    )
-    bloom = SK.bloom_build(built, "v", m, k)
-    probe = spark.range(0, 400).selectExpr(
-        "id", "md5(CAST(id AS STRING)) AS v"
-    )
-    b = {
-        r["id"]: r["maybe_present"]
-        for r in SK.bloom_probe(probe, "id", "v", bloom, m, k).collect()
-    }
-    s = {
-        r["id"]: r["maybe_present"]
-        for r in SK.bloom_probe(
-            probe, "id", "v", bloom, m, k, strategy="shuffle"
-        ).collect()
-    }
-    assert b == s
-    assert all(b[i] for i in range(200))  # no false negatives
-    # 'auto' over an 8-byte budget: no raise, same answers
-    a = {
-        r["id"]: r["maybe_present"]
-        for r in SK.bloom_probe(
-            probe, "id", "v", bloom, m, k,
-            max_broadcast_bytes=8, strategy="auto",
-        ).collect()
-    }
-    assert a == b
-    import pytest
-
-    with pytest.raises(ValueError, match="strategy"):
-        SK.bloom_probe(probe, "id", "v", bloom, m, k, strategy="nope")
 
 
 # ------------------------------------------------------- count-min
@@ -529,6 +521,29 @@ def test_cms_never_undercounts_and_absent_is_zero(spark):
     for k in range(40):
         assert est[k] >= true[k], (k, est[k], true[k])
     assert est[100] >= 0  # absent value can only over-count
+
+
+def test_cms_query_over_budget_estimates_without_broadcast(
+    spark, monkeypatch
+):
+    """Over the broadcast budget cms_query returns the same estimates
+    through a plain join (one warning, no broadcast hint) instead of
+    raising."""
+    import warnings
+
+    SK, df, cms = _cms_fixture(spark)
+    probe = df.filter("id < 60")
+    want = {
+        r["id"]: r["est_count"]
+        for r in SK.cms_query(probe, "id", "v", cms, 64, 3).collect()
+    }
+    monkeypatch.setattr(SK, "BLOOM_BROADCAST_BUDGET_BYTES", 8)
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        over = SK.cms_query(probe, "id", "v", cms, 64, 3)
+    assert _budget_warnings(rec) == 1
+    assert not _has_broadcast_hint(over)
+    assert {r["id"]: r["est_count"] for r in over.collect()} == want
 
 
 def test_cms_merge_equals_whole_and_mixed_geometry_raises(spark):
@@ -734,37 +749,73 @@ def test_incremental_exact_dedup_refuses_string_fps_tree(spark):
         )
 
 
-def test_gated_dedup_maybe_overflow_falls_back_identical(spark, tmp_path, monkeypatch):
-    """A maybe set past FPS_PRUNE_ISIN_MAX (saturated sketch) must fall
-    back to the round-14 broadcast semi-join — same results."""
+@pytest.mark.parametrize(
+    "site", ["__fp", "key", "doc_id"], ids=["fps", "band_keys", "cand_ids"]
+)
+def test_gated_dedup_maybe_overflow_falls_back_identical(
+    spark, tmp_path, monkeypatch, site
+):
+    """A key set past FPS_PRUNE_ISIN_MAX (a saturated sketch) must
+    fall back to the broadcast semi-join at each prune site — the fps
+    scan, the band keys and the candidate ids — and keep exactly the
+    rows of the ungated compact_corpus."""
     from timebox_spark.operators import dedup as DD
     from timebox_spark.operators import sketches as SK
+    from timebox_spark.streaming import ingest
 
-    monkeypatch.setattr(DD, "FPS_PRUNE_ISIN_MAX", 1)
+    base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
+            "juliett kilo lima mike november oscar papa quebec")
     corpus = spark.createDataFrame(
-        [(i, f"corpus doc body {i}") for i in range(40)],
+        [(i, f"{base} corpus tail {i}") for i in range(30)],
         "doc_id long, text string",
     )
     p = str(tmp_path / "r15_ovf")
     _write_prunable_fps_tree(spark, corpus, p)
     fps = spark.read.parquet(p)
-    m, k = 1 << 14, 5
+    banded, sets = DD.build_corpus_index(corpus)
+    m, k = 1 << 16, 5
     bloom = SK.bloom_build(
         fps.select(DD._fp_hex("__fp").alias("__fp")), "__fp", m, k
     )
+    band_bloom = SK.bloom_build(banded.select("key"), "key", m, k)
     batch = spark.createDataFrame(
-        [(500, "corpus doc body 1"), (501, "corpus doc body 2"),
-         (502, "corpus doc body 3"), (503, "brand new")],
+        [(500, f"{base} corpus tail 1"),      # exact dup of corpus 1
+         (501, f"{base} corpus tail 2"),      # exact dup of corpus 2
+         (502, f"{base} corpus tail 7 x"),    # near-dup of corpus 7
+         (503, "utterly unrelated words nothing shares a shingle "
+               "with the corpus documents at all here today")],
         "doc_id long, text string",
     )
-    got = {
-        r["doc_id"]
-        for r in DD.incremental_exact_dedup(
-            batch, corpus, corpus_fps=fps, corpus_bloom=bloom,
-            bloom_m=m, bloom_k=k,
-        ).collect()
-    }
-    assert got == {503}, got
+
+    def kept(**gates):
+        return {
+            r["doc_id"]
+            for r in ingest.compact_corpus(
+                batch, corpus, near_dup=True, threshold=0.5,
+                corpus_index=(banded, sets), corpus_fps=fps, **gates,
+            ).collect()
+        }
+
+    plain = kept()
+    assert plain == {503}, plain
+    # cap the targeted site at 1 key, leave the others on the In path
+    real = DD.prune_to_keys
+    fell_back = []
+
+    def spy(tree, col, keys):
+        monkeypatch.setattr(DD, "FPS_PRUNE_ISIN_MAX", 1 if col == site else 512)
+        out = real(tree, col, keys)
+        if "LeftSemi" in out._jdf.queryExecution().logical().toString():
+            fell_back.append(col)
+        return out
+
+    monkeypatch.setattr(DD, "prune_to_keys", spy)
+    gated = kept(
+        corpus_bloom=bloom, bloom_m=m, bloom_k=k,
+        corpus_band_bloom=band_bloom, band_bloom_m=m, band_bloom_k=k,
+    )
+    assert fell_back == [site]
+    assert gated == plain
 
 
 def test_incremental_dedup_null_text_keep_one_pinned(spark, tmp_path):

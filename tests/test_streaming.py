@@ -2938,6 +2938,47 @@ def test_tree_schema_cache_invalidated_on_recreated_store(
     assert paths["fps"] in ingest._TREE_SCHEMA_CACHE
 
 
+def test_tree_schema_cache_keyed_on_store_generation(spark, tmp_path):
+    """A store replaced at the same path by a COPY of another store
+    (no cycle-0 seed, no consolidation at that path) must not be read
+    with the cached tree shapes of the store it replaced: cycles 0-1
+    of an exact-verify store at P cache an ``__sh`` verify tree, P is
+    swapped for an estimate-verify store (``__sig``), and cycle 2 with
+    index_verify='estimate' must compact against the copy's trees."""
+    import shutil
+    import warnings
+
+    p = str(tmp_path / "store_gen")
+    q = str(tmp_path / "store_gen_estimate")
+    cycles = [
+        [(1, "first document about rivers and meadows far away"),
+         (2, "second document concerning columnar storage codecs")],
+        [(3, "a wholly new third document about watermark state"),
+         (4, "first document about rivers and meadows far away")],  # dup of 1
+    ]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)  # estimate variance
+        for store, verify in ((p, "exact"), (q, "estimate")):
+            for cid, rows in enumerate(cycles):
+                ingest.run_ingest_cycle(
+                    spark.createDataFrame(rows, "doc_id long, text string"),
+                    store, cid, index_verify=verify,
+                )
+        # cycle 1 at P cached the exact store's tree shapes
+        shutil.rmtree(p)
+        shutil.copytree(q, p)
+        ingest.run_ingest_cycle(
+            spark.createDataFrame(
+                [(5, "second document concerning columnar storage codecs"),
+                 (6, "yet another fresh document on join strategies")],
+                "doc_id long, text string",
+            ),
+            p, 2, index_verify="estimate",
+        )
+    got = {r["doc_id"] for r in spark.read.parquet(f"{p}/corpus").collect()}
+    assert got == {1, 2, 3, 6}, got
+
+
 def test_near_dup_hits_stream_fanout_negative_raises(spark):
     """Advice round 17: a negative fanout must fail with a clear
     message at CALL time, not as an opaque repartition error inside

@@ -2114,6 +2114,26 @@ def ensure_in_filter_pushdown(spark) -> None:
         )
 
 
+def prune_to_keys(tree: DataFrame, col: str, keys: DataFrame) -> DataFrame:
+    """``tree`` rows whose ``col`` is among ``keys`` (a one-column
+    frame in the tree's stored type) — the pruned read every Bloom
+    gate ends in. Up to ``FPS_PRUNE_ISIN_MAX`` keys are collected and
+    pushed into the tree's scan as an In predicate (``lit(False)``
+    when there are none), so parquet row-group stats skip every group
+    of a ``col``-sorted tree that cannot match; past the cap (a
+    saturated sketch) a broadcast semi-join keeps the plan
+    shuffle-free, scan unpruned. One bounded collect."""
+    rows = keys.limit(FPS_PRUNE_ISIN_MAX + 1).collect()
+    if len(rows) > FPS_PRUNE_ISIN_MAX:
+        return tree.join(F.broadcast(keys), col, "left_semi")
+    # OR-of-Eq expansion at pushdown needs the threshold above the
+    # list size — without it the In degrades to a min/max range,
+    # which prunes nothing on hashed keys
+    ensure_in_filter_pushdown(tree.sparkSession)
+    vals = [r[0] for r in rows]
+    return tree.filter(F.col(col).isin(vals) if vals else F.lit(False))
+
+
 def incremental_exact_dedup(
     new_batch: DataFrame,
     corpus: DataFrame,
@@ -2140,39 +2160,25 @@ def incremental_exact_dedup(
     — ``corpus`` text is then never touched. A hex-string ``__fp``
     (a pre-binary store) raises ``ValueError``: rebuild the tree.
 
-    ``corpus_bloom`` (round 13) adds the BROADCAST pre-gate for the
-    100 TB steady state: the corpus-sided anti-join cannot broadcast
-    (fps is the big side — LeftAnti builds on the right), so without
-    it EVERY cycle shuffles O(corpus) fingerprints. With a
+    ``corpus_bloom`` (round 13) adds the Bloom pre-gate for the
+    100 TB steady state: without it EVERY cycle shuffles O(corpus)
+    fingerprints (fps is the big side of the anti-join). With a
     ``sketches.bloom_build`` sketch of the corpus fps (same
-    ``bloom_m``/``bloom_k``), batch rows whose probe is negative are
-    DEFINITELY new (Bloom has no false negatives) and bypass the join
-    entirely; the maybe-present subset — true dups plus the sketch's
-    false-positive rate of the batch — resolves through a
-    SHUFFLE-FREE pair of broadcast joins (round 14): the fps tree is
-    the STREAMED side of a semi-join against the broadcast maybe-set
-    (map-only at any corpus size), and the anti-join that classifies
-    the maybe rows builds on the broadcast semi-join output, which is
-    batch-bounded even when the sketch saturates. The whole gated
-    cycle therefore never shuffles the fingerprint tree — the
-    plan-level pytest pins no Exchange above the fps scan. Round 15
-    goes further: the maybe set (≤ ``FPS_PRUNE_ISIN_MAX`` rows) is
-    collected and pushed INTO the fps scan as an In predicate, so on
-    a tree written sorted by ``__fp`` (run_ingest_cycle does) parquet
-    row-group stats skip all but the ~|maybe| row groups that can
-    contain a match — per-cycle fps IO is O(batch), not O(corpus).
-    This makes the gated path EAGER (one bounded collect of what was
-    already being broadcast). The tree stores ``__fp`` as 16-byte
-    binary (half the hex string's bytes); the scan-level filter hits
-    the stored type and all comparisons happen in md5's hex-string
-    form (what the sketch hashes) after it. Results
-    are bit-identical to the gate-less path (pytest-pinned); the
-    sketch is exact-mergeable across cycles (``bloom_merge``) so it
-    is maintained incrementally like fps, and an over-budget sketch
-    (``sketches.BloomBroadcastBudgetError``) degrades to the
-    SHUFFLE-probe strategy with a warning — the gate survives past
-    broadcast scale (the sketch side is ~bits/32 narrow rows, far
-    below the fps tree) instead of OOMing the driver.
+    ``bloom_m``/``bloom_k``, probed by ``bloom_probe``), batch rows
+    whose probe is negative are DEFINITELY new (Bloom has no false
+    negatives) and bypass the join; the maybe-present subset — true
+    dups plus the sketch's false-positive rate of the batch — prunes
+    the fps scan (``prune_to_keys``: an In predicate on the stored
+    binary ``__fp``, so on a ``__fp``-sorted tree parquet row-group
+    stats skip all but ~|maybe| groups; a broadcast semi-join past
+    ``FPS_PRUNE_ISIN_MAX``) and the gated batch resolves against that
+    batch-bounded present set with one broadcast join. The gated
+    cycle therefore never shuffles the fingerprint tree (the plan
+    pytest pins no Exchange above the fps scan), and its fps IO is
+    O(batch), not O(corpus). Comparisons happen in md5's hex-string
+    form (what the sketch hashes) after the scan filter. Results are
+    bit-identical to the gate-less path (pytest-pinned); the sketch
+    is exact-mergeable across cycles (``bloom_merge``).
 
     ``owned_rdds`` (round-14 review): the gated plan references the
     probe result twice, and Spark does not reuse the exchange (the
@@ -2188,14 +2194,10 @@ def incremental_exact_dedup(
     gate's first action (``bloom_probe``'s per-row sentinel assert).
 
     Session side effect (caveat): when the pruned-scan path plans,
-    this call raises the CALLER's session conf
-    ``spark.sql.parquet.pushdown.inFilterThreshold`` to 1000 and the
-    raise outlives the call (idempotent; a higher session value is
-    never lowered). Every later query in the session with a
-    10-999-value ``isin`` over a parquet column then OR-expands at
-    pushdown — usually what you want, but keep user isin lists below
-    ~1k literals on parquet columns: the OR expansion StackOverflows
-    the scan task at ~1.5k terms (see ``FPS_PRUNE_ISIN_MAX``)."""
+    ``ensure_in_filter_pushdown`` raises the CALLER's session
+    ``spark.sql.parquet.pushdown.inFilterThreshold`` to 1000, and the
+    raise outlives the call — keep user isin lists below ~1k literals
+    on parquet columns (see ``FPS_PRUNE_ISIN_MAX``)."""
     fp = F.md5(F.encode(normalize_text(text_col), "UTF-8"))
     batch_fp = new_batch.withColumn("__fp", fp)
     # the corpus side is 16-byte BINARY fingerprints (the fps tree's
@@ -2216,12 +2218,8 @@ def incremental_exact_dedup(
             )
     else:
         corpus_fp_raw = corpus.select(F.unhex(fp).alias("__fp"))
-    probe = None
     if corpus_bloom is not None:
-        from timebox_spark.operators.sketches import (
-            BloomBroadcastBudgetError,
-            bloom_probe,
-        )
+        from timebox_spark.operators.sketches import bloom_probe
 
         # probe DISTINCT fingerprints (not ids): smaller probe side,
         # and NULL-fp rows (NULL text) or NULL ids never ride through
@@ -2234,101 +2232,35 @@ def incremental_exact_dedup(
             batch_fp.select("__fp").filter(F.col("__fp").isNotNull())
             .distinct()
         )
-        try:
-            probe = bloom_probe(
-                fps_only, "__fp", "__fp", corpus_bloom, bloom_m, bloom_k
-            )
-        except BloomBroadcastBudgetError as e:
-            # over-budget sketch: KEEP the gate but probe via the
-            # shuffle strategy (round 14) — identical probe results,
-            # no broadcast; the sketch side is ~bits/32 narrow rows,
-            # strictly smaller than the fingerprint tree the gate
-            # exists to avoid shuffling. Loud anyway, so the operator
-            # re-sizes or shards the sketch deliberately.
-            import warnings
-
-            warnings.warn(
-                f"incremental_exact_dedup: Bloom pre-gate over the "
-                f"broadcast budget — degrading to the shuffle-probe "
-                f"strategy for this cycle ({e})",
-                UserWarning,
-                stacklevel=2,
-            )
-            probe = bloom_probe(
-                fps_only, "__fp", "__fp", corpus_bloom, bloom_m,
-                bloom_k, strategy="shuffle",
-            )
-    if probe is not None:
+        probe = bloom_probe(
+            fps_only, "__fp", "__fp", corpus_bloom, bloom_m, bloom_k
+        )
         if owned_rdds is not None:
             # the probe result is referenced by two plan branches and
             # the exchanges are NOT reused (filters differentiate the
             # subtrees) — materialize the batch-bounded probe once
             probe = _tracked_local_checkpoint(probe, owned_rdds)
-        # shuffle-FREE corpus side (round-14, the round-13 `weak`):
-        # maybe.join(corpus_fp, left_anti) built on the RIGHT, so any
-        # non-empty maybe set still shuffled the ENTIRE fingerprint
-        # tree (~160 GB/cycle at 10^10 docs). The maybe set is small
+        # shuffle-FREE corpus side (round 14): the maybe set is small
         # by construction (true dups + sketch fpr of the batch), so
-        # invert the build sides with two broadcasts: (a) fps ⋉
-        # broadcast(maybe fps) — fps is the STREAMED side, map-only,
-        # zero shuffle at any corpus size; (b) one broadcast left
-        # join of the gated batch against the present set with a
-        # keep-filter — present ⊆ maybe's fps, batch-bounded even
-        # when the sketch saturates (fpr → 1 degrades cost to the
-        # batch size, never to the corpus). distinct() AFTER the
-        # semi-join so its exchange moves the maybe-sized output, not
-        # the tree (kept-doc fps are unique anyway; this guards a
-        # caller-supplied corpus_fps with duplicates). Single-pass
-        # shape (round-14 review): the old definite/maybe split +
-        # anti-join union referenced the probe THREE times; this
-        # references it twice (once via gated, once via maybe_fps).
-        maybe_fps = probe.filter(F.col("maybe_present")).select("__fp")
-        # PRUNED fps scan (round 15, the round-14 `weak`): the
-        # round-14 semi-join was shuffle-free but still READ the
-        # whole fingerprint tree every cycle — a broadcast semi-join
-        # pushes no value predicate into the scan. The maybe set is
-        # batch-bounded by construction (true dups + the sketch's fpr
-        # of the batch) and was ALREADY being broadcast, so collecting
-        # it moves the same bytes; pushed back in as an In predicate,
-        # parquet row-group stats + column index skip every row group
-        # that cannot contain a match (the tree is written sorted by
-        # __fp, so a fingerprint lands in ~1 group). Past the cap —
-        # a saturated sketch — fall back to the round-14 broadcast
-        # semi-join: still shuffle-free, scan unpruned.
-        maybe_rows = maybe_fps.limit(FPS_PRUNE_ISIN_MAX + 1).collect()
-        if len(maybe_rows) <= FPS_PRUNE_ISIN_MAX:
-            maybe_vals = [r["__fp"] for r in maybe_rows]
-            # OR-of-Eq expansion for the parquet pushdown needs the
-            # threshold above the list size (see _FPS_IN_FILTER
-            # _THRESHOLD) — planning-time conf, idempotent; never
-            # LOWER a value the session already raised
-            ensure_in_filter_pushdown(new_batch.sparkSession)
-            if not maybe_vals:
-                present = corpus_fp_raw.filter(F.lit(False)).select(
-                    _fp_hex("__fp").alias("__fp")
-                )
-            else:
-                vals = [bytes.fromhex(v) for v in maybe_vals]
-                # NO distinct here: it would put an Exchange between
-                # the fps scan and its join (the plan pytest pins that
-                # segment exchange-free). A tree with duplicate rows
-                # per fingerprint (caller-supplied; run_ingest_cycle's
-                # trees are unique by construction) fans the left join
-                # below out per duplicate, and the keep-one window
-                # collapses the identical copies — same result, the
-                # broadcast grows by the duplicate multiplicity only.
-                present = corpus_fp_raw.filter(
-                    F.col("__fp").isin(vals)
-                ).select(_fp_hex("__fp").alias("__fp"))
-        else:
-            # semi-join in the stored 16-byte type (narrower stream),
-            # hex only the survivors
-            key = maybe_fps.select(F.unhex("__fp").alias("__fp"))
-            present = (
-                corpus_fp_raw.join(F.broadcast(key), "__fp", "left_semi")
-                .select(_fp_hex("__fp").alias("__fp"))
-                .distinct()
-            )
+        # the fps tree is only ever the STREAMED side — pruned to the
+        # maybe set by prune_to_keys (pushed In, or a broadcast
+        # semi-join past the cap) — and the gated batch resolves
+        # against that batch-bounded present set with one broadcast
+        # left join plus a keep-filter. Keys go in the tree's stored
+        # 16-byte type so the predicate reaches parquet; only the
+        # survivors are hexed. NO distinct on the present set: it
+        # would put an Exchange between the fps scan and its join
+        # (the plan pytest pins that segment exchange-free). A tree
+        # with duplicate rows per fingerprint (caller-supplied;
+        # run_ingest_cycle's trees are unique by construction) fans
+        # the left join out per duplicate, and the keep-one window
+        # below collapses the identical copies.
+        maybe_fps = probe.filter(F.col("maybe_present")).select(
+            F.unhex("__fp").alias("__fp")
+        )
+        present = prune_to_keys(corpus_fp_raw, "__fp", maybe_fps).select(
+            _fp_hex("__fp").alias("__fp")
+        )
         gated = batch_fp.join(probe, "__fp", "left")
         mp = F.coalesce(F.col("maybe_present"), F.lit(False))
         fresh = (

@@ -195,24 +195,40 @@ def bloom_build(
     )
 
 
-# Broadcast budget for bloom_probe (round-14 verdict task 5): the
-# sketch is broadcast to every executor, so a caller sizing m_bits for
-# 10^10 docs must get a RAISE with sharding advice, not a driver OOM.
-# ~20 bytes/row covers the (int word, long bits) data plus JVM row
-# overhead; 1 GiB keeps the probe well under Spark's 8 GB broadcast
-# hard limit and typical driver headroom. Module-level (read at call
-# time) so deployments — and the budget pytest — can adjust it.
+# Broadcast budget for the sketch probes (bloom_probe, cms_query): a
+# sketch is broadcast only while its structural size fits — one sized
+# for 10^10 docs would otherwise OOM the driver. Over the budget the
+# probe runs a plain join instead and warns. ~20 bytes/row covers the
+# (int word, long bits) data plus JVM row overhead; 1 GiB keeps the
+# probe well under Spark's 8 GB broadcast hard limit and typical
+# driver headroom. Module-level (read at call time) so deployments —
+# and the budget pytest — can adjust it.
 BLOOM_BROADCAST_BUDGET_BYTES = 1 << 30
 _BLOOM_ROW_BYTES = 20
 
 
-class BloomBroadcastBudgetError(ValueError):
-    """The sketch's estimated broadcast size exceeds the budget —
-    raised by ``bloom_probe`` BEFORE attempting the broadcast (the
-    alternative is a silent driver/executor OOM at exactly the corpus
-    size the gate was meant to serve).
-    ``dedup.incremental_exact_dedup`` catches this and falls back to
-    the shuffle-probe strategy (logged via ``warnings``)."""
+def _sketch_join(
+    probe: DataFrame, sketch: DataFrame, on, est_bytes: int, ctx: str
+) -> DataFrame:
+    """``probe`` left-joined to ``sketch`` on ``on``: a broadcast hash
+    join while ``est_bytes`` (the sketch's structural size) fits
+    ``BLOOM_BROADCAST_BUDGET_BYTES``, else a plain join the optimizer
+    plans freely, with one ``UserWarning`` — no sketch over the budget
+    is ever broadcast. The answers are identical either way."""
+    budget = BLOOM_BROADCAST_BUDGET_BYTES
+    if est_bytes <= budget:
+        return probe.join(F.broadcast(sketch), on, "left")
+    import warnings
+
+    warnings.warn(
+        f"{ctx}: the sketch is ≈ {est_bytes} bytes, over the "
+        f"{budget}-byte broadcast budget — probing with a plain join "
+        f"instead; shard the sketch (one per stable key prefix) to "
+        f"keep the broadcast",
+        UserWarning,
+        stacklevel=3,
+    )
+    return probe.join(sketch, on, "left")
 
 
 def bloom_merge(blooms: DataFrame) -> DataFrame:
@@ -245,8 +261,6 @@ def bloom_probe(
     bloom: DataFrame,
     m_bits: int = 1 << 20,
     k: int = 5,
-    max_broadcast_bytes: int | None = None,
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """(id_col, maybe_present) membership probe against a
     ``bloom_build`` sketch with the SAME (m_bits, k): maybe_present is
@@ -271,7 +285,7 @@ def bloom_probe(
     probed, so no answer was wrong). No call-time scan runs.
 
     The sketch is defensively re-aggregated per word (``bit_or``)
-    before the broadcast join (advisor round 13): a sketch with
+    before the join (advisor round 13): a sketch with
     MULTIPLE rows per word — a raw union of per-cycle sketches, or a
     consolidated tree read without ``bloom_merge`` — would otherwise
     fan the left join out per duplicate row, and ``min(hit)`` would
@@ -280,58 +294,14 @@ def bloom_probe(
     Sentinel rows are idempotent under ``bit_or`` once the per-row
     check has passed (same geometry ⇒ identical sentinel bits).
 
-    ``max_broadcast_bytes`` (default: module-level
-    ``BLOOM_BROADCAST_BUDGET_BYTES``, 1 GiB) bounds the broadcast
-    size, judged by the geometry's structural bound — a sketch holds
-    at most m_bits/32 data words plus 2 sentinel rows, ~20 B each —
-    so no scan is needed: above it the probe raises
-    :class:`BloomBroadcastBudgetError` with sharding advice BEFORE
-    the broadcast is attempted — a sketch sized for 10¹⁰ docs must
-    fail loudly, not OOM the driver. Callers that can degrade
-    gracefully (``dedup.incremental_exact_dedup``) catch it and fall
-    back to the SHUFFLE strategy below.
-
-    ``strategy`` (round 14 — the past-broadcast-scale path):
-
-    - ``'broadcast'`` (default): budget-checked broadcast hash join —
-      zero shuffle on either side, the right call while the sketch
-      fits executor memory;
-    - ``'shuffle'``: NO broadcast hint and NO budget — a plain join
-      the optimizer plans freely (AQE still broadcasts a small
-      sketch; an over-budget one becomes a shuffled hash join whose
-      sketch side is ~word-count rows ≈ bits/32 — at 10 bits/doc
-      that is ~docs/3 narrow rows, strictly smaller than the full
-      fingerprint tree the gate replaces). Results are identical to
-      'broadcast' bit-for-bit;
-    - ``'auto'``: 'broadcast' within budget, else 'shuffle'."""
+    The sketch is broadcast while its structural size — at most
+    m_bits/32 data words plus 2 sentinel rows, ~20 B each — fits
+    ``BLOOM_BROADCAST_BUDGET_BYTES`` (1 GiB); above it the probe runs
+    a plain join instead (the sketch side is ~bits/32 narrow rows,
+    far below the fingerprint tree a gate replaces) and warns once.
+    The flags are identical either way."""
     from timebox_spark.operators.dedup import _md5_u32
 
-    if strategy not in ("broadcast", "shuffle", "auto"):
-        raise ValueError(
-            f"bloom_probe: unknown strategy {strategy!r} — expected "
-            f"'broadcast', 'shuffle', or 'auto'"
-        )
-    budget = (
-        BLOOM_BROADCAST_BUDGET_BYTES
-        if max_broadcast_bytes is None
-        else max_broadcast_bytes
-    )
-    est_bytes = (m_bits // 32 + 2) * _BLOOM_ROW_BYTES
-    if strategy == "auto":
-        strategy = "shuffle" if est_bytes > budget else "broadcast"
-    if strategy == "broadcast" and est_bytes > budget:
-        raise BloomBroadcastBudgetError(
-            f"bloom_probe: an m_bits={m_bits} sketch holds up to "
-            f"{m_bits // 32 + 2} words ≈ {est_bytes} bytes broadcast, "
-            f"over the {budget}-byte budget — pass "
-            f"strategy='shuffle' (or 'auto') to probe without the "
-            f"broadcast, shard the sketch (partition fingerprints by "
-            f"a stable prefix, one independent sketch per shard, probe "
-            f"each batch row against its own shard's sketch), or use "
-            f"the plain fingerprint anti-join; raise "
-            f"max_broadcast_bytes only with matching driver/executor "
-            f"memory headroom"
-        )
     # per-row sentinel assert, evaluated while the sketch side is
     # scanned and BEFORE the bit_or merge below (pre-aggregation: a
     # conflicting-geometry union raises on whichever row disagrees —
@@ -377,9 +347,9 @@ def bloom_probe(
     hit = (
         F.coalesce(F.col("bits"), F.lit(0)).bitwiseAND(F.col("m")) != 0
     ).cast("int")
-    sketch_side = F.broadcast(bloom) if strategy == "broadcast" else bloom
+    est_bytes = (m_bits // 32 + 2) * _BLOOM_ROW_BYTES
     return (
-        p.join(sketch_side, "word", "left")
+        _sketch_join(p, bloom, "word", est_bytes, "bloom_probe")
         .groupBy(id_col)
         .agg(F.min(hit).alias("__mp"))
         .select(id_col, (F.col("__mp") == 1).alias("maybe_present"))
@@ -607,7 +577,6 @@ def cms_query(
     cms: DataFrame,
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
-    max_broadcast_bytes: int | None = None,
 ) -> DataFrame:
     """(id_col, est_count) frequency estimates for ``df[col]`` against
     a ``cms_build`` sketch with the SAME (width, depth):
@@ -618,30 +587,16 @@ def cms_query(
     ``cms_merge`` semantics) and broadcast; probe rows fan out
     depth-fold map-side, and the only shuffle is the probe-sized
     groupBy back to one row per id. Geometry sentinels are validated
-    against the call's; the broadcast budget is enforced like
-    ``bloom_probe``'s (:class:`BloomBroadcastBudgetError` — a sketch
-    is depth·width cells, so this only fires on degenerate widths)."""
+    against the call's; over the broadcast budget the sketch is joined
+    without the broadcast, like ``bloom_probe``'s (a sketch is
+    depth·width cells, so this only happens at degenerate widths)."""
     from timebox_spark.operators.dedup import _md5_u32
 
     n_rows = _cms_stats(cms, width, depth, "cms_query")
-    budget = (
-        BLOOM_BROADCAST_BUDGET_BYTES
-        if max_broadcast_bytes is None
-        else max_broadcast_bytes
-    )
-    # budget the frame actually broadcast (round-15 advisor): cmsd is
-    # the re-aggregated sketch, bounded by depth·width cells — a tall
-    # raw union of thousands of per-cycle sketches must not spuriously
-    # raise for a broadcast that collapses to that bound
+    # size the frame actually joined (round-15 advisor): cmsd is the
+    # re-aggregated sketch, bounded by depth·width cells — a tall raw
+    # union of thousands of per-cycle sketches collapses to that bound
     est_bytes = min(n_rows, depth * width) * 24
-    if est_bytes > budget:
-        raise BloomBroadcastBudgetError(
-            f"cms_query: sketch holds {min(n_rows, depth * width)} "
-            f"post-aggregation cells ≈ {est_bytes} "
-            f"bytes broadcast, over the {budget}-byte budget — use a "
-            f"smaller width or raise max_broadcast_bytes with matching "
-            f"executor memory headroom"
-        )
     cmsd = (
         cms.filter(F.col("row") >= 0)
         .groupBy("row", "idx")
@@ -660,7 +615,7 @@ def cms_query(
         id_col, F.col("c.row").alias("row"), F.col("c.idx").alias("idx")
     )
     return (
-        p.join(F.broadcast(cmsd), ["row", "idx"], "left")
+        _sketch_join(p, cmsd, ["row", "idx"], est_bytes, "cms_query")
         .groupBy(id_col)
         .agg(
             F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long"))).alias(

@@ -14,9 +14,13 @@ and stops — the batch-equivalent trigger used by tests and backfills.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from timebox_spark.operators.dedup import _index_fs
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -436,6 +440,16 @@ def curate_stream(
     return kept.withColumn("text", TX.redact(text_col))
 
 
+def _lap(timings: dict | None, key: str, t0: float) -> float:
+    """Record the wall seconds since ``t0`` under ``key`` in
+    ``timings`` (when given, rounded to ms) and return the current
+    clock — the next stage's start."""
+    now = time.perf_counter()
+    if timings is not None:
+        timings[key] = round(now - t0, 3)
+    return now
+
+
 def compact_corpus(
     new_batch: DataFrame,
     corpus: DataFrame | None = None,
@@ -551,11 +565,9 @@ def compact_corpus(
     ``band_bloom_k``), batch band keys that probe negative DEFINITELY
     collide with nothing (Bloom has no false negatives) — only the
     maybe-colliding keys (true collisions + the design fpr of the
-    batch's keys) are pushed into the banded scan as an In predicate
-    (row-group-prunable on a key-sorted tree; past
-    ``dedup.FPS_PRUNE_ISIN_MAX`` a broadcast semi-join keeps the
-    shuffle-free shape), and the verify tree is then pruned to the
-    surviving CANDIDATE ids the same way. Results are bit-identical
+    batch's keys) prune the banded scan, and the verify tree is then
+    pruned to the surviving CANDIDATE ids, both through
+    ``dedup.prune_to_keys``. Results are bit-identical
     with or without the sketch; size ``band_bloom_m`` ≈ 10 bits per
     (doc × band). The candidate set is materialized once via
     ``exact_owned_rdds`` when the caller owns the lifecycle
@@ -584,9 +596,9 @@ def compact_corpus(
     index_writes ~7 s → ~2 s per cycle). The tables stay valid only
     until the owner unpersists ``exact_owned_rdds``.
 
-    Both gates validate their sketch's (m, k) sentinels inside the
-    probe plan (``bloom_probe``): a mismatched or mixed-geometry tree
-    raises at the first gate action.
+    Both gates probe through ``bloom_probe``: a mismatched or
+    mixed-geometry sketch raises at the first gate action, and an
+    over-budget sketch is joined without the broadcast (warned).
 
     ``timings`` (round 17 — the observability behind the bench
     ingest_loop's compact_write attribution): pass a dict to receive
@@ -599,18 +611,10 @@ def compact_corpus(
     ``cand_prune`` (candidate checkpoint + verify-prune collect).
     The remainder of the caller's timed write is the verify join +
     anti-join + sink. Purely observational."""
-    import time as _time
-
     from timebox_spark.operators.dedup import (
         build_corpus_index,
         incremental_exact_dedup,
     )
-
-    def _cstamp(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if timings is not None:
-            timings[key] = round(now - t0, 3)
-        return now
 
     if keep not in ("chain", "cluster"):
         raise ValueError(f"keep must be 'chain' or 'cluster', got {keep!r}")
@@ -634,7 +638,7 @@ def compact_corpus(
         warn_estimate_tier_variance(threshold, num_perm, bands)
     if corpus is None:
         corpus = new_batch.limit(0)
-    _ct = _time.perf_counter()
+    _ct = time.perf_counter()
     kept = incremental_exact_dedup(
         new_batch,
         corpus,
@@ -653,7 +657,7 @@ def compact_corpus(
         # corpus partition commits)
         owned_rdds=exact_owned_rdds,
     )
-    _ct = _cstamp("exact_gate", _ct)
+    _ct = _lap(timings, "exact_gate", _ct)
     if not near_dup:
         return kept
     vcol = "__sig" if verify == "estimate" else "__sh"
@@ -700,7 +704,7 @@ def compact_corpus(
         from timebox_spark.operators.dedup import _tracked_local_checkpoint
 
         kept = _tracked_local_checkpoint(kept, exact_owned_rdds)
-    _ct = _cstamp("kept_ckpt", _ct)
+    _ct = _lap(timings, "kept_ckpt", _ct)
     b_banded, b_sets = build_corpus_index(
         kept, id_col, text_col, num_perm, bands, shingle_n, verify=verify,
         # batch-bounded: materialize the shared shingle-set frame once
@@ -712,7 +716,7 @@ def compact_corpus(
         from timebox_spark.operators.dedup import _tracked_local_checkpoint
 
         b_banded = _tracked_local_checkpoint(b_banded, exact_owned_rdds)
-        _ct = _cstamp("banded_ckpt", _ct)
+        _ct = _lap(timings, "banded_ckpt", _ct)
         b_sets = _tracked_local_checkpoint(b_sets, exact_owned_rdds)
         if batch_index_out is not None:
             # hand the materialized batch index to the owner (round
@@ -721,64 +725,28 @@ def compact_corpus(
             # not a second run of the shingle+signature kernel
             batch_index_out["banded"] = b_banded
             batch_index_out["sets"] = b_sets
-    _ct = _cstamp("index_ckpt", _ct)
+    _ct = _lap(timings, "index_ckpt", _ct)
     c_banded_src, c_sets_src = c_banded, c_sets
     if corpus_band_bloom is not None:
         # gate the banded-tree read (round 15): batch keys that probe
         # negative collide with NOTHING in the corpus index — only
-        # maybe-colliding keys reach the scan, pushed in as a
-        # row-group-prunable In predicate (key-sorted tree) or a
-        # broadcast semi-join past the cap
-        from timebox_spark.operators.dedup import (
-            FPS_PRUNE_ISIN_MAX,
-            ensure_in_filter_pushdown,
-        )
-        from timebox_spark.operators.sketches import (
-            BloomBroadcastBudgetError,
-            bloom_probe,
-        )
+        # maybe-colliding keys reach the (key-sorted) scan
+        from timebox_spark.operators.dedup import prune_to_keys
+        from timebox_spark.operators.sketches import bloom_probe
 
         bkeys = (
             b_banded.select("key").filter(F.col("key").isNotNull())
             .distinct()
         )
-        try:
-            kprobe = bloom_probe(
-                bkeys, "key", "key", corpus_band_bloom,
-                band_bloom_m, band_bloom_k,
-            )
-        except BloomBroadcastBudgetError as e:
-            import warnings
-
-            warnings.warn(
-                f"compact_corpus: band-key pre-gate over the broadcast "
-                f"budget — probing via the shuffle strategy this cycle "
-                f"({e})",
-                UserWarning,
-                stacklevel=2,
-            )
-            kprobe = bloom_probe(
-                bkeys, "key", "key", corpus_band_bloom,
-                band_bloom_m, band_bloom_k, strategy="shuffle",
-            )
-        maybe_keys = kprobe.filter(F.col("maybe_present")).select("key")
-        krows = maybe_keys.limit(FPS_PRUNE_ISIN_MAX + 1).collect()
-        if len(krows) <= FPS_PRUNE_ISIN_MAX:
-            # without the threshold raise the In degrades to a min/max
-            # range at pushdown — prunes nothing on hashed band keys
-            # (a vanilla session lacks the get_spark conf)
-            ensure_in_filter_pushdown(c_banded.sparkSession)
-            kvals = [r["key"] for r in krows]
-            c_banded_src = (
-                c_banded.filter(F.col("key").isin(kvals))
-                if kvals
-                else c_banded.filter(F.lit(False))
-            )
-        else:
-            c_banded_src = c_banded.join(
-                F.broadcast(maybe_keys), "key", "left_semi"
-            )
-        _ct = _cstamp("band_probe", _ct)
+        kprobe = bloom_probe(
+            bkeys, "key", "key", corpus_band_bloom,
+            band_bloom_m, band_bloom_k,
+        )
+        c_banded_src = prune_to_keys(
+            c_banded, "key",
+            kprobe.filter(F.col("maybe_present")).select("key"),
+        )
+        _ct = _lap(timings, "band_probe", _ct)
     # candidates: batch survivor × (corpus ∪ smaller-id batch survivor)
     a = c_banded_src.select(
         F.col(id_col).alias("id_a"), "band", "key", F.lit(True).alias("__corpus")
@@ -804,30 +772,19 @@ def compact_corpus(
         # it once when the caller owns the lifecycle — it is consumed
         # here AND by the verify join below.
         from timebox_spark.operators.dedup import (
-            FPS_PRUNE_ISIN_MAX,
             _tracked_local_checkpoint,
-            ensure_in_filter_pushdown,
+            prune_to_keys,
         )
 
         if exact_owned_rdds is not None:
             cand = _tracked_local_checkpoint(cand, exact_owned_rdds)
-        cids = cand.filter(F.col("__corpus")).select("id_a").distinct()
-        irows = cids.limit(FPS_PRUNE_ISIN_MAX + 1).collect()
-        if len(irows) <= FPS_PRUNE_ISIN_MAX:
-            ensure_in_filter_pushdown(c_sets.sparkSession)
-            ivals = [r["id_a"] for r in irows]
-            c_sets_src = (
-                c_sets.filter(F.col(id_col).isin(ivals))
-                if ivals
-                else c_sets.filter(F.lit(False))
-            )
-        else:
-            c_sets_src = c_sets.join(
-                F.broadcast(cids.withColumnRenamed("id_a", id_col)),
-                id_col,
-                "left_semi",
-            )
-        _ct = _cstamp("cand_prune", _ct)
+        c_sets_src = prune_to_keys(
+            c_sets, id_col,
+            cand.filter(F.col("__corpus"))
+            .select(F.col("id_a").alias(id_col))
+            .distinct(),
+        )
+        _ct = _lap(timings, "cand_prune", _ct)
     # origin-tagged set rows: the a-side joins on (id, origin) so a
     # corpus row and a batch row sharing an id can never swap sets
     sh_a = c_sets_src.select(
@@ -992,15 +949,11 @@ class SequentialStreamingDrain:
         self.drain_secs: list[float] = []
 
     def _run(self):
-        import time as _time
-
         try:
             for w in self._writers:
-                t0 = _time.perf_counter()
+                t0 = time.perf_counter()
                 w.start().awaitTermination()
-                self.drain_secs.append(
-                    round(_time.perf_counter() - t0, 3)
-                )
+                self.drain_secs.append(round(time.perf_counter() - t0, 3))
             if self._on_complete is not None:
                 self._on_complete()
         except BaseException as e:  # re-raised in awaitTermination
@@ -1404,10 +1357,7 @@ def fold_near_dup_hits(
     hits_path = f"{store_path}/near_hits"
     history_path = f"{store_path}/near_hits_history"
     tmp_root = f"{store_path}/_tmp_consolidate_hits"
-    fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = fs_path(store_path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
+    fs, fs_path = _index_fs(spark, store_path)
     for m in _part_dir_ids(fs, fs_path, tmp_root):
         tmp = f"{tmp_root}/batch={m}"
         if fs.exists(fs_path(f"{tmp}/_SUCCESS")):
@@ -1489,10 +1439,7 @@ def _backfill_tree(
     A sketch tree missing source cycles would otherwise probe/count
     as if those rows never existed — the silent failure both sketches
     exist to prevent."""
-    fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = fs_path(store_path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
+    fs, fs_path = _index_fs(spark, store_path)
     src_cycles = {
         n for n in _part_dir_ids(fs, fs_path, src_path, "cycle") if n < cycle_id
     }
@@ -1572,19 +1519,46 @@ def _store_tree_paths(store_path: str) -> dict[str, str]:
 # between consolidations — per-cycle writes append same-shaped
 # partitions. Cache the inferred StructType per tree path and re-read
 # with spark.read.schema(...), which skips the footer pass.
-# Invalidated by the two writers that can CHANGE a tree's files
-# wholesale: consolidate_ingest_store (every tree rewritten) and a
-# cycle-0 seed (a store recreated at the same path — tests and the
-# bench do this). Assumes the store's
-# single-writer contract (the checkpointed stream / one driver): a
-# FOREIGN process consolidating the same live store mid-stream was
-# never supported — replay idempotency already requires one writer.
-_TREE_SCHEMA_CACHE: dict = {}
+# Entries are keyed on the store's generation marker, a fresh token
+# written by the two writers that can CHANGE a tree's files
+# wholesale: a cycle-0 seed (a store recreated at the same path) and
+# consolidate_ingest_store (every tree rewritten). A store swapped in
+# under the same path by any other means (a copied store) carries its
+# own token, so its trees are re-inferred; an unmarked store is never
+# served from the cache. Assumes the store's single-writer contract
+# (the checkpointed stream / one driver) — replay idempotency already
+# requires one writer.
+_TREE_SCHEMA_CACHE: dict = {}  # tree path -> (generation, StructType)
 
 
-def _invalidate_tree_schema_cache(store_path: str) -> None:
-    for p in _store_tree_paths(store_path).values():
-        _TREE_SCHEMA_CACHE.pop(p, None)
+def _new_generation(spark: SparkSession, store_path: str) -> None:
+    """Stamp ``store_path`` with a fresh generation token."""
+    import uuid
+
+    fs, fs_path = _index_fs(spark, store_path)
+    out = fs.create(fs_path(f"{store_path}/_generation"), True)
+    try:
+        out.writeUTF(uuid.uuid4().hex)
+    finally:
+        out.close()
+
+
+def _store_generation(spark: SparkSession, store_path: str) -> str | None:
+    """The store's generation token, or None when it has none (an
+    older store, or a marker a crash left unreadable)."""
+    from py4j.protocol import Py4JJavaError
+
+    fs, fs_path = _index_fs(spark, store_path)
+    try:
+        inp = fs.open(fs_path(f"{store_path}/_generation"))
+    except Py4JJavaError:  # no marker
+        return None
+    try:
+        return inp.readUTF()
+    except Py4JJavaError:  # truncated marker
+        return None
+    finally:
+        inp.close()
 
 
 def _fold_partitions(
@@ -1610,10 +1584,7 @@ def _fold_partitions(
     while raising leaves ``tmp`` intact for the resumable rerun."""
     from pyspark.errors import AnalysisException
 
-    fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = fs_path(tree_path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
+    fs, fs_path = _index_fs(spark, tree_path)
     if not fs.exists(fs_path(f"{tmp}/_SUCCESS")):
         # rebuild needed — only possible from a live tree. (With a
         # complete tmp we must NOT return early even when the tree is
@@ -1693,10 +1664,7 @@ def consolidate_ingest_store(
     STRICTLY BELOW the running cycle id (``run_ingest_cycle``'s
     ``consolidate_every`` does) — a cycle that might still be
     replayed must never be folded into an earlier partition label."""
-    fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = fs_path(store_path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
+    fs, fs_path = _index_fs(spark, store_path)
     for tree, tree_path in _store_tree_paths(store_path).items():
         _fold_partitions(
             spark,
@@ -1716,9 +1684,9 @@ def consolidate_ingest_store(
             }.get(tree),
         )
     fs.delete(fs_path(f"{store_path}/_tmp_consolidate"), True)
-    # every tree's files were rewritten — drop the cached shapes so
-    # the next cycle re-infers
-    _invalidate_tree_schema_cache(store_path)
+    # every tree's files were rewritten — a new generation, so the
+    # next cycle re-infers their shapes
+    _new_generation(spark, store_path)
 
 
 def read_store_cms(
@@ -1939,15 +1907,7 @@ def run_ingest_cycle(
     (fps/bloom/cms trees off the committed partition),
     ``index_writes`` (banded/sets/bloom_band), ``count``. Purely
     observational; keys for stages that did not run are absent."""
-    import time as _time
-
     from pyspark.errors import AnalysisException
-
-    def _stamp(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if timings is not None:
-            timings[key] = round(now - t0, 3)
-        return now
 
     from timebox_spark.operators.dedup import (
         _fp_hex,
@@ -1961,21 +1921,25 @@ def run_ingest_cycle(
         "run_ingest_cycle", new_batch.columns, cms_col, cap_max,
         cms_weight_col, token_budget_max,
     )
-    _t = _time.perf_counter()
+    _t = time.perf_counter()
     if cycle_id == 0:
         # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
         # store — any cached tree schemas describe a previous store
-        _invalidate_tree_schema_cache(store_path)
+        _new_generation(spark, store_path)
     if _consolidation_due(cycle_id, consolidate_every):
         consolidate_ingest_store(spark, store_path, cycle_id - 1)
-        _t = _stamp("consolidate", _t)
+        _t = _lap(timings, "consolidate", _t)
+    generation = _store_generation(spark, store_path)
 
     def read_prior(key: str) -> DataFrame | None:
         # probe through Spark's reader, not driver-local os.path — the
         # store may live on HDFS/S3, where a local isdir() is always
         # False and would silently skip corpus dedup every cycle
         path = paths[key]
-        cached = _TREE_SCHEMA_CACHE.get(path)
+        hit = _TREE_SCHEMA_CACHE.get(path)
+        cached = (
+            hit[1] if hit is not None and hit[0] == generation else None
+        )
         try:
             # with the cached schema the reader skips the per-cycle
             # footer inference pass (round 18 — see the cache's note)
@@ -1996,66 +1960,62 @@ def run_ingest_cycle(
                 f"the 16-byte binary md5 — a hex-string tree predates "
                 f"the binary layout; rebuild the store"
             )
-        if cached is None:
-            _TREE_SCHEMA_CACHE[path] = df.schema
+        if cached is None and generation is not None:
+            _TREE_SCHEMA_CACHE[path] = (generation, df.schema)
         if "cycle" not in df.columns:
             return None
         return df.filter(F.col("cycle") < cycle_id).drop("cycle")
+
+    def gate_tree(src: str, sketch: str, build_fn) -> DataFrame | None:
+        """The raw ``sketch`` tree a Bloom gate probes, after its
+        coverage backfill over ``src`` — or None while ``src`` is
+        under ``GATE_MIN_TREE_BYTES``.
+
+        COVERAGE (review round 13): a gate is only sound if the
+        sketch covers every ``src`` cycle — one missing some cycles
+        (gate enabled on an existing store, or a crash between the
+        ``src`` and sketch writes of an un-replayed cycle) would
+        probe negative for a key that lives only in an uncovered
+        cycle and silently re-admit the duplicate. The RAW tree goes
+        straight to the probe (round 17): ``bloom_probe`` validates
+        the sentinels per row before it re-aggregates per word, so
+        no separate eager merge job runs.
+
+        AUTO-DISABLE (round 15): at sizes where ``src`` itself would
+        broadcast, the plain join is already map-only under AQE and
+        the probe is pure overhead (measured sf0.1: gated 1.03 s vs
+        ungated 0.31 s per cycle). The sketch is still maintained, so
+        the probe resumes fully covered the first cycle ``src``
+        outgrows the bound. One FS content-summary RPC per cycle."""
+        _backfill_tree(
+            spark, store_path, paths[src], paths[sketch], cycle_id,
+            build_fn,
+        )
+        tree = read_prior(sketch)
+        if tree is None:
+            return None
+        try:
+            fs, fs_path = _index_fs(spark, store_path)
+            src_bytes = fs.getContentSummary(fs_path(paths[src])).getLength()
+        except Exception:
+            return tree  # unsized tree: keep the gate
+        return None if src_bytes < GATE_MIN_TREE_BYTES else tree
 
     fps = read_prior("fps")
     bloom = None
     if bloom_m is not None:
         from timebox_spark.operators.sketches import bloom_build
 
-        # COVERAGE check (review round 13): the gate is only sound if
-        # the sketch covers every fps cycle — a bloom tree missing
-        # some cycles (gate enabled on an existing store, earlier
-        # cycles run with bloom_m=None, or a crash between the fps
-        # and bloom writes of an un-replayed cycle) would probe
-        # negative for a fingerprint that lives only in an uncovered
-        # cycle and silently re-admit the exact duplicate.
         # the sketch hashes the HEX form of the binary fps — the bits
         # the hex-probing batch side computes, or true members would
         # probe definitely-new
-        _backfill_tree(
-            spark, store_path, paths["fps"], paths["bloom"], cycle_id,
+        bloom = gate_tree(
+            "fps", "bloom",
             lambda df: bloom_build(
                 df.select(_fp_hex("__fp").alias("__fp")), "__fp",
                 bloom_m, bloom_k,
             ),
         )
-        # the RAW tree goes straight to the probe (round 17):
-        # bloom_probe validates the sentinels PRE-aggregation per row
-        # (conflicting (m_bits, k) raise — strictly stronger than
-        # checking the merged frame, where bit_or can alias k=5|7 into
-        # a valid-looking 7) and defensively re-aggregates per word,
-        # so bloom_merge's separate eager conflict job (a full-tree
-        # scan per cycle) buys nothing the probe doesn't guarantee
-        prior_bloom = read_prior("bloom")
-        if prior_bloom is not None:
-            bloom = prior_bloom
-        # AUTO-DISABLE the probe below broadcast-small corpora
-        # (round-15 verdict What's-wrong #3): at sizes where the fps
-        # tree itself would broadcast, the plain anti-join is already
-        # map-only under AQE and the gate's sketch probe is pure
-        # overhead (measured sf0.1: gated 1.03 s vs ungated 0.31 s
-        # per cycle). The bloom TREE is still written and backfilled
-        # above — coverage is a soundness invariant, and the probe
-        # resumes seamlessly the first cycle the tree outgrows the
-        # bound. One FS content-summary RPC per cycle.
-        if bloom is not None:
-            try:
-                fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-                fs = fs_path(store_path).getFileSystem(
-                    spark.sparkContext._jsc.hadoopConfiguration()
-                )
-                tree_bytes = fs.getContentSummary(
-                    fs_path(paths["fps"])
-                ).getLength()
-            except Exception:
-                tree_bytes = None  # unsized tree: keep the gate
-            if tree_bytes is not None and tree_bytes < GATE_MIN_TREE_BYTES:
-                bloom = None
     prior_cms = None
     if cms_col is not None:
         import warnings
@@ -2154,40 +2114,13 @@ def run_ingest_cycle(
     if near_dup and band_bloom_m is not None:
         from timebox_spark.operators.sketches import bloom_build
 
-        # band-key sketch maintenance: same coverage rule as the fps
-        # sketch — a bloom_band tree missing banded cycles would probe
-        # negative for a key that collides only in an uncovered cycle
-        # and silently MISS a near-duplicate
-        _backfill_tree(
-            spark, store_path, paths["banded"], paths["bloom_band"],
-            cycle_id,
+        band_bloom = gate_tree(
+            "banded", "bloom_band",
             lambda df: bloom_build(
                 df.select("key"), "key", band_bloom_m, band_bloom_k
             ),
         )
-        # raw tree straight to the probe, the fps-sketch rule above:
-        # bloom_probe validates sentinels pre-aggregation and
-        # re-aggregates per word — no eager merge job needed
-        prior_bb = read_prior("bloom_band")
-        if prior_bb is not None:
-            band_bloom = prior_bb
-        # auto-disable below broadcast-small index trees, the fps-gate
-        # rule: the sketch tree stays maintained, the probe resumes
-        # fully covered once the banded tree outgrows the bound
-        if band_bloom is not None:
-            try:
-                fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-                fs = fs_path(store_path).getFileSystem(
-                    spark.sparkContext._jsc.hadoopConfiguration()
-                )
-                bt_bytes = fs.getContentSummary(
-                    fs_path(paths["banded"])
-                ).getLength()
-            except Exception:
-                bt_bytes = None
-            if bt_bytes is not None and bt_bytes < GATE_MIN_TREE_BYTES:
-                band_bloom = None
-    _t = _stamp("state_read_gates", _t)
+    _t = _lap(timings, "state_read_gates", _t)
     scratch = (
         f"{store_path}/_scratch/cycle={cycle_id}" if keep == "cluster" else None
     )
@@ -2239,52 +2172,39 @@ def run_ingest_cycle(
             # corpus-horizon frequency budget on the KEPT rows: the
             # cms tree counts exactly the rows previous cycles kept
             # (cycle-filtered read ⇒ replay-deterministic); the first
-            # cycle has no tree and applies the plain in-frame cap
+            # cycle has no tree (cms=None) and applies the plain
+            # in-frame cap
             from timebox_spark.operators.sampling import cap_per_group
 
-            if prior_cms is not None:
-                kept = cap_per_group(
-                    kept, cms_col, id_col, cap_max,
-                    cms=prior_cms, cms_width=cms_width,
-                    cms_depth=cms_depth,
-                )
-            else:
-                kept = cap_per_group(kept, cms_col, id_col, cap_max)
+            kept = cap_per_group(
+                kept, cms_col, id_col, cap_max,
+                cms=prior_cms, cms_width=cms_width, cms_depth=cms_depth,
+            )
         if token_budget_max is not None:
             # corpus-horizon TOKEN budget on the KEPT rows (round 16):
             # the WEIGHTED cms tree sums exactly the weight previous
-            # cycles kept (cycle-filtered read ⇒ replay-deterministic);
-            # the first cycle has no tree and applies the plain
-            # in-frame prefix budget
+            # cycles kept; the first cycle (cms=None) applies the
+            # plain in-frame prefix budget
             from timebox_spark.operators.sampling import (
                 token_budget_per_group,
             )
 
-            if prior_cms is not None:
-                kept = token_budget_per_group(
-                    kept, cms_col, cms_weight_col, token_budget_max,
-                    key=id_col, cms=prior_cms, cms_width=cms_width,
-                    cms_depth=cms_depth,
-                )
-            else:
-                kept = token_budget_per_group(
-                    kept, cms_col, cms_weight_col, token_budget_max,
-                    key=id_col,
-                )
+            kept = token_budget_per_group(
+                kept, cms_col, cms_weight_col, token_budget_max,
+                key=id_col, cms=prior_cms, cms_width=cms_width,
+                cms_depth=cms_depth,
+            )
 
         cyc = f"cycle={cycle_id}"
         kept.write.mode("overwrite").parquet(f"{paths['corpus']}/{cyc}")
-        _t = _stamp("compact_write", _t)
+        _t = _lap(timings, "compact_write", _t)
         if timings is not None:
             for k, v in _compact_sub.items():
                 timings[f"compact_{k}"] = v
         if scratch is not None:
             # the corpus partition is committed — the dropped-id
             # scratch the kept plan read is no longer referenced
-            fs_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-            fs = fs_path(store_path).getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration()
-            )
+            fs, fs_path = _index_fs(spark, store_path)
             fs.delete(fs_path(scratch), True)
         # re-read what was PHYSICALLY kept so fps/index derive from
         # the committed rows (and the lineage below is a trivial scan)
@@ -2317,31 +2237,20 @@ def run_ingest_cycle(
                 kept_disk.select(*_cms_cols), cms_col, cms_width,
                 cms_depth, weight=cms_weight_col,
             ).write.mode("overwrite").parquet(f"{paths['cms']}/{cyc}")
-        _t = _stamp("derived_writes", _t)
+        _t = _lap(timings, "derived_writes", _t)
         if near_dup:
-            if "banded" in batch_index:
-                # round 17: the batch's banded/sets tables were
-                # materialized (localCheckpointed) inside
-                # compact_corpus — their rows are per-doc functions of
-                # text, so the committed partition's index is a
-                # semi-join on the kept ids (batch-bounded; AQE
-                # broadcasts it), NOT a second run of the
-                # shingle+signature kernel over the committed text.
-                # Measured sf0.1 (1,750-doc batch): index_writes
-                # ~7 s → ~2 s per cycle; rows bit-identical
-                # (test_ingest_cycle_* pin the tree contents).
-                kept_ids = kept_disk.select(id_col)
-                nb = batch_index["banded"].join(
-                    kept_ids, id_col, "left_semi"
-                )
-                ns = batch_index["sets"].join(
-                    kept_ids, id_col, "left_semi"
-                )
-            else:
-                nb, ns = build_corpus_index(
-                    kept_disk, id_col, text_col, num_perm, bands,
-                    shingle_n, verify=index_verify,
-                )
+            # the batch's banded/sets tables were materialized
+            # (localCheckpointed) inside compact_corpus — always, since
+            # this cycle owns exact_owned (round 17). Their rows are
+            # per-doc functions of text, so the committed partition's
+            # index is a semi-join on the kept ids (batch-bounded; AQE
+            # broadcasts it), NOT a second run of the shingle+signature
+            # kernel over the committed text. Measured sf0.1
+            # (1,750-doc batch): index_writes ~7 s → ~2 s per cycle;
+            # rows bit-identical (test_ingest_cycle_* pin the trees).
+            kept_ids = kept_disk.select(id_col)
+            nb = batch_index["banded"].join(kept_ids, id_col, "left_semi")
+            ns = batch_index["sets"].join(kept_ids, id_col, "left_semi")
             # sorted per-cycle partitions (round 15): the gated
             # compaction's pushed In predicates prune row groups only
             # on key-/id-sorted data (consolidation range-partitions
@@ -2365,14 +2274,14 @@ def run_ingest_cycle(
                 ).write.mode("overwrite").parquet(
                     f"{paths['bloom_band']}/{cyc}"
                 )
-            _t = _stamp("index_writes", _t)
+            _t = _lap(timings, "index_writes", _t)
     finally:
         # after the index writes, not right after the corpus commit
         # (round 17): the checkpointed batch index tables feed the
         # committed partition's index derivation above
         unpersist_owned(exact_owned)
     n_kept = kept_disk.count()
-    _stamp("count", _t)
+    _lap(timings, "count", _t)
     return n_kept
 
 
