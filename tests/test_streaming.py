@@ -1273,6 +1273,60 @@ def test_curate_and_ingest_stream_cap_max_validates_eagerly(spark, tmp_path):
             stream, str(tmp_path / "s"), str(tmp_path / "ck"),
             cms_col="ts", token_budget_max=100,
         )
+    # every cycle knob is checked when the stream is built, not on
+    # the first micro-batch
+    with _pytest.raises(ValueError, match="keep must be"):
+        ingest.curate_and_ingest_stream(
+            stream, str(tmp_path / "s"), str(tmp_path / "ck"),
+            keep="bogus",
+        )
+    with _pytest.raises(ValueError, match="verify must be"):
+        ingest.curate_and_ingest_stream(
+            stream, str(tmp_path / "s"), str(tmp_path / "ck"),
+            index_verify="bogus",
+        )
+    # a retired knob is an unknown keyword, not a silently ignored one
+    with _pytest.raises(TypeError, match="bloom_k"):
+        ingest.curate_and_ingest_stream(
+            stream, str(tmp_path / "s"), str(tmp_path / "ck"),
+            bloom_k=5,
+        )
+    assert not os.path.exists(tmp_path / "s")
+
+
+def test_run_ingest_cycle_validates_before_any_write(spark, tmp_path):
+    """A bad knob raises before the cycle touches the store: no
+    generation marker on a fresh path, and no consolidation on a
+    seeded store whose next cycle is a consolidation boundary."""
+    fresh = tmp_path / "fresh_store"
+    batch = spark.createDataFrame(
+        [(1, "alpha document body one")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="keep must be"):
+        ingest.run_ingest_cycle(batch, str(fresh), 0, keep="bogus")
+    assert not fresh.exists()
+
+    store = tmp_path / "seeded_store"
+    knobs = dict(near_dup=False, bloom_m=None, consolidate_every=2)
+    for cid, text in enumerate(["beta document two", "gamma body three"]):
+        ingest.run_ingest_cycle(
+            spark.createDataFrame([(10 + cid, text)], "doc_id long, text string"),
+            str(store), cid, **knobs,
+        )
+
+    def listing():
+        return {
+            os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
+            for r, _d, fs in os.walk(store)
+            for f in fs
+        }
+
+    before = listing()
+    with pytest.raises(ValueError, match="verify must be"):
+        ingest.run_ingest_cycle(
+            batch, str(store), 2, index_verify="bogus", **knobs
+        )
+    assert listing() == before
 
 
 def test_run_ingest_cycle_timings_hook(spark, tmp_path):
@@ -1888,9 +1942,9 @@ def test_run_ingest_cycle_bloom_gate_state_and_results(spark, tmp_path):
             for r in spark.read.parquet(f"{store}/corpus").collect()
         }
 
-    plain = run(str(tmp_path / "plain_store"))
+    plain = run(str(tmp_path / "plain_store"), bloom_m=None)
     bstore = str(tmp_path / "bloom_store")
-    gated = run(bstore, bloom_m=1 << 14, bloom_k=5)
+    gated = run(bstore, bloom_m=1 << 14)
     assert gated == plain == {10, 11, 21, 31}
     # the bloom tree exists with one partition per cycle, rows merge
     # to the sketch of the whole corpus
@@ -1995,13 +2049,13 @@ def test_run_ingest_cycle_bloom_backfills_uncovered_cycles(
         spark.createDataFrame(
             [(10, "alpha document body one")], "doc_id long, text string"
         ),
-        store, 0, near_dup=False,
+        store, 0, near_dup=False, bloom_m=None,
     )
     ingest.run_ingest_cycle(
         spark.createDataFrame(
             [(11, "beta document body two")], "doc_id long, text string"
         ),
-        store, 1, near_dup=False,
+        store, 1, near_dup=False, bloom_m=None,
     )
     assert not os.path.exists(f"{store}/bloom")
     # cycle 2 enables the gate AND carries a dup of the cycle-0 doc:
@@ -2028,7 +2082,7 @@ def test_run_ingest_cycle_bloom_backfills_uncovered_cycles(
 
 def test_curate_and_ingest_stream_forwards_gate_and_keep(spark, tmp_path):
     """Round-14 verdict task 2: the production entrypoint forwards
-    ``bloom_m``/``bloom_k``/``keep`` to ``run_ingest_cycle`` — the
+    ``bloom_m``/``keep`` to ``run_ingest_cycle`` — the
     Bloom tree is maintained per cycle at the CALLER's geometry, the
     cluster-keep drop routes through the store's _scratch (cleaned up
     post-commit), and the kept corpus matches the default-path run."""
@@ -2060,7 +2114,7 @@ def test_curate_and_ingest_stream_forwards_gate_and_keep(spark, tmp_path):
     q = ingest.curate_and_ingest_stream(
         stream, store, str(tmp_path / "ck_fw"),
         min_quality_q=0, min_tokens=6,
-        keep="cluster", bloom_m=m, bloom_k=5,
+        keep="cluster", bloom_m=m,
     ).start()
     q.awaitTermination()
     kept = {
@@ -2760,7 +2814,7 @@ def test_ingest_bloom_gate_validates_without_eager_merge(
     ):
         ingest.run_ingest_cycle(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            store, cid, near_dup=False, bloom_m=m, bloom_k=5,
+            store, cid, near_dup=False, bloom_m=m,
         )
     batch3 = spark.createDataFrame(
         [(30, "delta body four")], "doc_id long, text string"
@@ -2769,7 +2823,7 @@ def test_ingest_bloom_gate_validates_without_eager_merge(
     # call says 2m -> per-row sentinel mismatch raise from the gate
     with pytest.raises(PySparkException, match="m_bits"):
         ingest.run_ingest_cycle(
-            batch3, store, 2, near_dup=False, bloom_m=m * 2, bloom_k=5,
+            batch3, store, 2, near_dup=False, bloom_m=m * 2,
         )
     corpus = {
         r["doc_id"]
@@ -2789,7 +2843,7 @@ def test_ingest_bloom_gate_validates_without_eager_merge(
     ).write.parquet(f"{store}/bloom/cycle=5")
     with pytest.raises(PySparkException, match="m_bits"):
         ingest.run_ingest_cycle(
-            batch3, store, 6, near_dup=False, bloom_m=m, bloom_k=5,
+            batch3, store, 6, near_dup=False, bloom_m=m,
         )
     corpus = {
         r["doc_id"]
@@ -2845,12 +2899,29 @@ def test_curate_and_ingest_stream_sink_releases_checkpoints(
 
 
 def test_curate_and_ingest_stream_empty_batch_still_consolidates(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """A micro-batch that curation empties skips its ingest cycle, but
     a consolidation boundary landing on it must still fold the store:
     with consolidate_every=2, micro-batch 2 (every doc too short to
-    pass curation) folds cycles 0-1 into one partition per tree."""
+    pass curation) folds cycles 0-1 into one partition per tree.
+
+    Also the benchmark's contract with the sink: the sink calls the
+    module-global ``run_ingest_cycle`` (so a wrapper installed on the
+    module sees every cycle) once per non-empty micro-batch, with
+    ``(batch, store_path, cycle_id)`` positional and no ``timings``,
+    and ``perfbench.stream_drain.DRAIN_KW`` builds a drain."""
+    from perfbench.stream_drain import DRAIN_KW, STREAM_SCHEMA
+
+    calls = []
+    inner = ingest.run_ingest_cycle
+
+    def recording_cycle(*args, **kw):
+        calls.append(args[1:])
+        assert len(args) == 3 and "timings" not in kw, (args, kw)
+        return inner(*args, **kw)
+
+    monkeypatch.setattr(ingest, "run_ingest_cycle", recording_cycle)
     texts = [
         "the quick brown fox jumps over the lazy dog and keeps "
         "running through the long meadow toward the river bank",
@@ -2892,6 +2963,15 @@ def test_curate_and_ingest_stream_empty_batch_still_consolidates(
         for r in spark.read.parquet(f"{store}/corpus").collect()
     }
     assert kept == {10, 11, 20, 21}, kept
+    assert calls == [(store, 0), (store, 1)], calls
+
+    drain_src = tmp_path / "drain_src"
+    drain_src.mkdir()
+    ingest.curate_and_ingest_stream(
+        spark.readStream.schema(STREAM_SCHEMA).parquet(str(drain_src)),
+        str(tmp_path / "drain_store"), str(tmp_path / "drain_ck"),
+        **DRAIN_KW,
+    )
 
 
 def test_tree_schema_cache_invalidated_on_recreated_store(

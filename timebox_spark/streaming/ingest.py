@@ -15,6 +15,7 @@ and stops — the batch-equivalent trigger used by tests and backfills.
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -450,6 +451,15 @@ def _lap(timings: dict | None, key: str, t0: float) -> float:
     return now
 
 
+def _check_modes(keep: str, verify: str) -> None:
+    """The two enum knobs of a compaction: within-batch ``keep`` and
+    the near-dup ``verify`` tier."""
+    if keep not in ("chain", "cluster"):
+        raise ValueError(f"keep must be 'chain' or 'cluster', got {keep!r}")
+    if verify not in ("exact", "estimate"):
+        raise ValueError(f"verify must be 'exact' or 'estimate', got {verify!r}")
+
+
 def compact_corpus(
     new_batch: DataFrame,
     corpus: DataFrame | None = None,
@@ -616,16 +626,13 @@ def compact_corpus(
         incremental_exact_dedup,
     )
 
-    if keep not in ("chain", "cluster"):
-        raise ValueError(f"keep must be 'chain' or 'cluster', got {keep!r}")
+    _check_modes(keep, verify)
     if keep == "cluster" and scratch_path is None:
         raise ValueError(
             "compact_corpus: keep='cluster' needs scratch_path — the "
             "dropped ids go through parquet on the shared filesystem "
             "so no batch-sized id list is collected to the driver"
         )
-    if verify not in ("exact", "estimate"):
-        raise ValueError(f"verify must be 'exact' or 'estimate', got {verify!r}")
     if verify == "estimate" and near_dup:
         # round-14 verdict task 6: the estimate tier's measured
         # over-drop belongs at the call site — warn when the
@@ -983,38 +990,134 @@ class SequentialStreamingDrain:
 _HISTORY_FOLD_DIRS = 16
 
 
+@dataclass(frozen=True)
+class IngestSpec:
+    """The knobs of one ingest cycle, declared, defaulted and
+    validated here once. ``run_ingest_cycle(**knobs)`` and
+    ``curate_and_ingest_stream(**knobs)`` build one from their keyword
+    arguments, so an unknown knob is a ``TypeError`` and a bad value or
+    pairing a ``ValueError`` before either reads or writes anything.
+    The defaults are the production front door's.
+
+    - ``id_col``/``text_col``: the document id and text columns.
+    - ``near_dup``/``threshold``: besides exact duplicates, drop docs
+      whose hashed-shingle Jaccard to a corpus doc or a smaller-id
+      batch survivor is >= ``threshold`` (``compact_corpus``), over the
+      store's persisted MinHash-LSH index (``compact_corpus``'s 32
+      permutations, 8 bands and 5-char shingles).
+    - ``index_verify``: the near-dup verify tier, ``'exact'`` (hashed
+      shingle sets) or ``'estimate'`` (debiased signature agreement,
+      which keeps the persisted index signature-sized).
+    - ``keep``: within-batch near-dup semantics, ``'chain'`` or
+      ``'cluster'`` (see ``compact_corpus``). A cluster cycle routes its
+      dropped ids through ``{store}/_scratch/cycle={id}`` (distributed,
+      zero collect), removed once the corpus partition commits.
+    - ``consolidate_every``: every K cycles, fold the per-cycle
+      partitions of every state tree into one
+      (``consolidate_ingest_store``), so partition count stays bounded
+      on a stream that runs forever. Only cycles strictly below the
+      running one are folded; they can no longer replay. ``None``
+      never folds.
+    - ``bloom_m``: bits of the exact-dedup Bloom pre-gate's sketch tree
+      ``{store}/bloom``. Definitely-new batch rows bypass the O(corpus)
+      fps anti-join (``dedup.incremental_exact_dedup``). Size it at
+      ~10 bits per expected corpus doc for a 1% fpr (2²⁴ bits, a 2 MiB
+      sketch, holds that to ~1.6M docs); a saturated sketch only lowers
+      the bypass rate, never correctness.
+    - ``band_bloom_m``: bits of the band-key sketch tree
+      ``{store}/bloom_band``, which prunes the near-dup index reads to
+      the row groups that can hold a batch collision; ~10 bits per
+      (doc × band). Both gates keep kept rows bit-identical, are
+      coverage-backfilled over cycles they missed, and skip their probe
+      while the gated tree is under ``GATE_MIN_TREE_BYTES`` (the sketch
+      stays maintained). ``None`` turns a gate and its tree off.
+    - ``cms_col``/``cms_width``/``cms_depth``: maintain ``{store}/cms``,
+      the per-cycle count-min sketch of the kept rows' ``cms_col``, so
+      corpus-horizon frequencies are read from O(cells) rows
+      (``read_store_cms``), never a corpus rescan. Observational unless
+      a budget below reads it.
+    - ``cap_max``: keep at most this many rows per ``cms_col`` value
+      across the whole stream (``sampling.cap_per_group`` against the
+      cms tree). CMS never under-counts, so the budget cannot be
+      exceeded; the first cycle applies the plain in-frame cap.
+    - ``cms_weight_col``/``token_budget_max``: the tree sketches
+      SUM(``cms_weight_col``) per ``cms_col`` value instead, and each
+      group admits only the prefix of kept rows whose cumulative weight
+      stays within the budget (``sampling.token_budget_per_group``).
+      One tree holds one denomination: exclusive with ``cap_max``, and
+      a cycle whose mode disagrees with the store's tree raises."""
+
+    id_col: str = "doc_id"
+    text_col: str = "text"
+    near_dup: bool = True
+    threshold: float = 0.35
+    index_verify: str = "exact"
+    keep: str = "chain"
+    consolidate_every: int | None = 64
+    bloom_m: int | None = 1 << 24
+    band_bloom_m: int | None = 1 << 26
+    cms_col: str | None = None
+    cms_width: int = 1024
+    cms_depth: int = 4
+    cms_weight_col: str | None = None
+    cap_max: int | None = None
+    token_budget_max: int | None = None
+
+    def __post_init__(self) -> None:
+        _check_modes(self.keep, self.index_verify)
+        if self.consolidate_every is not None and self.consolidate_every < 1:
+            raise ValueError(
+                f"consolidate_every must be None or >= 1, got "
+                f"{self.consolidate_every!r}"
+            )
+        self.check_columns()
+
+    def check_columns(self, columns: list | None = None) -> None:
+        """The stats-knob pairings; given the input's (a stream's or a
+        batch's) ``columns``, also that the columns they name are in
+        it."""
+
+        def named(col: str | None) -> bool:
+            return col is not None and (columns is None or col in columns)
+
+        if self.cap_max is not None and not named(self.cms_col):
+            raise ValueError(
+                "cap_max needs cms_col naming an input column — the "
+                "budget is enforced against the store's count-min tree "
+                "of that column"
+            )
+        if self.cms_weight_col is not None and not (
+            named(self.cms_col) and named(self.cms_weight_col)
+        ):
+            raise ValueError(
+                "cms_weight_col needs cms_col AND the weight column "
+                "present in the input — the weighted tree sketches "
+                "SUM(weight) per cms_col value"
+            )
+        if self.token_budget_max is not None and self.cms_weight_col is None:
+            raise ValueError(
+                "token_budget_max needs cms_weight_col — the token budget "
+                "is enforced against the store's WEIGHTED count-min tree"
+            )
+        if self.cap_max is not None and self.cms_weight_col is not None:
+            raise ValueError(
+                "cap_max and cms_weight_col are mutually exclusive — one "
+                "cms tree holds ONE denomination (row counts or weight "
+                "sums); run separate stores to budget both"
+            )
+
+
 def curate_and_ingest_stream(
     stream: DataFrame,
     store_path: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    langs: tuple[str, ...] = ("en",),
+    *,
     min_quality_q: int = 500_000,
     min_tokens: int = 10,
-    classifier_min_score: int | None = None,
-    near_dup: bool = True,
-    threshold: float = 0.35,
     stream_near_dup: bool = False,
     ts_col: str = "ts",
-    nd_min_est: float = 0.5,
-    nd_watermark: str = "1 hour",
-    nd_max_bucket: int | None = 256,
     nd_hits_retention_ms: int | None = None,
-    consolidate_every: int | None = 64,
-    index_verify: str = "exact",
-    keep: str = "chain",
-    bloom_m: int | None = 1 << 24,
-    bloom_k: int = 5,
-    cms_col: str | None = None,
-    cms_width: int = 1024,
-    cms_depth: int = 4,
-    cap_max: int | None = None,
-    cms_weight_col: str | None = None,
-    token_budget_max: int | None = None,
-    band_bloom_m: int | None = 1 << 26,
-    band_bloom_k: int = 5,
-    fanout: int | None = None,
+    **knobs,
 ):
     """The end-to-end streaming ingest entrypoint: raw document
     stream → ``curate_stream``'s stateless annotate/gate/redact →
@@ -1025,6 +1128,8 @@ def curate_and_ingest_stream(
     partitions — exactly-once end to end through the checkpoint.
     Returns the unstarted writer (``.start()`` to run;
     ``trigger(availableNow=True)`` preset for drain-style use).
+    ``knobs`` are the cycle's ``IngestSpec`` fields, checked here at
+    call time and forwarded to every cycle.
 
     ``stream_near_dup=True`` (round-11 verdict task 2) additionally
     wires ``near_dup_hits_stream`` in FRONT of the store: the input
@@ -1035,11 +1140,11 @@ def curate_and_ingest_stream(
     micro-batch on the DISTINCT hit ids before ``run_ingest_cycle``
     — a same-window near copy never reaches the corpus store, not
     even transiently. Hits are signature-ESTIMATE verified
-    (``nd_min_est`` = DEBIASED MinHash agreement, the bucket's own
-    band excluded — see ``near_dup_hits_stream``), so a flagged doc
-    may still have exact Jaccard below ``threshold`` (estimator
+    (``near_dup_hits_stream``'s ``min_est`` = DEBIASED MinHash
+    agreement, the bucket's own band excluded), so a flagged doc may
+    still have exact Jaccard below ``threshold`` (estimator
     variance): the detector is a cheap pre-gate (bounded state via
-    ``nd_max_bucket``); the compactor's exact verify remains the
+    its ``max_bucket``); the compactor's exact verify remains the
     authority for everything it passes.
     The return value is then a :class:`SequentialStreamingDrain`
     (same ``start()/awaitTermination()`` shape) draining detector
@@ -1059,96 +1164,44 @@ def curate_and_ingest_stream(
     forever by default — a DECIDED default (round 14, SCALE.md): the
     history tree is audit/debug observability data off every hot path
     (no query scans it per batch; consolidation bounds its FILE count
-    regardless), and a retention default derived from ``nd_watermark``
-    would silently delete the only record of why a document was
-    dropped — destructive pruning must be an explicit operator choice.
+    regardless), and a retention default derived from the detector's
+    watermark would silently delete the only record of why a document
+    was dropped — destructive pruning must be an explicit operator
+    choice.
     ``nd_hits_retention_ms`` prunes rows older than that event-time
     horizon during history consolidation, bounding history ROW count
     at rate × retention on a forever-stream (see
     ``fold_near_dup_hits``); set it whenever the stream outlives the
-    audit horizon.
-
-    ``index_verify`` is forwarded to ``run_ingest_cycle`` — pass
-    ``'estimate'`` to keep the persisted store index signature-sized
-    (see ``compact_corpus``).
-
-    ``keep``/``bloom_m``/``bloom_k`` (round 14 — the production front
-    door previously could not reach either feature) are likewise
-    forwarded. The exact-dedup Bloom pre-gate defaults ON at
-    ``bloom_m = 2²⁴`` bits (a 2 MiB sketch, ~1% fpr to ~1.6M corpus
-    docs): with the round-14 shuffle-free gated plan the gate is
-    strictly cheaper than the plain fps anti-join at every corpus
-    size — a saturated sketch only degrades the bypass RATE (maybe
-    set → batch size), never correctness or the zero-shuffle bound —
-    and the per-cycle sketch build/merge cost is batch-bounded
-    (measured at sf0.1 in bench's ``bloom_gate`` block; SCALE.md
-    round-14 notes). Size ``bloom_m`` ≈ 10 bits per expected corpus
-    doc to hold the design fpr; ``bloom_m=None`` disables the gate.
-    ``keep='cluster'`` routes the within-batch drop through
-    ``{store}/_scratch`` (distributed, zero collect).
-
-    ``cms_col``/``cms_width``/``cms_depth`` (round 14) forward the
-    count-min stats tree: the named input column (e.g. ``source``)
-    is carried through curation and sketched per cycle into
-    ``{store}/cms`` — corpus-horizon frequency / heavy-hitter queries
-    without a corpus rescan (``read_store_cms``).
-    ``cms_weight_col``/``token_budget_max`` (round 16) switch the
-    tree to WEIGHT sums and enforce a per-group TOKEN budget across
-    the whole stream (see ``run_ingest_cycle``); mutually exclusive
-    with ``cap_max`` — one tree, one denomination. All pairings are
-    validated here at call time, not asynchronously inside
-    foreachBatch.
-
-    ``fanout`` (round 17): forwarded to
-    ``near_dup_hits_stream(fanout=...)`` — the width of the
-    detector's one id-hash repartition ahead of its signature map
-    (None = the session's ``spark.sql.shuffle.partitions``, 0 =
-    keep the source partitioning). Detector-only by measurement: see
-    the inline note at the ``curate_stream`` call."""
-    # fail at CALL time, not asynchronously inside foreachBatch on the
-    # first micro-batch (run_ingest_cycle re-checks per cycle)
-    _check_stats_knobs(
-        "curate_and_ingest_stream", stream.columns, cms_col, cap_max,
-        cms_weight_col, token_budget_max,
-    )
+    audit horizon."""
+    spec = IngestSpec(**knobs)
+    spec.check_columns(stream.columns)
+    id_col, text_col = spec.id_col, spec.text_col
     carry: tuple[str, ...] = (ts_col,) if stream_near_dup else ()
-    if cms_col is not None and cms_col not in (id_col, text_col) and (
-        cms_col not in carry
-    ):
-        # the containment checks matter: cms_col == ts_col (sketching
+    for col in (spec.cms_col, spec.cms_weight_col):
+        # the containment check matters: cms_col == ts_col (sketching
         # event-time buckets) would otherwise carry the column twice
         # and the sink's select would die on AMBIGUOUS_REFERENCE
-        carry = carry + (cms_col,)
-    if (
-        cms_weight_col is not None
-        and cms_weight_col not in (id_col, text_col)
-        and cms_weight_col not in carry
-    ):
-        carry = carry + (cms_weight_col,)
-    # The fanout exchange lives INSIDE the detector (below), never on
-    # the raw stream: fanning the raw stream here was measured WORSE
-    # for the ingest writer (28.4 -> 79.2 s over the bench's 3
-    # micro-batches) — every pre-checkpoint action run_ingest_cycle
-    # takes on the un-materialized batch is a separate job, and
-    # separate jobs do not reuse each other's shuffle map outputs, so
-    # each one re-paid the exchange + curation instead of a cheap
-    # narrow re-scan (plans/r17/measurements/, round 17 §6).
+        if col is not None and col not in (id_col, text_col) + carry:
+            carry = carry + (col,)
+    # no repartition of the raw stream here: fanning it out was
+    # measured WORSE for the ingest writer (28.4 -> 79.2 s over the
+    # bench's 3 micro-batches) — every pre-checkpoint action
+    # run_ingest_cycle takes on the batch is a separate job, and each
+    # re-paid the exchange + curation (plans/r17/measurements/, round
+    # 17 §6); the detector fans out inside its own plan
     curated = curate_stream(
         stream,
         id_col=id_col,
         text_col=text_col,
-        langs=langs,
         min_quality_q=min_quality_q,
         min_tokens=min_tokens,
-        classifier_min_score=classifier_min_score,
         carry_cols=carry,
     )
     hits_path = f"{store_path}/near_hits"
-    batch_cols = [id_col, text_col]
-    if cms_col is not None and cms_col not in batch_cols:
-        batch_cols.append(cms_col)
-    if cms_weight_col is not None and cms_weight_col not in batch_cols:
-        batch_cols.append(cms_weight_col)
+    batch_cols = list(dict.fromkeys(
+        c for c in (id_col, text_col, spec.cms_col, spec.cms_weight_col)
+        if c is not None
+    ))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from timebox_spark.operators.dedup import (
@@ -1197,40 +1250,14 @@ def curate_and_ingest_stream(
                 # no cycle runs, but a consolidation boundary landing
                 # on this batch still folds — otherwise the fold waits
                 # a whole window while partitions keep accumulating
-                if _consolidation_due(int(batch_id), consolidate_every):
+                if _consolidation_due(int(batch_id), spec.consolidate_every):
                     consolidate_ingest_store(
                         batch_df.sparkSession, store_path, int(batch_id) - 1
                     )
                 return
-            run_ingest_cycle(
-                batch,
-                store_path,
-                int(batch_id),
-                id_col=id_col,
-                text_col=text_col,
-                near_dup=near_dup,
-                threshold=threshold,
-                consolidate_every=consolidate_every,
-                index_verify=index_verify,
-                keep=keep,
-                bloom_m=bloom_m,
-                bloom_k=bloom_k,
-                cms_col=cms_col,
-                cms_width=cms_width,
-                cms_depth=cms_depth,
-                # corpus-horizon per-group keep budget (round 15) —
-                # enforced against the store's cms tree every cycle
-                cap_max=cap_max,
-                # token-denominated sibling (round 16): weighted tree +
-                # per-group token budget across the whole stream
-                cms_weight_col=cms_weight_col,
-                token_budget_max=token_budget_max,
-                # near-dup index gate (round 15): defaults ON like the
-                # fps gate; the probe auto-disables while the banded
-                # tree is broadcast-small
-                band_bloom_m=band_bloom_m,
-                band_bloom_k=band_bloom_k,
-            )
+            # the module global, looked up per call, so a wrapper
+            # installed on the module sees every cycle
+            run_ingest_cycle(batch, store_path, int(batch_id), **knobs)
         finally:
             unpersist_owned(owned)
 
@@ -1242,15 +1269,9 @@ def curate_and_ingest_stream(
     if not stream_near_dup:
         return ingest_writer
     hits = near_dup_hits_stream(
-        curated,
-        id_col=id_col,
-        text_col=text_col,
-        ts_col=ts_col,
-        watermark=nd_watermark,
-        min_est=nd_min_est,
-        max_bucket=nd_max_bucket,
-        fanout=fanout,
+        curated, id_col=id_col, text_col=text_col, ts_col=ts_col
     )
+
     def hits_sink(batch_df: DataFrame, batch_id: int) -> None:
         # per-batch dirs (idempotent overwrite under replay), plain
         # parquet tree — no _spark_metadata log, so the post-drain
@@ -1495,14 +1516,15 @@ def _store_tree_paths(store_path: str) -> dict[str, str]:
         "fps": f"{store_path}/fps",
         "banded": f"{store_path}/index/banded",
         "sets": f"{store_path}/index/sets",
-        # Bloom membership sketch of fps (round 13) — only written
-        # when run_ingest_cycle(bloom_m=...) enables the pre-gate;
+        # Bloom membership sketch of fps (round 13) — written unless
+        # the cycle turns the pre-gate off (bloom_m=None);
         # consolidation folds it like the others (rows merge at read
         # time via bit_or, so folded duplicates of a word are fine)
         "bloom": f"{store_path}/bloom",
         # Bloom sketch of the banded tree's band KEYS (round 15) —
-        # only written when band_bloom_m is set; gates the near-dup
-        # index reads the way `bloom` gates the fps anti-join
+        # written on near-dup cycles unless band_bloom_m=None; gates
+        # the near-dup index reads the way `bloom` gates the fps
+        # anti-join
         "bloom_band": f"{store_path}/bloom_band",
         # count-min frequency sketch of a kept-row column (round 14)
         # — only written when run_ingest_cycle(cms_col=...) is set;
@@ -1711,46 +1733,6 @@ def read_store_cms(
     return cms_merge(df.drop("cycle"))
 
 
-def _check_stats_knobs(
-    ctx: str,
-    columns: list,
-    cms_col: str | None,
-    cap_max: int | None,
-    cms_weight_col: str | None,
-    token_budget_max: int | None,
-) -> None:
-    """The cms/cap/token-budget pairings both ingest entry points
-    accept: ``columns`` are the input's (stream or batch) columns."""
-    if cap_max is not None and (cms_col is None or cms_col not in columns):
-        raise ValueError(
-            f"{ctx}: cap_max needs cms_col naming an input column — "
-            f"the budget is enforced against the store's count-min "
-            f"tree of that column"
-        )
-    if cms_weight_col is not None and (
-        cms_col is None
-        or cms_col not in columns
-        or cms_weight_col not in columns
-    ):
-        raise ValueError(
-            f"{ctx}: cms_weight_col needs cms_col AND the weight "
-            f"column present in the input — the weighted tree sketches "
-            f"SUM(weight) per cms_col value"
-        )
-    if token_budget_max is not None and cms_weight_col is None:
-        raise ValueError(
-            f"{ctx}: token_budget_max needs cms_weight_col — the token "
-            f"budget is enforced against the store's WEIGHTED "
-            f"count-min tree"
-        )
-    if cap_max is not None and cms_weight_col is not None:
-        raise ValueError(
-            f"{ctx}: cap_max and cms_weight_col are mutually exclusive "
-            f"— one cms tree holds ONE denomination (row counts or "
-            f"weight sums); run separate stores to budget both"
-        )
-
-
 def _consolidation_due(cycle_id: int, consolidate_every: int | None) -> bool:
     """Whether cycle ``cycle_id`` opens by folding cycles below it."""
     return bool(
@@ -1762,34 +1744,15 @@ def run_ingest_cycle(
     new_batch: DataFrame,
     store_path: str,
     cycle_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    near_dup: bool = True,
-    threshold: float = 0.35,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 5,
-    index_verify: str = "exact",
-    consolidate_every: int | None = None,
-    keep: str = "chain",
-    bloom_m: int | None = None,
-    bloom_k: int = 5,
-    cms_col: str | None = None,
-    cms_width: int = 1024,
-    cms_depth: int = 4,
-    cap_max: int | None = None,
-    cms_weight_col: str | None = None,
-    token_budget_max: int | None = None,
-    band_bloom_m: int | None = None,
-    band_bloom_k: int = 5,
+    *,
     timings: dict | None = None,
+    **knobs,
 ) -> int:
     """One steady-state compaction cycle against ON-DISK corpus state
     — the production composition the per-DataFrame pieces build up
-    to. ``store_path`` holds four core parquet trees (plus up to
-    three optional sketch trees — bloom, cms, bloom_band — described
-    below), each partitioned by
-    ``cycle={id}``:
+    to. ``store_path`` holds four core parquet trees (plus the sketch
+    trees bloom, bloom_band and cms that the ``IngestSpec`` knobs
+    turn on), each partitioned by ``cycle={id}``:
 
     - ``corpus/``  — the kept documents,
     - ``fps/``     — their normalized-text fingerprints as 16-byte
@@ -1814,89 +1777,9 @@ def run_ingest_cycle(
     of rows appended.
 
     Every state table is a narrow column scan at any corpus size; the
-    only text read is the new batch's. ``consolidate_every=K`` folds
-    the accumulated per-cycle partitions into one every K cycles
-    (``consolidate_ingest_store``) so partition count — and with it
-    listing/small-file cost — stays bounded by K on a stream that
-    runs forever; the fold only ever covers cycles strictly below
-    this one, which the checkpoint guarantees can no longer replay.
-
-    ``keep`` is forwarded to ``compact_corpus``; with
-    ``keep='cluster'`` the connected-components drop stays DISTRIBUTED
-    — the dropped ids go through ``{store_path}/_scratch/cycle={id}``
-    on the store's own filesystem (zero driver-side collect), removed
-    after the cycle's corpus partition commits.
-
-    ``bloom_m`` (round 13) enables the broadcast Bloom pre-gate for
-    the exact-dedup side: a fifth state tree ``{store}/bloom`` holds
-    the per-cycle (word, bits) membership sketch of fps
-    (``sketches.bloom_build`` at ``bloom_m`` bits / ``bloom_k``
-    hashes), merged per word at probe time (exact — Bloom union
-    loses nothing; ``bloom_probe`` validates the tree's sentinels
-    pre-aggregation and re-aggregates defensively, so no separate
-    merge pass runs) and consolidated like the other trees.
-    Definitely-new batch rows then bypass the O(corpus) fps anti-join
-    (see ``dedup.incremental_exact_dedup``) — the join that otherwise
-    shuffles the full fingerprint tree every cycle at 100 TB. Kept
-    results are bit-identical with or without the gate; size m to the
-    expected corpus (~10 bits/doc for 1% fpr) and keep it under the
-    broadcast budget.
-
-    ``cms_col`` (round 14) maintains a sixth state tree
-    ``{store}/cms``: the per-cycle count-min frequency sketch
-    (``sketches.cms_build`` at ``cms_width`` × ``cms_depth``) of the
-    named KEPT-row column — typically the source or registrable
-    domain — so "how often has this domain appeared in the corpus so
-    far?" is answerable at ANY time from O(cells) rows via
-    ``read_store_cms`` + ``cms_query``/``cms_heavy_hitters``, never
-    by rescanning corpus text. Coverage is backfilled like the Bloom
-    tree's (a sketch tree missing cycles would silently UNDER-count,
-    voiding the est ≥ true guarantee); consolidation folds it with
-    the other trees (duplicate cells re-SUM exactly at read time).
-    Purely observational — kept results are unaffected (unless
-    ``cap_max`` consumes it, below).
-
-    ``band_bloom_m`` (round 15 — the near-dup analog of ``bloom_m``)
-    maintains a seventh state tree ``{store}/bloom_band``: the
-    per-cycle Bloom sketch of the banded tree's band KEYS, coverage-
-    backfilled and consolidated like the fps sketch. The compaction
-    then reads only the index row groups that can contain a batch
-    collision (``compact_corpus(corpus_band_bloom=...)``) instead of
-    fully scanning the banded (O(corpus·bands) rows) and verify
-    (O(corpus) arrays — the largest tree) state every cycle. Probe
-    auto-disabled while the banded tree is under
-    ``GATE_MIN_TREE_BYTES`` (the sketch stays maintained, so coverage
-    holds when the probe resumes). Size ≈ 10 bits per (doc × band);
-    kept results are bit-identical with or without it.
-
-    ``cap_max`` (round 15 — corpus-horizon frequency budgets on a
-    forever-stream) caps the KEPT rows per ``cms_col`` value at
-    ``cap_max`` ACROSS THE WHOLE STREAM: after compaction, this
-    cycle's keeps are ranked per group and admitted only up to
-    ``max(0, cap_max − historical CMS estimate)``
-    (``sampling.cap_per_group(cms=...)`` over the store's cms tree —
-    which counts exactly the previously KEPT rows, cycle-filtered so
-    replays are deterministic). CMS never under-counts, so the
-    cumulative budget can never be exceeded; under-admission happens
-    only at the sketch's over-count rate (size ``cms_width``
-    accordingly). Requires ``cms_col``; the first cycle (no tree yet)
-    applies the plain in-frame cap.
-
-    ``cms_weight_col`` / ``token_budget_max`` (round 16 — the
-    TOKEN-denominated sibling of ``cap_max``): the cms tree sketches
-    ``SUM(cms_weight_col)`` per ``cms_col`` value instead of row
-    counts (``sketches.cms_build(weight=...)``), and
-    ``token_budget_max`` admits, per group, only the deterministic
-    prefix of kept rows whose cumulative weight stays within
-    ``max(0, budget − historical weighted estimate)``
-    (``sampling.token_budget_per_group(cms=...)``) — "at most N
-    tokens of source X across the whole stream", the denomination
-    training mixtures are actually specified in. One tree holds ONE
-    denomination: ``cap_max`` and ``cms_weight_col`` are mutually
-    exclusive, each sketch partition stamps a weightedness sentinel,
-    and a cycle whose mode disagrees with the store's tree raises on
-    the FIRST mismatch (``sketches.cms_is_weighted``) instead of
-    silently poisoning the denomination.
+    only text read is the new batch's. ``knobs`` are the cycle's
+    ``IngestSpec`` fields; they are validated before the cycle reads
+    or writes anything.
 
     ``timings`` (round 16 — the observability behind bench's
     ``ingest_loop`` block): pass a dict to receive the cycle's
@@ -1907,6 +1790,8 @@ def run_ingest_cycle(
     (fps/bloom/cms trees off the committed partition),
     ``index_writes`` (banded/sets/bloom_band), ``count``. Purely
     observational; keys for stages that did not run are absent."""
+    spec = IngestSpec(**knobs)
+    spec.check_columns(new_batch.columns)
     from pyspark.errors import AnalysisException
 
     from timebox_spark.operators.dedup import (
@@ -1917,16 +1802,13 @@ def run_ingest_cycle(
 
     spark = new_batch.sparkSession
     paths = _store_tree_paths(store_path)
-    _check_stats_knobs(
-        "run_ingest_cycle", new_batch.columns, cms_col, cap_max,
-        cms_weight_col, token_budget_max,
-    )
+    id_col, text_col = spec.id_col, spec.text_col
     _t = time.perf_counter()
     if cycle_id == 0:
         # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
         # store — any cached tree schemas describe a previous store
         _new_generation(spark, store_path)
-    if _consolidation_due(cycle_id, consolidate_every):
+    if _consolidation_due(cycle_id, spec.consolidate_every):
         consolidate_ingest_store(spark, store_path, cycle_id - 1)
         _t = _lap(timings, "consolidate", _t)
     generation = _store_generation(spark, store_path)
@@ -2003,7 +1885,7 @@ def run_ingest_cycle(
 
     fps = read_prior("fps")
     bloom = None
-    if bloom_m is not None:
+    if spec.bloom_m is not None:
         from timebox_spark.operators.sketches import bloom_build
 
         # the sketch hashes the HEX form of the binary fps — the bits
@@ -2013,11 +1895,11 @@ def run_ingest_cycle(
             "fps", "bloom",
             lambda df: bloom_build(
                 df.select(_fp_hex("__fp").alias("__fp")), "__fp",
-                bloom_m, bloom_k,
+                spec.bloom_m,
             ),
         )
     prior_cms = None
-    if cms_col is not None:
+    if spec.cms_col is not None:
         import warnings
 
         from timebox_spark.operators.sketches import (
@@ -2041,26 +1923,24 @@ def run_ingest_cycle(
         prior_cms = read_prior("cms")
         if prior_cms is not None:
             _, tree_weighted = _cms_stats_mode(
-                prior_cms, cms_width, cms_depth,
+                prior_cms, spec.cms_width, spec.cms_depth,
                 "run_ingest_cycle(cms_col=...)",
             )
-            if bool(tree_weighted) != (cms_weight_col is not None):
+            if bool(tree_weighted) != (spec.cms_weight_col is not None):
                 raise ValueError(
                     f"run_ingest_cycle: the store's cms tree is "
                     f"{'WEIGHTED' if tree_weighted else 'count-mode'}"
                     f" but this cycle runs "
-                    f"{'weighted' if cms_weight_col else 'count'}"
+                    f"{'weighted' if spec.cms_weight_col else 'count'}"
                     f" stats — one tree holds one denomination; "
                     f"keep the mode that built the store or start a "
                     f"new store for the other budget"
                 )
 
         # the columns a sketch build needs off a corpus partition
-        _cms_cols = [cms_col] + (
-            [cms_weight_col]
-            if cms_weight_col is not None and cms_weight_col != cms_col
-            else []
-        )
+        _cms_cols = list(dict.fromkeys(
+            c for c in (spec.cms_col, spec.cms_weight_col) if c is not None
+        ))
 
         def _cms_from_corpus(df: DataFrame) -> DataFrame:
             # a pre-cms corpus cycle may predate the column(s)
@@ -2072,8 +1952,8 @@ def run_ingest_cycle(
             # (round-14 review).
             if all(c in df.columns for c in _cms_cols):
                 return cms_build(
-                    df.select(*_cms_cols), cms_col, cms_width,
-                    cms_depth, weight=cms_weight_col,
+                    df.select(*_cms_cols), spec.cms_col, spec.cms_width,
+                    spec.cms_depth, weight=spec.cms_weight_col,
                 )
             warnings.warn(
                 f"run_ingest_cycle: corpus partition lacks "
@@ -2085,11 +1965,11 @@ def run_ingest_cycle(
                 stacklevel=3,
             )
             empty = df.sparkSession.createDataFrame(
-                [], f"`{cms_col}` string, `__cms_w` long"
+                [], f"`{spec.cms_col}` string, `__cms_w` long"
             )
             return cms_build(
-                empty, cms_col, cms_width, cms_depth,
-                weight=None if cms_weight_col is None else "__cms_w",
+                empty, spec.cms_col, spec.cms_width, spec.cms_depth,
+                weight=None if spec.cms_weight_col is None else "__cms_w",
             )
 
         # COVERAGE backfill, the bloom-tree rule: a cms tree missing
@@ -2100,29 +1980,30 @@ def run_ingest_cycle(
             spark, store_path, paths["corpus"], paths["cms"], cycle_id,
             _cms_from_corpus,
         )
-    banded = read_prior("banded") if near_dup else None
-    sets = read_prior("sets") if near_dup else None
+    banded = read_prior("banded") if spec.near_dup else None
+    sets = read_prior("sets") if spec.near_dup else None
     # a missing index on a near_dup cycle (first cycle, or exact-only
     # history) still near-dedups within the batch itself: the empty
     # index is a valid corpus index
-    if near_dup and banded is None:
+    if spec.near_dup and banded is None:
         banded, sets = build_corpus_index(
-            new_batch.limit(0), id_col, text_col, num_perm, bands,
-            shingle_n, verify=index_verify,
+            new_batch.limit(0), id_col, text_col, verify=spec.index_verify
         )
     band_bloom = None
-    if near_dup and band_bloom_m is not None:
+    if spec.near_dup and spec.band_bloom_m is not None:
         from timebox_spark.operators.sketches import bloom_build
 
         band_bloom = gate_tree(
             "banded", "bloom_band",
             lambda df: bloom_build(
-                df.select("key"), "key", band_bloom_m, band_bloom_k
+                df.select("key"), "key", spec.band_bloom_m
             ),
         )
     _t = _lap(timings, "state_read_gates", _t)
     scratch = (
-        f"{store_path}/_scratch/cycle={cycle_id}" if keep == "cluster" else None
+        f"{store_path}/_scratch/cycle={cycle_id}"
+        if spec.keep == "cluster"
+        else None
     )
     # own the gated-probe checkpoint for this cycle (round-14 review:
     # without materialization the probe subplan evaluates per plan
@@ -2144,31 +2025,25 @@ def run_ingest_cycle(
             corpus=None,
             id_col=id_col,
             text_col=text_col,
-            near_dup=near_dup,
-            threshold=threshold,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-            corpus_index=(banded, sets) if near_dup else None,
+            near_dup=spec.near_dup,
+            threshold=spec.threshold,
+            corpus_index=(banded, sets) if spec.near_dup else None,
             corpus_fps=fps,
-            keep=keep,
-            verify=index_verify,
+            keep=spec.keep,
+            verify=spec.index_verify,
             scratch_path=scratch,
+            # the geometries are read only with their sketch frames
             corpus_bloom=bloom,
-            bloom_m=bloom_m if bloom_m is not None else 1 << 20,
-            bloom_k=bloom_k,
+            bloom_m=spec.bloom_m,
             exact_owned_rdds=exact_owned,
             corpus_band_bloom=band_bloom,
-            band_bloom_m=(
-                band_bloom_m if band_bloom_m is not None else 1 << 26
-            ),
-            band_bloom_k=band_bloom_k,
+            band_bloom_m=spec.band_bloom_m,
             batch_index_out=batch_index,
             timings=(
                 None if timings is None else _compact_sub
             ),
         )
-        if cap_max is not None:
+        if spec.cap_max is not None:
             # corpus-horizon frequency budget on the KEPT rows: the
             # cms tree counts exactly the rows previous cycles kept
             # (cycle-filtered read ⇒ replay-deterministic); the first
@@ -2177,10 +2052,11 @@ def run_ingest_cycle(
             from timebox_spark.operators.sampling import cap_per_group
 
             kept = cap_per_group(
-                kept, cms_col, id_col, cap_max,
-                cms=prior_cms, cms_width=cms_width, cms_depth=cms_depth,
+                kept, spec.cms_col, id_col, spec.cap_max,
+                cms=prior_cms, cms_width=spec.cms_width,
+                cms_depth=spec.cms_depth,
             )
-        if token_budget_max is not None:
+        if spec.token_budget_max is not None:
             # corpus-horizon TOKEN budget on the KEPT rows (round 16):
             # the WEIGHTED cms tree sums exactly the weight previous
             # cycles kept; the first cycle (cms=None) applies the
@@ -2190,9 +2066,9 @@ def run_ingest_cycle(
             )
 
             kept = token_budget_per_group(
-                kept, cms_col, cms_weight_col, token_budget_max,
-                key=id_col, cms=prior_cms, cms_width=cms_width,
-                cms_depth=cms_depth,
+                kept, spec.cms_col, spec.cms_weight_col,
+                spec.token_budget_max, key=id_col, cms=prior_cms, cms_width=spec.cms_width,
+                cms_depth=spec.cms_depth,
             )
 
         cyc = f"cycle={cycle_id}"
@@ -2214,7 +2090,7 @@ def run_ingest_cycle(
         ).sortWithinPartitions("__fp").write.mode("overwrite").parquet(
             f"{paths['fps']}/{cyc}"
         )
-        if bloom_m is not None:
+        if spec.bloom_m is not None:
             from timebox_spark.operators.sketches import bloom_build
 
             # build the sketch off the COMMITTED fps partition (round
@@ -2227,18 +2103,17 @@ def run_ingest_cycle(
                     _fp_hex("__fp").alias("__fp")
                 ),
                 "__fp",
-                bloom_m,
-                bloom_k,
+                spec.bloom_m,
             ).write.mode("overwrite").parquet(f"{paths['bloom']}/{cyc}")
-        if cms_col is not None:
+        if spec.cms_col is not None:
             from timebox_spark.operators.sketches import cms_build
 
             cms_build(
-                kept_disk.select(*_cms_cols), cms_col, cms_width,
-                cms_depth, weight=cms_weight_col,
+                kept_disk.select(*_cms_cols), spec.cms_col, spec.cms_width,
+                spec.cms_depth, weight=spec.cms_weight_col,
             ).write.mode("overwrite").parquet(f"{paths['cms']}/{cyc}")
         _t = _lap(timings, "derived_writes", _t)
-        if near_dup:
+        if spec.near_dup:
             # the batch's banded/sets tables were materialized
             # (localCheckpointed) inside compact_corpus — always, since
             # this cycle owns exact_owned (round 17). Their rows are
@@ -2261,7 +2136,7 @@ def run_ingest_cycle(
             ns.sortWithinPartitions(id_col).write.mode(
                 "overwrite"
             ).parquet(f"{paths['sets']}/{cyc}")
-            if band_bloom_m is not None:
+            if spec.band_bloom_m is not None:
                 from timebox_spark.operators.sketches import bloom_build
 
                 bloom_build(
@@ -2269,8 +2144,7 @@ def run_ingest_cycle(
                         f"{paths['banded']}/{cyc}"
                     ).select("key"),
                     "key",
-                    band_bloom_m,
-                    band_bloom_k,
+                    spec.band_bloom_m,
                 ).write.mode("overwrite").parquet(
                     f"{paths['bloom_band']}/{cyc}"
                 )
