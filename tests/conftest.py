@@ -85,13 +85,10 @@ SLOW_NODEIDS = {
     "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[band_keys]",
     "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[cand_ids]",
     "test_oracle_queries.py::test_query_matches_oracle[q57_stats_suite]",
-    "test_streaming.py::test_near_dup_hits_stream_flood_capped_state",
-    "test_streaming.py::test_near_dup_hits_stream_flags_planted_copy",
     "test_oracle_queries.py::test_query_matches_oracle[q25_neardup_pairs]",
     "test_plans.py::test_cross_contamination_corpus_sets_candidate_bounded",
     "test_graphs.py::test_pagerank_weighted_matches_duckdb_and_semantics",
     "test_streaming.py::test_estimate_verify_warns_on_high_variance_at_call_site",
-    "test_streaming.py::test_near_dup_hits_stream_bucket_cap_and_null_text",
     "test_text.py::test_cap_per_group_cms_enforces_corpus_horizon_budget",
     "test_streaming.py::test_compact_corpus_cluster_keep_one_vs_chain",
     "test_oracle_queries.py::test_query_matches_oracle[q30_multimodal_suite]",

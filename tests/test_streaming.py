@@ -3066,3 +3066,151 @@ def test_near_dup_hits_stream_fanout_negative_raises(spark):
     stream = spark.readStream.format("rate").load()
     with pytest.raises(ValueError, match="fanout must be >= 0"):
         ingest.near_dup_hits_stream(stream, fanout=-1)
+
+
+def _filters_with_lambdas(jplan) -> list[str]:
+    """Filter nodes of a JVM plan whose condition holds a lambda
+    function (one line per node; streaming nodes carry a ``~``)."""
+    import re
+
+    nodes = (
+        re.sub(r"^[\s:|+-]*~?", "", ln) for ln in jplan.toString().splitlines()
+    )
+    return [
+        n for n in nodes
+        if n.startswith("Filter ")
+        and ("lambdafunction" in n or "transform(" in n)
+    ]
+
+
+def test_shingle_work_never_lands_in_a_pushed_filter(spark, tmp_path):
+    """A filter on a shingle column is pushed through the projections
+    and the fanout exchange into the source stage, with the text
+    normalization inlined into the per-position lambda: O(len²) regex
+    work on the source's partitions. Neither the stream detector nor
+    the portable index may leave a lambda in any Filter of its
+    optimized plan; NULL text is dropped on the text column instead."""
+    from timebox_spark.operators import dedup as DD
+
+    stream = spark.readStream.schema(
+        "doc_id long, text string, ts timestamp"
+    ).parquet(str(tmp_path))
+    hits = ingest.near_dup_hits_stream(stream, fanout=4)
+    # an unstarted streaming frame refuses optimizedPlan(): run the
+    # session's optimizer over its analyzed plan directly
+    stream_plan = spark._jsparkSession.sessionState().optimizer().execute(
+        hits._jdf.queryExecution().analyzed()
+    )
+    assert "RepartitionByExpression" in stream_plan.toString()
+    assert not _filters_with_lambdas(stream_plan)
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, None)],
+        "doc_id long, text string",
+    ).coalesce(1)
+    banded, sets = DD.portable_minhash_index(docs)
+    for df in (banded, sets):
+        assert not _filters_with_lambdas(df._jdf.queryExecution().optimizedPlan())
+    assert {r["doc_id"] for r in banded.collect()} == {1}
+    assert [r["doc_id"] for r in sets.collect()] == [1]
+
+
+def test_get_spark_shuffle_width_defaults_to_core_count(spark, monkeypatch):
+    """Without ``shuffle_partitions`` or ``TIMEBOX_SHUFFLE_PARTITIONS``
+    the session's shuffle width is the local core count (streaming
+    state never coalesces, so a wider default only adds waves of empty
+    state tasks); the env var and the argument override it, and an
+    explicit ``extra_conf`` entry wins over both."""
+    from timebox_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    try:
+        monkeypatch.delenv("TIMEBOX_SHUFFLE_PARTITIONS", raising=False)
+        s = get_spark(app_name="timebox-tests")
+        assert int(s.conf.get(key)) == s.sparkContext.defaultParallelism
+        monkeypatch.setenv("TIMEBOX_SHUFFLE_PARTITIONS", "3")
+        assert get_spark(app_name="timebox-tests").conf.get(key) == "3"
+        assert get_spark(
+            app_name="timebox-tests", shuffle_partitions=5
+        ).conf.get(key) == "5"
+        assert get_spark(
+            app_name="timebox-tests", extra_conf={key: "6"}
+        ).conf.get(key) == "6"
+    finally:
+        spark.conf.set(key, width)
+
+
+def test_near_dup_hits_stream_checkpoint_keeps_recorded_width(
+    spark, tmp_path
+):
+    """A detector checkpoint created at one shuffle width and restarted
+    under another keeps the width it recorded in its offset log (the
+    state store's partitioning is fixed at creation), and the resumed
+    drain returns the same hit rows as one uninterrupted drain of both
+    files."""
+    import datetime as dt
+    import json
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps "
+        "running through the long meadow toward the river bank"
+    )
+    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
+    files = [
+        [(1, base, t0), (2, base + " qq", t0 + dt.timedelta(seconds=1))],
+        [(3, base + " zz", t0 + dt.timedelta(seconds=2)),
+         (4, "an unrelated note about orchard irrigation schedules",
+          t0 + dt.timedelta(seconds=3))],
+    ]
+    src = str(tmp_path / "width_src")
+
+    def stage(rows):
+        spark.createDataFrame(
+            rows, "doc_id long, text string, ts timestamp"
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    def drain(ck, width):
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        stream = spark.readStream.schema(
+            "doc_id long, text string, ts timestamp"
+        ).parquet(src)
+        got = []
+        q = (
+            ingest.near_dup_hits_stream(stream, min_est=0.5)
+            .writeStream.foreachBatch(lambda df, _b: got.extend(df.collect()))
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return [(r["doc_id"], r["band"], r["matched_id"]) for r in got]
+
+    def recorded_widths(ck):
+        widths = set()
+        offsets = os.path.join(ck, "offsets")
+        for f in os.listdir(offsets):
+            if f.isdigit():
+                with open(os.path.join(offsets, f)) as fh:
+                    meta = json.loads(fh.read().splitlines()[1])
+                widths.add(meta["conf"]["spark.sql.shuffle.partitions"])
+        return widths
+
+    ck = str(tmp_path / "ck_width")
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    # hits are emitted on arrival: the watermark-only batches add only
+    # time, which would push the test out of the fast profile
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(no_data, "false")
+    try:
+        stage(files[0])
+        resumed = drain(ck, 2)
+        stage(files[1])
+        resumed += drain(ck, 3)
+        assert recorded_widths(ck) == {"2"}
+        whole = drain(str(tmp_path / "ck_whole"), 3)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+        spark.conf.unset(no_data)
+    assert {h[0] for h in whole} == {2, 3}, whole
+    assert sorted(resumed) == sorted(whole)

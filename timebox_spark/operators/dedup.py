@@ -87,6 +87,11 @@ def char_shingles(col: str, n: int = 5):
     Callers must materialize ``normalize_text`` into a column first:
     re-evaluating the regexp normalization inside the per-position
     lambda is O(len²) regex work (measured 10× on the minhash bench).
+    A materialized ``__norm`` does not protect a FILTER on the shingle
+    column: Catalyst pushes it below projections and exchanges and
+    inlines the normalization back into the lambda, on the source's
+    partitions. Never filter on a shingle column; filter on the text
+    column (non-NULL text always yields at least one shingle).
     """
     c = f"`{col}`"
     return F.expr(
@@ -1574,8 +1579,8 @@ def _portable_index_parts(
     the exploded (id, shingle) rows (micro-benchmlarked 1.37 s →
     1.15 s warm on a 1,250-doc batch, with the explode version's
     inline-pipeline penalty ~5 s removed entirely when ``d`` is
-    materialized). Docs whose shingle array is NULL/empty are
-    filtered exactly as the explode used to drop them. ``owned_rdds``
+    materialized). NULL-text docs are dropped from all three tables
+    (the explode dropped them from banded and sigs). ``owned_rdds``
     (the ``_tracked_local_checkpoint`` contract): when the caller
     owns the lifecycle, ``d`` is checkpointed so the banded and sets
     materializations don't each re-run the normalize+shingle
@@ -1589,15 +1594,17 @@ def _portable_index_parts(
     # and TWICE when banded and sets materialize separately); below
     # the raw (id, text) scan it is a no-op on big inputs and fans
     # the string-heavy projection out on small ones
+    # NULL text is dropped on the TEXT column, below the exchange (see
+    # ``char_shingles``); non-NULL text always has a shingle
     d = _portable_sets(
-        ensure_parallelism(df.select(id_col, text_col)),
+        ensure_parallelism(
+            df.select(id_col, text_col).filter(F.col(text_col).isNotNull())
+        ),
         id_col, text_col, shingle_n,
     )
     if owned_rdds is not None:
         d = _tracked_local_checkpoint(d, owned_rdds)
-    sigs = d.filter(
-        F.col("__sh").isNotNull() & (F.size("__sh") > 0)
-    ).select(
+    sigs = d.select(
         id_col,
         *[
             F.array_min(F.transform("__sh", _mk_salted_hash(i))).alias(f"h{i}")

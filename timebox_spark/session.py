@@ -114,18 +114,17 @@ def get_spark(
     Scale posture: AQE on (runtime coalesce + skew-join splitting),
     128 MiB parquet split size, zstd parquet writes. None of these are
     local-mode hacks; they are the cluster defaults too.
+
+    ``spark.sql.shuffle.partitions``: ``shuffle_partitions``, else
+    ``TIMEBOX_SHUFFLE_PARTITIONS``, else ``defaultParallelism`` (the
+    local core count in local mode); an ``extra_conf`` entry wins.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("TIMEBOX_SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("TIMEBOX_SHUFFLE_PARTITIONS", "32")
-        )
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -151,5 +150,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # the default width is the local core count, known only once the
+    # context exists: streaming state never coalesces and keeps the
+    # width its checkpoint was created with, so a wider default only
+    # adds waves of empty state tasks to every micro-batch
+    width = (
+        (extra_conf or {}).get("spark.sql.shuffle.partitions")
+        or shuffle_partitions
+        or os.environ.get("TIMEBOX_SHUFFLE_PARTITIONS")
+        or spark.sparkContext.defaultParallelism
+    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -2264,17 +2264,16 @@ def near_dup_hits_stream(
         raise ValueError(
             f"near_dup_hits_stream: fanout must be >= 0, got {fanout}"
         )
-    src = stream.repartition(width, F.col(id_col)) if width else stream
-    d = (
-        src.withColumn("__norm", normalize_text(text_col))
-        .withColumn(
-            "__sh", F.array_distinct(char_shingles("__norm", shingle_n))
-        )
-        # NULL text → NULL shingles → all-NULL signatures, which the
-        # state kernel cannot compare (and the batch index silently
-        # drops such docs: explode of NULL emits nothing) — mirror
-        # the batch family by dropping them here too
-        .filter(F.col("__sh").isNotNull())
+    # NULL text → NULL shingles → all-NULL signatures, which the state
+    # kernel cannot compare; the batch index drops such docs too. The
+    # filter is on the TEXT column, below the fanout: a filter on the
+    # shingle column is pushed into the source stage with the
+    # normalization inlined into the per-position lambda (O(len²)
+    # regex work on one task). Non-NULL text always has a shingle.
+    src = stream.filter(F.col(text_col).isNotNull())
+    src = src.repartition(width, F.col(id_col)) if width else src
+    d = src.withColumn("__norm", normalize_text(text_col)).withColumn(
+        "__sh", F.array_distinct(char_shingles("__norm", shingle_n))
     )
     def _sig(i: int):
         # factory, not `lambda s, i=i`: a two-parameter lambda is an
