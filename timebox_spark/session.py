@@ -128,26 +128,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("TIMEBOX_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # testdata stores TIMESTAMP(NANOS); read as long ns, converted
-        # to µs timestamps in timebox_spark.plans.tables.load
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # read parquet naive timestamps as TIMESTAMP (session tz =
-        # UTC), not TIMESTAMP_NTZ — one timestamp type everywhere
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # see RUNTIME_CONFS: OR-of-Eq In pushdown up to the pruned
-        # fps scan's cap, not the 10-value default (and below the
-        # ~1.5k-term recursive-evaluation stack cliff)
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # the default width is the local core count, known only once the
