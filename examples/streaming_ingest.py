@@ -2,10 +2,10 @@
 crawl that never stops, end to end on the engine's operators.
 
     raw docs (parquet stream) ──curate──▶ lang/quality/token gates
-        ──near-dup detector──▶ same-window copies flagged in-stream
         ──ingest cycle──▶ exact + near-dup compaction vs DISK state
         (cycle-partitioned corpus/fps/index trees, consolidated
-        every K cycles so the store never accumulates tiny files)
+        every K cycles so the store never accumulates tiny files),
+        each dropped copy recorded as a hit row beside the corpus
 
     plus: the signature-sized estimate-verify index tier, and ranged
     WARC reads (CDX-style member index -> single-member fetches, the
@@ -56,9 +56,9 @@ def main() -> None:
         rows, "doc_id long, text string, ts timestamp"
     ).coalesce(1).write.parquet(src)
 
-    # --- the end-to-end entrypoint: curate -> in-stream near-dup
-    # gate -> per-micro-batch compaction against the disk store;
-    # estimate-verify keeps the persisted index signature-sized
+    # --- the end-to-end entrypoint: curate -> per-micro-batch
+    # compaction against the disk store, recording every drop as a
+    # hit row; estimate-verify keeps the persisted index signature-sized
     from timebox_spark.streaming import ingest
 
     stream = spark.readStream.schema(
@@ -70,7 +70,7 @@ def main() -> None:
         f"{work}/ckpt",
         min_quality_q=0,
         min_tokens=6,
-        stream_near_dup=True,      # flag same-window copies pre-store
+        stream_near_dup=True,      # record each dropped copy as a hit
         index_verify="estimate",   # num_perm longs per doc, O(docs) index
         consolidate_every=8,       # bound the state trees' partitions
     ).start()
@@ -79,12 +79,11 @@ def main() -> None:
     kept = spark.read.parquet(f"{store}/corpus")
     print("corpus after ingest:")
     kept.orderBy("doc_id").show(truncate=60)
-    # hit rows move from the hot tree to the history tree after each
-    # fully successful drain (the hot tree only ever holds the
-    # CURRENT drain's batches) — audit reads go to the history
-    hits = spark.read.parquet(f"{store}/near_hits_history")
-    print("in-stream near-dup hits (doc, matched, estimate):")
-    hits.select("doc_id", "matched_id", "est").distinct().show()
+    # one hit row per dropped doc, partitioned by micro-batch: a near
+    # copy names its verified partner, an exact copy has est 1.0
+    hits = spark.read.parquet(f"{store}/near_hits")
+    print("ingest drops (doc, matched, similarity):")
+    hits.select("doc_id", "matched_id", "est").orderBy("doc_id").show()
 
     # --- interchange: export the curated corpus as .warc.gz (one
     # gzip member per record), index it CDX-style, and fetch ONE

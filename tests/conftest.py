@@ -29,11 +29,9 @@ RUN_SLOW = bool(os.environ.get("TIMEBOX_FULL_TESTS"))
 
 SLOW_NODEIDS = {
     "test_oracle_queries.py::test_query_matches_oracle[q68_stream_suite]",
-    "test_streaming.py::test_fold_history_retention_prunes_old_rows",
     "test_streaming.py::test_corpus_index_estimate_tier_signature_sized",
     "test_streaming.py::test_run_ingest_cycle_consolidation_bounded_and_identical",
     "test_plans.py::test_no_unguarded_fact_broadcast[q29_ann_suite]",
-    "test_streaming.py::test_fold_history_consolidation_bounds_dir_count",
     "test_similarity_ops.py::test_portable_ann_recall_floors",
     "test_oracle_queries.py::test_query_matches_oracle[q29_ann_suite]",
     "test_plans.py::test_no_unreduced_single_partition_exchange[q29_ann_suite]",
@@ -51,13 +49,12 @@ SLOW_NODEIDS = {
     "test_plans.py::test_no_unguarded_fact_broadcast[q57_stats_suite]",
     "test_streaming.py::test_near_dup_hits_stream_state_ttl_evicts_after_watermark",
     "test_clustering.py::test_connected_components_star_matches_union_find",
-    "test_streaming.py::test_hot_hits_tree_bounded_across_three_drains",
+    "test_streaming.py::test_hits_tree_holds_every_drain_across_three_drains",
     "test_oracle_queries.py::test_query_matches_oracle[q31_dedup_clusters]",
     "test_plans.py::test_no_unguarded_fact_broadcast[q54_curation_pipeline]",
     "test_plans.py::test_no_unguarded_fact_broadcast[q31_dedup_clusters]",
     "test_streaming.py::test_compact_corpus_band_gate_identical_results",
     "test_clustering.py::test_concurrent_cluster_compactions_do_not_interfere",
-    "test_streaming.py::test_fold_near_dup_hits_recovers_stranded_tmp",
     "test_streaming.py::test_compact_corpus_leaves_no_cached_rdds",
     "test_streaming.py::test_near_dup_hits_stream_fanout_invariant",
     "test_plans.py::test_no_unreduced_single_partition_exchange[q54_curation_pipeline]",

@@ -783,6 +783,47 @@ def test_compact_corpus_cluster_keep_one_vs_chain(spark, tmp_path):
     assert cluster == {11}, cluster       # C matches nothing kept
 
 
+def test_compact_corpus_drop_sink_rows_chain_and_cluster(spark, tmp_path):
+    """``drop_sink`` receives one row per dropped doc. Batch: C=5, A=7,
+    B=9 with A~B and B~C verified but not A~C, plus 11, an exact copy
+    of A. Chain drops B (best partner A, the closer pair) and the
+    exact copy (est 1.0, no partner). Cluster also drops A, whose only
+    pair has A as the smaller id — its partner is B."""
+    import random
+
+    from timebox_spark.operators.dedup import unpersist_owned
+
+    rng = random.Random(7)
+    words = [f"w{rng.randrange(10**6):06d}" for _ in range(130)]
+    x, y, p = words[:50], words[50:100], words[100:130]
+    a_text, b_text = " ".join(x + y), " ".join(x + y + p)
+    batch = spark.createDataFrame(
+        [(5, " ".join(y + p)), (7, a_text), (9, b_text), (11, a_text)],
+        "doc_id long, text string",
+    )
+    for keep, kept_want, partners in (
+        ("chain", {5, 7}, {9: 7, 11: None}),
+        ("cluster", {5}, {7: 9, 9: 7, 11: None}),
+    ):
+        got = {}
+
+        def sink(drops):
+            got.update({r["doc_id"]: r for r in drops.collect()})
+            return drops.select("doc_id")
+
+        owned: list = []
+        kept = ingest.compact_corpus(
+            batch, near_dup=True, threshold=0.5, num_perm=32, bands=16,
+            keep=keep, scratch_path=str(tmp_path / keep), drop_sink=sink,
+            exact_owned_rdds=owned,
+        )
+        assert {r["doc_id"] for r in kept.collect()} == kept_want, keep
+        unpersist_owned(owned)
+        assert {i: r["matched_id"] for i, r in got.items()} == partners
+        assert got[11]["est"] == 1.0
+        assert all(0.5 <= got[i]["est"] < 1.0 for i in partners if i != 11)
+
+
 def test_compact_corpus_cluster_mode_escalates_to_star(
     spark, tmp_path, monkeypatch
 ):
@@ -1171,12 +1212,14 @@ def test_curate_and_ingest_stream_end_to_end(spark, tmp_path):
 
 
 def test_curate_and_ingest_stream_with_stream_near_dup(spark, tmp_path):
-    """Round-11 verdict task 2: with ``stream_near_dup=True`` a
-    same-window near copy is anti-joined out of the micro-batch
-    BEFORE ``run_ingest_cycle`` — proven by running the compactor
-    exact-only (``near_dup=False``), so nothing downstream could
-    have dropped the non-exact copy; only the in-stream detector's
-    hit can. Hits land in ``{store}/near_hits`` for observability."""
+    """With ``stream_near_dup=True`` the drain is ONE ingest query and
+    the hit rows are the cycles' own dedup drops: one row per dropped
+    doc under ``{store}/near_hits/batch=N`` — a near copy carries its
+    verified partner and similarity, an exact copy est 1.0 and no
+    partner, ``band`` is NULL and ``ts`` the doc's event time.
+    ``drain_secs`` keeps its [detector, ingest] shape with the
+    detector slot 0.0. Pairing it with ``near_dup=False`` raises at
+    call time: nothing would drop, so nothing would be flagged."""
     import datetime as dt
 
     base = (
@@ -1187,6 +1230,10 @@ def test_curate_and_ingest_stream_with_stream_near_dup(spark, tmp_path):
         "completely different subject matter about integer codecs "
         "and columnar storage layouts with delta encoding schemes"
     )
+    third = (
+        "a wholly new third document concerning state stores and "
+        "watermark semantics in streams"
+    )
     t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
     batch1 = [
         (10, base, t0),
@@ -1195,9 +1242,8 @@ def test_curate_and_ingest_stream_with_stream_near_dup(spark, tmp_path):
     ]
     batch2 = [
         (30, other + " zz", t0 + dt.timedelta(seconds=3)),  # near copy of 11
-        (31, "a wholly new third document concerning state "
-             "stores and watermark semantics in streams",
-         t0 + dt.timedelta(seconds=4)),
+        (31, third, t0 + dt.timedelta(seconds=4)),
+        (32, third, t0 + dt.timedelta(seconds=5)),          # exact copy of 31
     ]
     src = str(tmp_path / "nd_raw_docs")
     for b in (batch1, batch2):
@@ -1209,11 +1255,14 @@ def test_curate_and_ingest_stream_with_stream_near_dup(spark, tmp_path):
         "doc_id long, text string, ts timestamp"
     ).option("maxFilesPerTrigger", 1).parquet(src)
     store = str(tmp_path / "nd_store")
+    with pytest.raises(ValueError, match="near_dup"):
+        ingest.curate_and_ingest_stream(
+            stream, store, str(tmp_path / "ck_nd_cai"),
+            near_dup=False, stream_near_dup=True,
+        )
     q = ingest.curate_and_ingest_stream(
         stream, store, str(tmp_path / "ck_nd_cai"),
-        min_quality_q=0, min_tokens=6,
-        near_dup=False,          # compactor exact-only: it CANNOT drop 20/30
-        stream_near_dup=True,    # ...so only the detector's hits can
+        min_quality_q=0, min_tokens=6, stream_near_dup=True,
     ).start()
     assert q.awaitTermination() is True
 
@@ -1221,24 +1270,22 @@ def test_curate_and_ingest_stream_with_stream_near_dup(spark, tmp_path):
         r["doc_id"] for r in spark.read.parquet(f"{store}/corpus").collect()
     }
     assert kept == {10, 11, 31}, kept
-    # the post-drain fold MOVED the drain's hit batches out of the hot
-    # tree into the observability history tree (round-12 weak: the hot
-    # scan must not grow with stream lifetime) — hits carry the
-    # arriving doc's event time now
-    hits = spark.read.parquet(f"{store}/near_hits_history")
-    assert {r["doc_id"] for r in hits.collect()} == {20, 30}
-    assert "ts" in hits.columns
-    import os
-
-    hot = [
-        d
-        for d in os.listdir(f"{store}/near_hits")
-        if d.startswith("batch=")
-    ]
-    assert hot == [], hot
-    # round 16: the sequential drain timed each writer — [detector,
-    # ingest] for this chain (bench's ingest_loop stream split)
-    assert len(q.drain_secs) == 2 and all(s > 0 for s in q.drain_secs)
+    hits = {
+        r["doc_id"]: r
+        for r in spark.read.parquet(f"{store}/near_hits").collect()
+    }
+    assert set(hits) == {20, 30, 32}, hits
+    assert {i: hits[i]["batch"] for i in hits} == {20: 0, 30: 1, 32: 1}
+    assert hits[20]["matched_id"] == 10 and hits[30]["matched_id"] == 11
+    assert all(0.35 <= hits[i]["est"] < 1.0 for i in (20, 30)), hits
+    assert hits[32]["matched_id"] is None and hits[32]["est"] == 1.0
+    assert all(r["band"] is None for r in hits.values())
+    src_ts = {
+        r["doc_id"]: r["ts"] for r in spark.read.parquet(src).collect()
+    }
+    assert all(hits[i]["ts"] == src_ts[i] for i in hits)
+    assert q.drain_secs[0] == 0.0 and q.drain_secs[1] > 0, q.drain_secs
+    assert len(q.drain_secs) == 2
 
 
 def test_curate_and_ingest_stream_cap_max_validates_eagerly(spark, tmp_path):
@@ -1524,15 +1571,12 @@ def test_compact_corpus_id_collision_keeps_edited_reingest(spark):
     assert [r["doc_id"] for r in kept.collect()] == [7]
 
 
-def test_hot_hits_tree_bounded_across_three_drains(spark, tmp_path):
-    """Round-12 verdict task 1 (the `weak`): across THREE sequential
-    drains of the stream_near_dup entrypoint, the ingest sink's
-    anti-join source — the hot tree {store}/near_hits — is emptied
-    after every drain (its batch dirs move to the history tree), so
-    the per-micro-batch scan is bounded by the CURRENT drain's input,
-    not the stream's lifetime. Drop behavior stays bit-identical:
-    every drain's planted near copy is kept out of the corpus, and
-    the history tree accumulates every hit row."""
+def test_hits_tree_holds_every_drain_across_three_drains(spark, tmp_path):
+    """Across THREE sequential drains of the stream_near_dup
+    entrypoint (one checkpoint, so batch ids run on), every drain's
+    planted near copy is kept out of the corpus and the hits tree
+    ``{store}/near_hits`` holds one ``batch=N`` partition per drain,
+    with every hit row."""
     import datetime as dt
     import os
 
@@ -1565,127 +1609,107 @@ def test_hot_hits_tree_bounded_across_three_drains(spark, tmp_path):
         q = ingest.curate_and_ingest_stream(
             stream, store, ckpt,
             min_quality_q=0, min_tokens=6,
-            near_dup=False,        # only the detector can drop copies
             stream_near_dup=True,
         ).start()
         assert q.awaitTermination() is True
         hits_total.add(100 * drain_i + 2)
-        # hot tree emptied: the next drain's per-batch anti-join scans
-        # ONLY its own hits — the bound the round-12 weak demanded
-        hot = [
-            d
-            for d in os.listdir(f"{store}/near_hits")
+        parts = sorted(
+            d for d in os.listdir(f"{store}/near_hits")
             if d.startswith("batch=")
-        ] if os.path.isdir(f"{store}/near_hits") else []
-        assert hot == [], (drain_i, hot)
+        )
+        assert parts == [f"batch={j}" for j in range(drain_i + 1)], parts
         kept = {
             r["doc_id"]
             for r in spark.read.parquet(f"{store}/corpus").collect()
         }
         assert kept == {100 * j + 1 for j in range(drain_i + 1)}, kept
-        hist = {
-            r["doc_id"]
-            for r in spark.read.parquet(
-                f"{store}/near_hits_history"
-            ).collect()
+        hits = {
+            (r["doc_id"], r["batch"])
+            for r in spark.read.parquet(f"{store}/near_hits").collect()
         }
-        assert hist == hits_total, (drain_i, hist)
+        assert hits == {(100 * j + 2, j) for j in range(drain_i + 1)}, hits
 
 
-def test_fold_near_dup_hits_recovers_stranded_tmp(spark, tmp_path):
-    """Advisor round 12: a history consolidation that crashed between
-    deleting its source dirs and the final rename leaves the folded
-    rows ONLY in the tmp dir. The next fold must FINISH that fold
-    (resume with the stranded tmp) instead of rebuilding from the
-    partially-emptied tree and destroying the tmp — no hit row is
-    ever lost. An INCOMPLETE stranded tmp (no _SUCCESS: crash during
-    the tmp write, sources untouched) is discarded and rebuilt."""
-    import os
-
-    store = str(tmp_path / "rec_store")
-    hist = f"{store}/near_hits_history"
-    schema = (
-        "doc_id long, band int, matched_id long, est double, "
-        "ts timestamp"
+def _hit_rows_of(spark, path):
+    return sorted(
+        map(tuple, spark.read.parquet(path).select(
+            "doc_id", "band", "matched_id", "est", "ts"
+        ).collect()),
+        key=lambda r: r[0],
     )
 
-    def hit_rows(ids):
-        import datetime as dt
 
-        return spark.createDataFrame(
-            [
-                (i, 0, 1, 0.9, dt.datetime(2025, 1, 1, 12, 0, i % 60))
-                for i in ids
-            ],
-            schema,
-        )
-
-    # history held batch=1 (ids 10,11) and batch=2 (ids 20,21); the
-    # crashed fold(upto=2) wrote the complete union tmp, deleted
-    # batch=1, then died before the rename
-    hit_rows([10, 11]).coalesce(1).write.parquet(f"{hist}/batch=1")
-    hit_rows([20, 21]).coalesce(1).write.parquet(f"{hist}/batch=2")
-    tmp = f"{store}/_tmp_consolidate_hits/batch=2"
-    hit_rows([10, 11, 20, 21]).coalesce(1).write.parquet(tmp)
-    import shutil
-
-    shutil.rmtree(f"{hist}/batch=1")
-
-    ingest.fold_near_dup_hits(spark, store)
-    got = {
-        r["doc_id"] for r in spark.read.parquet(hist).collect()
-    }
-    assert got == {10, 11, 20, 21}, got  # old code lost 10, 11
-    assert not os.path.exists(f"{store}/_tmp_consolidate_hits/batch=2")
-
-    # incomplete stranded tmp: discarded, history intact
-    store2 = str(tmp_path / "rec_store2")
-    hist2 = f"{store2}/near_hits_history"
-    hit_rows([30]).coalesce(1).write.parquet(f"{hist2}/batch=3")
-    tmp2 = f"{store2}/_tmp_consolidate_hits/batch=3"
-    hit_rows([30, 31]).coalesce(1).write.parquet(tmp2)
-    os.remove(f"{tmp2}/_SUCCESS")
-    ingest.fold_near_dup_hits(spark, store2)
-    got2 = {r["doc_id"] for r in spark.read.parquet(hist2).collect()}
-    assert got2 == {30}, got2
-    assert not os.path.exists(tmp2)
-
-
-def test_fold_history_consolidation_bounds_dir_count(spark, tmp_path):
-    """The history tree's FILE count stays bounded on a forever-stream:
-    once more than _HISTORY_FOLD_DIRS batch dirs accumulate, the fold
-    consolidates them into one — with every row preserved (history is
-    append-only observability data)."""
+def test_run_ingest_cycle_replay_rewrites_identical_hit_rows(
+    spark, tmp_path
+):
+    """A replayed micro-batch — the same cycle id run again on the same
+    store, as a crashed foreachBatch attempt is — overwrites its
+    ``near_hits/batch=N`` partition with the identical hit rows. The
+    hit ids are exactly the docs the dedup dropped: a ``cap_max``
+    drop is not a hit."""
     import datetime as dt
     import os
 
-    store = str(tmp_path / "hist_store")
-    hot = f"{store}/near_hits"
-    n_dirs = ingest._HISTORY_FOLD_DIRS + 2
-    for b in range(n_dirs):
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps "
+        "running through the long meadow toward the river bank"
+    )
+    other = (
+        "completely different subject matter about integer codecs "
+        "and columnar storage layouts with delta encoding schemes"
+    )
+    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
+    df = spark.createDataFrame(
+        [(10, base, "a", t0), (11, other, "a", t0),
+         (20, base + " qq", "a", t0 + dt.timedelta(seconds=1)),  # near 10
+         (21, other, "a", t0 + dt.timedelta(seconds=2)),         # exact 11
+         (22, "a wholly new third document on watermark state", "a",
+          t0 + dt.timedelta(seconds=3))],                        # capped
+        "doc_id long, text string, source string, ts timestamp",
+    )
+    store = str(tmp_path / "replay_store")
+
+    def run():
+        return ingest.run_ingest_cycle(
+            df.select("doc_id", "text", "source"), store, 0,
+            hit_ts=df.select("doc_id", "ts"),
+            bloom_m=None, band_bloom_m=None, cms_col="source", cap_max=2,
+        )
+
+    assert run() == 2
+    part = f"{store}/near_hits/batch=0"
+    first = _hit_rows_of(spark, part)
+    assert [r[0] for r in first] == [20, 21], first
+    assert first[0][2] == 10 and first[1][1:4] == (None, None, 1.0)
+    files = set(os.listdir(part))
+    assert run() == 2
+    assert set(os.listdir(part)) != files  # rewritten, not left alone
+    assert _hit_rows_of(spark, part) == first
+
+
+def test_consolidate_folds_hits_tree_rows_unchanged(spark, tmp_path):
+    """``consolidate_ingest_store`` folds ``near_hits/batch=*`` up to
+    the cut into ONE partition, beside the cycle trees, and leaves
+    every hit row unchanged; later batches stay put."""
+    import datetime as dt
+    import os
+
+    store = str(tmp_path / "hits_fold_store")
+    for b in range(4):
         spark.createDataFrame(
-            [(1000 + b, 0, 1, 0.9, dt.datetime(2025, 1, 1, 12, 0, 0))],
+            [(100 + b, None, 7, 0.5 + b / 10, dt.datetime(2025, 1, 1, 12, b)),
+             (200 + b, None, None, 1.0, dt.datetime(2025, 1, 1, 13, b))],
             "doc_id long, band int, matched_id long, est double, "
             "ts timestamp",
-        ).coalesce(1).write.parquet(f"{hot}/batch={b}")
-    ingest.fold_near_dup_hits(spark, store)
-    hist_dirs = [
-        d
-        for d in os.listdir(f"{store}/near_hits_history")
-        if d.startswith("batch=")
-    ]
-    assert len(hist_dirs) == 1, hist_dirs
-    got = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{store}/near_hits_history").collect()
-    }
-    assert got == {1000 + b for b in range(n_dirs)}
-    hot_left = (
-        [d for d in os.listdir(hot) if d.startswith("batch=")]
-        if os.path.isdir(hot)
-        else []
+        ).write.parquet(f"{store}/near_hits/batch={b}")
+    before = _hit_rows_of(spark, f"{store}/near_hits")
+    ingest.consolidate_ingest_store(spark, store, 2)
+    parts = sorted(
+        d for d in os.listdir(f"{store}/near_hits") if d.startswith("batch=")
     )
-    assert hot_left == [], hot_left
+    assert parts == ["batch=2", "batch=3"], parts
+    assert _hit_rows_of(spark, f"{store}/near_hits") == before
+    assert not os.path.exists(f"{store}/_tmp_consolidate")
 
 
 def test_near_dup_hits_stream_state_ttl_evicts_after_watermark(
@@ -1969,68 +1993,6 @@ def test_run_ingest_cycle_bloom_gate_state_and_results(spark, tmp_path):
         ).collect()
     }
     assert merged == whole
-
-
-def test_fold_history_retention_prunes_old_rows(spark, tmp_path):
-    """Round 13: fold_near_dup_hits(retention_ms=...) prunes history
-    rows older than (max event time − retention) during the
-    consolidation rebuild — history ROW count becomes rate×retention
-    bounded on a forever-stream — while rows inside the horizon
-    survive bit-identical. Without retention every row is kept."""
-    import datetime as dt
-    import os
-
-    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
-    schema = (
-        "doc_id long, band int, matched_id long, est double, "
-        "ts timestamp"
-    )
-    n_dirs = ingest._HISTORY_FOLD_DIRS + 2
-
-    def stage(store):
-        hot = f"{store}/near_hits"
-        for b in range(n_dirs):
-            # first half of the dirs: old hits (days before t_max);
-            # second half: recent (within the last hour)
-            ts = (
-                t0 - dt.timedelta(days=5)
-                if b < n_dirs // 2
-                else t0 + dt.timedelta(minutes=b)
-            )
-            spark.createDataFrame(
-                [(1000 + b, 0, 1, 0.9, ts)], schema
-            ).coalesce(1).write.parquet(f"{hot}/batch={b}")
-
-    keep_store = str(tmp_path / "keep_store")
-    stage(keep_store)
-    ingest.fold_near_dup_hits(spark, keep_store)
-    kept_all = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            f"{keep_store}/near_hits_history"
-        ).collect()
-    }
-    assert kept_all == {1000 + b for b in range(n_dirs)}
-
-    ret_store = str(tmp_path / "ret_store")
-    stage(ret_store)
-    ingest.fold_near_dup_hits(
-        spark, ret_store, retention_ms=24 * 3600 * 1000
-    )
-    kept = {
-        r["doc_id"]
-        for r in spark.read.parquet(
-            f"{ret_store}/near_hits_history"
-        ).collect()
-    }
-    assert kept == {1000 + b for b in range(n_dirs // 2, n_dirs)}, kept
-    assert len(
-        [
-            d
-            for d in os.listdir(f"{ret_store}/near_hits_history")
-            if d.startswith("batch=")
-        ]
-    ) == 1
 
 
 def test_run_ingest_cycle_bloom_backfills_uncovered_cycles(

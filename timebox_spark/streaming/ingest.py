@@ -484,6 +484,7 @@ def compact_corpus(
     band_bloom_k: int = 5,
     batch_index_out: dict | None = None,
     timings: dict | None = None,
+    drop_sink=None,
 ) -> DataFrame:
     """The batch half of the ingest lambda split ``curate_stream``
     documents: given the rows a streaming window accumulated
@@ -620,7 +621,21 @@ def compact_corpus(
     ``band_probe`` (band-key sketch probe + bounded collect),
     ``cand_prune`` (candidate checkpoint + verify-prune collect).
     The remainder of the caller's timed write is the verify join +
-    anti-join + sink. Purely observational."""
+    anti-join + sink. Purely observational.
+
+    ``drop_sink`` (with ``near_dup``): a callable that receives the
+    batch's DROP rows ``(id, matched_id, est)``, one per document the
+    exact or near-dup stage removed, and returns a frame of the same
+    ids that it has materialized. An exact drop carries ``est`` 1.0
+    and a NULL ``matched_id`` (the fps tree stores no ids). A near-dup
+    drop carries its best verified partner and that pair's verify
+    similarity (hashed Jaccard under ``'exact'``, debiased agreement
+    under ``'estimate'``), ties to the smallest partner id; the
+    partner is the smaller-id or corpus doc it was dropped against
+    under ``'chain'``, any verified neighbour under ``'cluster'``. The
+    returned plan anti-joins the sink's frame instead of re-deriving
+    the verify join, so the drops cost one write, not a second pass
+    (``run_ingest_cycle(hit_ts=...)`` writes them as hit rows)."""
     from timebox_spark.operators.dedup import (
         build_corpus_index,
         incremental_exact_dedup,
@@ -770,6 +785,10 @@ def compact_corpus(
         )
         .filter(F.col("__corpus") | (F.col("id_a") < F.col("id_b")))
         .select("id_a", "id_b", "__corpus")
+        # one exchange, on id_b: the distinct needs no second one, and
+        # chain mode's dropped-id distinct inherits it through the
+        # broadcast verify joins (2 fewer jobs on a 200-doc cycle 0)
+        .repartition("id_b")
         .distinct()
     )
     if corpus_band_bloom is not None:
@@ -844,10 +863,52 @@ def compact_corpus(
     verified = (
         cand.join(sh_a, ["id_a", "__corpus"])
         .join(sh_b, "id_b")
-        .filter(sim >= F.lit(threshold))
-        .select("id_a", "id_b", "__corpus")
+        .select("id_a", "id_b", "__corpus", sim.alias("est"))
+        .filter(F.col("est") >= F.lit(threshold))
     )
+
+    def sink_drops(near_ids: DataFrame | None) -> DataFrame:
+        # one aggregation over every batch id: a drop is an id the
+        # exact stage removed (est 1.0, no partner) or one with a
+        # verified partner, the best by (est desc, partner id asc) —
+        # near_dup_hits_stream's tie rule. Chain partners are the id_a
+        # side; cluster adds the mirrored batch pairs (a
+        # non-representative may only appear as id_a) and keeps the
+        # dropped ids' rows.
+        pool = verified.select(
+            F.col("id_b").alias(id_col), F.col("id_a").alias("m"), "est"
+        )
+        if near_ids is not None:
+            pool = pool.unionByName(
+                verified.filter(~F.col("__corpus")).select(
+                    F.col("id_a").alias(id_col), F.col("id_b").alias("m"),
+                    "est",
+                )
+            ).join(near_ids, id_col, "left_semi")
+        rows = pool.select(
+            id_col, "m", (-F.col("est")).alias("neg"), F.lit(False).alias("k")
+        ).unionByName(
+            new_batch.select(id_col, F.lit(False).alias("k")).unionByName(
+                kept.select(id_col, F.lit(True).alias("k"))
+            ),
+            allowMissingColumns=True,
+        )
+        best = F.when(F.col("neg").isNotNull(), F.struct("neg", "m"))
+        drops = (
+            rows.groupBy(id_col)
+            .agg(F.max("k").alias("k"), F.min(best).alias("b"))
+            .filter(~F.col("k") | F.col("b").isNotNull())
+            .select(
+                id_col,
+                F.col("b.m").cast("long").alias("matched_id"),
+                F.coalesce(-F.col("b.neg"), F.lit(1.0)).alias("est"),
+            )
+        )
+        return kept.join(drop_sink(drops), id_col, "left_anti")
+
     if keep == "chain":
+        if drop_sink is not None:
+            return sink_drops(None)
         dropped = verified.select(F.col("id_b").alias(id_col)).distinct()
         return kept.join(dropped, id_col, "left_anti")
     # cluster-keep-one: corpus matches drop first; the remaining batch
@@ -920,6 +981,11 @@ def compact_corpus(
         # runs even when CC raises — the crash path must not be the
         # one that leaks block-manager state
         unpersist_owned(owned)
+    if drop_sink is not None:
+        near_ids = corpus_dropped
+        if dropped_scan is not None:
+            near_ids = near_ids.unionByName(dropped_scan)
+        return sink_drops(near_ids)
     if dropped_scan is None:
         return remaining
     # NO broadcast hint (advisor round 13): forcing broadcast collects
@@ -931,63 +997,34 @@ def compact_corpus(
     return remaining.join(dropped_scan, id_col, "left_anti")
 
 
-class SequentialStreamingDrain:
-    """A drain-order wrapper over several UNSTARTED availableNow
-    writers: ``start()`` launches a driver-side thread that starts
-    and drains each writer IN ORDER, so a consumer query (the ingest
-    sink anti-joining on detector hits) only runs after its producer
-    (the hit detector) has fully drained the source. Mirrors the
-    ``q = writer.start(); q.awaitTermination()`` call shape of a
-    single StreamingQuery — and like one, ``start()`` alone is enough
-    for the work to happen; ``awaitTermination(timeout)`` blocks
-    until the whole chain drains (True) or the timeout elapses
-    (False, chain keeps running), re-raising any query failure.
-    ``on_complete`` (optional) runs after a fully successful drain —
-    the hook the ingest entrypoint uses for hits-tree maintenance.
-    ``drain_secs`` (round 16, observability) records each writer's
-    drain wall seconds in order — for the two-writer ingest chain
-    that is [detector, ingest]."""
+class IngestDrain:
+    """What ``curate_and_ingest_stream(stream_near_dup=True)`` returns:
+    its one availableNow ingest query behind the
+    ``start()``/``awaitTermination(timeout)`` shape of a
+    StreamingQuery. Once the drain has finished, ``drain_secs`` is
+    ``[0.0, s]``: ``s`` is the query's wall seconds from ``start()``,
+    and ``0.0`` fills the detector slot of the ``[detector, ingest]``
+    pair benchmark consumers unpack — no detector query runs, the
+    cycles' own dedup finds the hits."""
 
-    def __init__(self, writers, on_complete=None):
-        self._writers = list(writers)
-        self._on_complete = on_complete
-        self._thread = None
-        self._exc = None
+    def __init__(self, writer):
+        self._writer = writer
+        self._query = None
         self.drain_secs: list[float] = []
 
-    def _run(self):
-        try:
-            for w in self._writers:
-                t0 = time.perf_counter()
-                w.start().awaitTermination()
-                self.drain_secs.append(round(time.perf_counter() - t0, 3))
-            if self._on_complete is not None:
-                self._on_complete()
-        except BaseException as e:  # re-raised in awaitTermination
-            self._exc = e
-
     def start(self):
-        if self._thread is None:
-            import threading
-
-            self._thread = threading.Thread(
-                target=self._run, name="sequential-stream-drain", daemon=True
-            )
-            self._thread.start()
+        if self._query is None:
+            self._t0 = time.perf_counter()
+            self._query = self._writer.start()
         return self
 
     def awaitTermination(self, timeout=None):
         self.start()
-        self._thread.join(timeout)
-        if not self._thread.is_alive() and self._exc is not None:
-            raise self._exc
-        return not self._thread.is_alive()
-
-
-# history consolidation threshold for the near-dup hits observability
-# tree: fold once more than this many batch dirs accumulate — rewrites
-# are amortized over the threshold, and the tree is off every hot path
-_HISTORY_FOLD_DIRS = 16
+        if self._query.awaitTermination(timeout) is False:
+            return False
+        if not self.drain_secs:
+            self.drain_secs = [0.0, round(time.perf_counter() - self._t0, 3)]
+        return True
 
 
 @dataclass(frozen=True)
@@ -1116,7 +1153,6 @@ def curate_and_ingest_stream(
     min_tokens: int = 10,
     stream_near_dup: bool = False,
     ts_col: str = "ts",
-    nd_hits_retention_ms: int | None = None,
     **knobs,
 ):
     """The end-to-end streaming ingest entrypoint: raw document
@@ -1131,50 +1167,29 @@ def curate_and_ingest_stream(
     ``knobs`` are the cycle's ``IngestSpec`` fields, checked here at
     call time and forwarded to every cycle.
 
-    ``stream_near_dup=True`` (round-11 verdict task 2) additionally
-    wires ``near_dup_hits_stream`` in FRONT of the store: the input
-    must carry an event-time column ``ts_col``; a detector query
-    drains the curated stream first, appending its hit rows to
-    ``{store_path}/near_hits`` (own checkpoint under
-    ``{checkpoint}_nd``), and the ingest sink anti-joins each
-    micro-batch on the DISTINCT hit ids before ``run_ingest_cycle``
-    — a same-window near copy never reaches the corpus store, not
-    even transiently. Hits are signature-ESTIMATE verified
-    (``near_dup_hits_stream``'s ``min_est`` = DEBIASED MinHash
-    agreement, the bucket's own band excluded), so a flagged doc may
-    still have exact Jaccard below ``threshold`` (estimator
-    variance): the detector is a cheap pre-gate (bounded state via
-    its ``max_bucket``); the compactor's exact verify remains the
-    authority for everything it passes.
-    The return value is then a :class:`SequentialStreamingDrain`
-    (same ``start()/awaitTermination()`` shape) draining detector
-    then ingest, so hit state is complete before ingest consumes it.
-    The hot hits tree ``{store_path}/near_hits`` holds one
-    ``batch=N`` dir per micro-batch of the CURRENT drain (idempotent
-    overwrite under replay); after each fully successful drain the
-    ``on_complete`` hook MOVES those dirs into the observability tree
-    ``{store_path}/near_hits_history`` (per-dir atomic renames) and
-    consolidates history once it exceeds a dir-count threshold — so
-    the ingest sink's per-micro-batch anti-join scans only the
-    current drain's hits, bounded by drain input instead of growing
-    with stream lifetime (round-12 `weak`). Scoping to the current
-    drain is sufficient: ids are unique and detector and ingest drain
-    the SAME source files per drain, so a doc's hit is always
-    recorded in the drain that would ingest it. History rows are kept
-    forever by default — a DECIDED default (round 14, SCALE.md): the
-    history tree is audit/debug observability data off every hot path
-    (no query scans it per batch; consolidation bounds its FILE count
-    regardless), and a retention default derived from the detector's
-    watermark would silently delete the only record of why a document
-    was dropped — destructive pruning must be an explicit operator
-    choice.
-    ``nd_hits_retention_ms`` prunes rows older than that event-time
-    horizon during history consolidation, bounding history ROW count
-    at rate × retention on a forever-stream (see
-    ``fold_near_dup_hits``); set it whenever the stream outlives the
-    audit horizon."""
+    ``stream_near_dup=True`` also records WHY documents were dropped:
+    each cycle writes one hit row per document its exact or near-dup
+    stage removed to ``{store_path}/near_hits/batch=N`` (N = batch id
+    = cycle id), in ``near_dup_hits_stream``'s row shape
+    ``(doc_id, band, matched_id, est, ts)`` — ``ts`` the document's
+    event time from the input's ``ts_col``, ``band`` NULL (the
+    compactor collapses candidates across bands), ``matched_id`` and
+    ``est`` as ``compact_corpus``'s ``drop_sink`` documents them.
+    Rows ``cap_max``/``token_budget_max`` drop are not hits. A replayed
+    batch rewrites its partition, and consolidation folds the tree
+    with the others, so it grows like the corpus tree beside it. The
+    hits are the compactor's drops, so this needs ``near_dup=True``
+    (a ``ValueError`` otherwise). The return value is then an
+    :class:`IngestDrain` (same ``start()/awaitTermination()``
+    shape)."""
     spec = IngestSpec(**knobs)
     spec.check_columns(stream.columns)
+    if stream_near_dup and not spec.near_dup:
+        raise ValueError(
+            "stream_near_dup=True needs near_dup=True — the hit rows are "
+            "the compactor's near-dup drops, so without it near copies "
+            "would reach the store unflagged"
+        )
     id_col, text_col = spec.id_col, spec.text_col
     carry: tuple[str, ...] = (ts_col,) if stream_near_dup else ()
     for col in (spec.cms_col, spec.cms_weight_col):
@@ -1187,8 +1202,7 @@ def curate_and_ingest_stream(
     # measured WORSE for the ingest writer (28.4 -> 79.2 s over the
     # bench's 3 micro-batches) — every pre-checkpoint action
     # run_ingest_cycle takes on the batch is a separate job, and each
-    # re-paid the exchange + curation (plans/r17/measurements/, round
-    # 17 §6); the detector fans out inside its own plan
+    # re-paid the exchange + curation (round 17 §6)
     curated = curate_stream(
         stream,
         id_col=id_col,
@@ -1197,7 +1211,6 @@ def curate_and_ingest_stream(
         min_tokens=min_tokens,
         carry_cols=carry,
     )
-    hits_path = f"{store_path}/near_hits"
     batch_cols = list(dict.fromkeys(
         c for c in (id_col, text_col, spec.cms_col, spec.cms_weight_col)
         if c is not None
@@ -1209,43 +1222,21 @@ def curate_and_ingest_stream(
             unpersist_owned,
         )
 
-        batch = batch_df.select(*batch_cols)
-        if stream_near_dup:
-            from pyspark.errors import AnalysisException
-
-            try:
-                # the hot tree holds ONLY the current drain's hit
-                # batches (fold_hits moves them to the history tree
-                # after each drain), so this scan is bounded by drain
-                # input, not stream lifetime
-                hit_ids = (
-                    batch_df.sparkSession.read.parquet(hits_path)
-                    .select(id_col)
-                    .distinct()
-                )
-                batch = batch.join(hit_ids, id_col, "left_anti")
-            except AnalysisException:
-                pass  # no hits recorded yet (tree doesn't exist/empty)
         # Eager owner-released localCheckpoint of the curated batch
-        # (round 18; the round-17 deferred item): run_ingest_cycle
-        # takes several SEPARATE pre-checkpoint actions on the batch
-        # (gate probe collects, the kept-survivor materialization),
-        # and separate jobs share no computation — each one re-ran
-        # the curation chain + the hits read/distinct/anti-join over
-        # the un-materialized micro-batch. One batch-bounded
-        # materialization here makes every later reference a cached
-        # narrow scan; the blocks are released in `finally` the same
-        # micro-batch, so nothing outlives the cycle (per-batch work
-        # inside the drain, not cross-run caching). This also
-        # subsumes the old batch_df.isEmpty() entry probe, which was
-        # itself a full curation run on every non-empty batch; a
-        # batch fully removed by the hits anti-join now skips the
-        # cycle instead of writing empty cycle partitions (no rows
-        # change either way — state reads filter by cycle, and
-        # coverage backfill keys off the SOURCE tree's partitions).
+        # (round 18): run_ingest_cycle takes several SEPARATE
+        # pre-checkpoint actions on the batch (gate probe collects,
+        # the kept-survivor materialization, the hit rows), and
+        # separate jobs share no computation — each one would re-run
+        # the curation chain over the un-materialized micro-batch.
+        # One batch-bounded materialization here makes every later
+        # reference a cached narrow scan; the blocks are released in
+        # `finally` the same micro-batch, so nothing outlives the
+        # cycle. It also answers the empty-batch probe.
         owned: list = []
         try:
-            batch = _tracked_local_checkpoint(batch, owned)
+            batch = _tracked_local_checkpoint(
+                batch_df.select(id_col, text_col, *carry), owned
+            )
             if batch.isEmpty():
                 # no cycle runs, but a consolidation boundary landing
                 # on this batch still folds — otherwise the fold waits
@@ -1257,67 +1248,25 @@ def curate_and_ingest_stream(
                 return
             # the module global, looked up per call, so a wrapper
             # installed on the module sees every cycle
-            run_ingest_cycle(batch, store_path, int(batch_id), **knobs)
+            run_ingest_cycle(
+                batch.select(*batch_cols), store_path, int(batch_id),
+                hit_ts=(
+                    batch.select(id_col, ts_col) if stream_near_dup else None
+                ),
+                **knobs,
+            )
         finally:
             unpersist_owned(owned)
 
-    ingest_writer = (
+    writer = (
         curated.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
-    if not stream_near_dup:
-        return ingest_writer
-    hits = near_dup_hits_stream(
-        curated, id_col=id_col, text_col=text_col, ts_col=ts_col
-    )
-
-    def hits_sink(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch dirs (idempotent overwrite under replay), plain
-        # parquet tree — no _spark_metadata log, so the post-drain
-        # fold below can rewrite partitions without orphaning a sink
-        # transaction log.
-        # The empty-batch probe must NOT be isEmpty(): hit rows are
-        # SPARSE across the stateful stage's partitions, so take(1)
-        # escalates through sequential mostly-empty waves, serializing
-        # the detector's state work across several jobs (measured
-        # 11-21 s vs 2.3-2.8 s for the full parallel pass at sf0.1 —
-        # plans/r17/measurements/r17_detector_micro.py). One persisted
-        # parallel count answers emptiness AND feeds the write from
-        # the (tiny) cached hit rows.
-        from pyspark import StorageLevel
-
-        # explicit MEMORY_AND_DISK (advice round 17): hit rows are
-        # tiny by design, but a pathological batch's overflow should
-        # spill, not evict — and the level is now part of the contract
-        # rather than whatever the session default happens to be
-        batch_df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            if batch_df.count():
-                batch_df.write.mode("overwrite").parquet(
-                    f"{hits_path}/batch={batch_id}"
-                )
-        finally:
-            batch_df.unpersist()
-
-    hits_writer = (
-        hits.writeStream.foreachBatch(hits_sink)
-        .option("checkpointLocation", f"{checkpoint}_nd")
-        .trigger(availableNow=True)
-    )
-
-    return SequentialStreamingDrain(
-        [hits_writer, ingest_writer],
-        on_complete=lambda: fold_near_dup_hits(
-            stream.sparkSession,
-            store_path,
-            ts_col=ts_col,
-            retention_ms=nd_hits_retention_ms,
-        ),
-    )
+    return IngestDrain(writer) if stream_near_dup else writer
 
 
-def _part_dir_ids(fs, fs_path, root: str, part_col: str = "batch") -> list[int]:
+def _part_dir_ids(fs, fs_path, root: str, part_col: str = "cycle") -> list[int]:
     """The N values of ``{part_col}=N`` child dirs under ``root``."""
     if not fs.exists(fs_path(root)):
         return []
@@ -1331,116 +1280,6 @@ def _part_dir_ids(fs, fs_path, root: str, part_col: str = "batch") -> list[int]:
             except ValueError:
                 pass
     return out
-
-
-def fold_near_dup_hits(
-    spark: SparkSession,
-    store_path: str,
-    ts_col: str = "ts",
-    retention_ms: int | None = None,
-) -> None:
-    """Post-drain maintenance of the in-stream near-dup hit trees
-    (``curate_and_ingest_stream``'s ``on_complete``; module-level so
-    the crash-recovery pytest drives it directly). Only runs after a
-    fully successful drain — a crashed drain keeps every hot-tree
-    partition a replayed batch might need. Three steps:
-
-    (a) FINISH any crashed prior history consolidation (advisor
-        round 12: a stranded complete tmp held the ONLY copy of
-        folded rows, and the old code's next fold destroyed it) — a
-        complete ``_tmp_consolidate_hits/batch=M`` resumes through
-        ``_fold_partitions``'s skip-rebuild (its sources were already
-        partially deleted; every history dir <= M is a source, since
-        streaming batch ids are monotonic); an INCOMPLETE tmp is
-        discarded (no source dir was deleted yet — the rebuild
-        re-derives it).
-    (b) MOVE the drain's ``batch=N`` dirs out of the hot tree
-        ``{store}/near_hits`` into ``{store}/near_hits_history``, one
-        atomic rename per dir — no delete-then-rewrite window, so a
-        crash mid-move just leaves some dirs for the next fold (the
-        sink re-scanning a leftover dir once is harmless: ids are
-        unique, the anti-join only drops ids present in the batch).
-        This is what bounds the ingest sink's per-micro-batch
-        anti-join scan to the CURRENT drain (round-12 ``weak``).
-    (c) Consolidate history once it exceeds ``_HISTORY_FOLD_DIRS``
-        dirs, so its file count stays bounded on a forever-stream.
-        Rows are kept by default (append-only observability data,
-        off every hot path); ``retention_ms`` additionally prunes
-        rows whose event time ``ts_col`` is older than the history's
-        max event time minus the retention, DURING the fold rebuild —
-        safe because hit ids are unique (a pruned hit can never be
-        consulted again; it is pure record-keeping), and applied in
-        the rebuild so a resumed crashed fold keeps its original
-        attempt's cut. With retention set, history ROW count is
-        bounded by stream rate × retention instead of stream
-        lifetime — the knob a forever-stream sets
-        (``curate_and_ingest_stream(nd_hits_retention_ms=...)``)."""
-    hits_path = f"{store_path}/near_hits"
-    history_path = f"{store_path}/near_hits_history"
-    tmp_root = f"{store_path}/_tmp_consolidate_hits"
-    fs, fs_path = _index_fs(spark, store_path)
-    for m in _part_dir_ids(fs, fs_path, tmp_root):
-        tmp = f"{tmp_root}/batch={m}"
-        if fs.exists(fs_path(f"{tmp}/_SUCCESS")):
-            _fold_partitions(spark, history_path, "batch", m, tmp)
-        else:
-            fs.delete(fs_path(tmp), True)
-    for n in sorted(_part_dir_ids(fs, fs_path, hits_path)):
-        src, dst = f"{hits_path}/batch={n}", f"{history_path}/batch={n}"
-        if fs.exists(fs_path(dst)):
-            # duplicate of a dir a crashed prior fold already moved
-            # (same batch id = identical idempotent content)
-            fs.delete(fs_path(src), True)
-            continue
-        fs.mkdirs(fs_path(history_path))
-        if not fs.rename(fs_path(src), fs_path(dst)):
-            raise IOError(
-                f"hits-history move failed: {src} -> {dst}; the hot "
-                f"tree still holds the rows — rerun the fold"
-            )
-    hist = _part_dir_ids(fs, fs_path, history_path)
-    if len(hist) > _HISTORY_FOLD_DIRS:
-        m = max(hist)
-        flt = None
-        if retention_ms is not None:
-            # mergeSchema: old-layout dirs may predate the ts column;
-            # such rows read ts as NULL and are KEPT (age unknown —
-            # never silently purged), and when NO dir carries ts the
-            # retention is skipped rather than thrown (review round
-            # 13). The aggregate is a second scan over the (dir-count
-            # bounded) tree — inherent: a max can't be filtered by in
-            # its own pass.
-            hist_df = spark.read.option("mergeSchema", "true").parquet(
-                history_path
-            )
-            if ts_col in hist_df.columns:
-                mx = hist_df.agg(F.max(ts_col).alias("mx")).collect()[0][
-                    "mx"
-                ]
-                if mx is not None:
-                    import datetime as _dt
-
-                    flt = F.col(ts_col).isNull() | (
-                        F.col(ts_col)
-                        >= F.lit(
-                            mx - _dt.timedelta(milliseconds=retention_ms)
-                        )
-                    )
-        _fold_partitions(
-            spark,
-            history_path,
-            "batch",
-            m,
-            f"{tmp_root}/batch={m}",
-            row_filter=flt,
-            # ALWAYS mergeSchema (advisor round 13): with retention
-            # unset, a plain read of a mixed-schema history (old
-            # ts-less dirs beside new ones) samples one file's schema
-            # and could silently DROP the ts column from every folded
-            # row — enabling retention later would then keep those
-            # rows forever (NULL ts is never pruned)
-            merge_schema=True,
-        )
 
 
 def _backfill_tree(
@@ -1462,10 +1301,10 @@ def _backfill_tree(
     exist to prevent."""
     fs, fs_path = _index_fs(spark, store_path)
     src_cycles = {
-        n for n in _part_dir_ids(fs, fs_path, src_path, "cycle") if n < cycle_id
+        n for n in _part_dir_ids(fs, fs_path, src_path) if n < cycle_id
     }
     dst_cycles = {
-        n for n in _part_dir_ids(fs, fs_path, dst_path, "cycle") if n < cycle_id
+        n for n in _part_dir_ids(fs, fs_path, dst_path) if n < cycle_id
     }
     for mcyc in sorted(src_cycles - dst_cycles):
         build_fn(
@@ -1589,8 +1428,6 @@ def _fold_partitions(
     part_col: str,
     upto: int,
     tmp: str,
-    row_filter=None,
-    merge_schema: bool = False,
     transform=None,
 ) -> None:
     """Crash-safe fold of every ``{part_col}=N`` partition with
@@ -1616,24 +1453,16 @@ def _fold_partitions(
         if not fs.exists(fs_path(tree_path)):
             return
         try:
-            reader = spark.read
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(tree_path)
+            df = spark.read.parquet(tree_path)
         except AnalysisException:
             return
         if part_col not in df.columns:
             return
         folded = df.filter(F.col(part_col) <= upto).drop(part_col)
-        if row_filter is not None:
-            # retention pruning happens IN the rebuild, so a resumed
-            # fold (tmp already complete) keeps the rows its original
-            # attempt kept — never a second, different cut
-            folded = folded.filter(row_filter)
         if transform is not None:
             # per-tree physical layout (round 15: the fps tree sorts
-            # by fingerprint) — applied in the rebuild for the same
-            # resume-stability reason
+            # by fingerprint) — applied in the rebuild, so a resumed
+            # fold (tmp already complete) keeps its first layout
             folded = transform(folded)
         folded.write.mode("overwrite").parquet(tmp)
     prefix = f"{part_col}="
@@ -1665,8 +1494,9 @@ def consolidate_ingest_store(
     """Rewrite every ``cycle=N`` partition with ``N <= upto_cycle`` in
     every ingest state tree (corpus, fps, index/banded, index/sets,
     and the optional bloom/cms/bloom_band sketches) into ONE
-    ``cycle={upto_cycle}``
-    partition each (round-11 verdict task 4). A long-lived stream
+    ``cycle={upto_cycle}`` partition each, and the hit rows'
+    ``near_hits/batch=N`` partitions into one ``batch={upto_cycle}``
+    (round-11 verdict task 4). A long-lived stream
     otherwise accumulates one tiny partition per micro-batch and the
     ``cycle < cycle_id`` state reads pay ever-growing listing and
     small-file open cost — the classic compaction problem; this is
@@ -1687,13 +1517,17 @@ def consolidate_ingest_store(
     ``consolidate_every`` does) — a cycle that might still be
     replayed must never be folded into an earlier partition label."""
     fs, fs_path = _index_fs(spark, store_path)
-    for tree, tree_path in _store_tree_paths(store_path).items():
+    trees = [(t, p, "cycle") for t, p in _store_tree_paths(store_path).items()]
+    # the hit rows (curate_and_ingest_stream(stream_near_dup=True)) are
+    # keyed by micro-batch id, which is the cycle id
+    trees.append(("near_hits", f"{store_path}/near_hits", "batch"))
+    for tree, tree_path, part in trees:
         _fold_partitions(
             spark,
             tree_path,
-            "cycle",
+            part,
             upto_cycle,
-            f"{store_path}/_tmp_consolidate/{tree}/cycle={upto_cycle}",
+            f"{store_path}/_tmp_consolidate/{tree}/{part}={upto_cycle}",
             # prunable layouts (round 15): fps sorted by fingerprint,
             # banded sorted by band key, verify tree sorted by id —
             # every file owns a disjoint slice, so the gated
@@ -1746,6 +1580,7 @@ def run_ingest_cycle(
     cycle_id: int,
     *,
     timings: dict | None = None,
+    hit_ts: DataFrame | None = None,
     **knobs,
 ) -> int:
     """One steady-state compaction cycle against ON-DISK corpus state
@@ -1789,7 +1624,14 @@ def run_ingest_cycle(
     one action: kept rows computed and committed), ``derived_writes``
     (fps/bloom/cms trees off the committed partition),
     ``index_writes`` (banded/sets/bloom_band), ``count``. Purely
-    observational; keys for stages that did not run are absent."""
+    observational; keys for stages that did not run are absent.
+
+    ``hit_ts`` (a near-dup cycle's ``(id, event time)`` rows of
+    ``new_batch``): write one hit row per document the cycle's exact
+    or near-dup stage drops to ``{store}/near_hits/batch={cycle_id}``
+    — ``(id, band NULL, matched_id, est, <hit_ts's time column>)``,
+    see ``compact_corpus``'s ``drop_sink`` — in the compaction's one
+    extra write, which the kept rows then anti-join."""
     spec = IngestSpec(**knobs)
     spec.check_columns(new_batch.columns)
     from pyspark.errors import AnalysisException
@@ -2019,6 +1861,22 @@ def run_ingest_cycle(
     # compact_write stage's seconds to the gated-dedup / kernel /
     # probe actions inside the plan build vs the final write
     _compact_sub: dict = {}
+    drop_sink = None
+    if hit_ts is not None and spec.near_dup:
+        hits_part = f"{store_path}/near_hits/batch={cycle_id}"
+
+        def drop_sink(drops: DataFrame) -> DataFrame:
+            hits = drops.join(hit_ts, id_col).select(
+                id_col, F.lit(None).cast("int").alias("band"),
+                "matched_id", "est",
+                *[c for c in hit_ts.columns if c != id_col],
+            )
+            hits.write.mode("overwrite").parquet(hits_part)
+            # the written schema pinned: no footer-inference job
+            return spark.read.schema(hits.schema).parquet(hits_part).select(
+                id_col
+            )
+
     try:
         kept = compact_corpus(
             new_batch,
@@ -2042,6 +1900,7 @@ def run_ingest_cycle(
             timings=(
                 None if timings is None else _compact_sub
             ),
+            drop_sink=drop_sink,
         )
         if spec.cap_max is not None:
             # corpus-horizon frequency budget on the KEPT rows: the
@@ -2072,7 +1931,15 @@ def run_ingest_cycle(
             )
 
         cyc = f"cycle={cycle_id}"
-        kept.write.mode("overwrite").parquet(f"{paths['corpus']}/{cyc}")
+
+        def write_part(df: DataFrame, tree: str) -> DataFrame:
+            # commit this cycle's partition of `tree`; the read-back
+            # pins the written schema, so it runs no inference job
+            path = f"{paths[tree]}/{cyc}"
+            df.write.mode("overwrite").parquet(path)
+            return spark.read.schema(df.schema).parquet(path)
+
+        kept_disk = write_part(kept, "corpus")
         _t = _lap(timings, "compact_write", _t)
         if timings is not None:
             for k, v in _compact_sub.items():
@@ -2082,13 +1949,13 @@ def run_ingest_cycle(
             # scratch the kept plan read is no longer referenced
             fs, fs_path = _index_fs(spark, store_path)
             fs.delete(fs_path(scratch), True)
-        # re-read what was PHYSICALLY kept so fps/index derive from
-        # the committed rows (and the lineage below is a trivial scan)
-        kept_disk = spark.read.parquet(f"{paths['corpus']}/{cyc}")
-        corpus_fingerprints(kept_disk, text_col).select(
-            F.unhex("__fp").alias("__fp")
-        ).sortWithinPartitions("__fp").write.mode("overwrite").parquet(
-            f"{paths['fps']}/{cyc}"
+        # fps/index derive from the re-read of what was PHYSICALLY
+        # kept (kept_disk: the lineage below is a trivial scan)
+        fps_disk = write_part(
+            corpus_fingerprints(kept_disk, text_col).select(
+                F.unhex("__fp").alias("__fp")
+            ).sortWithinPartitions("__fp"),
+            "fps",
         )
         if spec.bloom_m is not None:
             from timebox_spark.operators.sketches import bloom_build
@@ -2098,20 +1965,24 @@ def run_ingest_cycle(
             # fingerprints, so reading it back (narrow binary column)
             # replaces a second normalize+md5 pass over the batch
             # text; _fp_hex restores the hex form the sketch hashes
-            bloom_build(
-                spark.read.parquet(f"{paths['fps']}/{cyc}").select(
-                    _fp_hex("__fp").alias("__fp")
+            write_part(
+                bloom_build(
+                    fps_disk.select(_fp_hex("__fp").alias("__fp")), "__fp",
+                    spec.bloom_m,
                 ),
-                "__fp",
-                spec.bloom_m,
-            ).write.mode("overwrite").parquet(f"{paths['bloom']}/{cyc}")
+                "bloom",
+            )
         if spec.cms_col is not None:
             from timebox_spark.operators.sketches import cms_build
 
-            cms_build(
-                kept_disk.select(*_cms_cols), spec.cms_col, spec.cms_width,
-                spec.cms_depth, weight=spec.cms_weight_col,
-            ).write.mode("overwrite").parquet(f"{paths['cms']}/{cyc}")
+            write_part(
+                cms_build(
+                    kept_disk.select(*_cms_cols), spec.cms_col,
+                    spec.cms_width, spec.cms_depth,
+                    weight=spec.cms_weight_col,
+                ),
+                "cms",
+            )
         _t = _lap(timings, "derived_writes", _t)
         if spec.near_dup:
             # the batch's banded/sets tables were materialized
@@ -2130,23 +2001,16 @@ def run_ingest_cycle(
             # compaction's pushed In predicates prune row groups only
             # on key-/id-sorted data (consolidation range-partitions
             # too)
-            nb.sortWithinPartitions("key").write.mode(
-                "overwrite"
-            ).parquet(f"{paths['banded']}/{cyc}")
-            ns.sortWithinPartitions(id_col).write.mode(
-                "overwrite"
-            ).parquet(f"{paths['sets']}/{cyc}")
+            banded_disk = write_part(nb.sortWithinPartitions("key"), "banded")
+            write_part(ns.sortWithinPartitions(id_col), "sets")
             if spec.band_bloom_m is not None:
                 from timebox_spark.operators.sketches import bloom_build
 
-                bloom_build(
-                    spark.read.parquet(
-                        f"{paths['banded']}/{cyc}"
-                    ).select("key"),
-                    "key",
-                    spec.band_bloom_m,
-                ).write.mode("overwrite").parquet(
-                    f"{paths['bloom_band']}/{cyc}"
+                write_part(
+                    bloom_build(
+                        banded_disk.select("key"), "key", spec.band_bloom_m
+                    ),
+                    "bloom_band",
                 )
             _t = _lap(timings, "index_writes", _t)
     finally:
