@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -62,7 +63,6 @@ SLOW_NODEIDS = {
     "test_streaming.py::test_compact_corpus_scratch_path_distributed_drop",
     "test_streaming.py::test_curate_and_ingest_stream_forwards_gate_and_keep",
     "test_graphs.py::test_pagerank_residuals_and_early_exit",
-    "test_sketches.py::test_cms_stats_mode_fused_scan",
     "test_streaming.py::test_compact_corpus_near_dup_drops_planted_neighbors",
     "test_streaming.py::test_zscore_anomalies_state_accumulates_across_batches",
     "test_streaming.py::test_curate_and_ingest_stream_sink_releases_checkpoints",
@@ -89,7 +89,6 @@ SLOW_NODEIDS = {
     "test_text.py::test_cap_per_group_cms_enforces_corpus_horizon_budget",
     "test_streaming.py::test_compact_corpus_cluster_keep_one_vs_chain",
     "test_oracle_queries.py::test_query_matches_oracle[q30_multimodal_suite]",
-    "test_sketches.py::test_cms_merge_equals_whole_and_mixed_geometry_raises",
     "test_plans.py::test_warc_ranged_reads_over_http",
 }
 
@@ -139,3 +138,51 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def gateway_round_trips(monkeypatch):
+    """``count(fn)`` → (py4j round trips ``fn()`` made, its result).
+    Every Column method is at least one round trip (PySpark 4 also
+    captures its call site), so the count tracks driver-side plan
+    construction cost independent of the data. Only the calling
+    thread's are counted: py4j's finalizer thread sends the deletes of
+    JVM handles that earlier code dropped whenever it gets to them."""
+    import threading
+
+    import py4j.clientserver as cs
+
+    n = [0]
+    caller = threading.get_ident()
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == caller:
+            n[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+
+    def count(fn):
+        n[0] = 0
+        out = fn()
+        return n[0], out
+
+    return count
+
+
+def _group_job_ids(spark, group: str) -> list[int]:
+    """Job ids the status tracker holds for ``group``, once every job
+    submitted so far has reached it: the tracker is fed by the
+    listener bus, so wait for a marker job submitted afterwards."""
+    sc = spark.sparkContext
+    marker = f"{group}-marker"
+    sc.setJobGroup(marker, marker)
+    spark.range(1).collect()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(marker), "marker job never reached the tracker"
+    return list(tracker.getJobIdsForGroup(group))

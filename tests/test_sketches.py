@@ -910,3 +910,50 @@ def test_bloom_probe_inline_validation_identical_and_raises(spark):
         SK.bloom_probe(
             vals, "id", "v", tree.unionByName(other), m, k
         ).collect()
+
+
+def _jvm_values(spark):
+    # JVM-only input: any Python RDD in a plan is then the sketch's own
+    return spark.range(300).selectExpr("id", "concat('v', id) AS v")
+
+
+def test_sketch_builders_gateway_round_trip_budget(spark, gateway_round_trips):
+    """Each sketch declares its hash family as SQL text in one
+    projection, so building a plan costs a bounded number of py4j
+    round trips, not a few per Column method per hash (built as
+    Column trees they cost 473-1,122)."""
+    from timebox_spark.operators import sketches as SK
+
+    vals = _jvm_values(spark)
+    n_bb, bloom = gateway_round_trips(lambda: SK.bloom_build(vals, "v"))
+    n_cb, cms = gateway_round_trips(lambda: SK.cms_build(vals, "v"))
+    counts = {
+        "bloom_build": n_bb,
+        "bloom_probe": gateway_round_trips(
+            lambda: SK.bloom_probe(vals, "id", "v", bloom)
+        )[0],
+        "cms_build": n_cb,
+        # includes the geometry-check collect
+        "cms_query": gateway_round_trips(
+            lambda: SK.cms_query(vals, "id", "v", cms)
+        )[0],
+    }
+    assert max(counts.values()) <= 250, counts
+
+
+def test_sketch_builders_scan_no_python_rdd(spark):
+    """Sentinel rows come from a SQL ``VALUES`` relation: no sketch
+    plan scans a Python RDD (a ``createDataFrame(list)`` relation is
+    one, and its stage starts Python workers)."""
+    from timebox_spark.operators import sketches as SK
+
+    vals = _jvm_values(spark)
+    bloom = SK.bloom_build(vals, "v")
+    cms = SK.cms_build(vals, "v")
+    for df in (
+        bloom, cms, SK.bloom_probe(vals, "id", "v", bloom),
+        SK.cms_query(vals, "id", "v", cms),
+    ):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _group_job_ids
 from timebox_spark.plans.tables import load
 from timebox_spark.streaming import ingest
 
@@ -2940,9 +2940,10 @@ def test_tree_schema_cache_invalidated_on_recreated_store(
     spark, tmp_path
 ):
     """Round 18: read_prior's per-cycle schema inference is cached per
-    tree path; a store RECREATED at the same path (cycle-0 seed) and a
-    consolidation (every tree rewritten) must both drop the cached
-    shapes — results stay identical to a cache-cold run."""
+    tree path; a store RECREATED at the same path (cycle-0 seed) must
+    drop the cached shapes, and a consolidation (every tree rewritten
+    in the same shapes) carries them over — results stay identical to
+    a cache-cold run."""
     store = str(tmp_path / "store_schema_cache")
 
     def run(cycles):
@@ -2965,8 +2966,8 @@ def test_tree_schema_cache_invalidated_on_recreated_store(
          (2, "second document concerning columnar storage codecs")],
         [(3, "first document about rivers and meadows far away"),  # dup of 1
          (4, "a wholly new third document about watermark state")],
-        # cycle 2 consolidates cycles 0-1 first (cache invalidation
-        # path), then compacts against the folded trees
+        # cycle 2 consolidates cycles 0-1 first (a new generation),
+        # then compacts against the folded trees
         [(5, "a wholly new third document about watermark state"),  # dup of 4
          (6, "yet another fresh document on join strategies here")],
     ]
@@ -3176,3 +3177,199 @@ def test_near_dup_hits_stream_checkpoint_keeps_recorded_width(
         spark.conf.unset(no_data)
     assert {h[0] for h in whole} == {2, 3}, whole
     assert sorted(resumed) == sorted(whole)
+
+
+def _index_docs(spark):
+    return spark.range(40).selectExpr(
+        "id AS doc_id", "concat('document body number ', id, ' of forty') AS text"
+    )
+
+
+@pytest.mark.parametrize("verify", ["exact", "estimate"])
+def test_build_corpus_index_gateway_round_trip_budget(
+    spark, gateway_round_trips, verify
+):
+    """The MinHash signature, band keys and hashed shingle sets are
+    SQL text, one ``selectExpr`` per projection: building an index
+    costs a bounded number of py4j round trips (as Column trees,
+    3,845 exact and 4,231 estimate)."""
+    from timebox_spark.operators import dedup as DD
+
+    docs = _index_docs(spark)
+    n, _ = gateway_round_trips(lambda: DD.build_corpus_index(docs, verify=verify))
+    assert n <= 400, n
+
+
+def test_estimate_index_runs_the_minhash_kernel_once(spark):
+    """With ``owned_rdds`` the estimate tier checkpoints its signature
+    table — the verify table and the band table's only input — so the
+    32-salt md5 kernel runs once: one checkpoint, no md5 in the
+    ``__sig`` plan, and the band table reads the checkpoint."""
+    from timebox_spark.operators import dedup as DD
+
+    own: list = []
+    banded, sig = DD.build_corpus_index(
+        _index_docs(spark), verify="estimate", owned_rdds=own
+    )
+    try:
+        assert len(own) == 1
+        plan = sig._jdf.queryExecution().optimizedPlan().toString()
+        assert "md5" not in plan.lower(), plan
+        bplan = banded._jdf.queryExecution().optimizedPlan().toString()
+        assert "array_min" not in bplan, bplan
+        assert banded.count() == 8 * 40
+    finally:
+        DD.unpersist_owned(own)
+
+
+def _digest_batches(spark):
+    """Four seeded cycles of (doc_id, text, src) batches: a near copy
+    and an exact copy of the previous cycle's docs from cycle 1 on,
+    and a near copy within cycle 2."""
+    import random
+
+    rng = random.Random(11)
+
+    def text():
+        return " ".join(f"w{rng.randrange(4000)}" for _ in range(30))
+
+    rows = {c: [(c * 100 + j, text(), f"s{j % 3}") for j in range(6)] for c in range(4)}
+    for c in range(1, 4):
+        rows[c].append((c * 100 + 50, rows[c - 1][0][1] + " qq", "s0"))
+        rows[c].append((c * 100 + 60, rows[c - 1][1][1], "s1"))
+    rows[2].append((270, rows[2][2][1] + " zz", "s2"))
+    return {
+        c: spark.createDataFrame(r, "doc_id long, text string, src string")
+        for c, r in rows.items()
+    }
+
+
+def _run_digest_cycle(store, batch, cycle, verify, **knobs):
+    return ingest.run_ingest_cycle(
+        batch, store, cycle,
+        hit_ts=batch.selectExpr("doc_id", "timestamp_seconds(doc_id) AS ts"),
+        index_verify=verify, cms_col="src", **knobs,
+    )
+
+
+_STORE_TREES = (
+    "corpus", "fps", "index/banded", "index/sets", "bloom", "bloom_band",
+    "cms", "near_hits",
+)
+
+
+def _tree_rows(spark, path, drop=()):
+    return sorted(
+        r[0] for r in spark.read.parquet(path).drop(*drop)
+        .selectExpr("to_json(struct(*))").collect()
+    )
+
+
+def _store_digests(spark, store):
+    """tree -> md5 over its sorted rows (as JSON), its read schema and
+    the Spark schema of every parquet footer, nullability included."""
+    import glob
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for tree in _STORE_TREES:
+        path = f"{store}/{tree}"
+        footers = sorted({
+            pq.ParquetFile(f).schema_arrow.metadata[
+                b"org.apache.spark.sql.parquet.row.metadata"
+            ].decode()
+            for f in glob.glob(f"{path}/*/*.parquet")
+        })
+        text = "\n".join(
+            _tree_rows(spark, path)
+            + [spark.read.parquet(path).schema.json()]
+            + footers
+        )
+        out[tree] = hashlib.md5(text.encode()).hexdigest()[:12]
+    return out
+
+
+# _store_digests of the four-cycle run below, as the Column-tree hash
+# builders and Python-RDD sketch sentinels wrote it: the SQL-text
+# builders must write the same rows in the same parquet schema
+_FROZEN_STORE_DIGESTS = {
+    "exact": {
+        "bloom": "8648e1a9ebca",
+        "bloom_band": "b92d1f71d8ee",
+        "cms": "807f283a5b0b",
+        "corpus": "c3c00e198c61",
+        "fps": "c7942df12658",
+        "index/banded": "330aedde1055",
+        "index/sets": "6e1db4692ac6",
+        "near_hits": "3de04e0c2234",
+    },
+    "estimate": {
+        "bloom": "8648e1a9ebca",
+        "bloom_band": "b92d1f71d8ee",
+        "cms": "807f283a5b0b",
+        "corpus": "c3c00e198c61",
+        "fps": "c7942df12658",
+        "index/banded": "330aedde1055",
+        "index/sets": "ebd8312adbe2",
+        "near_hits": "208ad9d34048",
+    },
+}
+
+
+@pytest.mark.parametrize("verify", ["exact", "estimate"])
+def test_ingest_cycles_write_frozen_trees(spark, tmp_path, monkeypatch, verify):
+    """Four cycles with one consolidation, every tree and gate on:
+    each tree's rows, schema and parquet footers equal the frozen
+    digests."""
+    monkeypatch.setattr(ingest, "GATE_MIN_TREE_BYTES", 0)
+    store = str(tmp_path / "store")
+    for c, batch in _digest_batches(spark).items():
+        _run_digest_cycle(store, batch, c, verify, consolidate_every=3)
+    assert _store_digests(spark, store) == _FROZEN_STORE_DIGESTS[verify]
+
+
+def test_consolidation_launches_no_inference_job(spark, tmp_path, monkeypatch):
+    """``consolidate_ingest_store`` reads each tree with the schema
+    the cycles wrote it with: outside its writes, a consolidation
+    launches no Spark job (a bare tree read runs one schema-inference
+    job per tree), and the folded rows are unchanged."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    store = str(tmp_path / "store")
+    batches = _digest_batches(spark)
+    for c in (0, 1):
+        _run_digest_cycle(store, batches[c], c, "exact")
+    part = {"near_hits": "batch"}
+    before = {
+        t: _tree_rows(spark, f"{store}/{t}", [part.get(t, "cycle")])
+        for t in _STORE_TREES
+    }
+    sc = spark.sparkContext
+    group = f"consolidate-{uuid.uuid4().hex[:8]}"
+    writes = f"{group}-writes"
+    write = DataFrameWriter.parquet
+
+    def tagged_write(self, *args, **kwargs):
+        sc.setJobGroup(writes, writes)
+        try:
+            return write(self, *args, **kwargs)
+        finally:
+            sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", tagged_write)
+    sc.setJobGroup(group, group)
+    try:
+        ingest.consolidate_ingest_store(spark, store, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _group_job_ids(spark, group) == []
+    assert _group_job_ids(spark, writes)  # the folds did write
+    for t in _STORE_TREES:
+        col = part.get(t, "cycle")
+        dirs = [d for d in os.listdir(f"{store}/{t}") if "=" in d]
+        assert dirs == [f"{col}=1"], (t, dirs)
+        assert _tree_rows(spark, f"{store}/{t}", [col]) == before[t], t

@@ -5,7 +5,6 @@ be read with its new schema."""
 
 from __future__ import annotations
 
-import time
 import uuid
 
 import numpy as np
@@ -13,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _group_job_ids
 from timebox_spark.plans import tables
 
 # ns values around the epoch: sub-µs remainders on both signs, and NULL
@@ -74,23 +73,6 @@ def test_load_reads_nanos_as_truncated_micros(spark, footer_files):
     want = [r[0] for r in duckdb.sql(
         f"SELECT epoch_us(ts) FROM read_parquet('{path}') ORDER BY id").fetchall()]
     assert got == want == [-1, 0, 1, 1_000_000_123_456, None]
-
-
-def _group_job_ids(spark, group: str) -> list[int]:
-    """Job ids the status tracker holds for ``group``, once every job
-    submitted so far has reached it: the tracker is fed by the
-    listener bus, so wait for a marker job submitted afterwards."""
-    sc = spark.sparkContext
-    marker = f"{group}-marker"
-    sc.setJobGroup(marker, marker)
-    spark.range(1).collect()
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(marker), "marker job never reached the tracker"
-    return list(tracker.getJobIdsForGroup(group))
 
 
 def test_load_launches_no_spark_job(spark, footer_files):

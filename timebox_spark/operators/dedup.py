@@ -1506,9 +1506,56 @@ def _cosine(x, y):
 
 def _md5_u32(col, salt: str | None = None):
     """First 8 hex chars of md5 as a BIGINT in [0, 2^32) — identical
-    on DuckDB as ('0x' || substr(md5(x), 1, 8))::BIGINT."""
+    on DuckDB as ('0x' || substr(md5(x), 1, 8))::BIGINT. For one
+    hash over a Column; a FAMILY of salted hashes (MinHash salts,
+    Bloom positions, count-min rows) is built with ``_md5_u32_sql``
+    instead, as SQL text in one ``selectExpr``."""
     c = F.concat(F.lit(f"{salt}|"), col) if salt is not None else col
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+
+
+def _md5_u32_sql(expr: str, salt: str | None = None) -> str:
+    """``_md5_u32`` as SQL text over the SQL expression ``expr`` — the
+    same value. PySpark 4 captures the call site of every Column
+    method over a py4j round trip, so a 32-salt signature built as
+    Column trees costs thousands of round trips per projection; as
+    text, one ``selectExpr`` parses the whole family in the JVM."""
+    c = f"concat('{salt}|', {expr})" if salt is not None else expr
+    return f"CAST(conv(substring(md5({c}), 1, 8), 16, 10) AS BIGINT)"
+
+
+def _q(name: str) -> str:
+    """A column name quoted for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _minhash_sig_sql(arr: str, num_perm: int) -> str:
+    """SQL text of the portable MinHash signature of the shingle-array
+    column ``arr``: ``array(h_0, …, h_{num_perm−1})`` with h_i the
+    minimum over shingles s of ``md5_u32(f"{i}|" + s)`` — the one
+    definition behind ``build_corpus_index``, ``portable_minhash_index``
+    and ``streaming.ingest.near_dup_hits_stream`` (the q25/q68 oracles
+    re-derive it). Map-only: ``array_min`` over the salted ``transform``
+    of each doc's own shingles, no explode + groupBy."""
+    return "array(" + ", ".join(
+        f"array_min(transform({arr}, s -> {_md5_u32_sql('s', str(i))}))"
+        for i in range(num_perm)
+    ) + ")"
+
+
+def _band_rows_sql(sig: str, num_perm: int, bands: int) -> str:
+    """SQL generator of one ``(band, key)`` row per LSH band of the
+    signature array column ``sig``: key = md5 of the band's
+    r = num_perm/bands values joined by ','."""
+    if num_perm % bands:
+        raise ValueError("num_perm must divide into bands")
+    r = num_perm // bands
+    return "inline(array(" + ", ".join(
+        f"named_struct('band', {j}, 'key', md5(concat_ws(',', "
+        + ", ".join(f"CAST({sig}[{j * r + k}] AS STRING)" for k in range(r))
+        + ")))"
+        for j in range(bands)
+    ) + "))"
 
 
 def _portable_sets(
@@ -1524,6 +1571,32 @@ def _portable_sets(
             "__sh", F.array_distinct(char_shingles("__norm", shingle_n))
         )
         .select(id_col, "__sh")
+    )
+
+
+def _index_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> DataFrame:
+    """``_portable_sets`` of the docs an index covers. NULL-text docs
+    are dropped, on the TEXT column below the exchange (see
+    ``char_shingles``; non-NULL text always has a shingle). The
+    parallelize sits BELOW the shingle projection (round 17): above
+    it, the normalize+shingle work ran on however few partitions the
+    input had (an AQE-coalesced batch = 1 core); below the raw
+    (id, text) scan it is a no-op on big inputs and fans the
+    string-heavy projection out on small ones."""
+    return _portable_sets(
+        ensure_parallelism(
+            df.select(id_col, text_col).filter(F.col(text_col).isNotNull())
+        ),
+        id_col, text_col, shingle_n,
+    )
+
+
+def _signatures(d: DataFrame, id_col: str, num_perm: int) -> DataFrame:
+    """(id, __sig): the portable MinHash signature of each shingle set."""
+    return d.selectExpr(
+        _q(id_col), f"{_minhash_sig_sql('__sh', num_perm)} AS __sig"
     )
 
 
@@ -1544,88 +1617,9 @@ def portable_minhash_index(
     h_i(s) = md5(f"{i}|" + s) truncated to 32 bits, band keys md5
     over r = num_perm/bands signature values — deterministic and
     SQL-expressible, so the DuckDB oracle re-derives both tables."""
-    banded, d, _sigs = _portable_index_parts(
-        df, id_col, text_col, num_perm, bands, shingle_n
-    )
-    return banded, d
-
-
-def _mk_salted_hash(i: int):
-    """Factory binding the salt index for a one-parameter HOF lambda —
-    NOT a default-arg lambda: a two-parameter lambda passed to
-    ``F.transform`` is treated as (element, index) and the index
-    column silently overrides the default (the round-11 HOF trap)."""
-    return lambda s: _md5_u32(s, str(i))
-
-
-def _portable_index_parts(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int,
-    bands: int,
-    shingle_n: int,
-    owned_rdds: list | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared core of the portable index: returns (banded, raw shingle
-    sets d, signature table sigs) where sigs = (id, h0..h{num_perm-1})
-    — the band table and BOTH verify representations derive from it.
-
-    Round-17 shape (values bit-identical, measured so on the sf0.1
-    batch): the signature table is computed MAP-ONLY — per doc,
-    ``array_min`` over the salted-hash ``transform`` of its shingle
-    array — instead of explode + groupBy(id).agg(32 × min): same md5
-    count, one less Exchange, and no 32-buffer hash aggregate over
-    the exploded (id, shingle) rows (micro-benchmlarked 1.37 s →
-    1.15 s warm on a 1,250-doc batch, with the explode version's
-    inline-pipeline penalty ~5 s removed entirely when ``d`` is
-    materialized). NULL-text docs are dropped from all three tables
-    (the explode dropped them from banded and sigs). ``owned_rdds``
-    (the ``_tracked_local_checkpoint`` contract): when the caller
-    owns the lifecycle, ``d`` is checkpointed so the banded and sets
-    materializations don't each re-run the normalize+shingle
-    projection — O(batch) arrays, unpersisted by the owner."""
-    if num_perm % bands:
-        raise ValueError("num_perm must divide into bands")
-    r = num_perm // bands
-    # parallelize BEFORE the shingle projection (round 17): with the
-    # repartition above `d`, the normalize+shingle work ran on however
-    # few partitions the input had (an AQE-coalesced batch = 1 core,
-    # and TWICE when banded and sets materialize separately); below
-    # the raw (id, text) scan it is a no-op on big inputs and fans
-    # the string-heavy projection out on small ones
-    # NULL text is dropped on the TEXT column, below the exchange (see
-    # ``char_shingles``); non-NULL text always has a shingle
-    d = _portable_sets(
-        ensure_parallelism(
-            df.select(id_col, text_col).filter(F.col(text_col).isNotNull())
-        ),
-        id_col, text_col, shingle_n,
-    )
-    if owned_rdds is not None:
-        d = _tracked_local_checkpoint(d, owned_rdds)
-    sigs = d.select(
-        id_col,
-        *[
-            F.array_min(F.transform("__sh", _mk_salted_hash(i))).alias(f"h{i}")
-            for i in range(num_perm)
-        ],
-    )
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",", *[F.col(f"h{j * r + k}").cast("string") for k in range(r)]
-                )
-            ).alias("key"),
-        )
-        for j in range(bands)
-    ]
-    banded = sigs.select(
-        id_col, F.explode(F.array(*band_structs)).alias("b")
-    ).select(id_col, "b.band", "b.key")
-    return banded, d, sigs
+    band_rows = _band_rows_sql("__sig", num_perm, bands)
+    d = _index_sets(df, id_col, text_col, shingle_n)
+    return _signatures(d, id_col, num_perm).selectExpr(_q(id_col), band_rows), d
 
 
 def debiased_agreement(sig_a, sig_b, num_perm: int, bands: int):
@@ -1723,13 +1717,10 @@ def hashed_shingle_sets(
     Jaccard except on md5 collisions, which both engines reproduce
     identically (the q68 oracle hashes the same way), so the
     comparison stays bit-for-bit."""
-    return sets.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                "__sh", lambda s: _md5_u32(s, SHINGLE_HASH_SALT)
-            )
-        ).alias("__sh"),
+    return sets.selectExpr(
+        _q(id_col),
+        "array_distinct(transform(__sh, s -> "
+        f"{_md5_u32_sql('s', SHINGLE_HASH_SALT)})) AS __sh",
     )
 
 
@@ -1773,19 +1764,26 @@ def build_corpus_index(
 
     ``owned_rdds``: pass the caller's checkpoint-tracking list ONLY
     when ``df`` is batch-bounded (the compactor's per-cycle batch) —
-    the shared shingle-set frame is then materialized once instead of
-    re-computed per output table; never for a corpus-sized ``df``."""
+    the frame both output tables derive from is then materialized
+    once instead of re-computed per table: the shingle sets for
+    ``'exact'``, the signature table (which IS the verify table, so
+    the 32-salt kernel runs once) for ``'estimate'``. Never for a
+    corpus-sized ``df``."""
     if verify not in ("exact", "estimate"):
         raise ValueError(f"verify must be 'exact' or 'estimate', got {verify!r}")
-    banded, d, sigs = _portable_index_parts(
-        df, id_col, text_col, num_perm, bands, shingle_n,
-        owned_rdds=owned_rdds,
-    )
+    band_rows = _band_rows_sql("__sig", num_perm, bands)  # validates first
+    d = _index_sets(df, id_col, text_col, shingle_n)
+    if owned_rdds is not None and verify == "exact":
+        d = _tracked_local_checkpoint(d, owned_rdds)
+    sig = _signatures(d, id_col, num_perm)
+    if owned_rdds is not None and verify == "estimate":
+        # the signature table is the estimate tier's verify table and
+        # the band table's only input: one checkpoint runs the 32-salt
+        # kernel once for both
+        sig = _tracked_local_checkpoint(sig, owned_rdds)
+    banded = sig.selectExpr(_q(id_col), band_rows)
     if verify == "estimate":
-        return banded, sigs.select(
-            id_col,
-            F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("__sig"),
-        )
+        return banded, sig
     return banded, hashed_shingle_sets(d, id_col)
 
 

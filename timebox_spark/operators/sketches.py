@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from timebox_spark.operators.dedup import _md5_u32_sql, _q
+
 
 def daily_distinct_sketches(
     df: DataFrame,
@@ -144,6 +146,45 @@ def histogram_quantiles(
 
 # ---------------------------------------------------------------- Bloom
 
+def _sentinels(spark, schema: str, rows: list[tuple]) -> DataFrame:
+    """A sketch's sentinel rows as a SQL ``VALUES`` relation with the
+    columns of ``schema`` (``"name TYPE, ..."``). A
+    ``createDataFrame(list)`` relation is a scan of a Python RDD: every
+    sketch write would run a Python-backed stage, and a stream's first
+    one would start the Python workers. ``nullif(_, NULL)`` keeps each
+    column nullable, as a DDL-schema relation is, so the parquet
+    schema a sketch is written with stays the same."""
+    cols = [c.split() for c in schema.split(",")]
+    values = ", ".join(
+        "(" + ", ".join(str(int(v)) for v in row) + ")" for row in rows
+    )
+    return spark.sql(
+        "SELECT "
+        + ", ".join(f"nullif(CAST({n} AS {t}), NULL) AS {n}" for n, t in cols)
+        + f" FROM VALUES {values} AS t({', '.join(n for n, _ in cols)})"
+    )
+
+
+def _bloom_bits(
+    df: DataFrame, keep: list[str], col: str, m_bits: int, k: int
+) -> DataFrame:
+    """(keep..., word, m): the Bloom hash family, shared by
+    ``bloom_build`` and ``bloom_probe`` — one row per position
+    p_i = md5_u32(f"{i}|" + v) % m_bits of each value v of
+    ``df[col]``, as the mask m of bit p mod 32 in 32-bit word p / 32.
+    SQL text (``dedup._md5_u32_sql``): a Column tree costs py4j round
+    trips per method, text one ``selectExpr``."""
+    pos = ", ".join(
+        f"{_md5_u32_sql(_q(col), str(i))} % {int(m_bits)}" for i in range(k)
+    )
+    keep = [_q(c) for c in keep]
+    return df.selectExpr(*keep, f"explode(array({pos})) AS p").selectExpr(
+        *keep,
+        "CAST(shiftright(p, 5) AS INT) AS word",
+        "shiftleft(CAST(1 AS BIGINT), CAST(pmod(p, 32) AS INT)) AS m",
+    )
+
+
 def bloom_build(
     df: DataFrame, col: str, m_bits: int = 1 << 20, k: int = 5
 ) -> DataFrame:
@@ -154,7 +195,7 @@ def bloom_build(
     ``dedup.incremental_exact_dedup(corpus_bloom=...)``).
 
     Hash family: position_i(v) = md5(f"{i}|" + v)[:8 hex] % m_bits
-    (``dedup._md5_u32`` — deterministic and SQL-expressible, so the
+    (``_bloom_bits`` — deterministic and SQL-expressible, so the
     q23 'bloom' oracle re-derives the bitset bit-for-bit). Each long
     word carries 32 bits (bit index <= 31, so neither engine's
     shift-left can overflow — the repo's 1<<63 trap). Merging cycles
@@ -171,27 +212,19 @@ def bloom_build(
     no-false-negative guarantee — a duplicate would bypass the
     dedup's exact join as 'definitely new' — so ``bloom_probe`` and
     ``bloom_merge`` validate the sentinels and raise instead (same
-    defect class as the estimate-index num_perm guard)."""
-    from timebox_spark.operators.dedup import _md5_u32
-
-    pos = [
-        (_md5_u32(F.col(col), str(i)) % F.lit(m_bits)) for i in range(k)
-    ]
-    spark = df.sparkSession
-    sentinels = spark.createDataFrame(
-        [(-1, int(m_bits)), (-2, int(k))], "word int, bits long"
-    )
+    defect class as the estimate-index num_perm guard). They come
+    from a SQL ``VALUES`` relation (``_sentinels``), so the build runs
+    no Python-backed stage."""
     return (
-        df.select(F.explode(F.array(*pos)).alias("p"))
-        .select(
-            F.shiftright("p", 5).cast("int").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pmod(p, 32) AS INT))"
-            ).alias("m"),
-        )
+        _bloom_bits(df, [], col, m_bits, k)
         .groupBy("word")
         .agg(F.bit_or("m").alias("bits"))
-        .unionByName(sentinels)
+        .unionByName(
+            _sentinels(
+                df.sparkSession, "word INT, bits BIGINT",
+                [(-1, m_bits), (-2, k)],
+            )
+        )
     )
 
 
@@ -300,18 +333,15 @@ def bloom_probe(
     a plain join instead (the sketch side is ~bits/32 narrow rows,
     far below the fingerprint tree a gate replaces) and warns once.
     The flags are identical either way."""
-    from timebox_spark.operators.dedup import _md5_u32
-
     # per-row sentinel assert, evaluated while the sketch side is
     # scanned and BEFORE the bit_or merge below (pre-aggregation: a
     # conflicting-geometry union raises on whichever row disagrees —
     # bit_or can never alias it past this check). assert_true yields
     # NULL when the condition holds, so the coalesce keeps every row
     # and the filter's only effect is to force the evaluation.
-    sentinel_ok = (
-        F.when(F.col("word") == -1, F.col("bits") == F.lit(int(m_bits)))
-        .when(F.col("word") == -2, F.col("bits") == F.lit(int(k)))
-        .otherwise(F.lit(True))
+    sentinel_ok = F.expr(
+        f"CASE WHEN word = -1 THEN bits = {int(m_bits)} "
+        f"WHEN word = -2 THEN bits = {int(k)} ELSE true END"
     )
     bloom = bloom.filter(
         F.coalesce(
@@ -332,27 +362,13 @@ def bloom_probe(
         )
     )
     bloom = bloom.groupBy("word").agg(F.bit_or("bits").alias("bits"))
-    pos = [
-        (_md5_u32(F.col(col), str(i)) % F.lit(m_bits)) for i in range(k)
-    ]
-    p = df.select(
-        F.col(id_col), F.explode(F.array(*pos)).alias("p")
-    ).select(
-        id_col,
-        F.shiftright("p", 5).cast("int").alias("word"),
-        F.expr(
-            "shiftleft(CAST(1 AS BIGINT), CAST(pmod(p, 32) AS INT))"
-        ).alias("m"),
-    )
-    hit = (
-        F.coalesce(F.col("bits"), F.lit(0)).bitwiseAND(F.col("m")) != 0
-    ).cast("int")
+    p = _bloom_bits(df, [id_col], col, m_bits, k)
     est_bytes = (m_bits // 32 + 2) * _BLOOM_ROW_BYTES
     return (
         _sketch_join(p, bloom, "word", est_bytes, "bloom_probe")
         .groupBy(id_col)
-        .agg(F.min(hit).alias("__mp"))
-        .select(id_col, (F.col("__mp") == 1).alias("maybe_present"))
+        .agg(F.expr("min(CAST((coalesce(bits, 0) & m) != 0 AS INT)) AS __mp"))
+        .selectExpr(_q(id_col), "__mp = 1 AS maybe_present")
     )
 
 
@@ -364,6 +380,17 @@ def bloom_probe(
 CMS_WIDTH = 512
 CMS_DEPTH = 4
 CMS_SALT = "cms"
+
+
+def _cms_cells_sql(col: str, width: int, depth: int) -> str:
+    """SQL generator of the count-min hash family, shared by
+    ``cms_build`` and ``cms_query``: one ``(row, idx)`` cell per sketch
+    row j, idx_j(v) = md5_u32(f"{CMS_SALT}{j}|" + v) % width."""
+    return "inline(array(" + ", ".join(
+        f"named_struct('row', {j}, 'idx', CAST("
+        f"{_md5_u32_sql(_q(col), f'{CMS_SALT}{j}')} % {int(width)} AS INT))"
+        for j in range(depth)
+    ) + "))"
 
 
 def _cms_stats(cms: DataFrame, width: int, depth: int, ctx: str) -> int:
@@ -392,20 +419,15 @@ def _cms_stats_mode(
     count/weighted MIX exactly like ``cms_is_weighted``;
     ``check_mode=False`` is the plain ``_cms_stats`` contract
     (probes answer whatever denomination the tree holds)."""
-    row = cms.agg(
-        F.count(F.when(F.col("row") >= 0, 1)).alias("n_rows"),
-        F.count_distinct(
-            F.when(F.col("row") == -1, F.col("cnt"))
-        ).alias("n_w"),
-        F.count_distinct(
-            F.when(F.col("row") == -2, F.col("cnt"))
-        ).alias("n_d"),
-        F.count_distinct(
-            F.when(F.col("row") == -3, F.col("cnt"))
-        ).alias("n_mode"),
-        F.max(F.when(F.col("row") == -1, F.col("cnt"))).alias("w"),
-        F.max(F.when(F.col("row") == -2, F.col("cnt"))).alias("d"),
-        F.max(F.when(F.col("row") == -3, F.col("cnt"))).alias("mode"),
+    sentinel = "CASE WHEN `row` = {} THEN cnt END".format
+    row = cms.selectExpr(
+        "count(CASE WHEN `row` >= 0 THEN 1 END) AS n_rows",
+        f"count(DISTINCT {sentinel(-1)}) AS n_w",
+        f"count(DISTINCT {sentinel(-2)}) AS n_d",
+        f"count(DISTINCT {sentinel(-3)}) AS n_mode",
+        f"max({sentinel(-1)}) AS w",
+        f"max({sentinel(-2)}) AS d",
+        f"max({sentinel(-3)}) AS mode",
     ).collect()[0]
     if row["n_w"] > 1 or row["n_d"] > 1:
         raise ValueError(
@@ -453,7 +475,7 @@ def cms_build(
     probability 1−(1/2)^depth — the classic CMS guarantee.
 
     Hash family: idx_j(v) = md5(f"{CMS_SALT}{j}|" + v) first 8 hex as
-    int, mod width (``dedup._md5_u32``) — deterministic and
+    int, mod width (``_cms_cells_sql``) — deterministic and
     SQL-expressible, so the q57 'cms' oracle re-derives every counter
     exactly. Integer counts ⇒ the sketch is identical on any engine
     and partitioning. NULL values are skipped (not counted); probe
@@ -462,7 +484,8 @@ def cms_build(
     The sketch carries (width, depth) as sentinel rows (row −1 / −2,
     idx 0 — real rows are >= 0): ``cms_merge`` and ``cms_query``
     validate them and raise on mismatch, the same silent-geometry
-    failure class as the Bloom gate's.
+    failure class as the Bloom gate's. Like the Bloom sketch's, they
+    come from a SQL ``VALUES`` relation (``_sentinels``).
 
     ``weight`` (round 16): counters accumulate ``SUM(weight)`` per
     value instead of row counts — the WEIGHTED sketch behind
@@ -474,30 +497,14 @@ def cms_build(
     the value's cells); merge/query/heavy-hitter paths are unchanged
     — a weighted sketch is the count sketch of weight-fold repeated
     rows."""
-    from timebox_spark.operators.dedup import _md5_u32
-
-    spark = df.sparkSession
     # row −3 records WEIGHTEDNESS (cnt 1 weighted / 0 count): a tree
     # mixing count and weighted cycles answers neither "how many
     # docs?" nor "how many tokens?" — cms_merge's per-row sentinel
     # conflict check now catches that mix exactly like a geometry mix
-    sentinels = spark.createDataFrame(
-        [
-            (-1, 0, int(width)),
-            (-2, 0, int(depth)),
-            (-3, 0, 1 if weight is not None else 0),
-        ],
-        "row int, idx int, cnt long",
+    sentinels = _sentinels(
+        df.sparkSession, "row INT, idx INT, cnt BIGINT",
+        [(-1, 0, width), (-2, 0, depth), (-3, 0, weight is not None)],
     )
-    cells = [
-        F.struct(
-            F.lit(j).cast("int").alias("row"),
-            (_md5_u32(F.col(col), f"{CMS_SALT}{j}") % F.lit(width))
-            .cast("int")
-            .alias("idx"),
-        )
-        for j in range(depth)
-    ]
     if weight is None:
         inc = F.lit(1).cast("long")
     else:
@@ -505,8 +512,8 @@ def cms_build(
         inc = F.coalesce(w.cast("long"), F.lit(0).cast("long"))
     return (
         df.filter(F.col(col).isNotNull())
-        .select(F.explode(F.array(*cells)).alias("c"), inc.alias("__w"))
-        .groupBy(F.col("c.row").alias("row"), F.col("c.idx").alias("idx"))
+        .select(F.expr(_cms_cells_sql(col, width, depth)), inc.alias("__w"))
+        .groupBy("row", "idx")
         .agg(F.sum("__w").alias("cnt"))
         .unionByName(sentinels)
     )
@@ -590,38 +597,21 @@ def cms_query(
     against the call's; over the broadcast budget the sketch is joined
     without the broadcast, like ``bloom_probe``'s (a sketch is
     depth·width cells, so this only happens at degenerate widths)."""
-    from timebox_spark.operators.dedup import _md5_u32
-
     n_rows = _cms_stats(cms, width, depth, "cms_query")
     # size the frame actually joined (round-15 advisor): cmsd is the
     # re-aggregated sketch, bounded by depth·width cells — a tall raw
     # union of thousands of per-cycle sketches collapses to that bound
     est_bytes = min(n_rows, depth * width) * 24
     cmsd = (
-        cms.filter(F.col("row") >= 0)
+        cms.filter("`row` >= 0")
         .groupBy("row", "idx")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    cells = [
-        F.struct(
-            F.lit(j).cast("int").alias("row"),
-            (_md5_u32(F.col(col), f"{CMS_SALT}{j}") % F.lit(width))
-            .cast("int")
-            .alias("idx"),
-        )
-        for j in range(depth)
-    ]
-    p = df.select(F.col(id_col), F.explode(F.array(*cells)).alias("c")).select(
-        id_col, F.col("c.row").alias("row"), F.col("c.idx").alias("idx")
-    )
+    p = df.selectExpr(_q(id_col), _cms_cells_sql(col, width, depth))
     return (
         _sketch_join(p, cmsd, ["row", "idx"], est_bytes, "cms_query")
         .groupBy(id_col)
-        .agg(
-            F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long"))).alias(
-                "est_count"
-            )
-        )
+        .agg(F.expr("min(coalesce(cnt, CAST(0 AS BIGINT))) AS est_count"))
     )
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from timebox_spark.operators.dedup import _index_fs
+from timebox_spark.operators.dedup import _index_fs, _q
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -617,7 +617,9 @@ def compact_corpus(
     building the returned (lazy) plan — ``exact_gate`` (the gated
     exact-dedup's probe checkpoint + maybe-set collect),
     ``kept_ckpt`` (materializing the exact survivors),
-    ``index_ckpt`` (the batch shingle+signature kernel),
+    ``banded_ckpt`` (the batch shingle+signature kernel and band
+    table), ``index_ckpt`` (the exact tier's hashed shingle sets —
+    the estimate tier's verify table is the checkpointed signatures),
     ``band_probe`` (band-key sketch probe + bounded collect),
     ``cand_prune`` (candidate checkpoint + verify-prune collect).
     The remainder of the caller's timed write is the verify join +
@@ -729,9 +731,9 @@ def compact_corpus(
     _ct = _lap(timings, "kept_ckpt", _ct)
     b_banded, b_sets = build_corpus_index(
         kept, id_col, text_col, num_perm, bands, shingle_n, verify=verify,
-        # batch-bounded: materialize the shared shingle-set frame once
-        # so the banded and sets checkpoints below don't each re-run
-        # the normalize+shingle projection (round 17)
+        # batch-bounded: materialize the frame both tables derive from
+        # once — the shingle sets (exact) or the signature table, which
+        # IS the estimate tier's b_sets (round 17)
         owned_rdds=exact_owned_rdds,
     )
     if exact_owned_rdds is not None:
@@ -739,7 +741,8 @@ def compact_corpus(
 
         b_banded = _tracked_local_checkpoint(b_banded, exact_owned_rdds)
         _ct = _lap(timings, "banded_ckpt", _ct)
-        b_sets = _tracked_local_checkpoint(b_sets, exact_owned_rdds)
+        if verify == "exact":
+            b_sets = _tracked_local_checkpoint(b_sets, exact_owned_rdds)
         if batch_index_out is not None:
             # hand the materialized batch index to the owner (round
             # 17): its rows are per-doc functions of text, so the
@@ -1378,30 +1381,53 @@ def _store_tree_paths(store_path: str) -> dict[str, str]:
 # an eager file listing + parquet footer schema inference EVERY cycle
 # (~0.65-0.8 s/cycle at sf0.1), yet a tree's schema is constant
 # between consolidations — per-cycle writes append same-shaped
-# partitions. Cache the inferred StructType per tree path and re-read
-# with spark.read.schema(...), which skips the footer pass.
+# partitions. Cache the StructType per tree path and re-read with
+# spark.read.schema(...), which skips the footer pass: a cycle records
+# the schema of each partition it writes (``_record_tree_schema``), a
+# first read of an unrecorded tree records the inferred one.
 # Entries are keyed on the store's generation marker, a fresh token
 # written by the two writers that can CHANGE a tree's files
 # wholesale: a cycle-0 seed (a store recreated at the same path) and
-# consolidate_ingest_store (every tree rewritten). A store swapped in
-# under the same path by any other means (a copied store) carries its
-# own token, so its trees are re-inferred; an unmarked store is never
+# consolidate_ingest_store (every tree rewritten, in the same shape:
+# the consolidating process carries its entries over). A store swapped
+# in under the same path by any other means (a copied store) carries
+# its own token, so its trees are re-inferred; an unmarked store is never
 # served from the cache. Assumes the store's single-writer contract
 # (the checkpointed stream / one driver) — replay idempotency already
 # requires one writer.
 _TREE_SCHEMA_CACHE: dict = {}  # tree path -> (generation, StructType)
 
 
-def _new_generation(spark: SparkSession, store_path: str) -> None:
-    """Stamp ``store_path`` with a fresh generation token."""
+def _new_generation(spark: SparkSession, store_path: str) -> str:
+    """Stamp ``store_path`` with a fresh generation token; return it."""
     import uuid
 
+    token = uuid.uuid4().hex
     fs, fs_path = _index_fs(spark, store_path)
     out = fs.create(fs_path(f"{store_path}/_generation"), True)
     try:
-        out.writeUTF(uuid.uuid4().hex)
+        out.writeUTF(token)
     finally:
         out.close()
+    return token
+
+
+def _cached_tree_schema(tree_path: str, generation: str | None):
+    """The cached read schema of ``tree_path`` for ``generation``."""
+    hit = _TREE_SCHEMA_CACHE.get(tree_path)
+    return hit[1] if hit is not None and hit[0] == generation else None
+
+
+def _record_tree_schema(
+    tree_path: str, generation: str | None, part: DataFrame, part_col: str
+) -> None:
+    """Cache the schema a read of ``tree_path`` infers, from ``part``
+    (a pinned-schema read of one partition it was just written with):
+    its columns, nullable as every file read's are, then the int
+    partition column."""
+    if generation is not None:
+        read = part.schema.fields + [T.StructField(part_col, T.IntegerType())]
+        _TREE_SCHEMA_CACHE[tree_path] = (generation, T.StructType(read))
 
 
 def _store_generation(spark: SparkSession, store_path: str) -> str | None:
@@ -1429,14 +1455,17 @@ def _fold_partitions(
     upto: int,
     tmp: str,
     transform=None,
+    schema=None,
 ) -> None:
     """Crash-safe fold of every ``{part_col}=N`` partition with
     ``N <= upto`` under ``tree_path`` into one ``{part_col}={upto}``
-    partition. Resumable: the consolidated rows go to ``tmp`` first
-    and that write is SKIPPED when ``tmp`` already carries _SUCCESS,
-    so a rerun never re-derives from a tree it partially emptied;
-    then the old partition dirs are deleted and ``tmp`` is renamed in
-    (atomic dir rename, same filesystem by construction). The rename
+    partition; ``schema``, the tree's read schema when known, spares
+    the read its footer-inference job. Resumable: the consolidated
+    rows go to ``tmp`` first and that write is SKIPPED when ``tmp``
+    already carries _SUCCESS, so a rerun never re-derives from a tree
+    it partially emptied; then the old partition dirs are deleted and
+    ``tmp`` is renamed in (atomic dir rename, same filesystem by
+    construction). The rename
     result is CHECKED — Hadoop FileSystems report most failures by
     returning false rather than throwing, and by that point the
     source partitions are gone: proceeding silently would lose state,
@@ -1453,7 +1482,8 @@ def _fold_partitions(
         if not fs.exists(fs_path(tree_path)):
             return
         try:
-            df = spark.read.parquet(tree_path)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            df = reader.parquet(tree_path)
         except AnalysisException:
             return
         if part_col not in df.columns:
@@ -1517,6 +1547,7 @@ def consolidate_ingest_store(
     ``consolidate_every`` does) — a cycle that might still be
     replayed must never be folded into an earlier partition label."""
     fs, fs_path = _index_fs(spark, store_path)
+    generation = _store_generation(spark, store_path)
     trees = [(t, p, "cycle") for t, p in _store_tree_paths(store_path).items()]
     # the hit rows (curate_and_ingest_stream(stream_near_dup=True)) are
     # keyed by micro-batch id, which is the cycle id
@@ -1538,11 +1569,17 @@ def consolidate_ingest_store(
                 "banded": _banded_prunable_layout,
                 "sets": _sets_prunable_layout,
             }.get(tree),
+            schema=_cached_tree_schema(tree_path, generation),
         )
     fs.delete(fs_path(f"{store_path}/_tmp_consolidate"), True)
-    # every tree's files were rewritten — a new generation, so the
-    # next cycle re-infers their shapes
-    _new_generation(spark, store_path)
+    # every tree's files were rewritten — a new generation, so other
+    # readers re-infer their shapes; the fold kept each tree's shape,
+    # so this process's cached schemas carry over
+    new = _new_generation(spark, store_path)
+    for _, tree_path, _ in trees:
+        cached = _cached_tree_schema(tree_path, generation)
+        if cached is not None:
+            _TREE_SCHEMA_CACHE[tree_path] = (new, cached)
 
 
 def read_store_cms(
@@ -1636,11 +1673,7 @@ def run_ingest_cycle(
     spec.check_columns(new_batch.columns)
     from pyspark.errors import AnalysisException
 
-    from timebox_spark.operators.dedup import (
-        _fp_hex,
-        build_corpus_index,
-        corpus_fingerprints,
-    )
+    from timebox_spark.operators.dedup import _fp_hex, corpus_fingerprints
 
     spark = new_batch.sparkSession
     paths = _store_tree_paths(store_path)
@@ -1660,10 +1693,7 @@ def run_ingest_cycle(
         # store may live on HDFS/S3, where a local isdir() is always
         # False and would silently skip corpus dedup every cycle
         path = paths[key]
-        hit = _TREE_SCHEMA_CACHE.get(path)
-        cached = (
-            hit[1] if hit is not None and hit[0] == generation else None
-        )
+        cached = _cached_tree_schema(path, generation)
         try:
             # with the cached schema the reader skips the per-cycle
             # footer inference pass (round 18 — see the cache's note)
@@ -1806,8 +1836,9 @@ def run_ingest_cycle(
                 UserWarning,
                 stacklevel=3,
             )
-            empty = df.sparkSession.createDataFrame(
-                [], f"`{spec.cms_col}` string, `__cms_w` long"
+            empty = df.limit(0).selectExpr(
+                f"CAST(NULL AS STRING) AS {_q(spec.cms_col)}",
+                "CAST(NULL AS BIGINT) AS __cms_w",
             )
             return cms_build(
                 empty, spec.cms_col, spec.cms_width, spec.cms_depth,
@@ -1824,13 +1855,6 @@ def run_ingest_cycle(
         )
     banded = read_prior("banded") if spec.near_dup else None
     sets = read_prior("sets") if spec.near_dup else None
-    # a missing index on a near_dup cycle (first cycle, or exact-only
-    # history) still near-dedups within the batch itself: the empty
-    # index is a valid corpus index
-    if spec.near_dup and banded is None:
-        banded, sets = build_corpus_index(
-            new_batch.limit(0), id_col, text_col, verify=spec.index_verify
-        )
     band_bloom = None
     if spec.near_dup and spec.band_bloom_m is not None:
         from timebox_spark.operators.sketches import bloom_build
@@ -1873,9 +1897,11 @@ def run_ingest_cycle(
             )
             hits.write.mode("overwrite").parquet(hits_part)
             # the written schema pinned: no footer-inference job
-            return spark.read.schema(hits.schema).parquet(hits_part).select(
-                id_col
+            back = spark.read.schema(hits.schema).parquet(hits_part)
+            _record_tree_schema(
+                f"{store_path}/near_hits", generation, back, "batch"
             )
+            return back.select(id_col)
 
     try:
         kept = compact_corpus(
@@ -1885,7 +1911,10 @@ def run_ingest_cycle(
             text_col=text_col,
             near_dup=spec.near_dup,
             threshold=spec.threshold,
-            corpus_index=(banded, sets) if spec.near_dup else None,
+            # no index tree yet (first cycle, or exact-only history):
+            # compact_corpus bands the batch against an empty corpus,
+            # so it still near-dedups within the batch itself
+            corpus_index=None if banded is None else (banded, sets),
             corpus_fps=fps,
             keep=spec.keep,
             verify=spec.index_verify,
@@ -1937,7 +1966,9 @@ def run_ingest_cycle(
             # pins the written schema, so it runs no inference job
             path = f"{paths[tree]}/{cyc}"
             df.write.mode("overwrite").parquet(path)
-            return spark.read.schema(df.schema).parquet(path)
+            back = spark.read.schema(df.schema).parquet(path)
+            _record_tree_schema(paths[tree], generation, back, "cycle")
+            return back
 
         kept_disk = write_part(kept, "corpus")
         _t = _lap(timings, "compact_write", _t)
@@ -2053,11 +2084,11 @@ def near_dup_hits_stream(
     for the exact all-earlier-arrivals semantics the q68 oracle
     re-derives (only safe when the ingest window is known small).
 
-    The portable signature family (same md5 hash family as
-    ``dedup.portable_minhash_index``, bit-identical values) is
-    computed MAP-ONLY in-stream — ``array_min`` over the shingle
-    array per permutation, no groupBy, streaming-legal — and each doc
-    fans out to its ``bands`` (band, key) rows. State is keyed by
+    The portable signature and band keys are the index's own
+    (``dedup._minhash_sig_sql`` / ``_band_rows_sql``), computed
+    MAP-ONLY in-stream — ``array_min`` over the shingle array per
+    permutation, no groupBy, streaming-legal — and each doc fans out
+    to its ``bands`` (band, key) rows. State is keyed by
     (band, key) via ``applyInPandasWithState``: a group holds the
     signatures seen in its LSH bucket within the TTL, so state is
     O(active buckets), each bucket tiny by LSH construction. A doc
@@ -2104,13 +2135,13 @@ def near_dup_hits_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from timebox_spark.operators.dedup import (
-        _md5_u32,
+        _band_rows_sql,
+        _minhash_sig_sql,
         char_shingles,
         normalize_text,
     )
 
-    if num_perm % bands:
-        raise ValueError("num_perm must divide into bands")
+    band_rows = _band_rows_sql("__sig", num_perm, bands)  # validates
     r = num_perm // bands
     width = fanout
     if width is None:
@@ -2139,40 +2170,10 @@ def near_dup_hits_stream(
     d = src.withColumn("__norm", normalize_text(text_col)).withColumn(
         "__sh", F.array_distinct(char_shingles("__norm", shingle_n))
     )
-    def _sig(i: int):
-        # factory, not `lambda s, i=i`: a two-parameter lambda is an
-        # (element, index) HOF lambda to PySpark — the default arg
-        # would be silently overridden by the array index column
-        return F.array_min(
-            F.transform("__sh", lambda s: _md5_u32(s, str(i)))
-        )
-
-    sigs = d.select(
-        id_col,
-        ts_col,
-        *[_sig(i).alias(f"h{i}") for i in range(num_perm)],
-    )
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"h{j * r + k}").cast("string")
-                        for k in range(r)
-                    ],
-                )
-            ).alias("key"),
-        )
-        for j in range(bands)
-    ]
-    banded = sigs.select(
-        id_col,
-        ts_col,
-        F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("__sig"),
-        F.explode(F.array(*band_structs)).alias("b"),
-    ).select(id_col, ts_col, "__sig", "b.band", "b.key")
+    keys = (_q(id_col), _q(ts_col))
+    banded = d.selectExpr(
+        *keys, f"{_minhash_sig_sql('__sh', num_perm)} AS __sig"
+    ).selectExpr(*keys, "__sig", band_rows)
 
     out_schema = (
         f"{id_col} long, band int, matched_id long, est double, "
