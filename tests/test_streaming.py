@@ -1376,11 +1376,18 @@ def test_run_ingest_cycle_validates_before_any_write(spark, tmp_path):
     assert listing() == before
 
 
-def test_run_ingest_cycle_timings_hook(spark, tmp_path):
+def test_run_ingest_cycle_timings_hook(spark, tmp_path, monkeypatch):
     """Round 16: the ``timings`` dict decomposes a cycle into its
     stages — observational only (kept rows unchanged), consolidate
-    key present exactly when the fold fires."""
+    key present exactly when the fold fires. The top-level stages run
+    back to back, so their seconds add up to the call's wall time
+    (the stage intervals perfbench rebuilds depend on it), and the
+    caller's job description survives the call."""
     import hashlib as _h
+    import time as _time
+
+    monkeypatch.setattr(ingest, "GATE_MIN_TREE_BYTES", 0)
+    sc = spark.sparkContext
 
     def _txt(i: int) -> str:  # distinct texts: no near-dup collapse
         return " ".join(
@@ -1392,23 +1399,76 @@ def test_run_ingest_cycle_timings_hook(spark, tmp_path):
         "doc_id long, text string, source string",
     )
     store = str(tmp_path / "tstore")
-    tm0: dict = {}
-    n0 = ingest.run_ingest_cycle(
-        docs, store, 0, cms_col="source", consolidate_every=1,
-        timings=tm0,
-    )
+    compact = {
+        "compact_exact_gate", "compact_kept_ckpt", "compact_banded_ckpt",
+        "compact_index_ckpt", "compact_band_probe", "compact_cand_prune",
+    }
+    stages = ["state_read_gates", "compact_write", "derived_writes",
+              "index_writes", "count"]
+
+    def cycle(batch, cycle_id, outer):
+        tm: dict = {}
+        sc.setLocalProperty("spark.job.description", outer)
+        try:
+            t0 = _time.perf_counter()
+            n = ingest.run_ingest_cycle(
+                batch, store, cycle_id, cms_col="source",
+                consolidate_every=1, timings=tm,
+            )
+            wall = _time.perf_counter() - t0
+            assert sc.getLocalProperty("spark.job.description") == outer
+        finally:
+            sc.setLocalProperty("spark.job.description", None)
+        top = {k: v for k, v in tm.items() if k not in compact}
+        assert all(v >= 0 for v in tm.values()), tm
+        assert abs(sum(top.values()) - wall) < 0.05, (wall, tm)
+        return n, list(top), {k for k in tm if k in compact}
+
+    n0, top0, sub0 = cycle(docs, 0, None)
     assert n0 == 8
-    for k in ("state_read_gates", "compact_write", "derived_writes",
-              "index_writes", "count"):
-        assert k in tm0 and tm0[k] >= 0, (k, tm0)
-    assert "consolidate" not in tm0  # cycle 0 never consolidates
-    tm1: dict = {}
-    ingest.run_ingest_cycle(
+    assert top0 == stages  # cycle 0 never consolidates
+    # no band-key sketch yet: the band gate's two steps do not run
+    assert sub0 == compact - {"compact_band_probe", "compact_cand_prune"}
+    _, top1, sub1 = cycle(
         docs.select((F.col("doc_id") + 100).alias("doc_id"),
                     "text", "source"),
-        store, 1, cms_col="source", consolidate_every=1, timings=tm1,
+        1, "outer description",
     )
-    assert "consolidate" in tm1, tm1
+    assert top1 == ["consolidate"] + stages
+    assert sub1 == compact
+
+
+def test_ingest_cycle_jobs_carry_stage_descriptions(
+    spark, tmp_path, monkeypatch
+):
+    """Every Spark job of a cycle with every stage and gate on is
+    described ``ingest.<key>`` for a key of that cycle's ``timings``,
+    so an event log or the UI names the stage behind each job."""
+    import uuid
+
+    monkeypatch.setattr(ingest, "GATE_MIN_TREE_BYTES", 0)
+    store = str(tmp_path / "store")
+    batches = _digest_batches(spark)
+    _run_digest_cycle(store, batches[0], 0, "exact", consolidate_every=1)
+    sc = spark.sparkContext
+    group = f"stages-{uuid.uuid4().hex[:8]}"
+    tm: dict = {}
+    sc.setJobGroup(group, group)
+    try:
+        _run_digest_cycle(
+            store, batches[1], 1, "exact", consolidate_every=1, timings=tm
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc._jsc.sc().statusStore()
+    named: dict = {}
+    for j in _group_job_ids(spark, group):
+        desc = jobs.job(j).description()
+        named.setdefault(desc.get() if desc.isDefined() else None, []).append(j)
+    assert set(named) <= {f"ingest.{k}" for k in tm}, (named, tm)
+    for k in ("consolidate", "compact_write", "derived_writes", "index_writes"):
+        assert f"ingest.{k}" in named, (k, named)
 
 
 @pytest.mark.parametrize("verify", ["exact", "estimate"])

@@ -15,13 +15,25 @@ and stops — the batch-equivalent trigger used by tests and backfills.
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from timebox_spark.operators.dedup import _index_fs, _q
+# dedup by module: tests substitute its functions on the module
+from timebox_spark.operators import dedup as DD
+from timebox_spark.operators import text as TX
+from timebox_spark.operators.sampling import cap_per_group, token_budget_per_group
+from timebox_spark.operators.sketches import (
+    _cms_stats_mode,
+    bloom_build,
+    bloom_probe,
+    cms_build,
+    cms_merge,
+)
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -320,18 +332,6 @@ def write_stream_warc(
     )
 
 
-def write_stream_parquet(
-    df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"
-):
-    """Checkpointed exactly-once Parquet sink (unstarted query)."""
-    return (
-        df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", path)
-    )
-
-
 def run_available_now(
     df: DataFrame, sink_format: str, output_mode: str, checkpoint: str, **options
 ) -> None:
@@ -413,8 +413,6 @@ def curate_stream(
     ``carry_cols`` names input columns (e.g. the event-time column a
     downstream ``near_dup_hits_stream`` watermarks on) passed through
     untouched alongside the curated output."""
-    from timebox_spark.operators import text as TX
-
     annotated = stream.select(
         F.col(id_col),
         F.col(text_col),
@@ -441,14 +439,23 @@ def curate_stream(
     return kept.withColumn("text", TX.redact(text_col))
 
 
-def _lap(timings: dict | None, key: str, t0: float) -> float:
-    """Record the wall seconds since ``t0`` under ``key`` in
-    ``timings`` (when given, rounded to ms) and return the current
-    clock — the next stage's start."""
-    now = time.perf_counter()
-    if timings is not None:
-        timings[key] = round(now - t0, 3)
-    return now
+@contextmanager
+def _stage(timings: dict | None, key: str):
+    """Run the block as ingest stage ``key``: its Spark jobs carry the
+    description ``ingest.<key>``, and the caller's description (inside
+    ``foreachBatch``, the micro-batch's; possibly none) is restored on
+    exit. With ``timings``, the block's wall seconds go to
+    ``timings[key]``, rounded to ms."""
+    sc = SparkContext.getOrCreate()
+    outer = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"ingest.{key}")
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        if timings is not None:
+            timings[key] = round(time.perf_counter() - t0, 3)
+        sc.setLocalProperty("spark.job.description", outer)
 
 
 def _check_modes(keep: str, verify: str) -> None:
@@ -611,19 +618,20 @@ def compact_corpus(
     mixed-geometry sketch raises at the first gate action, and an
     over-budget sketch is joined without the broadcast (warned).
 
-    ``timings`` (round 17 — the observability behind the bench
-    ingest_loop's compact_write attribution): pass a dict to receive
-    wall seconds for the EAGER sub-steps this call runs while
-    building the returned (lazy) plan — ``exact_gate`` (the gated
-    exact-dedup's probe checkpoint + maybe-set collect),
-    ``kept_ckpt`` (materializing the exact survivors),
-    ``banded_ckpt`` (the batch shingle+signature kernel and band
-    table), ``index_ckpt`` (the exact tier's hashed shingle sets —
-    the estimate tier's verify table is the checkpointed signatures),
-    ``band_probe`` (band-key sketch probe + bounded collect),
-    ``cand_prune`` (candidate checkpoint + verify-prune collect).
-    The remainder of the caller's timed write is the verify join +
-    anti-join + sink. Purely observational.
+    The eager sub-steps this call runs while building the returned
+    (lazy) plan are ``_stage`` blocks; each one's Spark jobs carry the
+    description ``ingest.<key>``, and with a ``timings`` dict its wall
+    seconds land under ``<key>`` (near-dup keys only with
+    ``near_dup``, gate keys only with ``corpus_band_bloom``):
+
+    - ``compact_exact_gate``: the gated exact dedup's probe and collect;
+    - ``compact_kept_ckpt``: the corpus-index check, and materializing
+      the exact survivors;
+    - ``compact_banded_ckpt``: the batch shingle+signature kernel and
+      band table;
+    - ``compact_index_ckpt``: the exact tier's hashed shingle sets;
+    - ``compact_band_probe``: the band-key sketch probe and collect;
+    - ``compact_cand_prune``: the candidate checkpoint and collect.
 
     ``drop_sink`` (with ``near_dup``): a callable that receives the
     batch's DROP rows ``(id, matched_id, est)``, one per document the
@@ -638,11 +646,6 @@ def compact_corpus(
     returned plan anti-joins the sink's frame instead of re-deriving
     the verify join, so the drops cost one write, not a second pass
     (``run_ingest_cycle(hit_ts=...)`` writes them as hit rows)."""
-    from timebox_spark.operators.dedup import (
-        build_corpus_index,
-        incremental_exact_dedup,
-    )
-
     _check_modes(keep, verify)
     if keep == "cluster" and scratch_path is None:
         raise ValueError(
@@ -655,94 +658,87 @@ def compact_corpus(
         # over-drop belongs at the call site — warn when the
         # threshold-adjacent standard error exceeds the documented
         # bound (dedup.ESTIMATE_TIER_SE_BOUND)
-        from timebox_spark.operators.dedup import (
-            warn_estimate_tier_variance,
-        )
-
-        warn_estimate_tier_variance(threshold, num_perm, bands)
+        DD.warn_estimate_tier_variance(threshold, num_perm, bands)
     if corpus is None:
         corpus = new_batch.limit(0)
-    _ct = time.perf_counter()
-    kept = incremental_exact_dedup(
-        new_batch,
-        corpus,
-        id_col,
-        text_col,
-        corpus_fps=corpus_fps,
-        # broadcast Bloom pre-gate: definitely-new batch rows bypass
-        # the O(corpus) fps anti-join (see incremental_exact_dedup)
-        corpus_bloom=corpus_bloom,
-        bloom_m=bloom_m,
-        bloom_k=bloom_k,
-        # probe materialization (round-14 review): ONLY when the
-        # caller owns the lifecycle — the returned plan then carries
-        # the probe checkpoint's lineage, and the owner unpersists
-        # after fully consuming it (run_ingest_cycle does, after its
-        # corpus partition commits)
-        owned_rdds=exact_owned_rdds,
-    )
-    _ct = _lap(timings, "exact_gate", _ct)
+    with _stage(timings, "compact_exact_gate"):
+        kept = DD.incremental_exact_dedup(
+            new_batch,
+            corpus,
+            id_col,
+            text_col,
+            corpus_fps=corpus_fps,
+            # broadcast Bloom pre-gate: definitely-new batch rows bypass
+            # the O(corpus) fps anti-join (see incremental_exact_dedup)
+            corpus_bloom=corpus_bloom,
+            bloom_m=bloom_m,
+            bloom_k=bloom_k,
+            # probe materialization (round-14 review): ONLY when the
+            # caller owns the lifecycle — the returned plan then carries
+            # the probe checkpoint's lineage, and the owner unpersists
+            # after fully consuming it (run_ingest_cycle does, after its
+            # corpus partition commits)
+            owned_rdds=exact_owned_rdds,
+        )
     if not near_dup:
         return kept
     vcol = "__sig" if verify == "estimate" else "__sh"
-    if corpus_index is not None:
-        c_banded, c_sets = corpus_index
-        if vcol not in c_sets.columns:
-            raise ValueError(
-                f"corpus_index verify table has columns {c_sets.columns}; "
-                f"verify={verify!r} needs {vcol!r} — rebuild the index "
-                f"with build_corpus_index(verify={verify!r})"
-            )
-        if verify == "estimate":
-            # advisor round 12: an index persisted with a different
-            # num_perm would band on different keys (near-dups
-            # silently MISSED) and null-pad through the agreement
-            # zip_with on any key that did collide — probe one stored
-            # signature's length eagerly (a limit(1) narrow scan,
-            # milliseconds at any index size) and raise instead
-            probe = c_sets.select(F.size(vcol).alias("n")).limit(1).collect()
-            if probe and probe[0]["n"] != num_perm:
+    with _stage(timings, "compact_kept_ckpt"):
+        if corpus_index is not None:
+            c_banded, c_sets = corpus_index
+            if vcol not in c_sets.columns:
                 raise ValueError(
-                    f"corpus_index signatures carry {probe[0]['n']} "
-                    f"MinHash values but this call uses num_perm="
-                    f"{num_perm} — rebuild the index (or pass the "
-                    f"index's num_perm) so banding and agreement "
-                    f"compare like with like"
+                    f"corpus_index verify table has columns {c_sets.columns}; "
+                    f"verify={verify!r} needs {vcol!r} — rebuild the index "
+                    f"with build_corpus_index(verify={verify!r})"
                 )
-    else:
-        c_banded, c_sets = build_corpus_index(
-            corpus, id_col, text_col, num_perm, bands, shingle_n, verify=verify
+            if verify == "estimate":
+                # advisor round 12: an index persisted with a different
+                # num_perm would band on different keys (near-dups
+                # silently MISSED) and null-pad through the agreement
+                # zip_with on any key that did collide — probe one stored
+                # signature's length eagerly (a limit(1) narrow scan,
+                # milliseconds at any index size) and raise instead
+                probe = c_sets.select(F.size(vcol).alias("n")).limit(1).collect()
+                if probe and probe[0]["n"] != num_perm:
+                    raise ValueError(
+                        f"corpus_index signatures carry {probe[0]['n']} "
+                        f"MinHash values but this call uses num_perm="
+                        f"{num_perm} — rebuild the index (or pass the "
+                        f"index's num_perm) so banding and agreement "
+                        f"compare like with like"
+                    )
+        else:
+            c_banded, c_sets = DD.build_corpus_index(
+                corpus, id_col, text_col, num_perm, bands, shingle_n, verify=verify
+            )
+        if exact_owned_rdds is not None:
+            # batch-bounded multi-reference materialization (round 16):
+            # the near-dup plan references `kept` ~5× (banded union+join
+            # sides, both verify set sides, the final anti-join) and each
+            # reference re-runs the whole gated exact-dedup subplan; the
+            # batch index below is referenced 2× each and re-derives the
+            # 32-salt signature aggregation per reference. All three are
+            # O(batch) — checkpoint once, owner (run_ingest_cycle)
+            # unpersists after the corpus partition commits. Measured
+            # sf0.1 (1,750-doc batch, all gates on, 3-cycle A/B):
+            # compact_write median 20.9 s → 14.1 s, cycle wall
+            # 32.2 s → 24.8 s.
+            kept = DD._tracked_local_checkpoint(kept, exact_owned_rdds)
+    with _stage(timings, "compact_banded_ckpt"):
+        b_banded, b_sets = DD.build_corpus_index(
+            kept, id_col, text_col, num_perm, bands, shingle_n, verify=verify,
+            # batch-bounded: materialize the frame both tables derive from
+            # once — the shingle sets (exact) or the signature table, which
+            # IS the estimate tier's b_sets (round 17)
+            owned_rdds=exact_owned_rdds,
         )
+        if exact_owned_rdds is not None:
+            b_banded = DD._tracked_local_checkpoint(b_banded, exact_owned_rdds)
     if exact_owned_rdds is not None:
-        # batch-bounded multi-reference materialization (round 16):
-        # the near-dup plan references `kept` ~5× (banded union+join
-        # sides, both verify set sides, the final anti-join) and each
-        # reference re-runs the whole gated exact-dedup subplan; the
-        # batch index below is referenced 2× each and re-derives the
-        # 32-salt signature aggregation per reference. All three are
-        # O(batch) — checkpoint once, owner (run_ingest_cycle)
-        # unpersists after the corpus partition commits. Measured
-        # sf0.1 (1,750-doc batch, all gates on, 3-cycle A/B):
-        # compact_write median 20.9 s → 14.1 s, cycle wall
-        # 32.2 s → 24.8 s.
-        from timebox_spark.operators.dedup import _tracked_local_checkpoint
-
-        kept = _tracked_local_checkpoint(kept, exact_owned_rdds)
-    _ct = _lap(timings, "kept_ckpt", _ct)
-    b_banded, b_sets = build_corpus_index(
-        kept, id_col, text_col, num_perm, bands, shingle_n, verify=verify,
-        # batch-bounded: materialize the frame both tables derive from
-        # once — the shingle sets (exact) or the signature table, which
-        # IS the estimate tier's b_sets (round 17)
-        owned_rdds=exact_owned_rdds,
-    )
-    if exact_owned_rdds is not None:
-        from timebox_spark.operators.dedup import _tracked_local_checkpoint
-
-        b_banded = _tracked_local_checkpoint(b_banded, exact_owned_rdds)
-        _ct = _lap(timings, "banded_ckpt", _ct)
-        if verify == "exact":
-            b_sets = _tracked_local_checkpoint(b_sets, exact_owned_rdds)
+        with _stage(timings, "compact_index_ckpt"):
+            if verify == "exact":
+                b_sets = DD._tracked_local_checkpoint(b_sets, exact_owned_rdds)
         if batch_index_out is not None:
             # hand the materialized batch index to the owner (round
             # 17): its rows are per-doc functions of text, so the
@@ -750,28 +746,24 @@ def compact_corpus(
             # not a second run of the shingle+signature kernel
             batch_index_out["banded"] = b_banded
             batch_index_out["sets"] = b_sets
-    _ct = _lap(timings, "index_ckpt", _ct)
     c_banded_src, c_sets_src = c_banded, c_sets
     if corpus_band_bloom is not None:
         # gate the banded-tree read (round 15): batch keys that probe
         # negative collide with NOTHING in the corpus index — only
         # maybe-colliding keys reach the (key-sorted) scan
-        from timebox_spark.operators.dedup import prune_to_keys
-        from timebox_spark.operators.sketches import bloom_probe
-
-        bkeys = (
-            b_banded.select("key").filter(F.col("key").isNotNull())
-            .distinct()
-        )
-        kprobe = bloom_probe(
-            bkeys, "key", "key", corpus_band_bloom,
-            band_bloom_m, band_bloom_k,
-        )
-        c_banded_src = prune_to_keys(
-            c_banded, "key",
-            kprobe.filter(F.col("maybe_present")).select("key"),
-        )
-        _ct = _lap(timings, "band_probe", _ct)
+        with _stage(timings, "compact_band_probe"):
+            bkeys = (
+                b_banded.select("key").filter(F.col("key").isNotNull())
+                .distinct()
+            )
+            kprobe = bloom_probe(
+                bkeys, "key", "key", corpus_band_bloom,
+                band_bloom_m, band_bloom_k,
+            )
+            c_banded_src = DD.prune_to_keys(
+                c_banded, "key",
+                kprobe.filter(F.col("maybe_present")).select("key"),
+            )
     # candidates: batch survivor × (corpus ∪ smaller-id batch survivor)
     a = c_banded_src.select(
         F.col(id_col).alias("id_a"), "band", "key", F.lit(True).alias("__corpus")
@@ -800,20 +792,15 @@ def compact_corpus(
         # is batch-bounded (band collisions of one batch); checkpoint
         # it once when the caller owns the lifecycle — it is consumed
         # here AND by the verify join below.
-        from timebox_spark.operators.dedup import (
-            _tracked_local_checkpoint,
-            prune_to_keys,
-        )
-
-        if exact_owned_rdds is not None:
-            cand = _tracked_local_checkpoint(cand, exact_owned_rdds)
-        c_sets_src = prune_to_keys(
-            c_sets, id_col,
-            cand.filter(F.col("__corpus"))
-            .select(F.col("id_a").alias(id_col))
-            .distinct(),
-        )
-        _ct = _lap(timings, "cand_prune", _ct)
+        with _stage(timings, "compact_cand_prune"):
+            if exact_owned_rdds is not None:
+                cand = DD._tracked_local_checkpoint(cand, exact_owned_rdds)
+            c_sets_src = DD.prune_to_keys(
+                c_sets, id_col,
+                cand.filter(F.col("__corpus"))
+                .select(F.col("id_a").alias(id_col))
+                .distinct(),
+            )
     # origin-tagged set rows: the a-side joins on (id, origin) so a
     # corpus row and a batch row sharing an id can never swap sets
     sh_a = c_sets_src.select(
@@ -834,9 +821,7 @@ def compact_corpus(
         # bench's published index_tier fidelity (measurement and
         # rationale live on its docstring). zip_with inside genuinely
         # takes a two-parameter lambda, unlike transform/filter.
-        from timebox_spark.operators.dedup import debiased_agreement
-
-        adj_agree, adj_n = debiased_agreement(
+        adj_agree, adj_n = DD.debiased_agreement(
             "sh_a", "sh_b", num_perm, bands
         )
         # signature LENGTHS must agree (advisor round 12): an index
@@ -917,8 +902,6 @@ def compact_corpus(
     # cluster-keep-one: corpus matches drop first; the remaining batch
     # survivors cluster over their verified pairs and each component
     # keeps its smallest id
-    from timebox_spark.operators.dedup import connected_components
-
     corpus_dropped = (
         verified.filter("__corpus")
         .select(F.col("id_b").alias(id_col))
@@ -949,29 +932,19 @@ def compact_corpus(
     # parquet write under scratch_path (zero collect), so the returned
     # plan carries no checkpoint lineage, matching chain mode's
     # leave-nothing-behind contract (getPersistentRDDs pytest).
-    from timebox_spark.operators.dedup import (
-        ConvergenceError,
-        _tracked_local_checkpoint,
-        unpersist_owned,
-    )
-
     spark = new_batch.sparkSession
     owned: list = []
     dropped_scan: DataFrame | None = None
     try:
-        pairs = _tracked_local_checkpoint(pairs, owned)
+        pairs = DD._tracked_local_checkpoint(pairs, owned)
         if not pairs.rdd.isEmpty():
             try:
-                comp = connected_components(pairs, owned_rdds=owned)
-            except ConvergenceError:
+                comp = DD.connected_components(pairs, owned_rdds=owned)
+            except DD.ConvergenceError:
                 # a batch with a >cap-diameter near-dup chain must not
                 # crash-loop the stream — escalate to star contraction
                 # (identical labels, O(log² n) rounds)
-                from timebox_spark.operators.dedup import (
-                    connected_components_star,
-                )
-
-                comp = connected_components_star(pairs, owned_rdds=owned)
+                comp = DD.connected_components_star(pairs, owned_rdds=owned)
             non_rep = comp.filter(F.col("node") != F.col("component")).select(
                 F.col("node").alias(id_col)
             )
@@ -983,7 +956,7 @@ def compact_corpus(
     finally:
         # runs even when CC raises — the crash path must not be the
         # one that leaks block-manager state
-        unpersist_owned(owned)
+        DD.unpersist_owned(owned)
     if drop_sink is not None:
         near_ids = corpus_dropped
         if dropped_scan is not None:
@@ -1220,11 +1193,6 @@ def curate_and_ingest_stream(
     ))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from timebox_spark.operators.dedup import (
-            _tracked_local_checkpoint,
-            unpersist_owned,
-        )
-
         # Eager owner-released localCheckpoint of the curated batch
         # (round 18): run_ingest_cycle takes several SEPARATE
         # pre-checkpoint actions on the batch (gate probe collects,
@@ -1237,17 +1205,21 @@ def curate_and_ingest_stream(
         # cycle. It also answers the empty-batch probe.
         owned: list = []
         try:
-            batch = _tracked_local_checkpoint(
-                batch_df.select(id_col, text_col, *carry), owned
-            )
-            if batch.isEmpty():
+            with _stage(None, "curate"):
+                batch = DD._tracked_local_checkpoint(
+                    batch_df.select(id_col, text_col, *carry), owned
+                )
+                empty = batch.isEmpty()
+            if empty:
                 # no cycle runs, but a consolidation boundary landing
                 # on this batch still folds — otherwise the fold waits
                 # a whole window while partitions keep accumulating
                 if _consolidation_due(int(batch_id), spec.consolidate_every):
-                    consolidate_ingest_store(
-                        batch_df.sparkSession, store_path, int(batch_id) - 1
-                    )
+                    with _stage(None, "consolidate"):
+                        consolidate_ingest_store(
+                            batch_df.sparkSession, store_path,
+                            int(batch_id) - 1,
+                        )
                 return
             # the module global, looked up per call, so a wrapper
             # installed on the module sees every cycle
@@ -1259,7 +1231,7 @@ def curate_and_ingest_stream(
                 **knobs,
             )
         finally:
-            unpersist_owned(owned)
+            DD.unpersist_owned(owned)
 
     writer = (
         curated.writeStream.foreachBatch(sink)
@@ -1302,7 +1274,7 @@ def _backfill_tree(
     A sketch tree missing source cycles would otherwise probe/count
     as if those rows never existed — the silent failure both sketches
     exist to prevent."""
-    fs, fs_path = _index_fs(spark, store_path)
+    fs, fs_path = DD._index_fs(spark, store_path)
     src_cycles = {
         n for n in _part_dir_ids(fs, fs_path, src_path) if n < cycle_id
     }
@@ -1403,7 +1375,7 @@ def _new_generation(spark: SparkSession, store_path: str) -> str:
     import uuid
 
     token = uuid.uuid4().hex
-    fs, fs_path = _index_fs(spark, store_path)
+    fs, fs_path = DD._index_fs(spark, store_path)
     out = fs.create(fs_path(f"{store_path}/_generation"), True)
     try:
         out.writeUTF(token)
@@ -1435,7 +1407,7 @@ def _store_generation(spark: SparkSession, store_path: str) -> str | None:
     older store, or a marker a crash left unreadable)."""
     from py4j.protocol import Py4JJavaError
 
-    fs, fs_path = _index_fs(spark, store_path)
+    fs, fs_path = DD._index_fs(spark, store_path)
     try:
         inp = fs.open(fs_path(f"{store_path}/_generation"))
     except Py4JJavaError:  # no marker
@@ -1472,7 +1444,7 @@ def _fold_partitions(
     while raising leaves ``tmp`` intact for the resumable rerun."""
     from pyspark.errors import AnalysisException
 
-    fs, fs_path = _index_fs(spark, tree_path)
+    fs, fs_path = DD._index_fs(spark, tree_path)
     if not fs.exists(fs_path(f"{tmp}/_SUCCESS")):
         # rebuild needed — only possible from a live tree. (With a
         # complete tmp we must NOT return early even when the tree is
@@ -1546,7 +1518,7 @@ def consolidate_ingest_store(
     STRICTLY BELOW the running cycle id (``run_ingest_cycle``'s
     ``consolidate_every`` does) — a cycle that might still be
     replayed must never be folded into an earlier partition label."""
-    fs, fs_path = _index_fs(spark, store_path)
+    fs, fs_path = DD._index_fs(spark, store_path)
     generation = _store_generation(spark, store_path)
     trees = [(t, p, "cycle") for t, p in _store_tree_paths(store_path).items()]
     # the hit rows (curate_and_ingest_stream(stream_near_dup=True)) are
@@ -1595,8 +1567,6 @@ def read_store_cms(
     whole tree. Raises if the tree does not exist (stats were never
     enabled) — an empty answer would read as 'frequency 0 for
     everything', the silent under-count the structure forbids."""
-    from timebox_spark.operators.sketches import cms_merge
-
     paths = _store_tree_paths(store_path)
     df = spark.read.parquet(paths["cms"])  # AnalysisException if absent
     if upto_cycle is not None and "cycle" in df.columns:
@@ -1653,15 +1623,18 @@ def run_ingest_cycle(
     ``IngestSpec`` fields; they are validated before the cycle reads
     or writes anything.
 
-    ``timings`` (round 16 — the observability behind bench's
-    ``ingest_loop`` block): pass a dict to receive the cycle's
-    per-stage wall seconds — ``consolidate`` (when it fires),
-    ``state_read_gates`` (tree reads, sketch backfills/merges, gate
-    auto-disable probes), ``compact_write`` (the compaction plan's
-    one action: kept rows computed and committed), ``derived_writes``
-    (fps/bloom/cms trees off the committed partition),
-    ``index_writes`` (banded/sets/bloom_band), ``count``. Purely
-    observational; keys for stages that did not run are absent.
+    The cycle runs as back-to-back ``_stage`` blocks; each one's Spark
+    jobs carry the description ``ingest.<key>``, and with a
+    ``timings`` dict its wall seconds land under ``<key>`` (absent for
+    a stage that did not run):
+
+    - ``consolidate``: the fold, when ``consolidate_every`` is due;
+    - ``state_read_gates``: tree reads, sketch backfills, gate probes;
+    - ``compact_write``: ``compact_corpus`` and the corpus partition
+      commit, with ``compact_corpus``'s ``compact_*`` keys inside it;
+    - ``derived_writes``: the fps, bloom and cms partitions;
+    - ``index_writes``: the banded, sets and bloom_band partitions;
+    - ``count``: the kept-row count.
 
     ``hit_ts`` (a near-dup cycle's ``(id, event time)`` rows of
     ``new_batch``): write one hit row per document the cycle's exact
@@ -1673,20 +1646,13 @@ def run_ingest_cycle(
     spec.check_columns(new_batch.columns)
     from pyspark.errors import AnalysisException
 
-    from timebox_spark.operators.dedup import _fp_hex, corpus_fingerprints
-
     spark = new_batch.sparkSession
     paths = _store_tree_paths(store_path)
     id_col, text_col = spec.id_col, spec.text_col
-    _t = time.perf_counter()
-    if cycle_id == 0:
-        # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
-        # store — any cached tree schemas describe a previous store
-        _new_generation(spark, store_path)
     if _consolidation_due(cycle_id, spec.consolidate_every):
-        consolidate_ingest_store(spark, store_path, cycle_id - 1)
-        _t = _lap(timings, "consolidate", _t)
-    generation = _store_generation(spark, store_path)
+        # cycle 0 never folds, so the generation stamp below follows it
+        with _stage(timings, "consolidate"):
+            consolidate_ingest_store(spark, store_path, cycle_id - 1)
 
     def read_prior(key: str) -> DataFrame | None:
         # probe through Spark's reader, not driver-local os.path — the
@@ -1749,123 +1715,119 @@ def run_ingest_cycle(
         if tree is None:
             return None
         try:
-            fs, fs_path = _index_fs(spark, store_path)
+            fs, fs_path = DD._index_fs(spark, store_path)
             src_bytes = fs.getContentSummary(fs_path(paths[src])).getLength()
         except Exception:
             return tree  # unsized tree: keep the gate
         return None if src_bytes < GATE_MIN_TREE_BYTES else tree
 
-    fps = read_prior("fps")
-    bloom = None
-    if spec.bloom_m is not None:
-        from timebox_spark.operators.sketches import bloom_build
-
-        # the sketch hashes the HEX form of the binary fps — the bits
-        # the hex-probing batch side computes, or true members would
-        # probe definitely-new
-        bloom = gate_tree(
-            "fps", "bloom",
-            lambda df: bloom_build(
-                df.select(_fp_hex("__fp").alias("__fp")), "__fp",
-                spec.bloom_m,
-            ),
-        )
-    prior_cms = None
-    if spec.cms_col is not None:
-        import warnings
-
-        from timebox_spark.operators.sketches import (
-            _cms_stats_mode,
-            cms_build,
-        )
-
-        # GEOMETRY check every cycle (round-14 review): the bloom
-        # tree is implicitly validated because bloom_probe reads it
-        # each cycle, but nothing reads the cms tree during ingest —
-        # a mid-stream cms_width/depth change would silently write
-        # mixed-geometry partitions poisoning the whole tree. The
-        # sentinel scan raises on the FIRST mismatched cycle instead.
-        # MODE check (round 16): a count tree cannot serve a token
-        # budget and a weighted tree cannot serve cap_max — catch the
-        # flip on the FIRST mismatched cycle, before a
-        # mixed-denomination partition poisons the tree (legacy
-        # pre-sentinel trees are count-mode by construction). Both
-        # checks ride ONE aggregation job (round 17 — they were two
-        # back-to-back full-tree scans).
-        prior_cms = read_prior("cms")
-        if prior_cms is not None:
-            _, tree_weighted = _cms_stats_mode(
-                prior_cms, spec.cms_width, spec.cms_depth,
-                "run_ingest_cycle(cms_col=...)",
+    with _stage(timings, "state_read_gates"):
+        if cycle_id == 0:
+            # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
+            # store — any cached tree schemas describe a previous store
+            _new_generation(spark, store_path)
+        generation = _store_generation(spark, store_path)
+        fps = read_prior("fps")
+        bloom = None
+        if spec.bloom_m is not None:
+            # the sketch hashes the HEX form of the binary fps — the bits
+            # the hex-probing batch side computes, or true members would
+            # probe definitely-new
+            bloom = gate_tree(
+                "fps", "bloom",
+                lambda df: bloom_build(
+                    df.select(DD._fp_hex("__fp").alias("__fp")), "__fp",
+                    spec.bloom_m,
+                ),
             )
-            if bool(tree_weighted) != (spec.cms_weight_col is not None):
-                raise ValueError(
-                    f"run_ingest_cycle: the store's cms tree is "
-                    f"{'WEIGHTED' if tree_weighted else 'count-mode'}"
-                    f" but this cycle runs "
-                    f"{'weighted' if spec.cms_weight_col else 'count'}"
-                    f" stats — one tree holds one denomination; "
-                    f"keep the mode that built the store or start a "
-                    f"new store for the other budget"
+        prior_cms = None
+        if spec.cms_col is not None:
+            import warnings
+
+            # GEOMETRY check every cycle (round-14 review): the bloom
+            # tree is implicitly validated because bloom_probe reads it
+            # each cycle, but nothing reads the cms tree during ingest —
+            # a mid-stream cms_width/depth change would silently write
+            # mixed-geometry partitions poisoning the whole tree. The
+            # sentinel scan raises on the FIRST mismatched cycle instead.
+            # MODE check (round 16): a count tree cannot serve a token
+            # budget and a weighted tree cannot serve cap_max — catch the
+            # flip on the FIRST mismatched cycle, before a
+            # mixed-denomination partition poisons the tree (legacy
+            # pre-sentinel trees are count-mode by construction). Both
+            # checks ride ONE aggregation job (round 17 — they were two
+            # back-to-back full-tree scans).
+            prior_cms = read_prior("cms")
+            if prior_cms is not None:
+                _, tree_weighted = _cms_stats_mode(
+                    prior_cms, spec.cms_width, spec.cms_depth,
+                    "run_ingest_cycle(cms_col=...)",
                 )
+                if bool(tree_weighted) != (spec.cms_weight_col is not None):
+                    raise ValueError(
+                        f"run_ingest_cycle: the store's cms tree is "
+                        f"{'WEIGHTED' if tree_weighted else 'count-mode'}"
+                        f" but this cycle runs "
+                        f"{'weighted' if spec.cms_weight_col else 'count'}"
+                        f" stats — one tree holds one denomination; "
+                        f"keep the mode that built the store or start a "
+                        f"new store for the other budget"
+                    )
 
-        # the columns a sketch build needs off a corpus partition
-        _cms_cols = list(dict.fromkeys(
-            c for c in (spec.cms_col, spec.cms_weight_col) if c is not None
-        ))
+            # the columns a sketch build needs off a corpus partition
+            _cms_cols = list(dict.fromkeys(
+                c for c in (spec.cms_col, spec.cms_weight_col) if c is not None
+            ))
 
-        def _cms_from_corpus(df: DataFrame) -> DataFrame:
-            # a pre-cms corpus cycle may predate the column(s)
-            # entirely (store built before stats were enabled with a
-            # narrower batch schema): its rows are honestly
-            # uncountable — write the empty-but-sentineled sketch as
-            # the coverage marker and say so, instead of wedging every
-            # subsequent cycle on an unresolved-column error
-            # (round-14 review).
-            if all(c in df.columns for c in _cms_cols):
+            def _cms_from_corpus(df: DataFrame) -> DataFrame:
+                # a pre-cms corpus cycle may predate the column(s)
+                # entirely (store built before stats were enabled with a
+                # narrower batch schema): its rows are honestly
+                # uncountable — write the empty-but-sentineled sketch as
+                # the coverage marker and say so, instead of wedging every
+                # subsequent cycle on an unresolved-column error
+                # (round-14 review).
+                if all(c in df.columns for c in _cms_cols):
+                    return cms_build(
+                        df.select(*_cms_cols), spec.cms_col, spec.cms_width,
+                        spec.cms_depth, weight=spec.cms_weight_col,
+                    )
+                warnings.warn(
+                    f"run_ingest_cycle: corpus partition lacks "
+                    f"{_cms_cols!r} column(s) (written before cms stats "
+                    f"were enabled) — its rows cannot be counted; "
+                    f"writing an empty sketch partition so coverage "
+                    f"tracking stays consistent",
+                    UserWarning,
+                    stacklevel=3,
+                )
+                empty = df.limit(0).selectExpr(
+                    f"CAST(NULL AS STRING) AS {DD._q(spec.cms_col)}",
+                    "CAST(NULL AS BIGINT) AS __cms_w",
+                )
                 return cms_build(
-                    df.select(*_cms_cols), spec.cms_col, spec.cms_width,
-                    spec.cms_depth, weight=spec.cms_weight_col,
+                    empty, spec.cms_col, spec.cms_width, spec.cms_depth,
+                    weight=None if spec.cms_weight_col is None else "__cms_w",
                 )
-            warnings.warn(
-                f"run_ingest_cycle: corpus partition lacks "
-                f"{_cms_cols!r} column(s) (written before cms stats "
-                f"were enabled) — its rows cannot be counted; "
-                f"writing an empty sketch partition so coverage "
-                f"tracking stays consistent",
-                UserWarning,
-                stacklevel=3,
-            )
-            empty = df.limit(0).selectExpr(
-                f"CAST(NULL AS STRING) AS {_q(spec.cms_col)}",
-                "CAST(NULL AS BIGINT) AS __cms_w",
-            )
-            return cms_build(
-                empty, spec.cms_col, spec.cms_width, spec.cms_depth,
-                weight=None if spec.cms_weight_col is None else "__cms_w",
-            )
 
-        # COVERAGE backfill, the bloom-tree rule: a cms tree missing
-        # some corpus cycles would silently UNDER-count — the one
-        # failure the structure promises away. Parquet column pruning
-        # reads only cms_col off the corpus partitions, never text.
-        _backfill_tree(
-            spark, store_path, paths["corpus"], paths["cms"], cycle_id,
-            _cms_from_corpus,
-        )
-    banded = read_prior("banded") if spec.near_dup else None
-    sets = read_prior("sets") if spec.near_dup else None
-    band_bloom = None
-    if spec.near_dup and spec.band_bloom_m is not None:
-        from timebox_spark.operators.sketches import bloom_build
-
-        band_bloom = gate_tree(
-            "banded", "bloom_band",
-            lambda df: bloom_build(
-                df.select("key"), "key", spec.band_bloom_m
-            ),
-        )
-    _t = _lap(timings, "state_read_gates", _t)
+            # COVERAGE backfill, the bloom-tree rule: a cms tree missing
+            # some corpus cycles would silently UNDER-count — the one
+            # failure the structure promises away. Parquet column pruning
+            # reads only cms_col off the corpus partitions, never text.
+            _backfill_tree(
+                spark, store_path, paths["corpus"], paths["cms"], cycle_id,
+                _cms_from_corpus,
+            )
+        banded = read_prior("banded") if spec.near_dup else None
+        sets = read_prior("sets") if spec.near_dup else None
+        band_bloom = None
+        if spec.near_dup and spec.band_bloom_m is not None:
+            band_bloom = gate_tree(
+                "banded", "bloom_band",
+                lambda df: bloom_build(
+                    df.select("key"), "key", spec.band_bloom_m
+                ),
+            )
     scratch = (
         f"{store_path}/_scratch/cycle={cycle_id}"
         if spec.keep == "cluster"
@@ -1876,15 +1838,8 @@ def run_ingest_cycle(
     # branch); unpersisted right after the corpus partition commits —
     # the fps/index/sketch derivations below re-read the committed
     # partition, never the kept plan
-    from timebox_spark.operators.dedup import unpersist_owned
-
     exact_owned: list = []
     batch_index: dict = {}
-    # compact_corpus's eager sub-step decomposition, folded into the
-    # caller's timings as compact_<step> (round 17) — attributes the
-    # compact_write stage's seconds to the gated-dedup / kernel /
-    # probe actions inside the plan build vs the final write
-    _compact_sub: dict = {}
     drop_sink = None
     if hit_ts is not None and spec.near_dup:
         hits_part = f"{store_path}/near_hits/batch={cycle_id}"
@@ -1903,155 +1858,134 @@ def run_ingest_cycle(
             )
             return back.select(id_col)
 
+    def write_part(df: DataFrame, tree: str) -> DataFrame:
+        # commit this cycle's partition of `tree`; the read-back
+        # pins the written schema, so it runs no inference job
+        path = f"{paths[tree]}/cycle={cycle_id}"
+        df.write.mode("overwrite").parquet(path)
+        back = spark.read.schema(df.schema).parquet(path)
+        _record_tree_schema(paths[tree], generation, back, "cycle")
+        return back
+
     try:
-        kept = compact_corpus(
-            new_batch,
-            corpus=None,
-            id_col=id_col,
-            text_col=text_col,
-            near_dup=spec.near_dup,
-            threshold=spec.threshold,
-            # no index tree yet (first cycle, or exact-only history):
-            # compact_corpus bands the batch against an empty corpus,
-            # so it still near-dedups within the batch itself
-            corpus_index=None if banded is None else (banded, sets),
-            corpus_fps=fps,
-            keep=spec.keep,
-            verify=spec.index_verify,
-            scratch_path=scratch,
-            # the geometries are read only with their sketch frames
-            corpus_bloom=bloom,
-            bloom_m=spec.bloom_m,
-            exact_owned_rdds=exact_owned,
-            corpus_band_bloom=band_bloom,
-            band_bloom_m=spec.band_bloom_m,
-            batch_index_out=batch_index,
-            timings=(
-                None if timings is None else _compact_sub
-            ),
-            drop_sink=drop_sink,
-        )
-        if spec.cap_max is not None:
-            # corpus-horizon frequency budget on the KEPT rows: the
-            # cms tree counts exactly the rows previous cycles kept
-            # (cycle-filtered read ⇒ replay-deterministic); the first
-            # cycle has no tree (cms=None) and applies the plain
-            # in-frame cap
-            from timebox_spark.operators.sampling import cap_per_group
-
-            kept = cap_per_group(
-                kept, spec.cms_col, id_col, spec.cap_max,
-                cms=prior_cms, cms_width=spec.cms_width,
-                cms_depth=spec.cms_depth,
+        with _stage(timings, "compact_write"):
+            kept = compact_corpus(
+                new_batch,
+                corpus=None,
+                id_col=id_col,
+                text_col=text_col,
+                near_dup=spec.near_dup,
+                threshold=spec.threshold,
+                # no index tree yet (first cycle, or exact-only history):
+                # compact_corpus bands the batch against an empty corpus,
+                # so it still near-dedups within the batch itself
+                corpus_index=None if banded is None else (banded, sets),
+                corpus_fps=fps,
+                keep=spec.keep,
+                verify=spec.index_verify,
+                scratch_path=scratch,
+                # the geometries are read only with their sketch frames
+                corpus_bloom=bloom,
+                bloom_m=spec.bloom_m,
+                exact_owned_rdds=exact_owned,
+                corpus_band_bloom=band_bloom,
+                band_bloom_m=spec.band_bloom_m,
+                batch_index_out=batch_index,
+                timings=timings,
+                drop_sink=drop_sink,
             )
-        if spec.token_budget_max is not None:
-            # corpus-horizon TOKEN budget on the KEPT rows (round 16):
-            # the WEIGHTED cms tree sums exactly the weight previous
-            # cycles kept; the first cycle (cms=None) applies the
-            # plain in-frame prefix budget
-            from timebox_spark.operators.sampling import (
-                token_budget_per_group,
+            if spec.cap_max is not None:
+                # corpus-horizon frequency budget on the KEPT rows: the
+                # cms tree counts exactly the rows previous cycles kept
+                # (cycle-filtered read ⇒ replay-deterministic); the first
+                # cycle has no tree (cms=None) and applies the plain
+                # in-frame cap
+                kept = cap_per_group(
+                    kept, spec.cms_col, id_col, spec.cap_max,
+                    cms=prior_cms, cms_width=spec.cms_width,
+                    cms_depth=spec.cms_depth,
+                )
+            if spec.token_budget_max is not None:
+                # corpus-horizon TOKEN budget on the KEPT rows (round 16):
+                # the WEIGHTED cms tree sums exactly the weight previous
+                # cycles kept; the first cycle (cms=None) applies the
+                # plain in-frame prefix budget
+                kept = token_budget_per_group(
+                    kept, spec.cms_col, spec.cms_weight_col,
+                    spec.token_budget_max, key=id_col, cms=prior_cms, cms_width=spec.cms_width,
+                    cms_depth=spec.cms_depth,
+                )
+            kept_disk = write_part(kept, "corpus")
+        with _stage(timings, "derived_writes"):
+            if scratch is not None:
+                # the corpus partition is committed — the dropped-id
+                # scratch the kept plan read is no longer referenced
+                fs, fs_path = DD._index_fs(spark, store_path)
+                fs.delete(fs_path(scratch), True)
+            # fps/index derive from the re-read of what was PHYSICALLY
+            # kept (kept_disk: the lineage below is a trivial scan)
+            fps_disk = write_part(
+                DD.corpus_fingerprints(kept_disk, text_col).select(
+                    F.unhex("__fp").alias("__fp")
+                ).sortWithinPartitions("__fp"),
+                "fps",
             )
-
-            kept = token_budget_per_group(
-                kept, spec.cms_col, spec.cms_weight_col,
-                spec.token_budget_max, key=id_col, cms=prior_cms, cms_width=spec.cms_width,
-                cms_depth=spec.cms_depth,
-            )
-
-        cyc = f"cycle={cycle_id}"
-
-        def write_part(df: DataFrame, tree: str) -> DataFrame:
-            # commit this cycle's partition of `tree`; the read-back
-            # pins the written schema, so it runs no inference job
-            path = f"{paths[tree]}/{cyc}"
-            df.write.mode("overwrite").parquet(path)
-            back = spark.read.schema(df.schema).parquet(path)
-            _record_tree_schema(paths[tree], generation, back, "cycle")
-            return back
-
-        kept_disk = write_part(kept, "corpus")
-        _t = _lap(timings, "compact_write", _t)
-        if timings is not None:
-            for k, v in _compact_sub.items():
-                timings[f"compact_{k}"] = v
-        if scratch is not None:
-            # the corpus partition is committed — the dropped-id
-            # scratch the kept plan read is no longer referenced
-            fs, fs_path = _index_fs(spark, store_path)
-            fs.delete(fs_path(scratch), True)
-        # fps/index derive from the re-read of what was PHYSICALLY
-        # kept (kept_disk: the lineage below is a trivial scan)
-        fps_disk = write_part(
-            corpus_fingerprints(kept_disk, text_col).select(
-                F.unhex("__fp").alias("__fp")
-            ).sortWithinPartitions("__fp"),
-            "fps",
-        )
-        if spec.bloom_m is not None:
-            from timebox_spark.operators.sketches import bloom_build
-
-            # build the sketch off the COMMITTED fps partition (round
-            # 17): the tree just written holds exactly these
-            # fingerprints, so reading it back (narrow binary column)
-            # replaces a second normalize+md5 pass over the batch
-            # text; _fp_hex restores the hex form the sketch hashes
-            write_part(
-                bloom_build(
-                    fps_disk.select(_fp_hex("__fp").alias("__fp")), "__fp",
-                    spec.bloom_m,
-                ),
-                "bloom",
-            )
-        if spec.cms_col is not None:
-            from timebox_spark.operators.sketches import cms_build
-
-            write_part(
-                cms_build(
-                    kept_disk.select(*_cms_cols), spec.cms_col,
-                    spec.cms_width, spec.cms_depth,
-                    weight=spec.cms_weight_col,
-                ),
-                "cms",
-            )
-        _t = _lap(timings, "derived_writes", _t)
-        if spec.near_dup:
-            # the batch's banded/sets tables were materialized
-            # (localCheckpointed) inside compact_corpus — always, since
-            # this cycle owns exact_owned (round 17). Their rows are
-            # per-doc functions of text, so the committed partition's
-            # index is a semi-join on the kept ids (batch-bounded; AQE
-            # broadcasts it), NOT a second run of the shingle+signature
-            # kernel over the committed text. Measured sf0.1
-            # (1,750-doc batch): index_writes ~7 s → ~2 s per cycle;
-            # rows bit-identical (test_ingest_cycle_* pin the trees).
-            kept_ids = kept_disk.select(id_col)
-            nb = batch_index["banded"].join(kept_ids, id_col, "left_semi")
-            ns = batch_index["sets"].join(kept_ids, id_col, "left_semi")
-            # sorted per-cycle partitions (round 15): the gated
-            # compaction's pushed In predicates prune row groups only
-            # on key-/id-sorted data (consolidation range-partitions
-            # too)
-            banded_disk = write_part(nb.sortWithinPartitions("key"), "banded")
-            write_part(ns.sortWithinPartitions(id_col), "sets")
-            if spec.band_bloom_m is not None:
-                from timebox_spark.operators.sketches import bloom_build
-
+            if spec.bloom_m is not None:
+                # build the sketch off the COMMITTED fps partition (round
+                # 17): the tree just written holds exactly these
+                # fingerprints, so reading it back (narrow binary column)
+                # replaces a second normalize+md5 pass over the batch
+                # text; _fp_hex restores the hex form the sketch hashes
                 write_part(
                     bloom_build(
-                        banded_disk.select("key"), "key", spec.band_bloom_m
+                        fps_disk.select(DD._fp_hex("__fp").alias("__fp")),
+                        "__fp", spec.bloom_m,
                     ),
-                    "bloom_band",
+                    "bloom",
                 )
-            _t = _lap(timings, "index_writes", _t)
+            if spec.cms_col is not None:
+                write_part(
+                    cms_build(
+                        kept_disk.select(*_cms_cols), spec.cms_col,
+                        spec.cms_width, spec.cms_depth,
+                        weight=spec.cms_weight_col,
+                    ),
+                    "cms",
+                )
+        if spec.near_dup:
+            with _stage(timings, "index_writes"):
+                # the batch's banded/sets tables were materialized
+                # (localCheckpointed) inside compact_corpus — always, since
+                # this cycle owns exact_owned (round 17). Their rows are
+                # per-doc functions of text, so the committed partition's
+                # index is a semi-join on the kept ids (batch-bounded; AQE
+                # broadcasts it), NOT a second run of the shingle+signature
+                # kernel over the committed text. Measured sf0.1
+                # (1,750-doc batch): index_writes ~7 s → ~2 s per cycle;
+                # rows bit-identical (test_ingest_cycle_* pin the trees).
+                kept_ids = kept_disk.select(id_col)
+                nb = batch_index["banded"].join(kept_ids, id_col, "left_semi")
+                ns = batch_index["sets"].join(kept_ids, id_col, "left_semi")
+                # sorted per-cycle partitions (round 15): the gated
+                # compaction's pushed In predicates prune row groups only
+                # on key-/id-sorted data (consolidation range-partitions
+                # too)
+                banded_disk = write_part(nb.sortWithinPartitions("key"), "banded")
+                write_part(ns.sortWithinPartitions(id_col), "sets")
+                if spec.band_bloom_m is not None:
+                    write_part(
+                        bloom_build(
+                            banded_disk.select("key"), "key", spec.band_bloom_m
+                        ),
+                        "bloom_band",
+                    )
     finally:
         # after the index writes, not right after the corpus commit
         # (round 17): the checkpointed batch index tables feed the
         # committed partition's index derivation above
-        unpersist_owned(exact_owned)
-    n_kept = kept_disk.count()
-    _lap(timings, "count", _t)
-    return n_kept
+        DD.unpersist_owned(exact_owned)
+    with _stage(timings, "count"):
+        return kept_disk.count()
 
 
 def near_dup_hits_stream(
@@ -2134,14 +2068,7 @@ def near_dup_hits_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from timebox_spark.operators.dedup import (
-        _band_rows_sql,
-        _minhash_sig_sql,
-        char_shingles,
-        normalize_text,
-    )
-
-    band_rows = _band_rows_sql("__sig", num_perm, bands)  # validates
+    band_rows = DD._band_rows_sql("__sig", num_perm, bands)  # validates
     r = num_perm // bands
     width = fanout
     if width is None:
@@ -2167,12 +2094,12 @@ def near_dup_hits_stream(
     # regex work on one task). Non-NULL text always has a shingle.
     src = stream.filter(F.col(text_col).isNotNull())
     src = src.repartition(width, F.col(id_col)) if width else src
-    d = src.withColumn("__norm", normalize_text(text_col)).withColumn(
-        "__sh", F.array_distinct(char_shingles("__norm", shingle_n))
+    d = src.withColumn("__norm", DD.normalize_text(text_col)).withColumn(
+        "__sh", F.array_distinct(DD.char_shingles("__norm", shingle_n))
     )
-    keys = (_q(id_col), _q(ts_col))
+    keys = (DD._q(id_col), DD._q(ts_col))
     banded = d.selectExpr(
-        *keys, f"{_minhash_sig_sql('__sh', num_perm)} AS __sig"
+        *keys, f"{DD._minhash_sig_sql('__sh', num_perm)} AS __sig"
     ).selectExpr(*keys, "__sig", band_rows)
 
     out_schema = (
