@@ -375,8 +375,7 @@ def test_downcast_floats_reference_reads(tmp_path):
 def test_spark_write_npb_defaults_to_bucketed(spark, tmp_path):
     """The DEFAULT write path is the distributed bucketed layout
     (round-6 verdict task 6): part-<stamp>.npb files from the
-    applyInPandas writer, not the driver-side part-00000.npb. The
-    single-file driver path now requires an explicit bucket=None."""
+    applyInPandas writer, not a driver-side part-00000.npb."""
     from timebox_spark import schema as tb_schema
 
     pdf = _frame(n=50)
@@ -393,7 +392,3 @@ def test_spark_write_npb_defaults_to_bucketed(spark, tmp_path):
     assert names and "part-00000.npb" not in names
     assert all(len(n) == len("part-YYYYmmddHHMMSS.npb") for n in names)
     assert npb.read_npb(spark, out).count() == 50
-
-    single = str(tmp_path / "out_single")
-    npb.write_npb(sdf, single, bucket=None)  # explicit opt-in
-    assert sorted(os.listdir(single)) == ["part-00000.npb"]

@@ -137,39 +137,59 @@ def test_select_tags_and_between(spark):
     assert n > 0 and str(lo) >= "2024-01-05" and str(hi) <= "2024-01-10 23:59:59.999999"
 
 
-def test_python_datasource_format_npb(spark, tmp_path):
+def _assert_scan_matches_from_pandas(spark, pdf, d):
+    """``read_npb`` of one written file has the schema
+    ``TimeBoxTable.from_pandas`` gives the same frame (names, types and
+    ``timebox`` metadata) and the same rows."""
     import os
 
-    from timebox_spark.sources.npb_datasource import register_npb
+    from timebox_spark.table import TimeBoxTable
 
-    d = str(tmp_path / "ds")
     os.makedirs(d)
-    npb.write_npb_file(_frame(n=30, seed=4), f"{d}/x.npb")
-    npb.write_npb_file(_frame(n=20, seed=5), f"{d}/y.npb")
-    register_npb(spark)
-    df = spark.read.format("npb").load(d)
-    assert df.count() == 50
-    pruned = spark.read.format("npb").option("columns", "tag_f64").load(d)
-    assert pruned.columns == ["ts", "tag_f64"]
-    assert pruned.count() == 50
+    npb.write_npb_file(pdf, f"{d}/x.npb")
+    got = npb.read_npb(spark, d)
+    want = TimeBoxTable.from_pandas(spark, pdf).df
+    assert got.schema == want.schema
+    assert [f.metadata for f in got.schema] == [f.metadata for f in want.schema]
+    assert got.orderBy("ts").collect() == want.orderBy("ts").collect()
+    return got.schema
 
 
-def test_python_datasource_write_npb(spark, tmp_path):
-    from timebox_spark.sources.npb_datasource import register_npb
-
-    register_npb(spark)
-    pdf = _frame(n=40, seed=6)
-    from timebox_spark import schema as tb_schema
-
-    sdf = spark.createDataFrame(
-        tb_schema.widen_pandas_for_arrow(
-            pdf.reset_index().rename(columns={"index": "ts"})
-        )
+def test_read_npb_schema_matches_from_pandas(spark, tmp_path):
+    rng = np.random.RandomState(11)
+    n = 24
+    idx = pd.date_range("2021-03-01", periods=n, freq="37s")
+    pdf = pd.DataFrame(
+        {
+            "a_u8": rng.randint(0, 256, n).astype(np.uint8),
+            "b_u16": rng.randint(0, 1 << 16, n).astype(np.uint16),
+            "c_u32": rng.randint(0, 1 << 32, n, dtype=np.int64).astype(np.uint32),
+            "d_u64": (np.arange(n, dtype=np.uint64) + np.uint64(2**63)),
+            "e_f16": (rng.randint(-512, 512, n) / 4).astype(np.float16),
+            "f_i64": rng.randint(-(10**12), 10**12, n).astype(np.int64),
+            "g_f64": rng.rand(n) * 1000,
+        },
+        index=idx,
     )
-    out = str(tmp_path / "dsw")
-    sdf.repartition(2).write.format("npb").mode("overwrite").save(out)
-    back = spark.read.format("npb").load(out)
-    assert back.count() == 40
-    # overwrite replaces, not appends
-    sdf.repartition(2).write.format("npb").mode("overwrite").save(out)
-    assert spark.read.format("npb").load(out).count() == 40
+    schema = _assert_scan_matches_from_pandas(spark, pdf, str(tmp_path / "tags"))
+    assert schema["d_u64"].dataType.simpleString() == "decimal(20,0)"
+    assert schema["e_f16"].metadata["timebox"] == {
+        "type_char": "f", "bytes_per_value": 2, "widened": True
+    }
+
+
+def test_read_npb_keeps_int_identifier_metadata(spark, tmp_path):
+    n = 10
+    idx = pd.date_range("2021-03-01", periods=n, freq="1h")
+    pdf = pd.DataFrame(
+        {
+            3: np.arange(n, dtype=np.uint8),
+            10: np.arange(n, dtype=np.int32) * -7,
+            300: np.linspace(0.0, 1.0, n),
+        },
+        index=idx,
+    )
+    schema = _assert_scan_matches_from_pandas(spark, pdf, str(tmp_path / "ints"))
+    assert [f.metadata["timebox"]["int_identifier"] for f in schema.fields[1:]] == [
+        3, 10, 300
+    ]

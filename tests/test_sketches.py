@@ -811,8 +811,8 @@ def test_gated_dedup_maybe_overflow_falls_back_identical(
 
     monkeypatch.setattr(DD, "prune_to_keys", spy)
     gated = kept(
-        corpus_bloom=bloom, bloom_m=m, bloom_k=k,
-        corpus_band_bloom=band_bloom, band_bloom_m=m, band_bloom_k=k,
+        corpus_bloom=bloom, bloom_m=m,
+        corpus_band_bloom=band_bloom, band_bloom_m=m,
     )
     assert fell_back == [site]
     assert gated == plain

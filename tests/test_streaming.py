@@ -2667,7 +2667,7 @@ def test_compact_corpus_band_gate_identical_results(spark, tmp_path):
                 batch, corpus_index=(banded, sets), near_dup=True,
                 threshold=0.5, keep=keep,
                 scratch_path=str(tmp_path / f"gated_{keep}"),
-                corpus_band_bloom=bb, band_bloom_m=m, band_bloom_k=k,
+                corpus_band_bloom=bb, band_bloom_m=m,
                 exact_owned_rdds=owned,
             ).collect()
         }
@@ -2724,7 +2724,6 @@ def test_compact_corpus_band_gate_prunes_index_scans(spark, tmp_path):
         out = ingest.compact_corpus(
             batch, corpus_index=(banded_t, sets_t), near_dup=True,
             threshold=0.5, corpus_band_bloom=bb, band_bloom_m=m,
-            band_bloom_k=k,
         )
         got = {r["doc_id"] for r in out.collect()}
     finally:

@@ -278,27 +278,6 @@ def required_bytes_signed(min_value: int, max_value: int) -> int:
     raise ValueError(f"range [{min_value}, {max_value}] exceeds int64")
 
 
-def min_width_report(df: DataFrame, cols: list[str]) -> dict[str, dict]:
-    """One-pass min/max over all columns, then the width ladder per
-    column (reference computes np.amax/np.amin per array then picks a
-    byte width, numpy_utils.py:224-236 + binary.py:5-43)."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-    row = df.agg(*aggs).collect()[0]
-    report = {}
-    for c in cols:
-        lo, hi = row[f"{c}__min"], row[f"{c}__max"]
-        entry = {"min": lo, "max": hi}
-        if lo is not None and hi is not None and float(lo).is_integer() and float(hi).is_integer():
-            lo_i, hi_i = int(lo), int(hi)
-            entry["bytes_signed"] = required_bytes_signed(lo_i, hi_i)
-            if lo_i >= 0:
-                entry["bytes_unsigned"] = required_bytes_unsigned(hi_i)
-        report[c] = entry
-    return report
-
-
 # ---------------------------------------------------------------- scalable global lag
 
 def bucketed_prev(

@@ -82,19 +82,6 @@ def punct_count(col: str = "text") -> Column:
     return F.size(F.regexp_extract_all(F.col(col), F.lit(PUNCT_RE), F.lit(0)))
 
 
-def quality_features(df: DataFrame, col: str = "text") -> DataFrame:
-    """Length / token / punctuation / stopword features, all integer
-    counts (hash-stable across engines)."""
-    return df.select(
-        "*",
-        F.length(col).alias("q_chars"),
-        token_count(col).alias("q_tokens"),
-        bpe_ish_token_count(col).alias("q_bpe_tokens"),
-        punct_count(col).alias("q_punct"),
-        stopword_count(col).alias("q_stopwords"),
-    )
-
-
 def quality_score_q(col: str = "text", scale: int = 1_000_000) -> Column:
     """Deterministic [0,1] quality score, quantized to an integer.
 

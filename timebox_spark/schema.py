@@ -4,8 +4,11 @@ The reference's entire type system is ``type_char ∈ {'i','u','f'}`` ×
 ``bytes_per_value ∈ {1,2,4,8}`` (/root/reference/timebox/utils/
 numpy_utils.py:60-100) with a datetime64[s] index. Spark has no
 unsigned or half-float types, so we widen losslessly and record the
-original type in ``StructField.metadata["timebox"]`` so a round trip
-through the ``.npb`` codec (timebox_spark.sources.npb) can narrow back.
+original type in ``StructField.metadata["timebox"]``: the field keeps
+its reference type (and an integer tag identifier) that the widened
+Spark type alone no longer shows. ``TimeBoxTable.from_pandas`` and the
+``.npb`` scan (``timebox_spark.sources.npb.read_npb``) both take their
+schema and widening from this module, so the two ingest paths agree.
 
 Widening rules (SURVEY.md §1.4):
   u8→Short, u16→Int, u32→Long, u64→Decimal(20,0), f16→Float.
@@ -42,7 +45,7 @@ _WIDENED = {("u", 1), ("u", 2), ("u", 4), ("u", 8), ("f", 2)}
 # signed/float targets below are the numpy twins of _TYPE_MAP's Spark
 # targets, so the Arrow fast path always applies. uint64 has no signed
 # 64-bit container; it goes through object-of-Decimal for the
-# Decimal(20,0) field (driver-local pandas only — never in a kernel).
+# Decimal(20,0) field.
 _NUMPY_WIDEN: dict[str, str] = {
     "uint8": "int16",
     "uint16": "int32",
@@ -55,11 +58,12 @@ def widen_pandas_for_arrow(pdf):
     """Return a copy of ``pdf`` with unsigned/half-float columns widened
     to Arrow-convertible numpy dtypes (values unchanged).
 
-    The uint64 branch is a PER-ROW Decimal list build — acceptable only
-    because this runs on the driver over a user-supplied pandas frame
-    at ingest (never inside a distributed kernel), and uint64 columns
-    with the top bit in use are a corner case; a frame with millions of
-    uint64 rows should be pre-cast by the caller instead."""
+    The uint64 branch is a PER-ROW Decimal list build. It runs on the
+    driver in ``TimeBoxTable.from_pandas`` and per decoded file inside
+    ``read_npb``'s ``mapInPandas`` kernel, where it is the same per-row
+    cost the scan's uint64 → Decimal(20,0) conversion always had.
+    uint64 columns are a corner case of the type system; a frame with
+    millions of uint64 rows should be pre-cast by the caller instead."""
     import decimal
 
     out = pdf.copy(deep=False)
@@ -70,16 +74,6 @@ def widen_pandas_for_arrow(pdf):
         elif name == "uint64":
             out[col] = [decimal.Decimal(int(v)) for v in out[col].to_numpy()]
     return out
-
-# Inverse map for narrowing back when the Spark type was not widened.
-_SPARK_TO_TYPE: dict[str, tuple[str, int]] = {
-    "byte": ("i", 1),
-    "short": ("i", 2),
-    "integer": ("i", 4),
-    "long": ("i", 8),
-    "float": ("f", 4),
-    "double": ("f", 8),
-}
 
 
 def spark_type_for(type_char: str, bytes_per_value: int) -> T.DataType:
@@ -147,15 +141,3 @@ def timebox_schema_from_pandas(pdf) -> T.StructType:
         fields.append(field_for(col, char, width))
     return T.StructType(fields)
 
-
-def original_type(field: T.StructField) -> tuple[str, int]:
-    """Recover the reference (type_char, width) for a field: from
-    metadata if the column was widened at ingest, else from the Spark
-    type itself."""
-    meta = field.metadata.get(METADATA_KEY) if field.metadata else None
-    if meta and "type_char" in meta:
-        return meta["type_char"], int(meta["bytes_per_value"])
-    key = field.dataType.simpleString()
-    if key in _SPARK_TO_TYPE:
-        return _SPARK_TO_TYPE[key]
-    raise ValueError(f"no timebox type for Spark field {field}")

@@ -37,8 +37,7 @@ the binaryFile source and decodes per-file inside ``mapInPandas`` —
 each file is one Arrow batch task, so a million-file corpus decodes
 with full cluster parallelism. ``write_npb`` emits one file per time
 bucket via ``applyInPandas`` (each bucket must respect the format's
-2^32-row cap), or a single driver-side file for exact
-single-file parity.
+2^32-row cap). Both take their Spark types from ``timebox_spark.schema``.
 """
 
 from __future__ import annotations
@@ -466,8 +465,11 @@ def read_npb_file(path: str) -> pd.DataFrame:
 def read_npb(spark, path_glob: str, columns: list[str] | None = None,
              time_range: tuple | None = None):
     """Distributed scan of .npb files: binaryFile source + per-file
-    decode in mapInPandas. Column schema is read from the FIRST file's
-    header (driver-side, header bytes only).
+    decode in mapInPandas. The schema is
+    ``schema.timebox_schema_from_pandas`` of the FIRST file, decoded on
+    the driver, so each field gets the type and ``timebox`` metadata
+    ``TimeBoxTable.from_pandas`` gives it; the kernel widens with
+    ``schema.widen_pandas_for_arrow``.
 
     ``columns``: project only these tags (block-skipping decode).
     ``time_range``: (start, end) — files whose [start, end] span
@@ -475,9 +477,9 @@ def read_npb(spark, path_glob: str, columns: list[str] | None = None,
     and rows are filtered exactly; together these close the
     reference's partial-read TODO (timebox.py:105) at cluster scale.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from timebox_spark import schema as tb_schema
     from timebox_spark.session import ship_package
 
     ship_package(spark)
@@ -487,22 +489,14 @@ def read_npb(spark, path_glob: str, columns: list[str] | None = None,
         raise NpbFormatError(f"no npb files at {path_glob}")
     sample = read_npb_file(first[0]["path"].replace("file:", ""))
 
-    fields = [T.StructField("ts", T.TimestampType(), False)]
-    np_to_spark = {
-        "int8": T.ByteType(), "int16": T.ShortType(), "int32": T.IntegerType(),
-        "int64": T.LongType(), "uint8": T.ShortType(), "uint16": T.IntegerType(),
-        "uint32": T.LongType(), "uint64": T.DecimalType(20, 0),
-        "float16": T.FloatType(), "float32": T.FloatType(), "float64": T.DoubleType(),
-    }
-    keep = [str(c) for c in sample.columns]
+    full = tb_schema.timebox_schema_from_pandas(sample)
+    keep = full.fieldNames()[1:]
     if columns is not None:
         missing = set(columns) - set(keep)
         if missing:
             raise NpbFormatError(f"unknown npb columns: {sorted(missing)}")
         keep = [c for c in keep if c in set(columns)]
-    for c in keep:
-        fields.append(T.StructField(c, np_to_spark[str(sample[c].dtype)], True))
-    schema = T.StructType(fields)
+    schema = T.StructType([full["ts"]] + [full[c] for c in keep])
     colnames = keep
     tr = time_range
 
@@ -519,37 +513,25 @@ def read_npb(spark, path_glob: str, columns: list[str] | None = None,
                 out = frame.reset_index().rename(columns={"index": "ts"})
                 if tr is not None:
                     out = out[(out["ts"] >= pd.Timestamp(tr[0])) & (out["ts"] <= pd.Timestamp(tr[1]))]
-                for c in colnames:
-                    if str(out[c].dtype) == "uint64":
-                        # lossless uint64 → DecimalType(20,0) via
-                        # python Decimal objects (Arrow decimal128)
-                        from decimal import Decimal
-
-                        out[c] = out[c].map(lambda v: Decimal(int(v)))
-                    elif str(out[c].dtype).startswith("uint"):
-                        out[c] = out[c].astype(f"int{min(64, 16 * out[c].dtype.itemsize)}")
-                    elif str(out[c].dtype) == "float16":
-                        out[c] = out[c].astype("float32")
-                yield out[["ts"] + colnames]
+                yield tb_schema.widen_pandas_for_arrow(out[["ts"] + colnames])
 
     return bin_df.select("content").mapInPandas(decode, schema=schema)
 
 
-def write_npb(df, path: str, bucket: str | None = "1 day", **kw) -> None:
-    """DataFrame -> .npb. With ``bucket`` (default ``'1 day'``): one
-    file per time bucket via applyInPandas — the scalable layout
-    (each bucket independently within format caps), and the DEFAULT:
-    a distributed engine must not silently funnel a table through the
-    driver. Pass ``bucket=None`` to explicitly opt into a single
-    driver-side file (``toPandas`` — bounded by driver memory and the
-    format's own 2^32-row cap; fine for small exports, never for
-    corpus-scale data).
+def write_npb(df, path: str, bucket: str = "1 day", **kw) -> None:
+    """DataFrame -> .npb, one file per ``bucket`` time window (default
+    ``'1 day'``) via applyInPandas: each bucket is independently
+    within the format's caps, and no table is funnelled through the
+    driver. There is no single-file mode: for a small frame that must
+    land in one file, ``write_npb_file(df.toPandas().set_index("ts"),
+    path)`` is that write, bounded by driver memory and the format's
+    2^32-row cap.
 
     Timestamps must start second-aligned per bucket (the format anchors
     at an int64-seconds start; ``encode_timebox`` raises otherwise) —
     ``date_trunc('second', ts)`` first for sub-second event data.
 
-    The bucketed path assumes executors and driver share ``path``
+    The writer assumes executors and driver share ``path``
     (local mode or a shared POSIX FS — the same assumption the
     reference's single-process writer makes). Task-commit protocol:
     tasks write complete files into a job-scoped staging subdirectory
@@ -557,12 +539,6 @@ def write_npb(df, path: str, bucket: str | None = "1 day", **kw) -> None:
     succeeds does the driver move them into ``path`` — a failed or
     speculatively retried job never leaves partial or orphaned files
     visible (the staging dir is removed)."""
-    os.makedirs(path, exist_ok=True)
-    if bucket is None:
-        pdf = df.toPandas().set_index("ts")
-        write_npb_file(pdf, os.path.join(path, "part-00000.npb"), **kw)
-        return
-
     import shutil
     import uuid
 
@@ -570,6 +546,7 @@ def write_npb(df, path: str, bucket: str | None = "1 day", **kw) -> None:
 
     from timebox_spark.session import ship_package
 
+    os.makedirs(path, exist_ok=True)
     ship_package(df.sparkSession)
     bucketed = df.withColumn("__bucket", F.window(F.col("ts"), bucket).start)
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")

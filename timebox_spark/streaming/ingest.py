@@ -484,11 +484,9 @@ def compact_corpus(
     scratch_path: str | None = None,
     corpus_bloom: DataFrame | None = None,
     bloom_m: int = 1 << 20,
-    bloom_k: int = 5,
     exact_owned_rdds: list | None = None,
     corpus_band_bloom: DataFrame | None = None,
     band_bloom_m: int = 1 << 26,
-    band_bloom_k: int = 5,
     batch_index_out: dict | None = None,
     timings: dict | None = None,
     drop_sink=None,
@@ -579,8 +577,8 @@ def compact_corpus(
     (O(corpus·bands) rows) and the verify tree (O(corpus) signature/
     shingle arrays — the largest state tree) even when the batch has
     few or no collisions. With a ``bloom_build`` sketch of the
-    banded tree's ``key`` column (same ``band_bloom_m``/
-    ``band_bloom_k``), batch band keys that probe negative DEFINITELY
+    banded tree's ``key`` column (same ``band_bloom_m``, the
+    ``bloom_probe`` default k), batch band keys that probe negative DEFINITELY
     collide with nothing (Bloom has no false negatives) — only the
     maybe-colliding keys (true collisions + the design fpr of the
     batch's keys) prune the banded scan, and the verify tree is then
@@ -672,7 +670,6 @@ def compact_corpus(
             # the O(corpus) fps anti-join (see incremental_exact_dedup)
             corpus_bloom=corpus_bloom,
             bloom_m=bloom_m,
-            bloom_k=bloom_k,
             # probe materialization (round-14 review): ONLY when the
             # caller owns the lifecycle — the returned plan then carries
             # the probe checkpoint's lineage, and the owner unpersists
@@ -757,8 +754,7 @@ def compact_corpus(
                 .distinct()
             )
             kprobe = bloom_probe(
-                bkeys, "key", "key", corpus_band_bloom,
-                band_bloom_m, band_bloom_k,
+                bkeys, "key", "key", corpus_band_bloom, band_bloom_m
             )
             c_banded_src = DD.prune_to_keys(
                 c_banded, "key",
@@ -1467,21 +1463,13 @@ def _fold_partitions(
             # fold (tmp already complete) keeps its first layout
             folded = transform(folded)
         folded.write.mode("overwrite").parquet(tmp)
-    prefix = f"{part_col}="
     if fs.exists(fs_path(tree_path)):
-        for st in fs.listStatus(fs_path(tree_path)):
-            name = st.getPath().getName()
-            if not name.startswith(prefix):
-                continue
-            try:
-                n = int(name[len(prefix):])
-            except ValueError:
-                continue
+        for n in _part_dir_ids(fs, fs_path, tree_path, part_col):
             if n <= upto:
-                fs.delete(st.getPath(), True)
+                fs.delete(fs_path(f"{tree_path}/{part_col}={n}"), True)
     else:
         fs.mkdirs(fs_path(tree_path))
-    target = f"{tree_path}/{prefix}{upto}"
+    target = f"{tree_path}/{part_col}={upto}"
     if not fs.rename(fs_path(tmp), fs_path(target)):
         raise IOError(
             f"consolidation rename failed: {tmp} -> {target}; folded "
