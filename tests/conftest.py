@@ -25,7 +25,7 @@ SF_CORRECT = os.environ.get("TIMEBOX_TEST_SF01_DIR", "/root/testdata/sf0.01")
 # here are all independently re-checked by the driver's own
 # CORRECTNESS run over the 50 declared keys. Tests can also opt in
 # directly with @pytest.mark.slow; the nodeid list below is the
-# measured set (durations in plans/r18/measurements/ notes).
+# measured set (the > 10 s calls of that `--durations=0` run).
 RUN_SLOW = bool(os.environ.get("TIMEBOX_FULL_TESTS"))
 
 SLOW_NODEIDS = {
@@ -43,7 +43,7 @@ SLOW_NODEIDS = {
     "test_plans.py::test_warc_http_retry_backoff_and_span_coalescing",
     "test_examples.py::test_example_runs_end_to_end[streaming_ingest.py]",
     "test_oracle_queries.py::test_query_matches_oracle[q21_text_aggregates]",
-    "test_streaming.py::test_tree_schema_cache_invalidated_on_recreated_store",
+    "test_streaming.py::test_store_recreated_at_the_same_path_reads_its_own_trees",
     "test_oracle_queries.py::test_query_matches_oracle[q54_curation_pipeline]",
     "test_examples.py::test_example_runs_end_to_end[domain_ranking.py]",
     "test_examples.py::test_example_runs_end_to_end[multimodal_features.py]",

@@ -118,29 +118,3 @@ def test_round5_operator_edge_cases(spark):
         S.portable_hard_negatives(lab, lab.filter(F.col("vec_id") == 0)).count()
         == 0
     )
-
-
-def test_engine_llm_facade_delegates(spark, tmp_path):
-    """eng.llm methods are thin delegates to the documented
-    operators — same results as calling them directly."""
-    from timebox_spark.api import TimeBoxEngine
-    from timebox_spark.operators.pipeline import curate
-    from timebox_spark.plans.tables import load
-
-    from tests.conftest import SF_SMOKE
-
-    eng = TimeBoxEngine(spark)
-    docs = load(spark, SF_SMOKE, "documents")
-    a = sorted(
-        map(tuple, eng.llm.curate(docs, langs=("en",), min_tokens=3).collect())
-    )
-    b = sorted(map(tuple, curate(docs, langs=("en",), min_tokens=3).collect()))
-    assert a == b
-    emb = eng.llm.embed(docs.limit(5))
-    assert emb.columns[-1] == "embedding"
-    assert len(emb.first()["embedding"]) > 0
-    m = eng.llm.export(
-        docs, str(tmp_path / "facade_export"), n_shards=2,
-        langs=("en", "es"), min_quality_q=0, min_tokens=3,
-    ).collect()
-    assert sum(r["n_rows"] for r in m) > 0

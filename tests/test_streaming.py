@@ -2995,15 +2995,13 @@ def test_curate_and_ingest_stream_empty_batch_still_consolidates(
     )
 
 
-def test_tree_schema_cache_invalidated_on_recreated_store(
+def test_store_recreated_at_the_same_path_reads_its_own_trees(
     spark, tmp_path
 ):
-    """Round 18: read_prior's per-cycle schema inference is cached per
-    tree path; a store RECREATED at the same path (cycle-0 seed) must
-    drop the cached shapes, and a consolidation (every tree rewritten
-    in the same shapes) carries them over — results stay identical to
-    a cache-cold run."""
-    store = str(tmp_path / "store_schema_cache")
+    """A store RECREATED at the same path (deleted, then seeded again
+    from cycle 0) and consolidated on the way compacts against its own
+    trees only: both runs keep the same documents."""
+    store = str(tmp_path / "store_recreated")
 
     def run(cycles):
         import shutil
@@ -3025,26 +3023,22 @@ def test_tree_schema_cache_invalidated_on_recreated_store(
          (2, "second document concerning columnar storage codecs")],
         [(3, "first document about rivers and meadows far away"),  # dup of 1
          (4, "a wholly new third document about watermark state")],
-        # cycle 2 consolidates cycles 0-1 first (a new generation),
-        # then compacts against the folded trees
+        # cycle 2 consolidates cycles 0-1 first, then compacts
+        # against the folded trees
         [(5, "a wholly new third document about watermark state"),  # dup of 4
          (6, "yet another fresh document on join strategies here")],
     ]
     first = run(cycles)
-    # the cache is now warm for this exact store path — recreate the
-    # store from scratch at the SAME path; cycle 0 must invalidate
+    # recreate the store from scratch at the SAME path
     second = run(cycles)
     assert first == second == {1, 2, 4, 6}, (first, second)
-    # and the cache holds entries for the live store's trees again
-    paths = ingest._store_tree_paths(store)
-    assert paths["fps"] in ingest._TREE_SCHEMA_CACHE
 
 
-def test_tree_schema_cache_keyed_on_store_generation(spark, tmp_path):
+def test_store_copied_over_another_reads_its_own_trees(spark, tmp_path):
     """A store replaced at the same path by a COPY of another store
-    (no cycle-0 seed, no consolidation at that path) must not be read
-    with the cached tree shapes of the store it replaced: cycles 0-1
-    of an exact-verify store at P cache an ``__sh`` verify tree, P is
+    (no cycle-0 seed, no consolidation at that path) is read with the
+    copy's tree shapes, not those of the store it replaced: cycles 0-1
+    of an exact-verify store at P write an ``__sh`` verify tree, P is
     swapped for an estimate-verify store (``__sig``), and cycle 2 with
     index_verify='estimate' must compact against the copy's trees."""
     import shutil
@@ -3066,7 +3060,7 @@ def test_tree_schema_cache_keyed_on_store_generation(spark, tmp_path):
                     spark.createDataFrame(rows, "doc_id long, text string"),
                     store, cid, index_verify=verify,
                 )
-        # cycle 1 at P cached the exact store's tree shapes
+        # the same driver just read and wrote P's exact-verify trees
         shutil.rmtree(p)
         shutil.copytree(q, p)
         ingest.run_ingest_cycle(
@@ -3432,3 +3426,116 @@ def test_consolidation_launches_no_inference_job(spark, tmp_path, monkeypatch):
         dirs = [d for d in os.listdir(f"{store}/{t}") if "=" in d]
         assert dirs == [f"{col}=1"], (t, dirs)
         assert _tree_rows(spark, f"{store}/{t}", [col]) == before[t], t
+
+
+@pytest.fixture(scope="module")
+def two_cycle_store(spark, tmp_path_factory):
+    """A two-cycle exact-verify store with every tree (cms included);
+    tests copy it rather than write to it."""
+    store = str(tmp_path_factory.mktemp("two_cycle") / "store")
+    batches = _digest_batches(spark)
+    for c in (0, 1):
+        _run_digest_cycle(store, batches[c], c, "exact")
+    return store
+
+
+def _job_descriptions(spark, fn) -> list:
+    """The descriptions of the Spark jobs ``fn()`` launches."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc._jsc.sc().statusStore()
+    out = []
+    for j in _group_job_ids(spark, group):
+        desc = jobs.job(j).description()
+        out.append(desc.get() if desc.isDefined() else None)
+    return out
+
+
+def test_copied_store_state_reads_launch_no_job(spark, tmp_path, two_cycle_store):
+    """A store copied to a new path is read with the schemas its own
+    footers carry, so a driver that never wrote it (a restart, a
+    copy) reads its trees without a schema-inference job: cycle 2 on
+    the copy, with no sketch probe or cms check to run, launches no
+    job under ``ingest.state_read_gates``."""
+    import shutil
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(two_cycle_store, copy)
+    batch = _digest_batches(spark)[2]
+    descs = _job_descriptions(
+        spark,
+        lambda: ingest.run_ingest_cycle(
+            batch, copy, 2, bloom_m=None, band_bloom_m=None
+        ),
+    )
+    assert "ingest.compact_write" in descs, descs  # the cycle did run
+    assert "ingest.state_read_gates" not in descs, descs
+
+
+def test_consolidating_a_copied_store_launches_no_inference_job(
+    spark, tmp_path, monkeypatch, two_cycle_store
+):
+    """Outside its writes, a consolidation of a store copied to a new
+    path launches no Spark job: every tree is read with the schema of
+    its newest partition's footer."""
+    import shutil
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(two_cycle_store, copy)
+    sc = spark.sparkContext
+    group = f"consolidate-copy-{uuid.uuid4().hex[:8]}"
+    writes = f"{group}-writes"
+    write = DataFrameWriter.parquet
+
+    def tagged_write(self, *args, **kwargs):
+        sc.setJobGroup(writes, writes)
+        try:
+            return write(self, *args, **kwargs)
+        finally:
+            sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", tagged_write)
+    sc.setJobGroup(group, group)
+    try:
+        ingest.consolidate_ingest_store(spark, copy, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _group_job_ids(spark, group) == []
+    assert _group_job_ids(spark, writes)  # the folds did write
+
+
+def test_index_and_cms_loads_launch_no_job(
+    spark, tmp_path, monkeypatch, two_cycle_store
+):
+    """``load_corpus_index`` and ``read_store_cms`` read their
+    Spark-written trees with the schema the footers carry, so the
+    reads launch no Spark job. (``cms_merge`` runs its sentinel check
+    eagerly by design; it is stubbed out while the jobs are counted.)"""
+    from timebox_spark.operators import dedup as DD
+
+    path = str(tmp_path / "idx")
+    DD.save_corpus_index(DD.build_corpus_index(_digest_batches(spark)[0]), path)
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "cms_merge", lambda df: df)
+        assert _job_descriptions(
+            spark,
+            lambda: (
+                DD.load_corpus_index(spark, path),
+                ingest.read_store_cms(spark, two_cycle_store),
+            ),
+        ) == []
+    banded, sets = DD.load_corpus_index(spark, path)
+    assert {r["doc_id"] for r in banded.select("doc_id").collect()} == set(range(6))
+    assert sets.count() == 6
+    assert ingest.read_store_cms(spark, two_cycle_store).count() > 0

@@ -16,11 +16,10 @@ from timebox_spark.table import TimeBoxTable
 
 
 class TimeBoxEngine:
-    """Facade: load/register tables, run SQL and the operator API."""
+    """Facade: load and register tables, run SQL."""
 
     def __init__(self, spark: SparkSession, sf_dir: str | None = None):
         self.spark = ensure_runtime_confs(spark)
-        self.llm = CurationAPI(self.spark)
         if sf_dir:
             self.register_testdata(sf_dir)
 
@@ -41,271 +40,3 @@ class TimeBoxEngine:
     def load_timebox(self, path: str) -> TimeBoxTable:
         return TimeBoxTable.load(self.spark, path)
 
-
-class CurationAPI:
-    """One import point for the LLM training-data surface, so an
-    engine user drives the whole pipeline off the facade:
-
-        eng = TimeBoxEngine(spark, sf_dir)
-        eng.llm.curate(docs)                       # gate + dedup + split
-        eng.llm.near_dups(docs)                    # MinHash+LSH pairs
-        eng.llm.search(emb, queries)               # ANN top-k
-        eng.llm.export(docs, path)                 # one-call shards
-
-    Thin delegation only — every method is the documented operator
-    from ``timebox_spark.operators``; the facade adds no behavior.
-    """
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def curate(self, docs: DataFrame, **kwargs) -> DataFrame:
-        from timebox_spark.operators.pipeline import curate
-
-        return curate(docs, **kwargs)
-
-    def export(self, docs: DataFrame, path: str, **kwargs) -> DataFrame:
-        from timebox_spark.operators.pipeline import curate_to_shards
-
-        return curate_to_shards(docs, path, **kwargs)
-
-    def exact_dups(self, docs: DataFrame, **kwargs) -> DataFrame:
-        from timebox_spark.operators.dedup import exact_dedup
-
-        return exact_dedup(docs, **kwargs)
-
-    def near_dups(self, docs: DataFrame, **kwargs) -> DataFrame:
-        from timebox_spark.operators.dedup import minhash_dedup
-
-        return minhash_dedup(docs, **kwargs)
-
-    def clusters(self, docs: DataFrame, pairs: DataFrame, **kw) -> DataFrame:
-        from timebox_spark.operators.dedup import dedup_clusters
-
-        return dedup_clusters(docs, pairs, **kw)
-
-    def search(self, corpus: DataFrame, queries: DataFrame, **kw) -> DataFrame:
-        from timebox_spark.operators.similarity import ivf_topk
-
-        return ivf_topk(corpus, queries, **kw)
-
-    def embed(self, docs: DataFrame, text_col: str = "text") -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from timebox_spark.operators.text import hashed_embedding
-
-        return docs.withColumn("embedding", hashed_embedding(text_col))
-
-    def quality(self, docs: DataFrame, text_col: str = "text") -> DataFrame:
-        from timebox_spark.operators.text import token_features
-
-        return token_features(docs, text_col)
-
-    def mix(self, docs: DataFrame, group_col: str = "lang", **kw) -> DataFrame:
-        from timebox_spark.operators.sampling import mixture_sample
-
-        return mixture_sample(docs, group_col=group_col, **kw)
-
-    def dedup_lines(self, docs: DataFrame, lines_col=None, **kw) -> DataFrame:
-        """RefinedWeb-style cross-document line removal; defaults to
-        newline lines of the ``text`` column."""
-        from pyspark.sql import functions as F
-
-        from timebox_spark.operators.dedup import line_dedup
-
-        if lines_col is None:
-            lines_col = F.split("text", "\n")
-        return line_dedup(docs, lines_col, **kw)
-
-    def train_bpe(self, docs: DataFrame, **kw):
-        """Train a BPE merge list on the corpus; returns (merges,
-        final vocab). Tokenize with functions.apply_bpe(merges)."""
-        from timebox_spark.operators.text import bpe_train
-
-        return bpe_train(docs, **kw)
-
-    def cap(self, docs: DataFrame, group_col: str = "source", **kw) -> DataFrame:
-        """Per-domain/source frequency cap: at most k rows per group
-        under a deterministic order (the CommonCrawl-style guard
-        against one domain dominating the mix)."""
-        from timebox_spark.operators.sampling import cap_per_group
-
-        return cap_per_group(docs, group_col=group_col, **kw)
-
-    def data_card(self, docs: DataFrame, **kw) -> DataFrame:
-        """Dataset datasheet (sizes, token totals, language/source
-        mix, dup rate, gate pass rates) — publish next to shards."""
-        from timebox_spark.operators.pipeline import data_card
-
-        return data_card(docs, **kw)
-
-    def compact(self, new_batch: DataFrame, corpus=None, **kw) -> DataFrame:
-        """Ingest-cycle compaction: the new-batch rows to APPEND to
-        the standing corpus (fingerprint anti-join, arrival-order
-        wins across cycles)."""
-        from timebox_spark.streaming.ingest import compact_corpus
-
-        return compact_corpus(new_batch, corpus, **kw)
-
-    def read_jsonl(self, path: str, schema) -> DataFrame:
-        from timebox_spark.sources.jsonl import read_jsonl
-
-        return read_jsonl(self.spark, path, schema)
-
-    def write_jsonl(self, df: DataFrame, path: str, **kw) -> None:
-        from timebox_spark.sources.jsonl import write_jsonl
-
-        write_jsonl(df, path, **kw)
-
-    def train_classifier(self, docs: DataFrame, label_col: str = "source"):
-        """Train the multinomial NB source/domain classifier in-engine
-        (counting + quantized-ln weights); returns (weights, classes)
-        tables for ``classify``."""
-        from timebox_spark.operators.text import nb_train
-
-        return nb_train(docs, label_col=label_col)
-
-    def classify(self, docs: DataFrame, weights, classes, **kw) -> DataFrame:
-        """Argmax NB class per document with exact integer scores."""
-        from timebox_spark.operators.text import nb_classify
-
-        return nb_classify(docs, weights, classes, **kw)
-
-    def read_warc(self, path: str) -> DataFrame:
-        """Distributed WARC/1.0 reader: one task per shard file,
-        Content-Length record framing (sources/warc.py)."""
-        from timebox_spark.sources.warc import read_warc
-
-        return read_warc(self.spark, path)
-
-    def write_warc(self, df: DataFrame, path: str, **kw) -> None:
-        from timebox_spark.sources.warc import write_warc
-
-        write_warc(df, path, **kw)
-
-    def index_warc(self, path: str, **kw) -> DataFrame:
-        """CDX-style member index of a .warc.gz tree: (path, offset,
-        length, doc_id, target_uri) per gzip member."""
-        from timebox_spark.sources.warc import index_warc_gz
-
-        return index_warc_gz(self.spark, path, **kw)
-
-    def read_warc_ranges(self, ranges, **kw) -> DataFrame:
-        """Inflate single .warc.gz members by (path, offset, length)
-        — the ranged-GET ingest path; ``ranges`` is an ``index_warc``
-        DataFrame or a list of tuples."""
-        from timebox_spark.sources.warc import read_warc_ranges
-
-        return read_warc_ranges(self.spark, ranges, **kw)
-
-    def bloom(self, df: DataFrame, col: str, **kw) -> DataFrame:
-        """Mergeable Bloom membership sketch of ``df[col]`` —
-        (word, bits) rows; the broadcast pre-gate ``compact`` /
-        ``run_ingest_cycle(bloom_m=...)`` use to skip the O(corpus)
-        fingerprint anti-join for definitely-new docs
-        (operators/sketches.py)."""
-        from timebox_spark.operators.sketches import bloom_build
-
-        return bloom_build(df, col, **kw)
-
-    def bloom_probe(self, df: DataFrame, id_col, col, bloom, **kw) -> DataFrame:
-        """(id, maybe_present) membership probe — no false negatives
-        under the sketch's (m_bits, k)."""
-        from timebox_spark.operators.sketches import bloom_probe
-
-        return bloom_probe(df, id_col, col, bloom, **kw)
-
-    def canonical_urls(self, df: DataFrame, url_col: str = "url") -> DataFrame:
-        """Attach the canonical form of a URL column (fragment/default
-        port/www./tracking params stripped — operators/urls.py)."""
-        from timebox_spark.operators.urls import canonicalize_url
-
-        return df.withColumn("canonical_url", canonicalize_url(url_col))
-
-    def dedup_urls(self, df: DataFrame, **kw) -> DataFrame:
-        """One row per canonical URL (smallest id wins) with the
-        group's n_dups — the pre-text crawl dedup tier."""
-        from timebox_spark.operators.urls import url_dedup
-
-        return url_dedup(df, **kw)
-
-    def block_domains(self, df: DataFrame, blocked, **kw) -> DataFrame:
-        """Drop rows whose registrable domain is blocklisted."""
-        from timebox_spark.operators.urls import domain_blocklist_filter
-
-        return domain_blocklist_filter(df, blocked=blocked, **kw)
-
-    def domains(
-        self,
-        df: DataFrame,
-        url_col: str = "url",
-        out_col: str = "domain",
-        psl: bool = False,
-        rules=None,
-    ) -> DataFrame:
-        """``df`` + the registrable domain of a URL column. Default is
-        the last-two-labels heuristic (the oracle-pinned grouping
-        key); ``psl=True`` applies public-suffix-list semantics
-        (wildcards, exceptions, longest match — round 15), with
-        ``rules`` as PSL lines or a one-column DataFrame rule table
-        (broadcast-joined) for the full list."""
-        from timebox_spark.operators import urls as U
-
-        host = U.url_host(url_col)
-        if not psl:
-            return df.withColumn(out_col, U.registrable_domain(host))
-        if rules is not None and isinstance(rules, DataFrame):
-            return U.with_registrable_domain(
-                df.withColumn("__api_host", host), "__api_host",
-                out_col=out_col, rules=rules,
-            ).drop("__api_host")
-        return df.withColumn(
-            out_col, U.registrable_domain_psl(host, rules=rules)
-        )
-
-    def rank_graph(self, edges: DataFrame, **kw) -> DataFrame:
-        """Exact fixed-point PageRank over a link graph — (node, rank)
-        BIGINT ticks after a fixed iteration count (operators/
-        graphs.py): the domain-ranking tier of a crawl-curation
-        pipeline. Pass owned_rdds=[] to reclaim the per-iteration
-        checkpoints after consuming the result."""
-        from timebox_spark.operators.graphs import pagerank
-
-        return pagerank(edges, **kw)
-
-    def count_sketch(self, df: DataFrame, col: str, **kw) -> DataFrame:
-        """Mergeable count-min frequency sketch of a column
-        (sketches.cms_build) — persist per cycle, cms_merge to any
-        horizon, probe with frequencies()."""
-        from timebox_spark.operators.sketches import cms_build
-
-        return cms_build(df, col, **kw)
-
-    def frequencies(
-        self, df: DataFrame, id_col: str, col: str, cms: DataFrame, **kw
-    ) -> DataFrame:
-        """(id, est_count) frequency estimates against a count-min
-        sketch — never under-counts (sketches.cms_query)."""
-        from timebox_spark.operators.sketches import cms_query
-
-        return cms_query(df, id_col, col, cms, **kw)
-
-    def heavy_hitters(
-        self, candidates: DataFrame, id_col: str, col: str,
-        cms: DataFrame, min_count: int, **kw
-    ) -> DataFrame:
-        """Candidates whose sketched frequency reaches min_count —
-        no false negatives (sketches.cms_heavy_hitters)."""
-        from timebox_spark.operators.sketches import cms_heavy_hitters
-
-        return cms_heavy_hitters(
-            candidates, id_col, col, cms, min_count, **kw
-        )
-
-    def corpus_frequencies(self, store_path: str, **kw) -> DataFrame:
-        """The merged count-min sketch of an ingest store's cms tree
-        (streaming.ingest.read_store_cms) — corpus-horizon frequency /
-        heavy-hitter queries without rescanning corpus text."""
-        from timebox_spark.streaming.ingest import read_store_cms
-
-        return read_store_cms(self.spark, store_path, **kw)

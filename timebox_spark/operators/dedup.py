@@ -1799,6 +1799,77 @@ def _index_fs(df_or_spark, path: str):
     return fs, sc._jvm.org.apache.hadoop.fs.Path
 
 
+def _part_dir_ids(fs, fs_path, root: str, part_col: str = "cycle") -> list[int]:
+    """The N values of ``{part_col}=N`` child dirs under ``root``."""
+    if not fs.exists(fs_path(root)):
+        return []
+    prefix = f"{part_col}="
+    out = []
+    for st in fs.listStatus(fs_path(root)):
+        name = st.getPath().getName()
+        if name.startswith(prefix):
+            try:
+                out.append(int(name[len(prefix):]))
+            except ValueError:
+                pass
+    return out
+
+
+def _read_state(
+    spark, path: str, part_col: str | None = None
+) -> DataFrame | None:
+    """Read a Spark-written parquet dir with the schema its own footer
+    carries, so the read runs no schema-inference job; None when
+    ``path`` is missing or holds no data file (with ``part_col``: no
+    ``{part_col}=N`` partition with one).
+
+    Lists through the Hadoop FileSystem (local, HDFS and S3 alike) and
+    opens one footer: the first data file of the newest partition,
+    the schema the last writer used. Spark stores its row schema in
+    every footer it writes; the file source makes every field
+    nullable on read, as inference does, and ``part_col`` is appended
+    as the int partition column. A footer without that schema (not
+    written by Spark) falls back to a plain inferred read."""
+    import json
+
+    from pyspark.sql import types as T
+
+    fs, fs_path = _index_fs(spark, path)
+    if part_col is None:
+        dirs = [path] if fs.exists(fs_path(path)) else []
+    else:
+        ids = sorted(_part_dir_ids(fs, fs_path, path, part_col), reverse=True)
+        dirs = [f"{path}/{part_col}={n}" for n in ids]
+    for d in dirs:
+        files = [
+            st for st in fs.listStatus(fs_path(d))
+            if st.isFile()
+            and not st.getPath().getName().startswith(("_", "."))
+        ]
+        if files:
+            break
+    else:
+        return None
+    first = min(files, key=lambda st: st.getPath().getName())
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf)
+    )
+    try:
+        meta = reader.getFileMetaData().getKeyValueMetaData().get(
+            "org.apache.spark.sql.parquet.row.metadata"
+        )
+    finally:
+        reader.close()
+    if meta is None:
+        return spark.read.parquet(path)
+    schema = T.StructType.fromJson(json.loads(meta))
+    if part_col is not None:
+        schema = schema.add(part_col, T.IntegerType())
+    return spark.read.schema(schema).parquet(path)
+
+
 def _complete_index_versions(fs, mk_path, path: str) -> list[int]:
     """Version numbers under ``{path}/v=N`` whose banded AND sets
     tables both carry Spark's _SUCCESS commit marker — i.e. fully
@@ -1918,14 +1989,16 @@ def load_corpus_index(
     """Load the newest COMPLETE ``save_corpus_index`` generation back
     as (banded, verify_table). Falls back to the legacy flat
     ``{path}/{banded,sets}`` layout when no versioned generation
-    exists (pre-round-12 stores)."""
+    exists (pre-round-12 stores). Both tables are read with their
+    footer's schema (``_read_state``), so a load runs no Spark job;
+    raises FileNotFoundError when neither layout holds both."""
     fs, mk_path = _index_fs(spark, path)
     done = _complete_index_versions(fs, mk_path, path)
     base = f"{path}/v={done[-1]}" if done else path
-    return (
-        spark.read.parquet(f"{base}/banded"),
-        spark.read.parquet(f"{base}/sets"),
-    )
+    out = tuple(_read_state(spark, f"{base}/{t}") for t in ("banded", "sets"))
+    if any(t is None for t in out):
+        raise FileNotFoundError(f"load_corpus_index: no corpus index at {path}")
+    return out
 
 
 def portable_minhash_pairs(

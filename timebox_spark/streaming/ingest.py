@@ -948,7 +948,10 @@ def compact_corpus(
             # shared FS while the checkpoints are still alive,
             # anti-join against the scan — no driver-side bound
             non_rep.write.mode("overwrite").parquet(f"{scratch_path}/dropped")
-            dropped_scan = spark.read.parquet(f"{scratch_path}/dropped")
+            # the written schema pinned: no footer-inference job
+            dropped_scan = spark.read.schema(non_rep.schema).parquet(
+                f"{scratch_path}/dropped"
+            )
     finally:
         # runs even when CC raises — the crash path must not be the
         # one that leaks block-manager state
@@ -1237,22 +1240,6 @@ def curate_and_ingest_stream(
     return IngestDrain(writer) if stream_near_dup else writer
 
 
-def _part_dir_ids(fs, fs_path, root: str, part_col: str = "cycle") -> list[int]:
-    """The N values of ``{part_col}=N`` child dirs under ``root``."""
-    if not fs.exists(fs_path(root)):
-        return []
-    prefix = f"{part_col}="
-    out = []
-    for st in fs.listStatus(fs_path(root)):
-        name = st.getPath().getName()
-        if name.startswith(prefix):
-            try:
-                out.append(int(name[len(prefix):]))
-            except ValueError:
-                pass
-    return out
-
-
 def _backfill_tree(
     spark: SparkSession,
     store_path: str,
@@ -1272,14 +1259,14 @@ def _backfill_tree(
     exist to prevent."""
     fs, fs_path = DD._index_fs(spark, store_path)
     src_cycles = {
-        n for n in _part_dir_ids(fs, fs_path, src_path) if n < cycle_id
+        n for n in DD._part_dir_ids(fs, fs_path, src_path) if n < cycle_id
     }
     dst_cycles = {
-        n for n in _part_dir_ids(fs, fs_path, dst_path) if n < cycle_id
+        n for n in DD._part_dir_ids(fs, fs_path, dst_path) if n < cycle_id
     }
     for mcyc in sorted(src_cycles - dst_cycles):
         build_fn(
-            spark.read.parquet(f"{src_path}/cycle={mcyc}")
+            DD._read_state(spark, f"{src_path}/cycle={mcyc}")
         ).write.mode("overwrite").parquet(f"{dst_path}/cycle={mcyc}")
 
 
@@ -1341,79 +1328,10 @@ def _store_tree_paths(store_path: str) -> dict[str, str]:
         # folded duplicates of a cell are fine (reads re-SUM via
         # cms_merge / cms_query's defensive aggregation)
         "cms": f"{store_path}/cms",
+        # the dropped documents' hit rows (run_ingest_cycle(hit_ts=...)),
+        # keyed by micro-batch id, which is the cycle id
+        "near_hits": f"{store_path}/near_hits",
     }
-
-
-# Per-process schema cache for the store's state trees (round 18,
-# verdict item 4): read_prior's six spark.read.parquet probes each pay
-# an eager file listing + parquet footer schema inference EVERY cycle
-# (~0.65-0.8 s/cycle at sf0.1), yet a tree's schema is constant
-# between consolidations — per-cycle writes append same-shaped
-# partitions. Cache the StructType per tree path and re-read with
-# spark.read.schema(...), which skips the footer pass: a cycle records
-# the schema of each partition it writes (``_record_tree_schema``), a
-# first read of an unrecorded tree records the inferred one.
-# Entries are keyed on the store's generation marker, a fresh token
-# written by the two writers that can CHANGE a tree's files
-# wholesale: a cycle-0 seed (a store recreated at the same path) and
-# consolidate_ingest_store (every tree rewritten, in the same shape:
-# the consolidating process carries its entries over). A store swapped
-# in under the same path by any other means (a copied store) carries
-# its own token, so its trees are re-inferred; an unmarked store is never
-# served from the cache. Assumes the store's single-writer contract
-# (the checkpointed stream / one driver) — replay idempotency already
-# requires one writer.
-_TREE_SCHEMA_CACHE: dict = {}  # tree path -> (generation, StructType)
-
-
-def _new_generation(spark: SparkSession, store_path: str) -> str:
-    """Stamp ``store_path`` with a fresh generation token; return it."""
-    import uuid
-
-    token = uuid.uuid4().hex
-    fs, fs_path = DD._index_fs(spark, store_path)
-    out = fs.create(fs_path(f"{store_path}/_generation"), True)
-    try:
-        out.writeUTF(token)
-    finally:
-        out.close()
-    return token
-
-
-def _cached_tree_schema(tree_path: str, generation: str | None):
-    """The cached read schema of ``tree_path`` for ``generation``."""
-    hit = _TREE_SCHEMA_CACHE.get(tree_path)
-    return hit[1] if hit is not None and hit[0] == generation else None
-
-
-def _record_tree_schema(
-    tree_path: str, generation: str | None, part: DataFrame, part_col: str
-) -> None:
-    """Cache the schema a read of ``tree_path`` infers, from ``part``
-    (a pinned-schema read of one partition it was just written with):
-    its columns, nullable as every file read's are, then the int
-    partition column."""
-    if generation is not None:
-        read = part.schema.fields + [T.StructField(part_col, T.IntegerType())]
-        _TREE_SCHEMA_CACHE[tree_path] = (generation, T.StructType(read))
-
-
-def _store_generation(spark: SparkSession, store_path: str) -> str | None:
-    """The store's generation token, or None when it has none (an
-    older store, or a marker a crash left unreadable)."""
-    from py4j.protocol import Py4JJavaError
-
-    fs, fs_path = DD._index_fs(spark, store_path)
-    try:
-        inp = fs.open(fs_path(f"{store_path}/_generation"))
-    except Py4JJavaError:  # no marker
-        return None
-    try:
-        return inp.readUTF()
-    except Py4JJavaError:  # truncated marker
-        return None
-    finally:
-        inp.close()
 
 
 def _fold_partitions(
@@ -1423,12 +1341,12 @@ def _fold_partitions(
     upto: int,
     tmp: str,
     transform=None,
-    schema=None,
 ) -> None:
     """Crash-safe fold of every ``{part_col}=N`` partition with
     ``N <= upto`` under ``tree_path`` into one ``{part_col}={upto}``
-    partition; ``schema``, the tree's read schema when known, spares
-    the read its footer-inference job. Resumable: the consolidated
+    partition. The tree is read with the schema its newest
+    partition's footer carries (``dedup._read_state``), so the fold
+    runs no schema-inference job. Resumable: the consolidated
     rows go to ``tmp`` first and that write is SKIPPED when ``tmp``
     already carries _SUCCESS, so a rerun never re-derives from a tree
     it partially emptied; then the old partition dirs are deleted and
@@ -1438,8 +1356,6 @@ def _fold_partitions(
     returning false rather than throwing, and by that point the
     source partitions are gone: proceeding silently would lose state,
     while raising leaves ``tmp`` intact for the resumable rerun."""
-    from pyspark.errors import AnalysisException
-
     fs, fs_path = DD._index_fs(spark, tree_path)
     if not fs.exists(fs_path(f"{tmp}/_SUCCESS")):
         # rebuild needed — only possible from a live tree. (With a
@@ -1447,14 +1363,8 @@ def _fold_partitions(
         # missing/empty: a crash may have deleted every source dir,
         # leaving tmp as the rows' only copy — fall through to the
         # rename so recovery finishes the fold.)
-        if not fs.exists(fs_path(tree_path)):
-            return
-        try:
-            reader = spark.read if schema is None else spark.read.schema(schema)
-            df = reader.parquet(tree_path)
-        except AnalysisException:
-            return
-        if part_col not in df.columns:
+        df = DD._read_state(spark, tree_path, part_col)
+        if df is None:
             return
         folded = df.filter(F.col(part_col) <= upto).drop(part_col)
         if transform is not None:
@@ -1464,7 +1374,7 @@ def _fold_partitions(
             folded = transform(folded)
         folded.write.mode("overwrite").parquet(tmp)
     if fs.exists(fs_path(tree_path)):
-        for n in _part_dir_ids(fs, fs_path, tree_path, part_col):
+        for n in DD._part_dir_ids(fs, fs_path, tree_path, part_col):
             if n <= upto:
                 fs.delete(fs_path(f"{tree_path}/{part_col}={n}"), True)
     else:
@@ -1505,14 +1415,18 @@ def consolidate_ingest_store(
     layout. Callers must only invoke this for ``upto_cycle`` values
     STRICTLY BELOW the running cycle id (``run_ingest_cycle``'s
     ``consolidate_every`` does) — a cycle that might still be
-    replayed must never be folded into an earlier partition label."""
+    replayed must never be folded into an earlier partition label.
+
+    Each tree is read with the schema its newest partition's footer
+    carries, so outside its writes a consolidation launches no Spark
+    job, and a restarted driver or a copied store needs no warm-up.
+    The fold keeps each tree's schema, so the next cycle's footer
+    reads see the same shapes. No marker file is written; a
+    ``_generation`` file an older build left in the store is
+    ignored."""
     fs, fs_path = DD._index_fs(spark, store_path)
-    generation = _store_generation(spark, store_path)
-    trees = [(t, p, "cycle") for t, p in _store_tree_paths(store_path).items()]
-    # the hit rows (curate_and_ingest_stream(stream_near_dup=True)) are
-    # keyed by micro-batch id, which is the cycle id
-    trees.append(("near_hits", f"{store_path}/near_hits", "batch"))
-    for tree, tree_path, part in trees:
+    for tree, tree_path in _store_tree_paths(store_path).items():
+        part = "batch" if tree == "near_hits" else "cycle"
         _fold_partitions(
             spark,
             tree_path,
@@ -1529,17 +1443,8 @@ def consolidate_ingest_store(
                 "banded": _banded_prunable_layout,
                 "sets": _sets_prunable_layout,
             }.get(tree),
-            schema=_cached_tree_schema(tree_path, generation),
         )
     fs.delete(fs_path(f"{store_path}/_tmp_consolidate"), True)
-    # every tree's files were rewritten — a new generation, so other
-    # readers re-infer their shapes; the fold kept each tree's shape,
-    # so this process's cached schemas carry over
-    new = _new_generation(spark, store_path)
-    for _, tree_path, _ in trees:
-        cached = _cached_tree_schema(tree_path, generation)
-        if cached is not None:
-            _TREE_SCHEMA_CACHE[tree_path] = (new, cached)
 
 
 def read_store_cms(
@@ -1554,10 +1459,19 @@ def read_store_cms(
     ``upto_cycle`` bounds the horizon (cycles <= it); default is the
     whole tree. Raises if the tree does not exist (stats were never
     enabled) — an empty answer would read as 'frequency 0 for
-    everything', the silent under-count the structure forbids."""
-    paths = _store_tree_paths(store_path)
-    df = spark.read.parquet(paths["cms"])  # AnalysisException if absent
-    if upto_cycle is not None and "cycle" in df.columns:
+    everything', the silent under-count the structure forbids. The
+    tree is read with its footer's schema, so the only job the call
+    runs is ``cms_merge``'s sentinel check."""
+    from pyspark.errors import AnalysisException
+
+    path = _store_tree_paths(store_path)["cms"]
+    df = DD._read_state(spark, path, "cycle")
+    if df is None:
+        raise AnalysisException(
+            message=f"read_store_cms: no cms tree at {path} — the store "
+            f"was built without cms_col"
+        )
+    if upto_cycle is not None:
         df = df.filter(F.col("cycle") <= upto_cycle)
     return cms_merge(df.drop("cycle"))
 
@@ -1607,7 +1521,11 @@ def run_ingest_cycle(
     of rows appended.
 
     Every state table is a narrow column scan at any corpus size; the
-    only text read is the new batch's. ``knobs`` are the cycle's
+    only text read is the new batch's. Each tree is read with the
+    schema its newest partition's footer carries
+    (``dedup._read_state``): a state read launches no Spark job, on a
+    restarted driver or a copied store alike, and a tree the store
+    does not have yet costs one existence check. ``knobs`` are the cycle's
     ``IngestSpec`` fields; they are validated before the cycle reads
     or writes anything.
 
@@ -1632,34 +1550,22 @@ def run_ingest_cycle(
     extra write, which the kept rows then anti-join."""
     spec = IngestSpec(**knobs)
     spec.check_columns(new_batch.columns)
-    from pyspark.errors import AnalysisException
-
     spark = new_batch.sparkSession
     paths = _store_tree_paths(store_path)
     id_col, text_col = spec.id_col, spec.text_col
     if _consolidation_due(cycle_id, spec.consolidate_every):
-        # cycle 0 never folds, so the generation stamp below follows it
         with _stage(timings, "consolidate"):
             consolidate_ingest_store(spark, store_path, cycle_id - 1)
 
     def read_prior(key: str) -> DataFrame | None:
-        # probe through Spark's reader, not driver-local os.path — the
-        # store may live on HDFS/S3, where a local isdir() is always
-        # False and would silently skip corpus dedup every cycle
+        # probe through the Hadoop FileSystem, not driver-local
+        # os.path — the store may live on HDFS/S3, where a local
+        # isdir() is always False and would silently skip corpus dedup
+        # every cycle; None while the tree has no partition (first
+        # cycle)
         path = paths[key]
-        cached = _cached_tree_schema(path, generation)
-        try:
-            # with the cached schema the reader skips the per-cycle
-            # footer inference pass (round 18 — see the cache's note)
-            df = (
-                spark.read.schema(cached).parquet(path)
-                if cached is not None
-                else spark.read.parquet(path)
-            )
-        except AnalysisException:
-            # tree doesn't exist (first cycle) — or existed under a
-            # since-deleted store: drop any stale cached shape
-            _TREE_SCHEMA_CACHE.pop(path, None)
+        df = DD._read_state(spark, path, "cycle")
+        if df is None:
             return None
         if key == "fps" and dict(df.dtypes).get("__fp") != "binary":
             raise ValueError(
@@ -1668,10 +1574,6 @@ def run_ingest_cycle(
                 f"the 16-byte binary md5 — a hex-string tree predates "
                 f"the binary layout; rebuild the store"
             )
-        if cached is None and generation is not None:
-            _TREE_SCHEMA_CACHE[path] = (generation, df.schema)
-        if "cycle" not in df.columns:
-            return None
         return df.filter(F.col("cycle") < cycle_id).drop("cycle")
 
     def gate_tree(src: str, sketch: str, build_fn) -> DataFrame | None:
@@ -1710,11 +1612,6 @@ def run_ingest_cycle(
         return None if src_bytes < GATE_MIN_TREE_BYTES else tree
 
     with _stage(timings, "state_read_gates"):
-        if cycle_id == 0:
-            # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
-            # store — any cached tree schemas describe a previous store
-            _new_generation(spark, store_path)
-        generation = _store_generation(spark, store_path)
         fps = read_prior("fps")
         bloom = None
         if spec.bloom_m is not None:
@@ -1828,9 +1725,17 @@ def run_ingest_cycle(
     # partition, never the kept plan
     exact_owned: list = []
     batch_index: dict = {}
+    def write_part(
+        df: DataFrame, tree: str, part_col: str = "cycle"
+    ) -> DataFrame:
+        # commit this cycle's partition of `tree`; the read-back
+        # pins the written schema, so it runs no inference job
+        path = f"{paths[tree]}/{part_col}={cycle_id}"
+        df.write.mode("overwrite").parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
+
     drop_sink = None
     if hit_ts is not None and spec.near_dup:
-        hits_part = f"{store_path}/near_hits/batch={cycle_id}"
 
         def drop_sink(drops: DataFrame) -> DataFrame:
             hits = drops.join(hit_ts, id_col).select(
@@ -1838,22 +1743,7 @@ def run_ingest_cycle(
                 "matched_id", "est",
                 *[c for c in hit_ts.columns if c != id_col],
             )
-            hits.write.mode("overwrite").parquet(hits_part)
-            # the written schema pinned: no footer-inference job
-            back = spark.read.schema(hits.schema).parquet(hits_part)
-            _record_tree_schema(
-                f"{store_path}/near_hits", generation, back, "batch"
-            )
-            return back.select(id_col)
-
-    def write_part(df: DataFrame, tree: str) -> DataFrame:
-        # commit this cycle's partition of `tree`; the read-back
-        # pins the written schema, so it runs no inference job
-        path = f"{paths[tree]}/cycle={cycle_id}"
-        df.write.mode("overwrite").parquet(path)
-        back = spark.read.schema(df.schema).parquet(path)
-        _record_tree_schema(paths[tree], generation, back, "cycle")
-        return back
+            return write_part(hits, "near_hits", "batch").select(id_col)
 
     try:
         with _stage(timings, "compact_write"):
