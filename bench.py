@@ -1007,9 +1007,7 @@ def main() -> None:
         t0 = time.perf_counter()
         cands.write.mode("overwrite").format("noop").save()
         out["band"] = round(time.perf_counter() - t0, 3)
-        verified = D.jaccard_verify(
-            docs, cands, threshold=0.35, sets_source=combined
-        )
+        verified = D.jaccard_verify(cands, combined, threshold=0.35)
         t0 = time.perf_counter()
         verified.write.mode("overwrite").format("noop").save()
         out["verify"] = round(time.perf_counter() - t0, 3)

@@ -76,7 +76,6 @@ SLOW_NODEIDS = {
     "test_text.py::test_token_budget_cms_enforces_corpus_horizon_token_budget",
     "test_streaming.py::test_run_ingest_cycle_token_budget_enforces_stream_budget",
     "test_plans.py::test_no_unreduced_single_partition_exchange[q31_dedup_clusters]",
-    "test_text.py::test_curate_near_dup_method_portable_matches_fast_path",
     "test_plans.py::test_no_unreduced_single_partition_exchange[q57_stats_suite]",
     "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[fps]",
     "test_sketches.py::test_gated_dedup_maybe_overflow_falls_back_identical[band_keys]",

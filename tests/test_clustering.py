@@ -88,7 +88,7 @@ def test_connected_components_star_sublinear_rounds_on_deep_path(spark):
 def test_connected_components_deep_path_raises_and_auto_escalates(spark):
     """A 30-link path exceeds label propagation's default 20-round
     cap: the old code silently returned TRUNCATED (wrong) labels;
-    now it raises, and dedup_clusters(algorithm='auto') escalates to
+    now it raises, and dedup_clusters escalates to
     star contraction and returns the correct components."""
     import pytest
 
@@ -103,9 +103,7 @@ def test_connected_components_deep_path_raises_and_auto_escalates(spark):
     stats: dict = {}
     got = {
         r["doc_id"]: r["canonical_id"]
-        for r in dedup.dedup_clusters(
-            docs, pairs, algorithm="auto", stats=stats
-        ).collect()
+        for r in dedup.dedup_clusters(docs, pairs, stats=stats).collect()
     }
     assert got == {i: 1 for i in range(1, 32)}
     assert stats.get("escalated_to_star") is True
@@ -119,10 +117,36 @@ def test_connected_components_deep_path_raises_and_auto_escalates(spark):
         dedup.connected_components(pairs).collect()
 
 
+def test_dedup_clusters_escalates_past_the_round_cap(spark, monkeypatch):
+    """With label propagation capped at 3 rounds, a 6-node chain
+    (diameter 5) cannot converge: dedup_clusters escalates to star
+    contraction and returns the star labels instead of raising."""
+    import functools
+
+    monkeypatch.setattr(
+        dedup,
+        "connected_components",
+        functools.partial(dedup.connected_components, max_iterations=3),
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    docs = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
+    got = {
+        r["doc_id"]: r["canonical_id"]
+        for r in dedup.dedup_clusters(docs, pairs).collect()
+    }
+    star = {
+        r["node"]: r["component"]
+        for r in dedup.connected_components_star(pairs).collect()
+    }
+    assert got == {**star, 7: 7} == {**{i: 1 for i in range(1, 7)}, 7: 7}
+
+
 def test_dedup_clusters_auto_does_not_mask_unrelated_runtimeerror(
     spark, monkeypatch
 ):
-    """advisor round 12: 'auto' escalates ONLY on ConvergenceError — an
+    """advisor round 12: dedup_clusters escalates ONLY on ConvergenceError — an
     unrelated RuntimeError from label propagation propagates instead of
     silently triggering a star re-run that masks the real failure."""
     import pytest
@@ -134,7 +158,7 @@ def test_dedup_clusters_auto_does_not_mask_unrelated_runtimeerror(
     docs = spark.createDataFrame([(1,), (2,)], "doc_id long")
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="executor lost"):
-        dedup.dedup_clusters(docs, pairs, algorithm="auto").collect()
+        dedup.dedup_clusters(docs, pairs).collect()
 
 
 def test_connected_components_owned_rdds_tracking(spark):
@@ -211,24 +235,28 @@ def test_concurrent_cluster_compactions_do_not_interfere(spark, tmp_path):
     assert after - before == set(), after - before
 
 
-def test_dedup_clusters_star_algorithm(spark):
-    """dedup_clusters(algorithm='star') equals the default label-
-    propagation assignment on real minhash pairs."""
+def test_dedup_clusters_star_algorithm(spark, monkeypatch):
+    """The star contraction dedup_clusters escalates to gives the same
+    assignment as the converged label propagation on real minhash
+    pairs, so escalating never changes a label."""
     docs = load(spark, SF_SMOKE, "documents")
     pairs = dedup.minhash_dedup(docs, threshold=0.35)
     lp = {
         r["doc_id"]: r["canonical_id"]
         for r in dedup.dedup_clusters(docs, pairs).collect()
     }
+
+    def capped(*a, **k):
+        raise dedup.ConvergenceError("round cap (simulated)")
+
+    monkeypatch.setattr(dedup, "connected_components", capped)
+    stats: dict = {}
     star = {
         r["doc_id"]: r["canonical_id"]
-        for r in dedup.dedup_clusters(docs, pairs, algorithm="star").collect()
+        for r in dedup.dedup_clusters(docs, pairs, stats=stats).collect()
     }
+    assert stats["escalated_to_star"] is True
     assert lp == star
-    import pytest
-
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup.dedup_clusters(docs, pairs, algorithm="bogus")
 
 
 def test_dedup_clusters_on_documents(spark):
@@ -248,9 +276,18 @@ def test_dedup_clusters_on_documents(spark):
 
 
 def test_minhash_prefilter_preserves_results(spark):
+    """The debiased signature-estimate prefilter (bench's diagnostic)
+    screens banded candidates 0.25 below the threshold without losing
+    a verified pair."""
     docs = load(spark, SF_SMOKE, "documents")
     plain = dedup.minhash_dedup(docs, threshold=0.35)
-    screened = dedup.minhash_dedup(docs, threshold=0.35, estimate_margin=0.25)
+    bands, _rows = dedup.lsh_tuning(0.35, 32, bias="precision")
+    combined = dedup.minhash_signatures(docs, emit_sets=True)
+    cands = dedup.minhash_lsh_candidates(combined, bands=bands)
+    kept = dedup.minhash_estimate_filter(
+        cands, combined, min_estimate=0.35 - 0.25, bands=bands
+    )
+    screened = dedup.jaccard_verify(kept, combined, threshold=0.35)
     a = sorted((r["id_a"], r["id_b"]) for r in plain.collect())
     b = sorted((r["id_a"], r["id_b"]) for r in screened.collect())
     assert a == b and len(a) > 0
@@ -346,8 +383,8 @@ def test_embedding_near_dups_keep_top_n(spark):
 
 def test_embedding_near_dups_lsh_finds_planted_pairs(spark):
     """The LSH scale path must surface near-identical pairs (collision
-    probability ≈ 1 per table at angle ≈ 0) and agree with the exact
-    operator on everything it returns."""
+    probability ≈ 1 per table at angle ≈ 0) and report only pairs at
+    or above the threshold when the top-n tail is off."""
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
         (2, [0.999, 0.01, 0.0, 0.0]),     # cos(1,2) ~ 0.99995
@@ -357,31 +394,39 @@ def test_embedding_near_dups_lsh_finds_planted_pairs(spark):
         (11, [0.0, 0.0, 0.01, 0.999]),    # cos(10,11) ~ 0.99995
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = dedup.embedding_near_dups_lsh(emb, threshold=0.95, dim=4)
-    pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in got.collect()}
+    got = dedup.portable_embedding_near_dups_lsh(emb, top_n=0, dim=4)
+    pairs = {(r["id_a"], r["id_b"]): r["cosine_q"] for r in got.collect()}
     assert (1, 2) in pairs and (10, 11) in pairs
     # every returned pair really is above threshold (exact cosine on
     # candidates — LSH only gates candidate generation)
-    assert all(c >= 0.95 for c in pairs.values())
+    assert all(c >= dedup.NEARDUP_THRESHOLD_Q for c in pairs.values())
     # no self-pairs, ids ordered
     assert all(a < b for a, b in pairs)
 
 
 def test_embedding_near_dups_lsh_subset_of_exact(spark):
     """On the driver embeddings table, LSH results (a candidate subset)
-    must be exactly the exact-operator pairs that collided — same
-    cosines, never an extra pair."""
-    from pyspark.sql import functions as F2
+    must be exactly the all-pairs quantized-cosine pairs that collided
+    — same cosines, never an extra pair."""
+    from timebox_spark.operators import similarity
 
     emb = load(spark, SF_SMOKE, "embeddings")
-    # unblocked exact baseline at a low threshold (sf0.001 is tiny)
-    exact = dedup.embedding_near_dups(
-        emb.withColumn("all", F2.lit(1)), block_cols=["all"], threshold=0.3
+    threshold_q = 300_000_000
+    vq = emb.select("vec_id", similarity.quantized_vec(F.col("embedding")).alias("vq"))
+    a, b = vq.alias("a"), vq.alias("b")
+    exact = (
+        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            similarity._cosine_q_portable(F.col("a.vq"), F.col("b.vq")).alias("cosine_q"),
+        )
+        .filter(F.col("cosine_q") >= threshold_q)
     )
-    lsh = dedup.embedding_near_dups_lsh(emb, threshold=0.3)
-    e = {(r["id_a"], r["id_b"]): round(r["cosine"], 9) for r in exact.collect()}
-    l = {(r["id_a"], r["id_b"]): round(r["cosine"], 9) for r in lsh.collect()}
-    assert set(l) <= set(e)
+    lsh = dedup.portable_embedding_near_dups_lsh(emb, threshold_q=threshold_q, top_n=0)
+    e = {(r["id_a"], r["id_b"]): r["cosine_q"] for r in exact.collect()}
+    l = {(r["id_a"], r["id_b"]): r["cosine_q"] for r in lsh.collect()}
+    assert l and set(l) <= set(e)
     for k, v in l.items():
         assert e[k] == v
 
@@ -505,10 +550,8 @@ def test_cluster_representatives_keep_best(spark):
 def test_cross_minhash_contamination_planted_probes(spark):
     """Cross-corpus near-dup decontamination: a probe that is a light
     paraphrase of a corpus doc is flagged with its exact Jaccard, an
-    unrelated probe is not, corpus docs never pair with each other,
-    and the portable path matches the fast path's pair set."""
-    import pytest
-
+    unrelated probe is not, and corpus docs never pair with each
+    other."""
     base = ("the quick brown fox jumps over the lazy dog while the "
             "rain in spain falls mainly on the plain tonight")
     other = ("completely different text about gardens and stone "
@@ -522,17 +565,14 @@ def test_cross_minhash_contamination_planted_probes(spark):
                                      "about astronomy and telescopes")],
         "doc_id long, text string",
     )
-    for method in ("minhash", "portable"):
-        got = dedup.cross_minhash_contamination(
-            corpus, probes, threshold=0.5, method=method
-        ).collect()
-        pairs = {(r["doc_id"], r["probe_id"]) for r in got}
-        # the paraphrase probe hits BOTH near-identical corpus docs;
-        # the unrelated probe hits nothing; no corpus self-pairs
-        assert pairs == {(1, 100), (2, 100)}, method
-        assert all(0.5 <= r["jaccard"] <= 1.0 for r in got)
-    with pytest.raises(ValueError, match="method"):
-        dedup.cross_minhash_contamination(corpus, probes, method="nope")
+    got = dedup.cross_minhash_contamination(
+        corpus, probes, threshold=0.5
+    ).collect()
+    pairs = {(r["doc_id"], r["probe_id"]) for r in got}
+    # the paraphrase probe hits BOTH near-identical corpus docs;
+    # the unrelated probe hits nothing; no corpus self-pairs
+    assert pairs == {(1, 100), (2, 100)}
+    assert all(0.5 <= r["jaccard"] <= 1.0 for r in got)
 
 
 def test_duplicate_weights_planted_clusters(spark):

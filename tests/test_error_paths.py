@@ -41,7 +41,7 @@ def test_simhash_rejects_unguaranteed_hamming(spark):
 
     docs = load(spark, SF_SMOKE, "documents").limit(10)
     with pytest.raises(ValueError):
-        dedup.simhash_near_dups(docs, max_hamming=8, block_bits=16)
+        dedup.portable_simhash_pairs(docs, max_hamming=8)
 
 
 def test_npb_caps_and_bad_dtypes():

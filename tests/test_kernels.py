@@ -16,7 +16,8 @@ from pyspark.sql import functions as F, types as T
 
 from timebox_spark import schema as tb_schema
 from timebox_spark.operators import kernels
-from timebox_spark.operators.timeunits import coarsest_exact_unit, conversion_multiplier
+from timebox_spark.operators.timeunits import conversion_multiplier
+from timebox_spark.sources import npb
 from timebox_spark.table import DateDataError, TimeBoxTable
 
 
@@ -48,17 +49,21 @@ def test_delta_roundtrip(spark):
     assert [r["reconstructed"] for r in rows] == [-4, -2, 0, 2000]
 
 
-# ---- W3/W4: frame of reference (ref test_timebox_tag_compression.py:7-39)
+# ---- W3/W4: frame of reference (ref test_timebox_tag_compression.py:7-39),
+# run by the .npb codec's 'm' mode
 
-def test_frame_of_reference_golden(spark):
-    df = _df(spark, [1000000, 1000001, 1000002, 1000005])
-    enc, refs = kernels.frame_of_reference_encode(df, ["v"])
-    assert refs["v"] == 1000000
-    assert [r["v_for"] for r in enc.orderBy("idx").collect()] == [0, 1, 2, 5]
-    dec = kernels.frame_of_reference_decode(enc, "v_for", refs["v"], "back")
-    assert [r["back"] for r in dec.orderBy("idx").collect()] == [
-        1000000, 1000001, 1000002, 1000005,
-    ]
+def _for_spec(**kw):
+    return npb.TagSpec(identifier=0, bytes_per_value=8, type_char="i", compress="m", **kw)
+
+
+def test_frame_of_reference_golden():
+    values = np.array([1000000, 1000001, 1000002, 1000005], dtype=np.int64)
+    spec = _for_spec()
+    enc = npb._encode_column(values, spec)
+    assert spec.ref_value == 1000000
+    assert enc.tolist() == [0, 1, 2, 5]
+    dec = npb._decode_column(enc, spec, len(values))
+    assert dec.tolist() == [1000000, 1000001, 1000002, 1000005]
 
 
 # ---- C1/C2: quantize (ref test_timebox_tag_compression.py:41-65)
@@ -67,21 +72,22 @@ def test_quantize_golden(spark):
     df = _df(spark, [0.5, -0.5, 10.2345, 0.0], dtype="double")
     q = df.select("idx", kernels.quantize("v", 2).alias("q"))
     assert [r["q"] for r in q.orderBy("idx").collect()] == [50, -50, 1023, 0]
-    enc, refs = kernels.frame_of_reference_encode(q, ["q"])
-    assert refs["q"] == -50
-    assert [r["q_for"] for r in enc.orderBy("idx").collect()] == [100, 0, 1073, 50]
+    spec = _for_spec(decimals=2)
+    enc = npb._encode_column(np.array([0.5, -0.5, 10.2345, 0.0]), spec)
+    assert spec.ref_value == -50
+    assert enc.tolist() == [100, 0, 1073, 50]
     dq = q.select("idx", kernels.dequantize("q", 2).alias("v"))
     assert [r["v"] for r in dq.orderBy("idx").collect()] == [0.5, -0.5, 10.23, 0.0]
 
 
-# ---- C4: byte-width ladder (ref test_binary.py:20-66)
+# ---- C4: byte-width ladder (ref test_binary.py:20-66), the .npb codec's
 
 @pytest.mark.parametrize(
     "value,width",
     [(0, 1), (255, 1), (256, 2), (65535, 2), (65536, 4), (2**32 - 1, 4), (2**32, 8), (2**64 - 1, 8)],
 )
 def test_required_bytes_unsigned(value, width):
-    assert kernels.required_bytes_unsigned(value) == width
+    assert npb._uint_width(value) == width
 
 
 @pytest.mark.parametrize(
@@ -89,16 +95,14 @@ def test_required_bytes_unsigned(value, width):
     [(-128, 127, 1), (-129, 0, 2), (0, 128, 2), (-32768, 32767, 2), (0, 32768, 4), (-(2**31) - 1, 0, 8), (0, 2**62, 8)],
 )
 def test_required_bytes_signed(lo, hi, width):
-    assert kernels.required_bytes_signed(lo, hi) == width
+    assert npb._int_width(lo, hi) == width
 
 
 def test_required_bytes_errors():
     with pytest.raises(ValueError):
-        kernels.required_bytes_unsigned(-1)
+        npb._uint_width(2**64)
     with pytest.raises(ValueError):
-        kernels.required_bytes_unsigned(2**64)
-    with pytest.raises(ValueError):
-        kernels.required_bytes_signed(0, 2**63)
+        npb._int_width(0, 2**63)
 
 
 # ---- C3: float downcast guard (ref test_numpy_float_compression.py)
@@ -112,13 +116,12 @@ def test_float32_roundtrip_guard(spark):
     assert [r["ok"] for r in out] == [True] * 4 + [False] * 3
 
 
-def test_lossless_downcast_applied_and_refused(spark):
-    ok_df = _df(spark, [1.0, 2.5, float("nan")], dtype="double")
-    narrowed, applied = kernels.lossless_float32_downcast(ok_df, "v")
-    assert applied and dict(narrowed.dtypes)["v"] == "float"
-    bad_df = _df(spark, [1.0, 0.1], dtype="double")
-    kept, applied = kernels.lossless_float32_downcast(bad_df, "v")
-    assert not applied and dict(kept.dtypes)["v"] == "double"
+def test_lossless_downcast_applied_and_refused():
+    # the .npb writer's ladder: NaN round-trips, so this narrows
+    narrowed = npb._lossless_float_downcast_np(np.array([1.0, 2.5, float("nan")]))
+    assert narrowed.dtype != np.float64 and np.isnan(narrowed[2])
+    kept = npb._lossless_float_downcast_np(np.array([1.0, 0.1]))
+    assert kept.dtype == np.float64
 
 
 # ---- D3/D4: units (ref test_datetime_utils.py:74-105)
@@ -129,18 +132,16 @@ def test_conversion_multiplier():
     assert conversion_multiplier("s", "ms") == 1000
 
 
-def test_coarsest_unit_hours(spark):
+def test_coarsest_unit_hours():
+    # the .npb writer coarsens ns deltas at rest
     base = pd.Timestamp("2018-01-01")
-    ts = [base + pd.Timedelta(hours=h) for h in [0, 1, 2, 5]]
-    df = spark.createDataFrame([(t.to_pydatetime(),) for t in ts], schema="ts timestamp")
-    d = kernels.ts_delta_us(df)
-    unit, seconds = coarsest_exact_unit(d)
-    assert unit == "h" and seconds is None  # irregular spacing
+    ts = pd.DatetimeIndex([base + pd.Timedelta(hours=h) for h in [0, 1, 2, 5]])
+    deltas, unit = npb._coarsen_deltas(np.diff(ts.asi8))
+    assert unit == "h" and deltas.tolist() == [1, 1, 3]
 
-    ts_reg = [base + pd.Timedelta(days=d_) for d_ in [0, 1, 2, 3]]
-    df2 = spark.createDataFrame([(t.to_pydatetime(),) for t in ts_reg], schema="ts timestamp")
-    unit2, seconds2 = coarsest_exact_unit(kernels.ts_delta_us(df2))
-    assert unit2 == "D" and seconds2 == 86400
+    ts_reg = pd.DatetimeIndex([base + pd.Timedelta(days=d_) for d_ in [0, 1, 2, 3]])
+    deltas2, unit2 = npb._coarsen_deltas(np.diff(ts_reg.asi8))
+    assert unit2 == "D" and deltas2.tolist() == [1, 1, 1]
 
 
 # ---- schema widening (SURVEY §1.4)
@@ -483,26 +484,25 @@ def test_float16_formula_matches_numpy_in_duckdb():
         assert bool(r) == bool(e), f"{v!r}: duckdb={r} numpy={e}"
 
 
-def test_float_downcast_width_ladder(spark):
+def _float_width(values) -> int:
+    return npb._lossless_float_downcast_np(np.array(values, dtype=np.float64)).dtype.itemsize
+
+
+def test_float_downcast_width_ladder():
     # reference test_float_array_compresses: powers of two -> f16
-    df = _df(spark, [2.0, 4.0, 8.0, 16.0, 32.0, 64.0, 128.0], dtype="double")
-    assert kernels.float_downcast_width(df, "v") == 2
+    assert _float_width([2.0, 4.0, 8.0, 16.0, 32.0, 64.0, 128.0]) == 2
     # f32 max/min survive f32 but not f16 (test_can_compress)
     fmax = float(np.finfo(np.float32).max)
-    df = _df(spark, [fmax, -fmax], dtype="double")
-    assert kernels.float_downcast_width(df, "v") == 4
+    assert _float_width([fmax, -fmax]) == 4
     # f16 max/min -> 2
     hmax = float(np.finfo(np.float16).max)
-    df = _df(spark, [hmax, -hmax], dtype="double")
-    assert kernels.float_downcast_width(df, "v") == 2
+    assert _float_width([hmax, -hmax]) == 2
     # significant low mantissa bits -> stays f64 (test_significant_bits)
     v8 = float(np.frombuffer(b"\x00\x00\x00\xf0\xff\xff\x0f@", dtype=np.float64)[0])
-    df = _df(spark, [v8], dtype="double")
-    assert kernels.float_downcast_width(df, "v") == 8
+    assert _float_width([v8]) == 8
     # one bit over -> f32 exactly
     v4 = float(np.frombuffer(b"\x00\x00\x00\xe0\xff\xff\x0f@", dtype=np.float64)[0])
-    df = _df(spark, [v4], dtype="double")
-    assert kernels.float_downcast_width(df, "v") == 4
+    assert _float_width([v4]) == 4
 
 
 def test_rolling_agg_requires_partition_key(spark):

@@ -476,10 +476,20 @@ def test_dhash_near_dups_planted_pairs(spark):
         [(i, bytes(p), {"format": "x", "n_bytes": len(p), "source": "t"}) for i, p in rows],
         multimodal.MEDIA_SCHEMA,
     )
-    hashes = multimodal.image_dhash(media)
+    from pyspark.sql import functions as F
+
+    from timebox_spark.operators.audio import _pigeonhole_pairs
+
+    # the 64 dHash bits packed into one long pair through the shared
+    # 4-block pigeonhole join (a constant length key: one image size)
+    hashes = multimodal.image_dhash(media).select(
+        "doc_id",
+        F.expr("shiftleft(dhash_hi, 32) | dhash_lo").alias("dh"),
+        F.lit(1).alias("n"),
+    )
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in multimodal.dhash_near_dups(hashes, max_hamming=3).collect()
+        for r in _pigeonhole_pairs(hashes, "dh", "n", 64, max_hamming=3).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] <= 3
     assert all(p == (0, 1) for p in pairs)
@@ -526,7 +536,7 @@ def test_audio_fingerprint_planted_near_dups(spark):
     assert len(got) == 3 and got[0] > 0
     pairs = [
         (r["id_a"], r["id_b"])
-        for r in AU.audio_near_dups(fps).collect()
+        for r in AU.audio_near_dups_hamming(fps, max_hamming=0).collect()
     ]
     assert pairs == [(0, 1)]
 
@@ -596,7 +606,7 @@ def test_audio_hamming_near_dups_planted_near_miss(spark):
     d02 = bin(got[0] ^ got[2]).count("1")
     assert d01 == 1 and d02 == 16, (d01, d02)
     # exact-equality join misses the near-miss pair entirely
-    assert AU.audio_near_dups(fps).count() == 0
+    assert AU.audio_near_dups_hamming(fps, max_hamming=0).count() == 0
     # Hamming-tolerant pigeonhole join finds exactly (0, 1)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]

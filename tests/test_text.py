@@ -1998,43 +1998,6 @@ def test_curate_near_dup_stage_drops_near_copies(spark):
     assert {r["doc_id"] for r in plain.collect()} == {1, 2, 4}
 
 
-def test_curate_near_dup_method_portable_matches_fast_path(spark):
-    """Round-16: near_dup_method='portable' (the md5 family the q54
-    'near' oracle recomputes) keeps the same doc set as the default
-    xxhash64 fast path on a corpus whose near-pairs are unambiguous —
-    same algorithm, different hash family. Also pins the invalid-
-    method raise."""
-    import pytest as _pytest
-
-    from timebox_spark.operators import pipeline
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "rain in spain falls mainly on the plain tonight")
-    docs = spark.createDataFrame(
-        [
-            (1, base),
-            (2, base + " ok"),  # near copy of 1
-            (4, "completely different text about gardens and stone "
-                "walls with many unrelated words in a long sentence"),
-        ],
-        "doc_id long, text string",
-    )
-    kw = dict(langs=("en",), min_quality_q=0, min_tokens=3,
-              near_dup_threshold=0.5)
-    fast = pipeline.curate(docs, **kw)
-    portable = pipeline.curate(
-        docs, near_dup_method="portable",
-        near_dup_kwargs=dict(num_perm=32, bands=8), **kw,
-    )
-    assert (
-        {r["doc_id"] for r in fast.collect()}
-        == {r["doc_id"] for r in portable.collect()}
-        == {1, 4}
-    )
-    with _pytest.raises(ValueError, match="near_dup_method"):
-        pipeline.curate(docs, near_dup_method="nope", **kw).collect()
-
-
 def test_curate_soft_dedup_reweights_instead_of_dropping(spark):
     """Round-16: curate(soft_dedup=True) keeps every gated doc and
     assigns exact integer duplicate weights — QUANT div fp-group-size

@@ -195,10 +195,6 @@ def test_registrable_domain_psl_multi_label_and_exceptions(spark):
     }
     for host, want in cases:
         assert got[host] == want, (host, got[host], want)
-    # the DataFrame-rule-table variant agrees on every case
-    out = U.with_registrable_domain(df, "host", out_col="dom")
-    got2 = {r["host"]: r["dom"] for r in out.collect()}
-    assert got2 == got
     # custom rules override the built-ins
     custom = U.registrable_domain_psl(
         "host", rules=("co.uk", "*.ck", "!www.ck")
@@ -228,77 +224,25 @@ def test_registrable_domain_psl_default_matches_heuristic_on_flat_tlds(spark):
         assert r["h"] == r["p"], (r["h"], r["p"])
 
 
-def test_with_registrable_domain_broadcast_rule_table(spark):
-    """Full-PSL path: rules supplied as a DataFrame (with comments и
-    blanks) resolve identically to the literal variant."""
-    from timebox_spark.operators import urls as U
-
-    rules = spark.createDataFrame(
-        [("// comment",), ("",), ("co.uk",), ("*.ck",), ("!www.ck",),
-         ("com.au",), ("github.io",)],
-        "rule string",
-    )
-    hosts = ["a.b.co.uk", "www.ck", "b.www.ck", "a.x.ck",
-             "news.example.com.au", "user.github.io", "plain.example.com"]
-    df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    out = {
-        r["host"]: r["dom"]
-        for r in U.with_registrable_domain(
-            df, "host", out_col="dom", rules=rules
-        ).collect()
-    }
-    lit = {
-        r["host"]: r["d"]
-        for r in df.select(
-            "host",
-            U.registrable_domain_psl(
-                "host", rules=("co.uk", "*.ck", "!www.ck", "com.au",
-                               "github.io")
-            ).alias("d"),
-        ).collect()
-    }
-    assert out == lit
-
-
 def test_psl_paths_shuffle_free(spark):
     """Scale guard: registrable_domain_psl is a pure column expression
-    (no Exchange/Python); with_registrable_domain shuffles nothing —
-    its only exchanges are the BROADCAST of the rule table per label
-    count."""
+    (no Exchange/Python), with the compact built-in rules and with a
+    ``load_psl``-parsed list alike."""
     from timebox_spark.operators import urls as U
 
     df = spark.range(10).selectExpr(
         "id", "concat('h', CAST(id AS STRING), '.example.co.uk') AS host"
     )
-    plan = (
-        df.select(U.registrable_domain_psl("host"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
-        assert bad not in plan
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        jplan = (
-            U.with_registrable_domain(df, "host")
+    for rules in (None, U.load_psl(PSL_EXCERPT)):
+        plan = (
+            df.select(U.registrable_domain_psl("host", rules=rules))
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # the DATA side moves only through BroadcastExchange (the rule
-    # table); the sole hash exchanges allowed are the O(rules)
-    # rule-table aggregation, which partitions on its own (key, k)
-    # columns — never on anything from the input frame
-    for line in jplan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "key" in line and ", k" in line, line
-    assert "Exchange rangepartitioning" not in jplan
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
-        assert bad not in jplan
+        assert "Exchange" not in plan
+        for bad in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
+            assert bad not in plan
 
 
 # Vendored excerpt of the real public_suffix_list.dat (publicsuffix.org
@@ -401,11 +345,6 @@ def test_load_psl_rules_drive_the_matchers(spark):
     }
     for host, want in cases:
         assert got[host] == want, (host, got[host], want)
-    out = U.with_registrable_domain(
-        df, "host", out_col="d",
-        rules=spark.createDataFrame([(x,) for x in rules], "rule string"),
-    )
-    assert {r["host"]: r["d"] for r in out.collect()} == got
     # ICANN-only load: github.io stops being a suffix → default rule
     icann = U.registrable_domain_psl(
         "host", rules=U.load_psl(PSL_EXCERPT, sections={"icann"})
@@ -436,11 +375,6 @@ def test_psl_nested_exception_longest_match_wins(spark):
     # y.www.ck: !www.ck matches and an exception prevails over EVERY
     # normal rule (even the longer *.www.ck) → ps='ck', eTLD+1 www.ck
     assert got["y.www.ck"] == "www.ck"
-    out = U.with_registrable_domain(
-        df, "host", out_col="d",
-        rules=spark.createDataFrame([(x,) for x in rules], "rule string"),
-    )
-    assert {r["host"]: r["d"] for r in out.collect()} == got
 
 
 def test_duckdb_psl_renderer_matches_spark_bit_for_bit(spark):

@@ -3,13 +3,25 @@ Jaccard, embedding-cosine near-dup.
 
 Scale design: every variant is blocking-based — no all-pairs cross
 join ever materializes. Exact dedup is a hash groupBy; MinHash bands
-and SimHash buckets turn near-dup detection into equi-join keys;
+and SimHash blocks turn near-dup detection into equi-join keys;
 n-gram Jaccard and cosine near-dup verify only within candidate
-blocks. All hashing is xxhash64 (JVM built-in, seedable via a literal
-first argument), so signatures are deterministic across runs and
-cluster sizes.
-"""
+blocks.
 
+Two hash families, each deterministic across runs and cluster sizes:
+
+- md5 (``_md5_u32``/``_md5_u32_sql``, ``portable_*``,
+  ``build_corpus_index``, ``corpus_fingerprints``): every SQL engine
+  recomputes it, so the DuckDB oracle hash-matches the output. The
+  ingest path (``streaming.ingest``: fingerprints, corpus index,
+  compactor, q68), q23's exact fingerprints, q25's suite members
+  ('minhash', 'simhash', 'cross'), q54's 'near' member and
+  ``pipeline.curate``'s near-dup stage run it.
+- numpy universal hashing with xxhash64 band keys
+  (``minhash_signatures``, ``minhash_lsh_candidates``,
+  ``minhash_dedup``): one vectorized mix per shingle instead of 32
+  md5 calls. The headline query ``q25_minhash_dedup`` and bench's
+  stage split and clustering runs use it; no oracle recomputes it.
+"""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -21,8 +33,8 @@ from timebox_spark.session import ensure_parallelism
 class ConvergenceError(RuntimeError):
     """An iterative dedup algorithm hit its round cap without
     converging. A dedicated type (advisor round 12) so escalation
-    paths — ``dedup_clusters(algorithm='auto')``, the streaming
-    compactor — catch exactly this and never mask an unrelated
+    paths — ``dedup_clusters``, the streaming compactor — catch
+    exactly this and never mask an unrelated
     RuntimeError behind a silent re-run."""
 
 
@@ -55,17 +67,6 @@ def unpersist_owned(owned: list) -> None:
 
 def normalize_text(col="text"):
     return F.trim(F.regexp_replace(F.lower(F.col(col) if isinstance(col, str) else col), r"\s+", " "))
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the smallest id per normalized-text group (hash groupBy —
-    one shuffle on the fingerprint, no comparisons)."""
-    return (
-        df.withColumn("__fp", F.md5(F.encode(normalize_text(text_col), "UTF-8")))
-        .groupBy("__fp")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
-        .drop("__fp")
-    )
 
 
 def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -234,27 +235,6 @@ def minhash_signatures(
     )
 
 
-def _band_table(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band, bucket) LSH band-key table of a signature frame —
-    shared by the self-join candidate generator and the cross-corpus
-    contamination probe (both frames must band with the same
-    num_hashes/bands for keys to be comparable)."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        cols = [
-            F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("bucket"))
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-
-
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -265,7 +245,18 @@ def minhash_lsh_candidates(
     docs sharing any (band, bucket) are candidates. Self-join is
     equi-join on the bucket key — broadcast/SMJ-able, skew handled by
     AQE. Output: distinct candidate pairs (a < b)."""
-    buckets = _band_table(sigs, id_col, num_hashes, bands)
+    rows_per_band = num_hashes // bands
+    band_cols = []
+    for b in range(bands):
+        cols = [
+            F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)
+        ]
+        band_cols.append(
+            F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("bucket"))
+        )
+    buckets = sigs.select(
+        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
+    ).select(id_col, "bb.band", "bb.bucket")
     a = buckets.alias("a")
     b = buckets.alias("b")
     pairs = (
@@ -283,53 +274,29 @@ def minhash_lsh_candidates(
     return pairs
 
 
-def shingle_hash_sets(
-    df: DataFrame,
+def jaccard_verify(
+    pairs: DataFrame,
+    sets: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 5,
+    threshold: float = 0.7,
 ) -> DataFrame:
-    """Per-doc sorted unique shingle-hash sets (array<long>) from the
-    vectorized numpy kernel — the verify-stage companion of
-    minhash_signatures (intersecting longs is far cheaper than
-    intersecting n-gram strings; hash collisions at 64 bits are
-    negligible for Jaccard estimation)."""
-    import numpy as np
-    import pandas as pd
+    """Exact Jaccard on candidate pairs only: join the (id, sh_set)
+    shingle-hash table ``sets`` (the ``emit_sets`` output of
+    ``minhash_signatures``) back by id for both sides — candidates are
+    few, so this is a small join, and the inner joins prune
+    non-candidate docs themselves.
 
-    from timebox_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-
-    def compute(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            values, doc_index, _seg = _batch_shingle_values(
-                list(pdf[text_col]), shingle_n
-            )
-            order = np.lexsort((values, doc_index))
-            dv, vv = doc_index[order], values[order]
-            keep = np.ones(len(vv), dtype=bool)
-            if len(vv) > 1:
-                keep[1:] = (vv[1:] != vv[:-1]) | (dv[1:] != dv[:-1])
-            dv, vv = dv[keep], vv[keep].astype(np.int64)
-            bounds = np.searchsorted(dv, np.arange(1, len(pdf)))
-            sets = np.split(vv, bounds)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "sh_set": [s for s in sets]}
-            )
-
-    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
-        compute, schema=f"{id_col} long, sh_set array<long>"
-    )
-
-
-def _jaccard_join(pairs: DataFrame, sets_df: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Exact Jaccard over candidate pairs given a (id, sh_set) table."""
+    Caching: a LOCAL copy of ``pairs`` is persisted (it feeds two
+    joins; recomputing it would re-run the whole candidate pipeline).
+    Entries are keyed by canonicalized plan, so repeated invocations
+    of the same query in one session reuse rather than accumulate;
+    they are dropped on session end. The caller's DataFrame object is
+    never mutated."""
+    pairs = pairs.select("id_a", "id_b").persist()
+    sets = sets.select(id_col, "sh_set")
     return (
-        pairs.join(sets_df.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh_set", "sh_a"), "id_a")
-        .join(sets_df.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh_set", "sh_b"), "id_b")
+        pairs.join(sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh_set", "sh_a"), "id_a")
+        .join(sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh_set", "sh_b"), "id_b")
         .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
@@ -339,47 +306,6 @@ def _jaccard_join(pairs: DataFrame, sets_df: DataFrame, id_col: str, threshold: 
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def jaccard_verify(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 5,
-    threshold: float = 0.7,
-    sets_source: DataFrame | None = None,
-) -> DataFrame:
-    """n-gram Jaccard on candidate pairs only (join hashed shingle
-    sets back by id — candidates are few, so this is a small join).
-
-    Shingle sets come from ``sets_source`` (an (id, sh_set) table,
-    e.g. the ``emit_sets`` output of ``minhash_signatures``) when
-    given — no re-shingling; otherwise they are computed ONLY for
-    docs that appear in a candidate pair (left-semi join first): at
-    corpus scale candidates are a tiny fraction of documents, so the
-    verify kernel touches a sliver of the data.
-
-    Caching: a LOCAL copy of ``pairs`` and the sets table are
-    persisted (both feed two joins; recomputing them would re-run the
-    whole candidate pipeline). Entries are keyed by canonicalized
-    plan, so repeated invocations of the same query in one session
-    reuse rather than accumulate; they are dropped on session end.
-    The caller's DataFrame object is never mutated."""
-    pairs = pairs.select("id_a", "id_b").persist()
-    if sets_source is not None:
-        # already materialized — the inner joins in _jaccard_join prune
-        # non-candidate docs themselves; no semi-join needed
-        sets_df = sets_source.select(id_col, "sh_set")
-    else:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        needed = df.join(cand_ids, id_col, "left_semi")
-        sets_df = shingle_hash_sets(needed, id_col, text_col, shingle_n).persist()
-    return _jaccard_join(pairs, sets_df, id_col, threshold)
 
 
 def minhash_estimate_filter(
@@ -429,11 +355,9 @@ def minhash_dedup(
     bands: int | None = None,
     shingle_n: int = 5,
     threshold: float = 0.7,
-    estimate_margin: float | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → minhash → band →
-    bucket-join → [optional signature-estimate prefilter] →
-    exact-Jaccard verify.
+    bucket-join → exact-Jaccard verify.
 
     ``bands=None`` (default) derives (bands, rows) from ``threshold``
     via ``lsh_tuning(bias='precision')`` — the S-curve midpoint sits
@@ -444,14 +368,6 @@ def minhash_dedup(
     for free while a candidate flood is the scale failure mode; pass
     an explicit ``bands`` (or use ``lsh_tuning(bias='recall')``) to
     trade verify compute for borderline-pair recall.
-
-    ``estimate_margin`` (e.g. 0.25) enables the prefilter: keep
-    candidates whose estimated Jaccard is within the margin below the
-    threshold before running the exact intersection. Worth it when
-    band candidates are huge relative to true positives (loose
-    thresholds / dirty corpora at full scale); at small candidate
-    counts the extra sig joins cost more than the skipped intersects,
-    so it is off by default.
 
     One shingle pass: signatures AND shingle sets come out of the
     same kernel (``emit_sets``), persisted once; banding reads the
@@ -472,106 +388,7 @@ def minhash_dedup(
         df, id_col, text_col, num_hashes, shingle_n, emit_sets=True
     ).persist()
     cands = minhash_lsh_candidates(combined, id_col, num_hashes, bands)
-    if estimate_margin is not None:
-        # bands passed through: these candidates ARE banded, so the
-        # prefilter must use the debiased estimator (round 14 — raw
-        # agreement admitted ~6× the candidates, all paying exact
-        # verification downstream)
-        cands = minhash_estimate_filter(
-            cands, combined, id_col, num_hashes,
-            min_estimate=max(0.0, threshold - estimate_margin),
-            bands=bands,
-        ).select("id_a", "id_b")
-    return jaccard_verify(
-        df, cands, id_col, text_col, shingle_n, threshold, sets_source=combined
-    )
-
-
-# ---------------------------------------------------------------- simhash
-
-def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash over word tokens: per bit, sum ±1 votes of
-    xxhash64(token); bit set where the vote is positive. One explode +
-    one groupBy with 64 conditional sums — all JVM-side."""
-    toks = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(normalize_text(text_col), F.lit(TOKEN_RE), F.lit(0))
-        ).alias("tok"),
-    ).withColumn("h", F.xxhash64(F.lit(7), F.col("tok")))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), bit).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"v_{bit}")
-        for bit in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
-    sim = F.lit(0).cast("long")
-    for bit in range(64):
-        sim = sim + F.when(
-            F.col(f"v_{bit}") > 0, F.shiftleft(F.lit(1).cast("long"), bit)
-        ).otherwise(0)
-    return agg.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    block_bits: int = 16,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
-    Blocking: 64/block_bits blocks — by pigeonhole, any pair within
-    Hamming (n_blocks − 1) agrees exactly on ≥1 block, so candidates
-    come from equi-joins on block values, never a cross join. A
-    ``max_hamming`` beyond that bound would silently lose recall, so
-    it is rejected."""
-    sigs = simhash64(df, id_col, text_col)
-    n_blocks = 64 // block_bits
-    if max_hamming > n_blocks - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the pigeonhole guarantee "
-            f"of {n_blocks} blocks (≤{n_blocks - 1}); use more/smaller blocks"
-        )
-    mask = (1 << block_bits) - 1
-    blocked = sigs.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright(F.col("simhash"), i * block_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("b"),
-    ).select(id_col, "simhash", "b.blk", "b.key")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cands.withColumn("hamming", hamming).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")
+    return jaccard_verify(cands, combined, id_col, threshold)
 
 
 # ---------------------------------------------------------------- jaccard (blocked)
@@ -667,7 +484,6 @@ def cross_minhash_contamination(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 5,
-    method: str = "minhash",
 ) -> DataFrame:
     """NEAR-duplicate decontamination ACROSS corpora: (corpus doc,
     probe doc) pairs whose EXACT shingle Jaccard >= ``threshold``,
@@ -678,10 +494,9 @@ def cross_minhash_contamination(
     PARAPHRASE-level leakage (a benchmark item lightly reworded into
     a training document) that an exact n-gram probe misses.
 
-    ``method='minhash'`` (default) runs the vectorized xxhash64 numpy
-    kernels; ``'portable'`` the md5 hash family every SQL engine can
-    recompute (the q25 'cross' driver member — same algorithm, same
-    banding math, pinned equal-modulo-hash-family in tests).
+    Both frames are indexed with ``portable_minhash_index`` — the md5
+    hash family every SQL engine can recompute, so the q25 'cross'
+    driver member is oracle-hashed bit-for-bit.
 
     Scale: the probe side is an eval benchmark — small — so its band
     table is the natural build side of the band-key equi-join against
@@ -691,44 +506,22 @@ def cross_minhash_contamination(
     keys require); the verify stage's corpus shingle sets are
     computed only for docs appearing in a candidate pair (round 17 —
     semi-join on the probe-bounded candidate ids BEFORE the shingle
-    kernel/projection: Catalyst cannot push a join below the opaque
-    Arrow kernel, so the pre-filter is explicit). The candidate table
-    is persisted (it feeds both the semi-join and the verify join;
-    recomputing it would re-run the full corpus signature scan) —
-    plan-keyed cache entries, dropped at session end, the
-    ``jaccard_verify`` convention. Returns
+    projection, so the second text pass touches a sliver of the
+    corpus). The candidate table is persisted (it feeds both the
+    semi-join and the verify join; recomputing it would re-run the
+    full corpus signature scan) — plan-keyed cache entries, dropped at
+    session end, the ``jaccard_verify`` convention. Returns
     ``(id_col, probe_id, jaccard)`` — id spaces need not be disjoint,
     the two columns keep the frames apart."""
-    if method == "portable":
-        banded_c, _d_c_full = portable_minhash_index(
-            corpus, id_col, text_col, num_hashes, bands, shingle_n
-        )
-        banded_p, d_p = portable_minhash_index(
-            probes, id_col, text_col, num_hashes, bands, shingle_n
-        )
-        key_cols, set_col = ["band", "key"], "__sh"
-    elif method == "minhash":
-        banded_c = _band_table(
-            minhash_signatures(
-                corpus, id_col, text_col, num_hashes, shingle_n
-            ),
-            id_col, num_hashes, bands,
-        )
-        banded_p = _band_table(
-            minhash_signatures(
-                probes, id_col, text_col, num_hashes, shingle_n
-            ),
-            id_col, num_hashes, bands,
-        )
-        d_p = shingle_hash_sets(probes, id_col, text_col, shingle_n)
-        key_cols, set_col = ["band", "bucket"], "sh_set"
-    else:
-        raise ValueError(
-            f"method must be 'minhash' or 'portable', got {method!r}"
-        )
+    banded_c, _d_c_full = portable_minhash_index(
+        corpus, id_col, text_col, num_hashes, bands, shingle_n
+    )
+    banded_p, d_p = portable_minhash_index(
+        probes, id_col, text_col, num_hashes, bands, shingle_n
+    )
     cand = (
         banded_c.join(
-            banded_p.withColumnRenamed(id_col, "probe_id"), key_cols
+            banded_p.withColumnRenamed(id_col, "probe_id"), ["band", "key"]
         )
         .select(id_col, "probe_id")
         .distinct()
@@ -738,13 +531,10 @@ def cross_minhash_contamination(
     # probe-bounded, so the semi-join broadcasts and the second text
     # pass touches a sliver of the corpus instead of all of it
     needed = corpus.join(cand.select(id_col).distinct(), id_col, "left_semi")
-    if method == "portable":
-        d_c = _portable_sets(needed, id_col, text_col, shingle_n)
-    else:
-        d_c = shingle_hash_sets(needed, id_col, text_col, shingle_n)
-    sh_c = d_c.select(F.col(id_col), F.col(set_col).alias("sh_a"))
+    d_c = _portable_sets(needed, id_col, text_col, shingle_n)
+    sh_c = d_c.select(F.col(id_col), F.col("__sh").alias("sh_a"))
     sh_p = d_p.select(
-        F.col(id_col).alias("probe_id"), F.col(set_col).alias("sh_b")
+        F.col(id_col).alias("probe_id"), F.col("__sh").alias("sh_b")
     )
     joined = cand.join(sh_c, id_col).join(sh_p, "probe_id")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -856,8 +646,8 @@ def connected_components(
         raise ConvergenceError(
             f"connected_components did not converge in {max_iterations} "
             f"rounds (cluster diameter exceeds the cap) — use "
-            f"connected_components_star or dedup_clusters("
-            f"algorithm='star'/'auto')"
+            f"connected_components_star, or dedup_clusters, which "
+            f"escalates to it"
         )
     if stats is not None:
         stats["converged"] = True
@@ -895,7 +685,7 @@ def connected_components_star(
     Returns (node, component) for every node appearing in ``pairs``,
     component = min id — bit-identical to ``connected_components``
     (pinned by tests on paths/cliques/random graphs), so the two are
-    drop-in interchangeable (``dedup_clusters(algorithm='star')``).
+    drop-in interchangeable (``dedup_clusters`` escalates to it).
     Like label propagation, each round localCheckpoints to cut
     lineage; ``owned_rdds`` records the checkpointed RDD handles so a
     long-lived caller (``streaming.ingest.compact_corpus``) unpersists
@@ -974,42 +764,32 @@ def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     stats: dict | None = None,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Canonical-doc assignment: every doc mapped to its cluster's min
-    id (docs with no near-dup map to themselves). ``stats`` is passed
-    through to the component algorithm; ``algorithm='label'`` (min-
-    label propagation, O(diameter) rounds — right for the shallow
-    clusters near-dup graphs usually are), ``'star'``
-    (:func:`connected_components_star`, O(log² n) rounds — right when
-    the stats diagnostic shows diameter growing with corpus size), or
-    ``'auto'`` — label propagation first, escalating to contraction
-    iff the round cap is hit (label propagation RAISES
+    id (docs with no near-dup map to themselves). Components come from
+    min-label propagation (:func:`connected_components`, O(diameter)
+    rounds — right for the shallow clusters near-dup graphs usually
+    are), escalating to star contraction
+    (:func:`connected_components_star`, O(log² n) rounds) iff the
+    round cap is hit: label propagation RAISES
     :class:`ConvergenceError` instead of silently returning truncated
-    labels — only that exact type triggers escalation, an unrelated
-    RuntimeError propagates), so shallow graphs pay the cheap path and
-    a pathological plagiarism chain can no longer mislabel. On
-    escalation the aborted label run's stats entries are re-namespaced
-    under ``label_*`` so the star run's keys are never mixed with
-    stale ones."""
-    if algorithm == "label":
+    labels, and only that exact type triggers escalation (an
+    unrelated RuntimeError propagates). Both give component = min
+    node id, so a converged run's labels are the star run's labels;
+    shallow graphs pay the cheap path and a pathological plagiarism
+    chain can no longer mislabel. ``stats`` is passed through to the
+    component algorithm; on escalation the aborted label run's stats
+    entries are re-namespaced under ``label_*`` so the star run's keys
+    are never mixed with stale ones."""
+    try:
         comp = connected_components(pairs, stats=stats)
-    elif algorithm == "star":
+    except ConvergenceError:
+        if stats is not None:
+            stats["escalated_to_star"] = True
+            for k in ("rounds", "changed_per_round", "edges"):
+                if k in stats:
+                    stats[f"label_{k}"] = stats.pop(k)
         comp = connected_components_star(pairs, stats=stats)
-    elif algorithm == "auto":
-        try:
-            comp = connected_components(pairs, stats=stats)
-        except ConvergenceError:
-            if stats is not None:
-                stats["escalated_to_star"] = True
-                for k in ("rounds", "changed_per_round", "edges"):
-                    if k in stats:
-                        stats[f"label_{k}"] = stats.pop(k)
-            comp = connected_components_star(pairs, stats=stats)
-    else:
-        raise ValueError(
-            f"algorithm must be 'label', 'star' or 'auto', got {algorithm!r}"
-        )
     return (
         df.select(F.col(id_col))
         .join(comp, df[id_col] == comp.node, "left")
@@ -1243,71 +1023,6 @@ def winnow_overlap_pairs(
     )
 
 
-def embedding_near_dups_lsh(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    planes: int = 8,
-    tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Scale path for embedding near-dup mining: random-hyperplane LSH
-    candidate generation instead of within-block all-pairs.
-
-    ``embedding_near_dups`` compares every pair inside a blocking
-    group — O(n_block²), fine when blocks are bounded (per-label, per
-    shard) but quadratic if one block dominates. Here candidates are
-    pairs that share a bucket in ANY of ``tables`` independent
-    hyperplane tables (the same OR-amplified signature family as
-    ``similarity.lsh_topk``), then the exact cosine filter runs on
-    candidates only. High-cosine pairs collide with probability
-    (1 − θ/π)^planes per table, so recall is tunable with
-    planes/tables while the join stays a bucket equi-join — never an
-    all-pairs product. Same output schema as the exact operator."""
-    from timebox_spark.operators.similarity import _lsh_bucket
-
-    base = ensure_parallelism(df.select(id_col, vec_col))
-    bucketed = base.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        _lsh_bucket(
-                            F.col(vec_col), planes, dim, seed=11 + 97 * t
-                        ).alias("bkt"),
-                    )
-                    for t in range(tables)
-                ]
-            )
-        ).alias("__b"),
-    ).select(id_col, vec_col, "__b.tbl", "__b.bkt")
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("__va"),
-            F.col(f"b.{vec_col}").alias("__vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # collapse multi-table hits
-    )
-    return (
-        cand.withColumn("cosine", _cosine(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 # portable LSH near-dup contract constants — the q27 'lsh' oracle SQL
 # is generated from these same values (plans/suites.py)
 NEARDUP_LSH_TABLES = 4
@@ -1326,13 +1041,16 @@ def portable_embedding_near_dups_lsh(
     planes: int = NEARDUP_LSH_PLANES,
     dim: int = 64,
 ) -> DataFrame:
-    """Engine-portable LSH near-dup pairs: the same OR-amplified
-    hyperplane candidate generation as ``embedding_near_dups_lsh``,
-    but with the literal ±1 plane family from
-    ``similarity.lsh_plane_signs`` and the quantized integer cosine —
-    every bucket, candidate, and score is a pure BIGINT/IEEE-double
-    computation the DuckDB oracle re-derives bit-for-bit (driver key
-    q27's 'lsh' member).
+    """LSH near-dup pairs for unbounded blocks: candidates are pairs
+    that share a bucket in ANY of ``tables`` independent random-
+    hyperplane tables (OR-amplified, the family of
+    ``similarity.lsh_topk``), with the literal ±1 plane family from
+    ``similarity.lsh_plane_signs`` and the quantized integer cosine
+    scoring candidates only. ``embedding_near_dups`` compares every
+    pair inside a blocking group — O(n_block²); here the join stays a
+    bucket equi-join at any block size. Every bucket, candidate, and
+    score is a pure BIGINT/IEEE-double computation the DuckDB oracle
+    re-derives bit-for-bit (driver key q27's 'lsh' member).
 
     Emits pairs at ``cosine_q >= threshold_q`` plus the global
     ``top_n`` closest candidate pairs (cosine_q desc, id tie-break) so
@@ -1492,16 +1210,15 @@ def _cosine(x, y):
 
 # ---------------------------------------------------------------- portable (md5) variants
 
-# Engine-portable near-dup mining: the SAME algorithms as the numpy
-# Arrow kernels above, but with an md5-derived hash family that any
-# SQL engine reproduces bit-for-bit — so the driver's DuckDB oracle
+# Engine-portable near-dup mining: the SAME MinHash algorithm as the
+# numpy Arrow kernel above, but with an md5-derived hash family that
+# any SQL engine reproduces bit-for-bit — so the driver's DuckDB oracle
 # recomputes signatures, banding, candidates, and verification and
-# hash-matches the full output. The numpy kernels (minhash_signatures
-# etc.) remain the fast path at scale (one vectorized mix vs 32 md5
-# calls per shingle); these run entirely JVM-side (explode + md5 +
-# min/conditional-sum aggs — no Python at all), so they distribute
-# identically: one shuffle to aggregate signatures, band-bucket
-# equi-joins for candidates, never an all-pairs join.
+# hash-matches the full output. The numpy kernel (minhash_signatures)
+# is the faster mix (one vectorized mix vs 32 md5 calls per shingle);
+# these run entirely JVM-side (md5 + min/conditional-sum expressions —
+# no Python at all): band-bucket equi-joins for candidates, never an
+# all-pairs join.
 
 
 def _md5_u32(col, salt: str | None = None):
@@ -2364,8 +2081,8 @@ def incremental_exact_dedup(
     # and the gated path's probe drops NULLs then classifies them
     # definitely-new — and (b) shares ONE window partition below, so
     # exactly one NULL-text row per batch survives (smallest id).
-    # This matches batch exact_dedup, where groupBy also makes all
-    # NULL fingerprints one group. Pinned by a pytest asserting gated
+    # This matches a batch groupBy on the fingerprint, which also makes
+    # all NULL fingerprints one group. Pinned by a pytest asserting gated
     # and gate-less paths identical on NULL-text fixtures.
     w = Window.partitionBy("__fp").orderBy(id_col)
     return (

@@ -5,28 +5,30 @@ and timebox_tag.py):
 
 - delta encode/decode ('e' mode): ediff1d + cumsum
   (numpy_utils.py:218, 258-260) → lag / running-sum windows (W1/W2).
-- frame-of-reference encode/decode ('m' mode): arr − amin(arr)
-  (numpy_utils.py:214-236, 261-262) → global-min agg + broadcast (W3/W4).
 - fixed-decimal quantize/dequantize (timebox_tag.py:238-240, 264-265)
   → round/pow column expressions (C1/C2).
 - lossless float downcast guard (numpy_utils.py:103-184) → round-trip
-  cast equality predicate (C3).
-- min-width integer typing (binary.py:5-43) → min/max agg + width
-  ladder (C4/W5).
+  cast equality predicates (C3).
+
+The codec's other decisions are made once, where the codec runs:
+frame-of-reference ('m' mode), stored integer widths and the writer's
+float ladder in ``sources.npb`` (``_encode_column``, ``_uint_width``/
+``_int_width``, ``_lossless_float_downcast_np``); the driver keys
+compute frame-of-reference and extremes as plain aggregates
+(``plans.queries.q07_frame_of_reference``/``q05_extremes``).
 
 Scale notes: windows partition by the caller's series key — a window
 with no partition key collapses to one task, so global operations
-(FOR, extremes) are computed as aggregates and broadcast-joined back
-instead of using an empty-partition window.
+are computed as aggregates and broadcast-joined back instead of using
+an empty-partition window.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------------------- W1/W2/W6
+# ---------------------------------------------------------------- W1/W2
 
 def delta_encode(
     df: DataFrame,
@@ -91,61 +93,6 @@ def delta_decode(
         F.first(first_value_col).over(wf)
         + F.sum(F.coalesce(F.col(delta_col), F.lit(0))).over(w),
     )
-
-
-def ts_delta_us(
-    df: DataFrame,
-    ts_col: str = "ts",
-    order_by: list[str] | None = None,
-    partition_by: list[str] | None = None,
-    out_col: str = "delta_us",
-    bucket: Column | None = None,
-) -> DataFrame:
-    """Per-row timestamp delta in microseconds (reference
-    ``np.ediff1d(self._dates)``, timebox.py:370; µs because Spark
-    timestamps are µs-precision).
-    ``bucket``: see ``delta_encode`` (shared-bounds composition)."""
-    order_by = order_by or [ts_col]
-    us = F.unix_micros(F.col(ts_col))
-    if not partition_by:
-        d = df.withColumn("__us", us)
-        if bucket is None:
-            bucket = auto_bucket(d, order_by)
-        d = bucketed_prev(d, order_by, "__us", bucket, out_col="__prev_us")
-        return d.withColumn(out_col, F.col("__us") - F.col("__prev_us")).drop(
-            "__us", "__prev_us"
-        )
-    w = _w(order_by, partition_by)
-    return df.withColumn(out_col, us - F.lag(us).over(w))
-
-
-# ---------------------------------------------------------------- W3/W4
-
-def frame_of_reference_encode(
-    df: DataFrame, value_cols: list[str], suffix: str = "_for"
-) -> tuple[DataFrame, dict[str, float]]:
-    """Subtract the global min from each column (reference 'm' mode,
-    numpy_utils.py:214-236). Returns (encoded df, {col: reference_min}).
-
-    Implemented as one agg + literal subtraction (the mins are scalars;
-    a Window.partitionBy() would serialize the table through a single
-    task — wrong at scale).
-    """
-    mins_row = df.agg(
-        *[F.min(c).alias(c) for c in value_cols]
-    ).collect()[0]
-    refs = {c: mins_row[c] for c in value_cols}
-    out = df
-    for c in value_cols:
-        out = out.withColumn(c + suffix, F.col(c) - F.lit(refs[c]))
-    return out, refs
-
-
-def frame_of_reference_decode(
-    df: DataFrame, encoded_col: str, reference_value, out_col: str
-) -> DataFrame:
-    """arr + ref (numpy_utils.py:261-262)."""
-    return df.withColumn(out_col, F.col(encoded_col) + F.lit(reference_value))
 
 
 # ---------------------------------------------------------------- C1/C2
@@ -214,8 +161,8 @@ def float16_roundtrip_exact(col: Column | str) -> Column:
 
 
 def float16_roundtrip_exact_np(values) -> "object":
-    """Ground-truth numpy check (np.float16 round trip) used by the
-    writer policy and to pin the Column formula in tests."""
+    """Ground-truth numpy check (np.float16 round trip) that tests pin
+    the Column formula to."""
     import numpy as np
 
     arr = np.asarray(values, dtype=np.float64)
@@ -224,58 +171,6 @@ def float16_roundtrip_exact_np(values) -> "object":
     with np.errstate(over="ignore"):
         back = arr.astype(np.float16).astype(np.float64)
     return (back == arr) | (np.isnan(arr) & np.isnan(back))
-
-
-def lossless_float32_downcast(df: DataFrame, col: str) -> tuple[DataFrame, bool]:
-    """Writer policy: downcast a double column to float only if every
-    value (NaN included) round-trips exactly — the distributed analog
-    of ``compress_float_array`` (numpy_utils.py:103-184). Returns
-    (possibly-narrowed df, downcast_applied)."""
-    bad = df.filter(~float32_roundtrip_exact(col) & F.col(col).isNotNull()).limit(1).count()
-    if bad == 0:
-        return df.withColumn(col, F.col(col).cast("float")), True
-    return df, False
-
-
-def float_downcast_width(df: DataFrame, col: str) -> int:
-    """Smallest lossless float itemsize {2, 4, 8} for a double column —
-    the full reference ladder f64→f32→f16 (numpy_utils.py:103-184) as
-    ONE aggregate pass. Spark has no half type, so 2 means "an f16
-    container would be lossless" (the .npb writer uses this to pick the
-    stored dtype); the column itself is narrowed to float at most."""
-    row = df.agg(
-        F.min(float32_roundtrip_exact(col).cast("int")).alias("f32"),
-        F.min(float16_roundtrip_exact(col).cast("int")).alias("f16"),
-    ).collect()[0]
-    if row["f16"] in (1, None):
-        return 2
-    if row["f32"] == 1:
-        return 4
-    return 8
-
-
-# ---------------------------------------------------------------- C4/W5
-
-def required_bytes_unsigned(max_value: int) -> int:
-    """Smallest of {1,2,4,8} bytes holding an unsigned value — same
-    contract as determine_required_bytes_unsigned_integer
-    (/root/reference/timebox/utils/binary.py:5-22)."""
-    if max_value < 0:
-        raise ValueError("unsigned width of a negative value")
-    for width, limit in ((1, 1 << 8), (2, 1 << 16), (4, 1 << 32), (8, 1 << 64)):
-        if max_value < limit:
-            return width
-    raise ValueError(f"value too large for uint64: {max_value}")
-
-
-def required_bytes_signed(min_value: int, max_value: int) -> int:
-    """Smallest signed width covering [min, max] — contract of
-    determine_required_bytes_signed_integer (binary.py:25-43)."""
-    for width in (1, 2, 4, 8):
-        lo, hi = -(1 << (8 * width - 1)), (1 << (8 * width - 1)) - 1
-        if lo <= min_value and max_value <= hi:
-            return width
-    raise ValueError(f"range [{min_value}, {max_value}] exceeds int64")
 
 
 # ---------------------------------------------------------------- scalable global lag

@@ -286,11 +286,10 @@ def decode_image(payload: bytes):
 # expected decode digest (dims + pixel sum) WITHOUT decoding — the
 # encode→decode round-trip is what's under test on the Spark side.
 SYNTH_PIX_MOD = 256
-SYNTH_H = (8, 9)  # h = 8 + doc_id % 9          → 8..16
-SYNTH_W = (8, 7, 9)  # w = 8 + (doc_id*7) % 9   → 8..16
 
 
 def synth_dims(doc_id: int) -> tuple[int, int]:
+    """(h, w) = (8 + doc_id % 9, 8 + (doc_id*7) % 9), each 8..16."""
     return 8 + doc_id % 9, 8 + (doc_id * 7) % 9
 
 
@@ -619,8 +618,9 @@ def image_dhash(media: DataFrame) -> DataFrame:
     BIGINT on any engine (bit 63 would overflow a signed shift).
 
     Arrow map-only; visually-identical images (recompression, mild
-    noise) land within a few bits, so pairs come from
-    ``dhash_near_dups``'s pigeonhole block join — never all-pairs."""
+    noise) land within a few bits, so pairs come from the 4-block
+    pigeonhole join ``audio._pigeonhole_pairs`` over the 64 bits
+    packed into one long — never all-pairs."""
     from timebox_spark.session import ship_package
 
     ship_package(media.sparkSession)
@@ -656,69 +656,6 @@ def image_dhash(media: DataFrame) -> DataFrame:
 
     return ensure_parallelism(media.select("doc_id", "payload")).mapInPandas(
         extract, schema=DHASH_SCHEMA
-    )
-
-
-def dhash_near_dups(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-duplicate image pairs by dHash Hamming distance with
-    pigeonhole blocking: the 64 bits split into four 16-bit blocks;
-    any pair within ``max_hamming`` ≤ 3 must agree on at least one
-    block (4 blocks, ≤3 flipped bits), so candidates come from four
-    block equi-joins — the same scale shape as the SimHash text
-    path, never an all-pairs product. Returns
-    (id_a, id_b, hamming).
-
-    ``max_hamming`` > 3 would silently lose pairs (4 flipped bits can
-    hit all 4 blocks), so it is rejected — recall at larger radii
-    needs more/narrower blocks, not a bigger threshold."""
-    if max_hamming > 3:
-        raise ValueError(
-            "4x16-bit pigeonhole blocking guarantees recall only for "
-            f"max_hamming <= 3 (got {max_hamming})"
-        )
-    blocks = hashes.select(
-        F.col(id_col),
-        "dhash_lo",
-        "dhash_hi",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), (F.col("dhash_lo") % 65536).alias("key")),
-                F.struct(F.lit(1).alias("blk"), F.expr("dhash_lo div 65536").alias("key")),
-                F.struct(F.lit(2).alias("blk"), (F.col("dhash_hi") % 65536).alias("key")),
-                F.struct(F.lit(3).alias("blk"), F.expr("dhash_hi div 65536").alias("key")),
-            )
-        ).alias("e"),
-    ).select(id_col, "dhash_lo", "dhash_hi", "e.blk", "e.key")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.dhash_lo").alias("alo"),
-            F.col("a.dhash_hi").alias("ahi"),
-            F.col("b.dhash_lo").alias("blo"),
-            F.col("b.dhash_hi").alias("bhi"),
-        )
-        .distinct()
-    )
-    hamming = (
-        F.bit_count(F.col("alo").bitwiseXOR(F.col("blo")))
-        + F.bit_count(F.col("ahi").bitwiseXOR(F.col("bhi")))
-    ).cast("long")
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 

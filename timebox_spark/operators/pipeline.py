@@ -58,7 +58,6 @@ def curate(
     rank_gate: tuple | None = None,
     near_dup_threshold: float | None = None,
     near_dup_kwargs: dict | None = None,
-    near_dup_method: str = "minhash",
     soft_dedup: bool = False,
 ) -> DataFrame:
     """Return the curated corpus: one row per kept document with
@@ -91,24 +90,16 @@ def curate(
     ``near_dup_threshold`` (round 15 — completes the one-call batch
     pipeline; C4/RefinedWeb both near-dedup after the exact pass)
     additionally drops NEAR-duplicates among the exact survivors:
-    banded MinHash-LSH candidates verified at exact hashed-shingle
-    Jaccard ≥ threshold (``dedup.minhash_dedup``), clusters resolved
-    by connected components with the auto-escalating algorithm
-    (``dedup.dedup_clusters(algorithm='auto')``), each cluster
-    keeping its smallest id. Near-dup needs shingles, so this is the
-    one stage that re-reads text — deliberately AFTER every gate and
-    the exact dedup, so the second pass shingles only the surviving
-    docs. ``near_dup_kwargs`` forwards tuning (num_hashes, bands,
-    shingle_n). ``near_dup_method`` picks the pair generator:
-    ``'minhash'`` (default — ``dedup.minhash_dedup``, the xxhash64
-    numpy fast path) or ``'portable'``
-    (``dedup.portable_minhash_pairs``, the md5 hash family every SQL
-    engine can recompute — what the q54 'near' driver member runs so
-    the whole composition is oracle-hashed bit-for-bit; kwargs then
-    take ``num_perm`` instead of ``num_hashes``). Same algorithm
-    (shingle → minhash → band → bucket-join → exact-Jaccard verify),
-    same banding math — the fast path is pinned against the portable
-    one in tests.
+    banded MinHash-LSH candidates verified at exact shingle Jaccard ≥
+    threshold (``dedup.portable_minhash_pairs`` — the md5 hash family
+    every SQL engine can recompute, so the q54 'near' driver member's
+    whole composition is oracle-hashed bit-for-bit), clusters resolved
+    by connected components (``dedup.dedup_clusters``, which escalates
+    to star contraction past the round cap), each cluster keeping its
+    smallest id. Near-dup needs shingles, so this is the one stage
+    that re-reads text — deliberately AFTER every gate and the exact
+    dedup, so the second pass shingles only the surviving docs.
+    ``near_dup_kwargs`` forwards tuning (num_perm, bands, shingle_n).
 
     ``soft_dedup=True`` (round 16) REWEIGHTS exact duplicates instead
     of dropping them: every gated doc is kept and gains a ``weight_q``
@@ -236,35 +227,17 @@ def curate(
             .drop("__rn", "__fp")
         )
     if near_dup_threshold is not None:
-        from timebox_spark.operators.dedup import (
-            dedup_clusters,
-            minhash_dedup,
-            portable_minhash_pairs,
-        )
-
-        if near_dup_method not in ("minhash", "portable"):
-            raise ValueError(
-                f"curate: near_dup_method must be 'minhash' or "
-                f"'portable', got {near_dup_method!r}"
-            )
         survivors = docs.select(id_col, text_col).join(
             deduped.select(id_col), id_col, "left_semi"
         )
-        pair_fn = (
-            portable_minhash_pairs
-            if near_dup_method == "portable"
-            else minhash_dedup
-        )
-        pairs = pair_fn(
+        pairs = dedup.portable_minhash_pairs(
             survivors,
             id_col=id_col,
             text_col=text_col,
             threshold=near_dup_threshold,
             **(near_dup_kwargs or {}),
         )
-        canon = dedup_clusters(
-            survivors, pairs, id_col=id_col, algorithm="auto"
-        )
+        canon = dedup.dedup_clusters(survivors, pairs, id_col=id_col)
         keep_ids = canon.filter(
             F.col("canonical_id") == F.col(id_col)
         ).select(id_col)

@@ -216,52 +216,20 @@ def _tokens(col: str = "text") -> Column:
 def mean_word_length(col: str = "text") -> Column:
     """Mean token length (0.0 for empty docs) — double; quantize for
     cross-engine hashing."""
-    toks = _tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        total.cast("double") / F.size(toks).cast("double")
-    )
+    return mean_word_length_from(_tokens(col))
 
 
 def dup_2gram_fraction(col: str = "text") -> Column:
     """Fraction of duplicate token 2-grams — the repetition signal
-    (near-1.0 for degenerate looping text). 0.0 below 2 tokens.
-
-    Built with ``zip_with`` over two pre-evaluated slices: referencing
-    the tokens expression INSIDE a lambda (e.g. ``element_at(toks, i)``)
-    re-evaluates the token regex once per element — O(tokens²) regex
-    work per row (measured 8× on q54); zip_with's array arguments are
-    evaluated once per row."""
-    toks = _tokens(col)
-    nt = F.size(toks)
-    pair_len = F.greatest(nt - 1, F.lit(0))
-    grams = F.zip_with(
-        F.slice(toks, F.lit(1), pair_len),
-        F.slice(toks, F.lit(2), pair_len),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    n = F.size(grams)
-    return F.when(nt < 2, F.lit(0.0)).otherwise(
-        (n - F.size(F.array_distinct(grams))).cast("double") / n.cast("double")
-    )
+    (near-1.0 for degenerate looping text). 0.0 below 2 tokens."""
+    return dup_2gram_fraction_from(_tokens(col))
 
 
 def gopher_pass(col: str = "text") -> Column:
     """1 where the document passes the Gopher-style gates: token count
     in range, mean word length in range, at least one stopword, and
     bounded 2-gram repetition."""
-    toks = token_count(col)
-    mwl = mean_word_length(col)
-    return (
-        (toks >= GOPHER_MIN_TOKENS)
-        & (toks <= GOPHER_MAX_TOKENS)
-        & (mwl >= GOPHER_MIN_MEAN_WL)
-        & (mwl <= GOPHER_MAX_MEAN_WL)
-        & (stopword_count(col) >= GOPHER_MIN_STOPWORDS)
-        & (dup_2gram_fraction(col) <= GOPHER_MAX_DUP_2GRAM)
-    ).cast("long")
+    return gopher_pass_from(_tokens(col), token_count(col), stopword_count(col))
 
 
 # ------------------------------------------------------------------
@@ -310,6 +278,11 @@ def mean_word_length_from(toks: Column) -> Column:
 
 
 def dup_2gram_fraction_from(toks: Column) -> Column:
+    """Built with ``zip_with`` over two pre-evaluated slices:
+    referencing the tokens expression INSIDE a lambda (e.g.
+    ``element_at(toks, i)``) re-evaluates the token regex once per
+    element — O(tokens²) regex work per row (measured 8× on q54);
+    zip_with's array arguments are evaluated once per row."""
     nt = F.size(toks)
     pair_len = F.greatest(nt - F.lit(1), F.lit(0))
     grams = F.zip_with(

@@ -1,21 +1,18 @@
-"""Date/time unit registry + greatest-common-unit coarsening.
+"""Date/time unit registry.
 
 Reference: a unit registry ns/us/ms/s/m/h/D with conversion multipliers
-(/root/reference/timebox/utils/datetime_utils.py:6-98) and
-``compress_time_delta_array`` (datetime_utils.py:118-142), which finds
-the coarsest unit exactly representing every delta by repeated modulo.
+(/root/reference/timebox/utils/datetime_utils.py:6-98). Spark
+timestamps are µs precision, so 'ns' is representable only as
+metadata.
 
-Spark timestamps are µs precision, so deltas are µs longs and 'ns' is
-representable only as metadata. Coarsening is a single aggregate pass:
-for each candidate unit, max(delta % divisor); the coarsest unit whose
-max remainder is 0 wins — one shuffle-free scan instead of the
-reference's per-unit loop.
+The coarsest exact unit of a delta array (``compress_time_delta_array``,
+datetime_utils.py:118-142) is picked by the ``.npb`` writer over ns
+deltas at rest (``sources.npb._coarsen_deltas``); driver key q10
+reports it for Spark timestamp columns as one aggregate pass over this
+registry (``plans.queries._unit_ladder``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # unit -> microseconds per unit, coarse → fine (D1, datetime_utils.py:6-55)
 UNIT_US: dict[str, int] = {
@@ -27,43 +24,9 @@ UNIT_US: dict[str, int] = {
     "us": 1,
 }
 
-UNITS_COARSE_TO_FINE = list(UNIT_US)
-
 
 def conversion_multiplier(from_unit: str, to_unit: str) -> float:
     """How many ``to_unit`` in one ``from_unit`` (D3: reference
     get_conversion_multiplier('m','s') == 60,
     datetime_utils.py:87-98)."""
     return UNIT_US[from_unit] / UNIT_US[to_unit]
-
-
-def coarsest_exact_unit(
-    df: DataFrame, delta_us_col: str = "delta_us"
-) -> tuple[str, int | None]:
-    """Coarsest unit exactly representing all non-null positive deltas
-    (D4, datetime_utils.py:118-142). Returns (unit, seconds_between
-    points if the spacing is also *regular*, else None) — regular
-    spacing is the reference's implicit-dates fast path
-    (timebox.py:235-238).
-    """
-    d = F.col(delta_us_col)
-    aggs = [
-        F.max(F.when(d % F.lit(us) != 0, 1).otherwise(0)).alias(f"bad_{unit}")
-        for unit, us in UNIT_US.items()
-    ]
-    aggs += [
-        F.min(d).alias("dmin"),
-        F.max(d).alias("dmax"),
-        F.count(d).alias("n"),
-    ]
-    row = df.filter(d.isNotNull()).agg(*aggs).collect()[0]
-    if row["n"] == 0:
-        return "s", None
-    unit = "us"
-    for u in UNITS_COARSE_TO_FINE:
-        if row[f"bad_{u}"] == 0:
-            unit = u
-            break
-    regular = row["dmin"] == row["dmax"]
-    seconds = int(row["dmin"] // 1_000_000) if regular and row["dmin"] % 1_000_000 == 0 else None
-    return unit, seconds

@@ -116,8 +116,7 @@ def registrable_domain(host_col) -> Column:
     (heuristic; see REGISTRABLE_DOMAIN_RE). '' when the host has no
     dot. For correct eTLD+1 grouping under multi-label public
     suffixes (a.b.co.uk → b.co.uk, not co.uk) use
-    :func:`registrable_domain_psl` / :func:`with_registrable_domain`;
-    this stays the default so the q54 oracle constants are unchanged."""
+    :func:`registrable_domain_psl`; this stays the default so the q54 oracle constants are unchanged."""
     return F.regexp_extract(_col(host_col), REGISTRABLE_DOMAIN_RE, 1)
 
 
@@ -201,8 +200,7 @@ PUBLIC_SUFFIX_RULES_COMPACT: tuple[str, ...] = (
 def load_psl(source, sections: Sequence[str] | None = None) -> tuple[str, ...]:
     """Parse the REAL public suffix list file format
     (``public_suffix_list.dat``, publicsuffix.org/list/) into the rule
-    tuple :func:`registrable_domain_psl` and
-    :func:`with_registrable_domain` consume — the full-coverage path
+    tuple :func:`registrable_domain_psl` consumes — the full-coverage path
     the compact built-in set deliberately is not.
 
     ``source`` is a file path (a string/``os.PathLike`` naming an
@@ -222,8 +220,8 @@ def load_psl(source, sections: Sequence[str] | None = None) -> tuple[str, ...]:
       outside any marker are treated as ICANN.
 
     Purely a driver-side parse of an O(10k)-line text file — the
-    resulting rules feed either the literal-predicate matcher or the
-    broadcast rule-table join; nothing here touches executors."""
+    resulting rules feed the literal-predicate matcher; nothing here
+    touches executors."""
     import os
 
     if isinstance(source, (str, os.PathLike)):
@@ -368,8 +366,7 @@ def registrable_domain_psl(host_col, rules=None) -> Column:
     algorithm), as a PURE map-side column expression: rule membership
     is literal ``isin`` per label-count, so this never joins or
     shuffles. ``rules`` defaults to :data:`PUBLIC_SUFFIX_RULES_COMPACT`
-    — pass the full PSL (as lines) when coverage matters, or use
-    :func:`with_registrable_domain` for a DataFrame-sized rule table.
+    — pass the full PSL (``load_psl``) when coverage matters.
 
     Semantics: a host that IS a public suffix (or has no dot) yields
     ''; an unknown final label falls to the PSL default rule '*'
@@ -415,112 +412,6 @@ def registrable_domain_psl(host_col, rules=None) -> Column:
     return F.when(n <= ps_len, F.lit("")).otherwise(
         F.array_join(F.slice(labels, -(ps_len + F.lit(1)), ps_len + F.lit(1)), ".")
     )
-
-
-def with_registrable_domain(
-    df: DataFrame,
-    host_col,
-    out_col: str = "domain",
-    rules: DataFrame | None = None,
-    rule_col: str = "rule",
-) -> DataFrame:
-    """``df`` + an ``out_col`` column holding the PSL eTLD+1 of
-    ``host_col`` — the DataFrame-rule-table variant of
-    :func:`registrable_domain_psl` for a FULL public suffix list
-    (~10k rules, too large for literal predicates): the rules are
-    grouped by label count and matched via ≤ max-rule-labels BROADCAST
-    left joins on the host's last-k-label suffixes — map-only at any
-    corpus size, the rule table is O(suffixes). ``rules`` is a
-    one-column DataFrame of PSL-syntax lines ('co.uk', '*.ck',
-    '!www.ck'; comment lines '//...' and blanks ignored); None uses
-    the compact built-in (then prefer the column variant — this one
-    exists for real PSL tables)."""
-    spark = df.sparkSession
-    if rules is None:
-        lines = PUBLIC_SUFFIX_RULES_COMPACT
-        rules = spark.createDataFrame(
-            [(r,) for r in lines], f"`{rule_col}` string"
-        )
-    r = rules.select(
-        F.lower(F.trim(F.col(rule_col))).alias("r")
-    ).filter(
-        (F.col("r") != "") & ~F.col("r").startswith("//")
-    )
-    typed = r.select(
-        F.when(F.col("r").startswith("!"), F.expr("substring(r, 2)"))
-        .when(F.col("r").startswith("*."), F.expr("substring(r, 3)"))
-        .otherwise(F.col("r"))
-        .alias("key"),
-        F.col("r").startswith("!").alias("is_exc"),
-        F.col("r").startswith("*.").alias("is_wild"),
-    ).withColumn("k", F.size(F.split("key", r"\.")))
-    # one row per (key, k): flags OR-folded so duplicate rules never
-    # fan a left join out
-    keys = typed.groupBy("key", "k").agg(
-        F.max(F.col("is_exc").cast("int")).alias("exc"),
-        F.max(F.col("is_wild").cast("int")).alias("wild"),
-        F.max((~F.col("is_exc") & ~F.col("is_wild")).cast("int")).alias(
-            "exact"
-        ),
-    )
-    ks = sorted(
-        row["k"] for row in keys.select("k").distinct().collect()
-    )
-    host = F.lower(_col(host_col))
-    out = df.withColumn("__psl_labels", F.split(host, r"\."))
-    n = F.size("__psl_labels")
-    for k in ks:
-        kt = (
-            keys.filter(F.col("k") == k)
-            .select(
-                F.col("key").alias(f"__psl_key{k}"),
-                F.col("exc").alias(f"__psl_exc{k}"),
-                F.col("wild").alias(f"__psl_wild{k}"),
-                F.col("exact").alias(f"__psl_exact{k}"),
-            )
-        )
-        out = out.join(
-            F.broadcast(kt),
-            F.array_join(F.slice("__psl_labels", -k, k), ".")
-            == F.col(f"__psl_key{k}"),
-            "left",
-        ).drop(f"__psl_key{k}")
-    # ascending so the largest label count lands outermost in the
-    # outward-wrapping When chain — longest exception wins (PSL spec)
-    exc_expr = F.lit(None).cast("int")
-    for k in sorted(ks):
-        exc_expr = F.when(
-            (n >= k) & (F.col(f"__psl_exc{k}") == 1), F.lit(k - 1)
-        ).otherwise(exc_expr)
-    norm_expr = F.lit(None).cast("int")
-    maxk = max(ks) + 1 if ks else 1
-    for L in range(maxk, 0, -1):
-        conds = []
-        if L in ks:
-            conds.append((n >= L) & (F.col(f"__psl_exact{L}") == 1))
-        if (L - 1) in ks:
-            conds.append((n >= L) & (F.col(f"__psl_wild{L - 1}") == 1))
-        if not conds:
-            continue
-        c = conds[0]
-        for extra in conds[1:]:
-            c = c | extra
-        norm_expr = F.when(c & norm_expr.isNull(), F.lit(L)).otherwise(
-            norm_expr
-        )
-    ps_len = F.coalesce(exc_expr, norm_expr, F.lit(1))
-    dom = F.when(n <= ps_len, F.lit("")).otherwise(
-        F.array_join(
-            F.slice("__psl_labels", -(ps_len + F.lit(1)), ps_len + F.lit(1)),
-            ".",
-        )
-    )
-    drop = ["__psl_labels"] + [
-        c
-        for k in ks
-        for c in (f"__psl_exc{k}", f"__psl_wild{k}", f"__psl_exact{k}")
-    ]
-    return out.withColumn(out_col, dom).drop(*drop)
 
 
 def url_dedup(

@@ -1880,55 +1880,3 @@ ORACLE_SQL: dict[str, str] = {
         FROM zc GROUP BY event_type
     """,
 }
-
-QUERIES = {
-    "q01_roundtrip": q01_roundtrip,
-    "q02_pandas_bridge": q02_pandas_bridge,
-    "q03_csv_roundtrip": q03_csv_roundtrip,
-    "q04_monotonic": q04_monotonic,
-    "q05_extremes": q05_extremes,
-    "q06_delta_reconstruct": q06_delta_reconstruct,
-    "q07_frame_of_reference": q07_frame_of_reference,
-    "q08_quantize": q08_quantize,
-    "q09_float_downcast": q09_float_downcast,
-    "q10_time_units": q10_time_units,
-    "q11_filter_agg": q11_filter_agg,
-    "q12_join_topk": q12_join_topk,
-    "q13_groupby_having": q13_groupby_having,
-    "q14_window_rank": q14_window_rank,
-    "q15_time_bucket": q15_time_bucket,
-    "q16_asof": q16_asof,
-    "q17_npb_roundtrip": q17_npb_roundtrip,
-    "q18_resample_gapfill": q18_resample_gapfill,
-    "q19_sessionize": q19_sessionize,
-    "q32_rollup": q32_rollup,
-    "q33_setops": q33_setops,
-    "q34_json": q34_json,
-    "q35_range_join": q35_range_join,
-    "q36_sql_tpch_q1": q36_sql_tpch_q1,
-    "q37_distinct_percentiles": q37_distinct_percentiles,
-    "q38_array_ops": q38_array_ops,
-    "q39_pivot": q39_pivot,
-    "q40_histogram": q40_histogram,
-    "q41_rolling": q41_rolling,
-    "q42_window_suite": q42_window_suite,
-    "q43_string_suite": q43_string_suite,
-    "q45_semi_anti": q45_semi_anti,
-    "q46_map_roundtrip": q46_map_roundtrip,
-    "q48_cube": q48_cube,
-    "q49_unpivot": q49_unpivot,
-    "q52_date_suite": q52_date_suite,
-    "q53_conditional_suite": q53_conditional_suite,
-    "q55_hll_rollup": q55_hll_rollup,
-    "q50_tpch_q5_shape": q50_tpch_q5_shape,
-    "q16b_asof_by_user": q16b_asof_by_user,
-    "q56_interpolate": q56_interpolate,
-    "q57_corr_matrix": q57_corr_matrix,
-    "q58_anomaly_zscore": q58_anomaly_zscore,
-    "q59_tpch_q3_shape": q59_tpch_q3_shape,
-    "q60_ewma": q60_ewma,
-    "q61_lttb_downsample": q61_lttb_downsample,
-    "q62_linear_trend": q62_linear_trend,
-    "q63_funnel": q63_funnel,
-    "q64_cohort_retention": q64_cohort_retention,
-}

@@ -1153,9 +1153,10 @@ def q25_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH + SimHash near-dup pair sets, fully oracle-checked:
     both run the engine-portable md5 hash family (dedup.portable_*),
     so the DuckDB oracle recomputes signatures, banding/blocking,
-    candidates, and verification bit-for-bit. The vectorized numpy
-    kernels (the fast path at scale, same algorithms) are pinned
-    against exact oracles in tests/test_clustering.
+    candidates, and verification bit-for-bit. The numpy MinHash
+    kernel behind the headline ``q25_minhash_dedup`` (same algorithm,
+    another hash family) is pinned against exact references in
+    tests/test_clustering.
 
     Round 16: 'cross' rows gate
     ``dedup.cross_minhash_contamination`` (paraphrase-level
@@ -1197,7 +1198,6 @@ def q25_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=_MH_NUM_PERM,
         bands=_MH_BANDS,
         shingle_n=LQ._J_SHINGLE_N,
-        method="portable",
     ).select(
         F.lit("cross").alias("method"),
         F.col("doc_id").alias("id_a"),
@@ -3918,9 +3918,8 @@ _NEAR_OFFSET = 9_000_000
 
 def _near_member(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'near' rows of the q54 suite: the one-call curate with the
-    near-dup stage on (near_dup_method='portable' — the md5 hash
-    family, so the oracle recomputes signatures/banding/verify
-    bit-for-bit; the xxhash64 fast path is pinned equal in pytest)."""
+    near-dup stage on (the md5 hash family, so the oracle recomputes
+    signatures/banding/verify bit-for-bit)."""
     from timebox_spark.operators import pipeline
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3935,7 +3934,6 @@ def _near_member(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_tokens=LQ._CURATE_MIN_TOKENS,
         gopher_gates=True,
         near_dup_threshold=_NEAR_THRESHOLD,
-        near_dup_method="portable",
         near_dup_kwargs=dict(
             num_perm=_MH_NUM_PERM,
             bands=_MH_BANDS,
