@@ -35,20 +35,6 @@ def test_sample_frames_every_n_skips(spark):
     assert every4 and all(r["frame_idx"] % 4 == 0 for r in every4)
 
 
-def test_resize_payload_keeps_media_layout(spark):
-    media = _media(spark).filter("doc_id < 20")
-    resized = multimodal.resize_payload(media, target_bytes=128)
-    assert resized.schema == multimodal.MEDIA_SCHEMA
-    for r in resized.collect():
-        n = len(bytes(r["payload"]))
-        assert n <= 128
-        assert r["meta"]["n_bytes"] == n
-        assert r["meta"]["format"] == "text/plain"
-    # resize composes with downstream feature extraction
-    feats = multimodal.fake_decode_features(resized)
-    assert feats.count() == media.count()
-
-
 def test_unsupported_codecs_still_raise():
     # unknown containers raise; truncated JPEG raises cleanly too
     with pytest.raises(ValueError):

@@ -447,13 +447,12 @@ def test_near_dup_hits_stream_flags_planted_copy(spark, tmp_path):
 
 
 def test_near_dup_hits_stream_fanout_invariant(spark, tmp_path):
-    """Round 17: the detector hash-repartitions its input by id before
-    the signature map (the per-shingle salted-md5 work otherwise runs
-    in the narrow stage glued to a possibly-single-partition source).
-    Partitioning must not change RESULTS: the same planted batch
-    yields identical hit rows with the fanout disabled (fanout=0, the
-    pre-round-17 plan), at an explicit width, and at the
-    session-default width."""
+    """Round 17: the detector hash-repartitions its input by id to the
+    session's shuffle width before the signature map (the per-shingle
+    salted-md5 work otherwise runs in the narrow stage glued to a
+    possibly-single-partition source). Partitioning must not change
+    RESULTS: the same planted batch yields identical hit rows at
+    session widths 1 and 4."""
     import datetime as dt
 
     base = (
@@ -480,24 +479,28 @@ def test_near_dup_hits_stream_fanout_invariant(spark, tmp_path):
         ]
     )
 
-    def hits_for(fanout):
-        stream = spark.readStream.schema(schema).parquet(src)
-        hits = ingest.near_dup_hits_stream(
-            stream, min_est=0.5, fanout=fanout
-        )
-        name = f"fan_hits_{'d' if fanout is None else fanout}"
-        ingest.run_to_memory(
-            hits, name, "append", str(tmp_path / f"ck_{name}")
-        )
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+
+    def hits_for(n):
+        spark.conf.set(key, str(n))
+        try:
+            stream = spark.readStream.schema(schema).parquet(src)
+            hits = ingest.near_dup_hits_stream(stream, min_est=0.5)
+            name = f"fan_hits_{n}"
+            ingest.run_to_memory(
+                hits, name, "append", str(tmp_path / f"ck_{name}")
+            )
+        finally:
+            spark.conf.set(key, width)
         return sorted(
             (r["doc_id"], r["band"], r["matched_id"], round(r["est"], 9))
             for r in spark.table(name).collect()
         )
 
-    unfanned = hits_for(0)
-    assert unfanned, "planted near-dups not flagged"
-    assert hits_for(4) == unfanned
-    assert hits_for(None) == unfanned
+    narrow = hits_for(1)
+    assert narrow, "planted near-dups not flagged"
+    assert hits_for(4) == narrow
 
 
 def test_near_dup_hits_stream_bucket_cap_and_null_text(spark, tmp_path):
@@ -866,12 +869,12 @@ def test_compact_corpus_cluster_requires_scratch_path(spark):
 
 
 def test_corpus_index_save_load_survives_restart(spark, tmp_path):
-    """Round-9 verdict task 2: the corpus index persists to parquet
-    as (banded, HASHED sets — array<long>, signature-sized, never raw
-    shingle strings) and a compaction cycle run from the LOADED index
-    in a fresh session equals the in-memory-index result."""
+    """Round-9 verdict task 2: an ingest store persists the corpus
+    index as (banded, HASHED sets — array<long>, signature-sized, never
+    raw shingle strings) trees, and cycle 1 run in a fresh session over
+    the store cycle 0 wrote drops the near and exact copies of the
+    cycle-0 docs."""
     from timebox_spark.operators import dedup as DD
-    from timebox_spark.streaming import ingest
 
     base = (
         "the quick brown fox jumps over the lazy dog and keeps "
@@ -881,39 +884,28 @@ def test_corpus_index_save_load_survives_restart(spark, tmp_path):
         "completely different subject matter about integer codecs "
         "and columnar storage layouts with delta encoding schemes"
     )
-    b1 = spark.createDataFrame(
-        [(10, base), (11, other)], "doc_id long, text string"
+    store = str(tmp_path / "store")
+    ingest.run_ingest_cycle(
+        spark.createDataFrame([(10, base), (11, other)], "doc_id long, text string"),
+        store, 0,
     )
-    app1 = ingest.compact_corpus(b1, near_dup=True)
-    idx = DD.build_corpus_index(app1)
-    assert dict(idx[1].dtypes)["__sh"] == "array<bigint>"
-    path = str(tmp_path / "corpus_index")
-    DD.save_corpus_index(idx, path)
+    sets = DD._read_state(spark, f"{store}/index/sets", "cycle")
+    assert dict(sets.dtypes)["__sh"] == "array<bigint>"
 
     # "driver restart": a fresh session state over the same context —
-    # the loaded index must carry everything cycle 2 needs
+    # the persisted trees must carry everything cycle 1 needs
     spark2 = spark.newSession()
-    idx2 = DD.load_corpus_index(spark2, path)
-    b2_rows = [
-        (-5, base + " qq"),
-        (20, "an entirely fresh document about streaming state"),
-        (22, other),
-    ]
-    b2 = spark2.createDataFrame(b2_rows, "doc_id long, text string")
-    app1_2 = spark2.createDataFrame(
-        app1.collect(), "doc_id long, text string"
+    b2 = spark2.createDataFrame(
+        [
+            (-5, base + " qq"),
+            (20, "an entirely fresh document about streaming state"),
+            (22, other),
+        ],
+        "doc_id long, text string",
     )
-    app2 = ingest.compact_corpus(
-        b2, corpus=app1_2, near_dup=True, corpus_index=idx2
-    )
-    assert {r["doc_id"] for r in app2.collect()} == {20}
-
-    # and the loaded-index result equals the in-memory-index result
-    b2_mem = spark.createDataFrame(b2_rows, "doc_id long, text string")
-    app2_mem = ingest.compact_corpus(
-        b2_mem, corpus=app1, near_dup=True, corpus_index=idx
-    )
-    assert {r["doc_id"] for r in app2_mem.collect()} == {20}
+    ingest.run_ingest_cycle(b2, store, 1)
+    kept = DD._read_state(spark2, f"{store}/corpus/cycle=1")
+    assert {r["doc_id"] for r in kept.collect()} == {20}
 
 
 def test_run_ingest_cycle_consolidation_bounded_and_identical(spark, tmp_path):
@@ -1061,60 +1053,6 @@ def test_corpus_index_estimate_tier_signature_sized(spark, tmp_path):
             b2, corpus=b1, near_dup=True, corpus_index=(_banded_x, sets),
             verify="estimate",
         )
-
-
-def test_corpus_index_versioned_atomic_publish(spark, tmp_path):
-    """Advisor round 11: save_corpus_index publishes (banded, sets)
-    as one versioned generation — a load never pairs tables from
-    different saves. A generation missing either _SUCCESS marker
-    (crash between the two writes) is invisible; a second save
-    supersedes and prunes the first; legacy flat layouts still load."""
-    import os
-
-    from timebox_spark.operators import dedup as DD
-
-    b1 = spark.createDataFrame(
-        [(1, "first document about rivers and meadows and banks")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        [(2, "second generation document on storage codecs today")],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "vidx")
-    v0 = DD.save_corpus_index(DD.build_corpus_index(b1), path)
-    assert v0 == 0
-    got0 = {r["doc_id"] for r in DD.load_corpus_index(spark, path)[0].collect()}
-    assert got0 == {1}
-
-    # simulate a crash mid-save of the NEXT generation: banded
-    # written, sets incomplete (no _SUCCESS) — load must keep serving
-    # generation 0, never a mixed pairing
-    idx2 = DD.build_corpus_index(b2)
-    idx2[1].write.mode("overwrite").parquet(f"{path}/v=1/sets")
-    idx2[0].write.mode("overwrite").parquet(f"{path}/v=1/banded")
-    os.remove(f"{path}/v=1/sets/_SUCCESS")
-    got_crash = {
-        r["doc_id"] for r in DD.load_corpus_index(spark, path)[0].collect()
-    }
-    assert got_crash == {1}
-
-    # a real save supersedes (v=2 on top of the junk v=1) and prunes
-    # (keep_versions=1 here; the default 2 retains the previous
-    # generation so outstanding lazy loads keep working)
-    v2 = DD.save_corpus_index(idx2, path, keep_versions=1)
-    assert v2 >= 1
-    got2 = {r["doc_id"] for r in DD.load_corpus_index(spark, path)[0].collect()}
-    assert got2 == {2}
-    assert not os.path.exists(f"{path}/v=0")
-
-    # legacy flat layout (pre-versioning) still loads
-    legacy = str(tmp_path / "legacy_idx")
-    idx1 = DD.build_corpus_index(b1)
-    idx1[0].write.parquet(f"{legacy}/banded")
-    idx1[1].write.parquet(f"{legacy}/sets")
-    gotl = {r["doc_id"] for r in DD.load_corpus_index(spark, legacy)[0].collect()}
-    assert gotl == {1}
 
 
 def test_compact_corpus_leaves_no_cached_rdds(spark, tmp_path):
@@ -1950,53 +1888,6 @@ def test_compact_corpus_estimate_num_perm_mismatch_raises(spark):
             batch, corpus=corpus, near_dup=True, verify="estimate",
             num_perm=32, bands=8, corpus_index=idx16,
         )
-
-
-def test_save_corpus_index_publish_race_fails_loudly(
-    spark, tmp_path, monkeypatch
-):
-    """Advisor round 12: save_corpus_index is writer-fenced — when a
-    concurrent saver committed the same generation between this
-    saver's version listing and its publish, the publish raises
-    loudly (and removes its staging) instead of interleaving writes
-    into the committed generation."""
-    import os
-
-    import pytest
-
-    from timebox_spark.operators import dedup as DD
-
-    b1 = spark.createDataFrame(
-        [(1, "first document about rivers and meadows and banks")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        [(2, "second generation document on storage codecs today")],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "fence_idx")
-    assert DD.save_corpus_index(DD.build_corpus_index(b1), path) == 0
-
-    # simulate the race: the competitor's v=1 lands AFTER this saver
-    # listed versions — pin the listing to the stale [0]
-    real = DD._complete_index_versions
-    monkeypatch.setattr(
-        DD, "_complete_index_versions", lambda *a, **k: [0]
-    )
-    idx2 = DD.build_corpus_index(b2)
-    idx2[1].write.parquet(f"{path}/v=1/sets")
-    idx2[0].write.parquet(f"{path}/v=1/banded")
-    with pytest.raises(IOError, match="race"):
-        DD.save_corpus_index(idx2, path)
-    monkeypatch.setattr(DD, "_complete_index_versions", real)
-    # the loser's staging is gone; the committed generation is intact
-    assert not [
-        d for d in os.listdir(path) if d.startswith("_staging_")
-    ]
-    got = {
-        r["doc_id"] for r in DD.load_corpus_index(spark, path)[0].collect()
-    }
-    assert got == {2}
 
 
 def test_run_ingest_cycle_bloom_gate_state_and_results(spark, tmp_path):
@@ -3075,15 +2966,6 @@ def test_store_copied_over_another_reads_its_own_trees(spark, tmp_path):
     assert got == {1, 2, 3, 6}, got
 
 
-def test_near_dup_hits_stream_fanout_negative_raises(spark):
-    """Advice round 17: a negative fanout must fail with a clear
-    message at CALL time, not as an opaque repartition error inside
-    the first micro-batch."""
-    stream = spark.readStream.format("rate").load()
-    with pytest.raises(ValueError, match="fanout must be >= 0"):
-        ingest.near_dup_hits_stream(stream, fanout=-1)
-
-
 def _filters_with_lambdas(jplan) -> list[str]:
     """Filter nodes of a JVM plan whose condition holds a lambda
     function (one line per node; streaming nodes carry a ``~``)."""
@@ -3111,7 +2993,13 @@ def test_shingle_work_never_lands_in_a_pushed_filter(spark, tmp_path):
     stream = spark.readStream.schema(
         "doc_id long, text string, ts timestamp"
     ).parquet(str(tmp_path))
-    hits = ingest.near_dup_hits_stream(stream, fanout=4)
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        hits = ingest.near_dup_hits_stream(stream)
+    finally:
+        spark.conf.set(key, width)
     # an unstarted streaming frame refuses optimizedPlan(): run the
     # session's optimizer over its analyzed plan directly
     stream_plan = spark._jsparkSession.sessionState().optimizer().execute(
@@ -3516,26 +3404,16 @@ def test_consolidating_a_copied_store_launches_no_inference_job(
 
 
 def test_index_and_cms_loads_launch_no_job(
-    spark, tmp_path, monkeypatch, two_cycle_store
+    spark, monkeypatch, two_cycle_store
 ):
-    """``load_corpus_index`` and ``read_store_cms`` read their
-    Spark-written trees with the schema the footers carry, so the
-    reads launch no Spark job. (``cms_merge`` runs its sentinel check
-    eagerly by design; it is stubbed out while the jobs are counted.)"""
-    from timebox_spark.operators import dedup as DD
-
-    path = str(tmp_path / "idx")
-    DD.save_corpus_index(DD.build_corpus_index(_digest_batches(spark)[0]), path)
+    """``read_store_cms`` reads its Spark-written tree with the schema
+    the footers carry, so the read launches no Spark job. (``cms_merge``
+    runs its sentinel check eagerly by design; it is stubbed out while
+    the jobs are counted.) The store's index-tree reads are pinned by
+    ``test_copied_store_state_reads_launch_no_job``."""
     with monkeypatch.context() as m:
         m.setattr(ingest, "cms_merge", lambda df: df)
         assert _job_descriptions(
-            spark,
-            lambda: (
-                DD.load_corpus_index(spark, path),
-                ingest.read_store_cms(spark, two_cycle_store),
-            ),
+            spark, lambda: ingest.read_store_cms(spark, two_cycle_store)
         ) == []
-    banded, sets = DD.load_corpus_index(spark, path)
-    assert {r["doc_id"] for r in banded.select("doc_id").collect()} == set(range(6))
-    assert sets.count() == 6
     assert ingest.read_store_cms(spark, two_cycle_store).count() > 0

@@ -30,7 +30,6 @@ EXTERNAL = ["bench.py", "__spark_entry__.py", "continuity_bench.py", "perfbench/
 ALLOWED = {
     "operators.dedup.word_shingles": "word n-gram shingle column; the surface shingles characters only",
     "operators.kernels.float16_roundtrip_exact_np": "numpy ground truth that tests pin float16_roundtrip_exact to",
-    "operators.multimodal.resize_payload": "byte-stride payload resample for any media type",
     "operators.sampling.export_packed_shards": "writes packed training sequences to shard files",
     "operators.sampling.hash_sample": "deterministic rate sample over sampling.hash_bucket",
     "operators.sampling.pack_sequences": "packs token sequences into fixed budgets",

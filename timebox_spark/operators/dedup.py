@@ -1475,9 +1475,11 @@ def build_corpus_index(
 
     This is the pair ``streaming.ingest.compact_corpus(
     corpus_index=...)`` consumes (the mode is inferred from the
-    verify table's column) and ``save_corpus_index`` /
-    ``load_corpus_index`` round-trip — a compaction cycle touches
-    only these two narrow tables, never corpus text.
+    verify table's column). Its one persisted form is an ingest
+    store's cycle-partitioned ``index/banded`` and ``index/sets``
+    trees, which ``run_ingest_cycle`` writes per cycle and reads back
+    through ``_read_state`` — a compaction cycle touches only these
+    two narrow tables, never corpus text.
 
     ``owned_rdds``: pass the caller's checkpoint-tracking list ONLY
     when ``df`` is batch-bounded (the compactor's per-cycle batch) —
@@ -1507,7 +1509,7 @@ def build_corpus_index(
 def _index_fs(df_or_spark, path: str):
     """(Hadoop FileSystem, jvm Path factory) for ``path`` — works for
     local, HDFS and S3 URIs alike (same resolution Spark's own reader
-    uses), so index versioning never falls back to driver-local
+    uses), so state-tree probes never fall back to driver-local
     os.path probing."""
     spark = getattr(df_or_spark, "sparkSession", df_or_spark)
     sc = spark.sparkContext
@@ -1585,137 +1587,6 @@ def _read_state(
     if part_col is not None:
         schema = schema.add(part_col, T.IntegerType())
     return spark.read.schema(schema).parquet(path)
-
-
-def _complete_index_versions(fs, mk_path, path: str) -> list[int]:
-    """Version numbers under ``{path}/v=N`` whose banded AND sets
-    tables both carry Spark's _SUCCESS commit marker — i.e. fully
-    published generations. A crash between the two writes leaves the
-    newer version incomplete and therefore invisible."""
-    root = mk_path(path)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v=")):
-            continue
-        try:
-            n = int(name[2:])
-        except ValueError:
-            continue
-        if fs.exists(mk_path(f"{path}/v={n}/banded/_SUCCESS")) and fs.exists(
-            mk_path(f"{path}/v={n}/sets/_SUCCESS")
-        ):
-            out.append(n)
-    return sorted(out)
-
-
-def save_corpus_index(
-    index: tuple[DataFrame, DataFrame], path: str, keep_versions: int = 2
-) -> int:
-    """Persist a ``build_corpus_index`` pair so the streaming
-    compactor survives driver restarts without re-scanning corpus
-    text. ATOMIC across the pair: each save writes a fresh
-    ``{path}/v=N/{banded,sets}`` generation and a generation is
-    visible to ``load_corpus_index`` only once BOTH tables carry
-    their _SUCCESS commit marker — a driver crash between the two
-    writes leaves the new version incomplete and loads keep serving
-    the previous one, never a mixed-generation pairing (advisor
-    round 11: the old flat layout overwrote banded and sets as two
-    separate commits). Older complete versions beyond
-    ``keep_versions`` are pruned best-effort after publish —
-    ``keep_versions`` defaults to 2 so the load-then-save cycle a
-    compactor runs is safe: a LAZY DataFrame from
-    ``load_corpus_index`` still references the previous generation's
-    files until its plan executes, and pruning that generation under
-    it would fail the very verify join the index feeds; set 1 only
-    when no loaded plan can be outstanding. Returns the published
-    version number.
-
-    WRITER-FENCED (advisor round 12): single-writer use (one
-    compactor per store) is the supported contract, and a violating
-    concurrent save now fails LOUDLY instead of silently interleaving
-    — each save writes into a uuid-suffixed staging dir (so two
-    savers never share partial-write paths) carrying a writer token
-    file, publishes via one rename to ``v=N``, and verifies the
-    published generation holds exactly its own token afterwards. On
-    HDFS/S3A the loser's rename to the existing ``v=N`` returns false
-    and raises pre-publish; on the local filesystem (where Hadoop's
-    rename MERGES into an existing directory and returns true) the
-    token check catches the merge post-publish and raises with
-    remediation instructions. A crashed save can leave an inert
-    ``_staging_*`` dir behind; it is invisible to loads and safe to
-    delete."""
-    import uuid
-
-    banded, sets = index
-    fs, mk_path = _index_fs(banded, path)
-    done = _complete_index_versions(fs, mk_path, path)
-    new = (done[-1] + 1) if done else 0
-    token = f"_writer_{uuid.uuid4().hex}"
-    staging = f"{path}/_staging_{token}"
-    target = f"{path}/v={new}"
-    # write sets first, banded last — completeness is checked on both
-    # markers so order only matters for partial-write debuggability
-    sets.write.mode("overwrite").parquet(f"{staging}/sets")
-    banded.write.mode("overwrite").parquet(f"{staging}/banded")
-    fs.create(mk_path(f"{staging}/{token}"), True).close()
-    # an existing target that is INCOMPLETE (missing either _SUCCESS)
-    # is crash junk from a pre-fencing writer, never a concurrent
-    # publish — a renamed generation is always complete because its
-    # markers were written in staging before the rename. Supersede it.
-    if fs.exists(mk_path(target)) and not (
-        fs.exists(mk_path(f"{target}/banded/_SUCCESS"))
-        and fs.exists(mk_path(f"{target}/sets/_SUCCESS"))
-    ):
-        fs.delete(mk_path(target), True)
-    lost = fs.exists(mk_path(target)) or not fs.rename(
-        mk_path(staging), mk_path(target)
-    )
-    if lost:
-        # a concurrent saver published v=N first (or the FS refused)
-        fs.delete(mk_path(staging), True)
-        raise IOError(
-            f"save_corpus_index lost the publish race for {target} — "
-            f"another writer committed this generation; re-run to "
-            f"publish v={new + 1}"
-        )
-    tokens = [
-        st.getPath().getName()
-        for st in fs.listStatus(mk_path(target))
-        if st.getPath().getName().startswith("_writer_")
-    ]
-    if tokens != [token]:
-        raise IOError(
-            f"save_corpus_index publish race detected at {target}: "
-            f"writer tokens {tokens} — the local-filesystem rename "
-            f"merged two concurrent saves into one generation. Delete "
-            f"{target} and re-run ONE saver (single-writer contract)."
-        )
-    # the just-published generation counts toward keep_versions
-    keep = max(1, keep_versions)
-    for old in (done + [new])[:-keep]:
-        fs.delete(mk_path(f"{path}/v={old}"), True)
-    return new
-
-
-def load_corpus_index(
-    spark, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Load the newest COMPLETE ``save_corpus_index`` generation back
-    as (banded, verify_table). Falls back to the legacy flat
-    ``{path}/{banded,sets}`` layout when no versioned generation
-    exists (pre-round-12 stores). Both tables are read with their
-    footer's schema (``_read_state``), so a load runs no Spark job;
-    raises FileNotFoundError when neither layout holds both."""
-    fs, mk_path = _index_fs(spark, path)
-    done = _complete_index_versions(fs, mk_path, path)
-    base = f"{path}/v={done[-1]}" if done else path
-    out = tuple(_read_state(spark, f"{base}/{t}") for t in ("banded", "sets"))
-    if any(t is None for t in out):
-        raise FileNotFoundError(f"load_corpus_index: no corpus index at {path}")
-    return out
 
 
 def portable_minhash_pairs(

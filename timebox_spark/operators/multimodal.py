@@ -505,47 +505,6 @@ def sample_frames(
     )
 
 
-def resize_payload(media: DataFrame, target_bytes: int = 128) -> DataFrame:
-    """Deterministic stride resample of each payload to
-    ``target_bytes`` — the stand-in for image resize (real impl: PIL
-    ``Image.resize`` inside the same mapInPandas harness; schema and
-    batch shape identical). Output keeps the media layout with
-    ``meta.n_bytes`` updated, so resize composes with the other
-    multimodal stages."""
-
-    from timebox_spark.session import ship_package
-
-    ship_package(media.sparkSession)
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_payload = []
-            for payload in pdf["payload"]:
-                b = bytes(payload)
-                if len(b) <= target_bytes:
-                    out_payload.append(b)
-                else:
-                    out_payload.append(
-                        bytes(b[i * len(b) // target_bytes] for i in range(target_bytes))
-                    )
-            meta = pd.DataFrame(
-                {
-                    "format": [m["format"] for m in pdf["meta"]],
-                    "n_bytes": pd.Series(map(len, out_payload), dtype="int64"),
-                    "source": [m["source"] for m in pdf["meta"]],
-                }
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "payload": out_payload,
-                    "meta": meta.to_dict("records"),
-                }
-            )
-
-    return ensure_parallelism(media).mapInPandas(resize, schema=MEDIA_SCHEMA)
-
-
 def bilinear_resize(px, out_h: int, out_w: int):
     """REAL bilinear resample of an (h, w, 3) uint8 array — fully
     vectorized numpy (gather 4 neighbors + lerp, half-pixel-center
@@ -665,9 +624,7 @@ def resize_images(
     """REAL image resize over the media table: decode each payload
     with the raster codecs, bilinear-resample to (out_h, out_w), and
     re-encode as BMP — the thumbnail/normalize step of an image
-    training pipeline, Arrow-batched and map-only (contrast with
-    ``resize_payload``, the byte-domain stand-in for formats without
-    a shipped decoder)."""
+    training pipeline, Arrow-batched and map-only."""
     from timebox_spark.session import ship_package
 
     ship_package(media.sparkSession)

@@ -2734,14 +2734,16 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _stage_stream_input(spark, sf_dir, n_files=8, sentinel=True)
 
-    def drain(df, name, mode):
-        # per-(sf_dir, pid) checkpoint: deterministic reruns in one
-        # process overwrite, concurrent processes (pytest alongside
-        # the driver) never rmtree each other's mid-drain state
-        import os as _os
+    def pid_tmp(name):
+        # per-(sf_dir, pid) scratch path, rmtree'd first: deterministic
+        # reruns in one process overwrite, concurrent processes (pytest
+        # alongside the driver) never rmtree each other's state
+        path = f"{Q._tmp(name, sf_dir)}_{os.getpid()}"
+        shutil.rmtree(path, ignore_errors=True)
+        return path
 
-        ckpt = f"{Q._tmp(f'{name}_ckpt', sf_dir)}_{_os.getpid()}"
-        shutil.rmtree(ckpt, ignore_errors=True)
+    def drain(df, name, mode):
+        ckpt = pid_tmp(f"{name}_ckpt")
         ingest.run_to_memory(df, name, mode, ckpt)
         return spark.table(name)
 
@@ -2861,10 +2863,23 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-F.col("doc_id")).alias("doc_id"), "text"
     )
     b2 = evens.unionByName(cross_dups).unionByName(intra_dups)
-    app1 = ingest.compact_corpus(b1)
-    app2 = ingest.compact_corpus(b2, corpus=app1)
 
-    def compact_digest(df, k, member="compact"):
+    def ingest_cycles(name, batch2, **knobs):
+        # the production disk-state path: cycle 0 ingests b1 and cycle
+        # 1 ingests batch2 through run_ingest_cycle on a fresh store,
+        # so cycle 1 reads cycle 0's persisted fps and index trees
+        # (never corpus text) and the front door's gates and sketches
+        # run at their IngestSpec defaults; each cycle's kept rows are
+        # its corpus partition
+        store = pid_tmp(f"q68_{name}_store")
+        for cid, batch in enumerate((b1, batch2)):
+            ingest.run_ingest_cycle(batch, store, cid, **knobs)
+        return [
+            dedup._read_state(spark, f"{store}/corpus/cycle={cid}")
+            for cid in (0, 1)
+        ]
+
+    def compact_digest(df, k, member):
         return df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("doc_id").alias("v1"),
@@ -2877,7 +2892,14 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v2",
         )
 
-    compact = compact_digest(app1, "1").unionByName(compact_digest(app2, "2"))
+    def cycle_digests(member, parts):
+        return compact_digest(parts[0], "1", member).unionByName(
+            compact_digest(parts[1], "2", member)
+        )
+
+    compact = cycle_digests(
+        "compact", ingest_cycles("compact", b2, near_dup=False)
+    )
 
     # near-dup-aware compactor ('compact_near' rows, round-8 verdict
     # task 7): plants the exact fingerprint CANNOT catch — cycle-2
@@ -2886,13 +2908,10 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against the corpus even though its id is smaller than every
     # corpus id), and larger-id copies of cycle-2 even docs
     # (% 10 == 6) with ' zz' appended (within-batch smallest-id
-    # near-dedup must drop the copy). Cycle 2 consumes the PERSISTED
-    # corpus index — build_corpus_index of the cycle-1 result saved
-    # to parquet and LOADED back (round-9 verdict task 2), so the
-    # driver hash gates the exact path a restarted streaming driver
-    # takes: no corpus text rescan, signature-sized verify sets.
-    from timebox_spark.operators import dedup as DD
-
+    # near-dedup must drop the copy). Cycle 2 consumes the index
+    # cycle 1 persisted in the store's index/banded and index/sets
+    # trees — the one persisted form a restarted streaming driver
+    # reads: no corpus text rescan, signature-sized verify sets.
     near_cross = b1.filter(F.col("doc_id") % 10 == 5).select(
         (-(F.col("doc_id") + 1000000)).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" qq")).alias("text"),
@@ -2902,43 +2921,18 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
     b2n = evens.unionByName(near_cross).unionByName(near_intra)
-    app1n = ingest.compact_corpus(b1, near_dup=True)
-    import hashlib as _h
-    import os as _os
-
-    tag = f"{_h.sha1(sf_dir.encode()).hexdigest()[:8]}_{_os.getpid()}"
-    idx_path = f"/tmp/timebox_spark_q68_corpus_index_{tag}"
-    shutil.rmtree(idx_path, ignore_errors=True)
-    DD.save_corpus_index(DD.build_corpus_index(app1n), idx_path)
-    idx1 = DD.load_corpus_index(spark, idx_path)
-    app2n = ingest.compact_corpus(
-        b2n, corpus=app1n, near_dup=True, corpus_index=idx1
-    )
-    compact_near = compact_digest(app1n, "1", "compact_near").unionByName(
-        compact_digest(app2n, "2", "compact_near")
-    )
+    near_parts = ingest_cycles("compact_near", b2n)
+    compact_near = cycle_digests("compact_near", near_parts)
 
     # estimate-verify compactor tier ('compact_est' rows, round-11
     # verdict task 3): same two-cycle construction as 'compact_near'
-    # but the persisted index stores only the num_perm MinHash longs
-    # per doc (build_corpus_index(verify='estimate') — truly
-    # signature-sized) and candidates verify at SIGNATURE AGREEMENT
-    # >= threshold, the unbiased Jaccard estimator. Cycle 2 consumes
-    # the index through the versioned atomic save/load layout, so the
-    # driver hash also gates that publish path.
-    app1e = ingest.compact_corpus(b1, near_dup=True, verify="estimate")
-    idx_path_e = f"/tmp/timebox_spark_q68_corpus_index_est_{tag}"
-    shutil.rmtree(idx_path_e, ignore_errors=True)
-    DD.save_corpus_index(
-        DD.build_corpus_index(app1e, verify="estimate"), idx_path_e
-    )
-    idx1e = DD.load_corpus_index(spark, idx_path_e)
-    app2e = ingest.compact_corpus(
-        b2n, corpus=app1e, near_dup=True, corpus_index=idx1e,
-        verify="estimate",
-    )
-    compact_est = compact_digest(app1e, "1", "compact_est").unionByName(
-        compact_digest(app2e, "2", "compact_est")
+    # but the store's verify tree holds only the num_perm MinHash
+    # longs per doc (index_verify='estimate' — truly signature-sized)
+    # and candidates verify at SIGNATURE AGREEMENT >= threshold, the
+    # unbiased Jaccard estimator.
+    compact_est = cycle_digests(
+        "compact_est",
+        ingest_cycles("compact_est", b2n, index_verify="estimate"),
     )
 
     # cluster-keep-one vs chain-drop ('keep1' rows): a planted A~B~C
@@ -2946,7 +2940,8 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bridges corpus and C), C = second half of text + suffix (close
     # to B, far from A at threshold 0.5). keep='cluster' keeps each
     # surviving C (it matches nothing kept); keep='chain' drops it via
-    # the corpus-dropped B. Both semantics digested on the SAME batch.
+    # the corpus-dropped B. Both semantics digested on the SAME batch,
+    # against the corpus 'compact_near' cycle 1 kept.
     keep1_b = b1.filter(F.col("doc_id") % 10 == 9).select(
         (F.col("doc_id") + 7_000_000).alias("doc_id"),
         F.concat("text", F.lit(_KEEP1_SUFFIX)).alias("text"),
@@ -2963,19 +2958,18 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bk1 = keep1_b.unionByName(keep1_c)
     keep1_kw = dict(
-        corpus=app1n, near_dup=True, threshold=_KEEP1_THRESHOLD,
+        corpus=near_parts[0], near_dup=True, threshold=_KEEP1_THRESHOLD,
         num_perm=_MH_NUM_PERM, bands=_KEEP1_BANDS,
     )
     # scratch-backed distributed drop (round-12 verdict task 2): the
     # driver-gated cluster path runs with ZERO id collects — dropped
     # ids go through this parquet scratch, which the returned plan
-    # reads lazily, so it is NOT deleted here (per-(sf_dir, pid) tag:
-    # deterministic reruns overwrite, concurrent processes never race)
+    # reads lazily, so it is NOT deleted here
     keep1 = compact_digest(
         ingest.compact_corpus(
             bk1,
             keep="cluster",
-            scratch_path=f"/tmp/timebox_spark_q68_keep1_scratch_{tag}",
+            scratch_path=pid_tmp("q68_keep1_scratch"),
             **keep1_kw,
         ),
         "cluster",
@@ -3014,8 +3008,7 @@ def q68_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1_700_000_000_000) + F.col("doc_id") + 3_000_000
         ).alias("ts"),
     )
-    nh_dir = f"/tmp/timebox_spark_q68_near_src_{tag}"
-    shutil.rmtree(nh_dir, ignore_errors=True)
+    nh_dir = pid_tmp("q68_near_src")
     nh_orig.unionByName(nh_copy).write.parquet(nh_dir)
     nh_stream = spark.readStream.schema(
         "doc_id long, text string, ts timestamp"
@@ -3210,8 +3203,8 @@ def _q68_compact_near_sql() -> str:
     within-batch), exact HASHED-shingle Jaccard verify at the q25
     threshold (the ``{pfx}hd`` CTEs — 32-bit md5 per shingle, same
     salt as ``dedup.hashed_shingle_sets``), and the drop. Mirrors
-    ingest.compact_corpus(near_dup=True) with the persisted
-    (parquet-round-tripped) corpus index."""
+    the two ``ingest.run_ingest_cycle`` calls, whose second cycle
+    reads the first's persisted index trees."""
     t = _MH_THRESHOLD
     fp = f"md5({LQ._NORM})"
     return f"""
@@ -3313,9 +3306,8 @@ def _q68_compact_est_sql() -> str:
     two-cycle construction to ``_q68_compact_near_sql`` but banded
     candidates verify at MinHash signature agreement (``_mh_agree``
     over the ``{pfx}sigs`` CTEs) >= the threshold, instead of exact
-    hashed-shingle Jaccard — mirroring
-    ingest.compact_corpus(verify='estimate') with the versioned
-    persisted index."""
+    hashed-shingle Jaccard — mirroring the two
+    ``ingest.run_ingest_cycle(index_verify='estimate')`` calls."""
     t = _MH_THRESHOLD
     fp = f"md5({LQ._NORM})"
     agree = _mh_agree()

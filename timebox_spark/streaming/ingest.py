@@ -535,12 +535,12 @@ def compact_corpus(
       recursive-CTE oracle.
 
     Pass ``corpus_index`` — the (banded, hashed sets) pair from
-    ``dedup.build_corpus_index`` / ``dedup.load_corpus_index``, at
-    scale PERSISTED alongside the corpus via
-    ``dedup.save_corpus_index`` — so a cycle never re-shingles corpus
-    text; without it the index is built from ``corpus`` here
-    (correct, but a corpus-sized scan — fine for tests, not for the
-    100 TB steady state). Likewise ``corpus_fps`` (a persisted
+    ``dedup.build_corpus_index``, persisted alongside the corpus as an
+    ingest store's ``index/banded`` and ``index/sets`` trees (the one
+    persisted form: ``run_ingest_cycle`` writes and reads them) — so
+    a cycle never re-shingles corpus text; without it the index is
+    built from ``corpus`` here (correct, but a corpus-sized scan —
+    fine for tests, not for the 100 TB steady state). Likewise ``corpus_fps`` (a persisted
     ``dedup.corpus_fingerprints`` table) makes the exact-dedup side a
     narrow column scan; with BOTH provided, corpus text is never read
     at all (``run_ingest_cycle`` is the disk-state composition). Everything is md5-portable, so the q68
@@ -1878,7 +1878,6 @@ def near_dup_hits_stream(
     min_est: float = 0.5,
     state_ttl_ms: int = 3_600_000,
     max_bucket: int | None = 256,
-    fanout: int | None = None,
 ) -> DataFrame:
     """Round-9 verdict task 6 — the stream half of near-dup
     detection: banded-MinHash state WITHIN the watermark, so a near
@@ -1927,51 +1926,43 @@ def near_dup_hits_stream(
     exact-Jaccard — the batch compactor remains the exact authority
     at corpus scale. A doc can hit in several bands; dedupe by id.
 
-    ``fanout`` (round 17): the per-doc signature work — ``num_perm``
+    Fanout (round 17): the per-doc signature work — ``num_perm``
     salted md5 evaluations PER SHINGLE, hash family pinned by the q68
-    oracle — runs in the narrow map stage glued to the source read,
-    so a micro-batch arriving in few partitions (one staged file, a
-    low-rate trigger) computes it near-serially: measured ~18 s per
-    583-doc micro-batch on one core at sf0.1 vs ~2.5 s for the whole
-    stateful stage. The input is therefore hash-repartitioned by
-    ``id_col`` to ``fanout`` partitions before normalization —
-    default = the session's ``spark.sql.shuffle.partitions`` (the
-    repo's scale knob: local core count locally,
-    ``TIMEBOX_SHUFFLE_PARTITIONS`` on a cluster). The added exchange
-    moves each doc's text once (~the same bytes the banding explode
-    shuffles right after: 8 band rows × the 32-long signature), so
-    its cost is bounded by the shuffle the operator already pays,
-    while the dominant kernel gains full cluster width. Pass ``0``
-    to disable (source already wide), or an explicit width."""
+    oracle — would run in the narrow map stage glued to the source
+    read, so a micro-batch arriving in few partitions (one staged
+    file, a low-rate trigger) would compute it near-serially:
+    measured ~18 s per 583-doc micro-batch on one core at sf0.1 vs
+    ~2.5 s for the whole stateful stage. The input is therefore
+    hash-repartitioned by ``id_col`` to the session's
+    ``spark.sql.shuffle.partitions`` (the repo's scale knob: local
+    core count locally, ``TIMEBOX_SHUFFLE_PARTITIONS`` on a cluster)
+    before normalization. The added exchange moves each doc's text
+    once (~the same bytes the banding explode shuffles right after:
+    8 band rows × the 32-long signature), so its cost is bounded by
+    the shuffle the operator already pays, while the dominant kernel
+    gains full cluster width."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     band_rows = DD._band_rows_sql("__sig", num_perm, bands)  # validates
     r = num_perm // bands
-    width = fanout
-    if width is None:
-        try:
-            width = int(
-                stream.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            # vendor-managed sessions can set the conf non-numeric
-            # (e.g. 'auto') — fall back to the cluster's default
-            # parallelism instead of an opaque parse error (advice
-            # round 17)
-            width = stream.sparkSession.sparkContext.defaultParallelism
-    elif width < 0:
-        raise ValueError(
-            f"near_dup_hits_stream: fanout must be >= 0, got {fanout}"
-        )
+    try:
+        width = int(stream.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        # vendor-managed sessions can set the conf non-numeric
+        # (e.g. 'auto') — fall back to the cluster's default
+        # parallelism instead of an opaque parse error (advice
+        # round 17)
+        width = stream.sparkSession.sparkContext.defaultParallelism
     # NULL text → NULL shingles → all-NULL signatures, which the state
     # kernel cannot compare; the batch index drops such docs too. The
     # filter is on the TEXT column, below the fanout: a filter on the
     # shingle column is pushed into the source stage with the
     # normalization inlined into the per-position lambda (O(len²)
     # regex work on one task). Non-NULL text always has a shingle.
-    src = stream.filter(F.col(text_col).isNotNull())
-    src = src.repartition(width, F.col(id_col)) if width else src
+    src = stream.filter(F.col(text_col).isNotNull()).repartition(
+        width, F.col(id_col)
+    )
     d = src.withColumn("__norm", DD.normalize_text(text_col)).withColumn(
         "__sh", F.array_distinct(DD.char_shingles("__norm", shingle_n))
     )
